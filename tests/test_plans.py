@@ -532,3 +532,13 @@ def test_scale_audit_whole_registry_no_fatals(spark, sf_dir):
         fatals += [(name, f["code"]) for f in findings
                    if f["severity"] == "FATAL"]
     assert fatals == []
+
+
+def test_tpch_plan_build_launches_no_job(spark, sf_dir, jobs_launched):
+    # a table's parquet schema is inferred once (one job) and cached;
+    # building a plan afterwards must not run any Spark job
+    from vega_spark.registry import QUERIES
+    for q in ("tpch_q3_shipping", "tpch_q9_profit_by_nation"):
+        QUERIES[q](spark, sf_dir)  # warm: loads each table once
+        _, n = jobs_launched(lambda: QUERIES[q](spark, sf_dir))
+        assert n == 0, q

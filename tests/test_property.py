@@ -354,6 +354,7 @@ def test_graph_broadcast_state_paths_agree(spark):
              (4, 5, 1), (5, 6, 1), (2, 6, 2), (6, 7, 1), (1, 7, 5)]
     wdf = spark.createDataFrame(edges, "u long, v long, w long")
     udf_ = wdf.select("u", "v")
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     for fn, kwargs in ((shortest_paths, {"max_rounds": 4}),
                        (bfs_distances, {"max_hops": 4}),
                        (k_core, {"k": 2, "max_rounds": 2})):
@@ -364,4 +365,4 @@ def test_graph_broadcast_state_paths_agree(spark):
                                  **kwargs).collect()))
         assert a == b, fn.__name__
     # the pin must restore the session conf afterwards
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before

@@ -9260,7 +9260,7 @@ def file_layout_skew_report_q(spark, sf_dir):
     row count (SQL-pinned), file count positive, and min <= max <=
     total. Ratio details stay engine-side in
     tests/test_layout_embeddings.py."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _t(spark, sf_dir, "lineitem")
     per_file = (li.select(F.col("_metadata.file_path").alias("f"),
                           F.col("_metadata.file_size").alias("sz"))
                 .groupBy("f", "sz").agg(F.count(F.lit(1)).alias("rows")))

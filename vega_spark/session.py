@@ -145,6 +145,13 @@ def drain_shuffle_partitions(*staged_paths: str,
     return str(max(floor, min(cap, math.ceil(total / bytes_per_partition))))
 
 
+def _conf_get(spark: SparkSession, key: str) -> str | None:
+    try:
+        return spark.conf.get(key, None)
+    except Exception:
+        return None
+
+
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine confs to an externally
     provided session (the driver passes its own session to
@@ -157,8 +164,13 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     ``get_session``). We read every conf back after setting and warn
     once per session when a value could not be applied, instead of
     silently passing: a mega-session-tax adjudication must know
-    which path the cache sizing actually bound on."""
+    which path the cache sizing actually bound on.
+
+    Each conf is read first and set only when it differs, and a conf
+    already warned about is not retried: ``_t`` calls this on every
+    table load, and a failing static-conf set costs a Py4J exception."""
     import warnings
+    warned = getattr(spark, "_vega_conf_warned", set())
     for k, v in {
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.session.timeZone": "UTC",
@@ -169,26 +181,23 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
         # external session runs with the 100-entry default
         "spark.sql.codegen.cache.maxEntries": "8000",
     }.items():
+        if k in warned or _conf_get(spark, k) == v:
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf — verified by the read-back below
-        try:
-            applied = spark.conf.get(k, None)
-        except Exception:
-            applied = None
+        applied = _conf_get(spark, k)
         if applied != v:
-            warned = getattr(spark, "_vega_conf_warned", set())
-            if k not in warned:
-                warnings.warn(
-                    f"engine conf {k}={v!r} could not be applied to "
-                    f"this session (static conf; effective value "
-                    f"{applied!r}). Mega-session workloads on this "
-                    f"session may pay codegen-cache eviction; build "
-                    f"sessions via vega_spark.session.get_session to "
-                    f"bind static confs.", stacklevel=2)
-                warned.add(k)
-                spark._vega_conf_warned = warned
+            warnings.warn(
+                f"engine conf {k}={v!r} could not be applied to "
+                f"this session (static conf; effective value "
+                f"{applied!r}). Mega-session workloads on this "
+                f"session may pay codegen-cache eviction; build "
+                f"sessions via vega_spark.session.get_session to "
+                f"bind static confs.", stacklevel=2)
+            warned.add(k)
+            spark._vega_conf_warned = warned
     return spark
 
 

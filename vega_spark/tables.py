@@ -30,6 +30,29 @@ All derived time columns then use pure integer arithmetic so results
 are session-timezone-independent and match a UTC-naive oracle
 (DuckDB reads the same parquet as naive TIMESTAMP and extracts the
 same wall-clock fields).
+
+Schema cache: a plain ``spark.read.parquet(path)`` infers the schema
+eagerly, and Spark 4 does that through ``mergeSchemasInParallel`` —
+one Spark job per load, even for a single file, before any action
+runs. The reference plans a read on the driver and launches nothing
+until an action (src/context.rs:445-455). ``load_table`` therefore
+remembers the inferred ``StructType`` per absolute path and passes it
+back as a user schema on later loads, which builds the same plan and
+launches no job. An entry is reused only while everything inference
+reads is unchanged:
+
+- the file's ``(size, mtime_ns, inode)``; for a directory, that
+  triple for every file under it;
+- the session values of the confs in ``_SCHEMA_CONFS``, which change
+  the inferred types (nanos-as-long, binary-as-string, INT96, NTZ
+  inference) or which footers are read (merge, summary files, corrupt
+  files).
+
+On any mismatch the schema is inferred again and the entry replaced;
+when the path cannot be ``stat``-ed (e.g. an object-store URI) the
+load infers as before. The schema is cached, not the DataFrame, so two
+loads of one table get distinct attribute ids and self-joins resolve.
+Concurrent misses may both infer; both store the same schema.
 """
 
 from __future__ import annotations
@@ -38,6 +61,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -55,6 +79,54 @@ TABLE_NAMES = (
 _NS_PER_HOUR = 3_600 * 10**9
 _NS_PER_DAY = 86_400 * 10**9
 
+# session confs that parquet schema inference depends on
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+)
+
+# absolute path -> (file fingerprint, conf values, inferred schema)
+_schema_cache: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(size, mtime_ns, inode)`` of a file, or of every file under a
+    directory keyed by relative path. Raises OSError when unreadable."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    leaves = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            leaves.append((os.path.relpath(full, path),
+                           st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sorted(leaves))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one Spark
+    job) only when the cached entry for ``path`` is stale (see module
+    docstring)."""
+    key = os.path.abspath(path)
+    try:
+        stamp = _fingerprint(key)
+    except OSError:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    hit = _schema_cache.get(key)
+    if hit is not None and hit[:2] == (stamp, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _schema_cache[key] = (stamp, confs, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table. For ``events`` the ``ts`` column is
@@ -65,7 +137,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
         except Exception:
             pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and "ts" in df.columns:
         kind = dict(df.dtypes)["ts"]
         if kind != "bigint":
