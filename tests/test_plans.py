@@ -542,3 +542,14 @@ def test_tpch_plan_build_launches_no_job(spark, sf_dir, jobs_launched):
         QUERIES[q](spark, sf_dir)  # warm: loads each table once
         _, n = jobs_launched(lambda: QUERIES[q](spark, sf_dir))
         assert n == 0, q
+
+
+def test_parquet_roundtrip_build_launches_one_job(spark, sf_dir,
+                                                   jobs_launched):
+    # the read-back passes the written frame's schema, so building the
+    # query runs the write and nothing else (no footer-inference job)
+    from vega_spark.registry import QUERIES
+    q = "save_parquet_partitioned_roundtrip"
+    QUERIES[q](spark, sf_dir)  # warm: caches the orders schema
+    _, n = jobs_launched(lambda: QUERIES[q](spark, sf_dir))
+    assert n == 1

@@ -343,6 +343,61 @@ def test_shingle_hot_key_guard(spark):
     assert idx.count() == 0  # the stop-shingle was dropped
 
 
+def test_shingle_udf_sees_each_row_once(spark, monkeypatch):
+    # every consumer of the shingle index (self-join sides, per-doc
+    # sizes, hot-shingle cap) must share one exchange: the pandas
+    # shingle UDF receives each input row exactly once per action
+    acc = spark.sparkContext.accumulator(0)
+    make = D._word_shingles_udf
+
+    def counting(n):
+        shingles = make(n).func
+
+        @F.pandas_udf("array<string>")
+        def counted(texts):
+            acc.add(len(texts))
+            return shingles(texts)
+        return counted
+
+    monkeypatch.setattr(D, "_word_shingles_udf", counting)
+    texts = _corpus()
+    df = docs(spark, texts)
+    for cap in (1000, 3, None):
+        acc.value = 0
+        D.ngram_jaccard_pairs(df, "text", "doc_id", n=3, threshold=0.5,
+                              max_doc_freq=cap).collect()
+        assert acc.value == len(texts), (cap, acc.value)
+
+
+def test_shingle_hot_cap_counts_null_ids_like_oracle(spark):
+    # the hot-shingle cap counts index rows whose doc id is null, as
+    # the oracle's `hot` CTE does. Five rows hold "boiler plate text"
+    # and one of them has a null id: 5 > 4 drops the shingle, which
+    # moves the planted pair's jaccard from 3/4 to 2/3. Skipping the
+    # null row would count 4, keep the shingle and give 0.75.
+    import duckdb
+    import pandas as pd
+
+    from vega_spark.registry import _NGRAM_JACCARD_SQL
+    rows = [(1, "boiler plate text x y"),
+            (2, "boiler plate text x y z"),
+            (3, "boiler plate text a3 b3"),
+            (4, "boiler plate text a4 b4"),
+            (None, "boiler plate text a5 b5"),
+            (6, "unrelated words live here")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(map(tuple, D.ngram_jaccard_pairs(
+        df, "text", "doc_id", n=3, threshold=0.5,
+        max_doc_freq=4).collect()))
+    sql = _NGRAM_JACCARD_SQL.replace("COUNT(*) > 1000", "COUNT(*) > 4")
+    assert sql != _NGRAM_JACCARD_SQL
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"])
+                 .astype({"doc_id": "Int64"}))
+    want = sorted(tuple(r) for r in con.execute(sql).fetchall())
+    assert got == want == [(1, 2, 0.666667)]
+
+
 # --- end-to-end pipeline ------------------------------------------------------
 
 def test_pipeline_filters_and_dedupes(spark):
@@ -766,6 +821,33 @@ def test_mine_duplicate_spans_whole_doc_dup(spark):
     got = {(r.doc_id, r.start_pos, r.span_len)
            for r in mine_duplicate_spans(docs, "text", "doc_id",
                                          k=4).collect()}
+    assert got == {(1, 0, 4), (2, 0, 4)}
+
+
+def test_mine_duplicate_spans_non_numeric_partition_conf(spark,
+                                                         monkeypatch):
+    # a non-numeric shuffle.partitions (e.g. "auto") must not crash
+    # the footer-sized repartition; it applies the repartition instead.
+    # Spark rejects "auto" at conf.set, so the read is stubbed.
+    from vega_spark.functions.dedup import mine_duplicate_spans
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d")], "doc_id long, text string")
+    conf = docs.sparkSession.conf
+    real_get = conf.get
+
+    def get(key, *args):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(key, *args)
+
+    with monkeypatch.context() as m:
+        m.setattr(conf, "get", get)
+        # 200 MB of text -> ceil(200e6 * 44 / 6 / 128 MiB) = 11
+        spans = mine_duplicate_spans(docs, "text", "doc_id", k=4,
+                                     est_text_bytes=200_000_000)
+    plan = spans._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression [d" in plan and ", 11" in plan
+    got = {(r.doc_id, r.start_pos, r.span_len) for r in spans.collect()}
     assert got == {(1, 0, 4), (2, 0, 4)}
 
 

@@ -195,29 +195,52 @@ def shingle_index(df: DataFrame, text_col: str, id_col: str, n: int = 3,
                   max_doc_freq: int | None = None,
                   impl: str = "pandas") -> DataFrame:
     """Inverted index: (shingle, doc id), distinct. ``max_doc_freq``
-    drops stop-shingles (hot keys) — the skew guard at scale.
+    drops stop-shingles (hot keys) — the skew guard at scale: a
+    shingle held by more than ``max_doc_freq`` index rows is removed
+    (rows with a null doc id count, as in the oracle's ``hot`` CTE).
 
-    The ``.distinct()`` doubles as the plan's SHARED MATERIALIZATION
-    POINT: every consumer (doc-freq guard, per-doc sizes, both self-
-    join sides) re-reads the one distinct exchange via ReuseExchange
-    instead of recomputing the shingle generation — shuffle files
-    spill to disk, so unlike a localCheckpoint nothing is pinned in
-    executor storage (measured: removing the distinct made the full
-    pairs query 70% SLOWER from 4x shingle recomputation).
+    The index's exchange is the plan's SHARED MATERIALIZATION POINT:
+    every consumer (per-doc sizes, both self-join sides) re-reads it
+    via ReuseExchange instead of recomputing the shingle generation —
+    shuffle files spill to disk, so unlike a localCheckpoint nothing
+    is pinned in executor storage (measured: removing the distinct
+    made the full pairs query 70% SLOWER from 4x shingle
+    recomputation). Reuse needs every consumer's copy of the sub-plan
+    to be canonically equal, but Catalyst infers ``isnotnull`` filters
+    from each consumer's join keys and pushes them down, differently
+    per consumer. Two choices keep the copies equal:
+
+    - The explicit ``shingle IS NOT NULL`` filter (a no-op: neither
+      generator emits a null) makes the self-join sides' inferred
+      ``isnotnull(shingle)`` redundant, so Catalyst adds none below
+      the distinct.
+    - The hot-key guard is a ``count(1) OVER (PARTITION BY shingle)``
+      window on the same sub-tree, not a groupBy count plus anti join
+      (a fourth consumer with filters of its own). The consumers'
+      inferred ``isnotnull(doc)`` stays above the window (Spark
+      pushes no filter on a non-partition column through one), so
+      everything below it is shared. The price is that a hot
+      shingle's (doc, shingle) rows meet in one window partition
+      instead of a map-side partial count; the window buffer spills,
+      so this costs sort time, not memory.
+
+    So the shingle UDF and the distinct run once per action.
 
     impl='pandas' (default) batches shingle generation through
     _word_shingles_udf (7.2s -> 2.0s on the full pairs query at
     sf0.1); impl='expr' keeps the pure Column form."""
     sh = (word_shingles(text_col, n) if impl == "expr"
           else _word_shingles_udf(n)(text_col))
-    idx = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(sh).alias("shingle"),
-    ).distinct()
+    idx = (df.select(F.col(id_col).alias("doc"),
+                     F.explode(sh).alias("shingle"))
+           .filter(F.col("shingle").isNotNull())
+           .distinct())
     if max_doc_freq:
-        hot = (idx.groupBy("shingle").count()
-               .filter(F.col("count") > max_doc_freq).select("shingle"))
-        idx = idx.join(hot, "shingle", "left_anti")
+        idx = (idx
+               .withColumn("__df", F.count(F.lit(1)).over(
+                   Window.partitionBy("shingle")))
+               .filter(F.col("__df") <= max_doc_freq)
+               .drop("__df"))
     return idx
 
 
@@ -1099,10 +1122,13 @@ def mine_duplicate_spans(df: DataFrame, text_col: str, id_col: str,
                              256)).alias("d")))).alias("g"))
              .select("doc_id", "g.pos", "g.d"))
     if est_text_bytes:
-        import math
         n = min(4096, math.ceil(est_text_bytes * 44 / 6 / (128 << 20)))
-        spark = df.sparkSession
-        if n > int(spark.conf.get("spark.sql.shuffle.partitions")):
+        conf = df.sparkSession.conf
+        try:
+            cur = int(conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            cur = 0  # non-numeric (e.g. "auto"): apply the sizing
+        if n > cur:
             # explicit hash repartition on the digest: the window
             # below reuses this partitioning (ClusteredDistribution
             # satisfied), so this IS the one corpus-wide exchange,

@@ -5196,9 +5196,9 @@ def save_parquet_partitioned_roundtrip_q(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     path = os.path.join(tempfile.gettempdir(), "vega_spark_io",
                         f"pq_rt_{os.path.basename(sf_dir.rstrip('/'))}")
-    save_as_parquet(o.select("o_orderkey", "o_totalprice", "o_orderstatus"),
-                    path, partition_by=["o_orderstatus"])
-    back = read_parquet(spark, path)
+    out = o.select("o_orderkey", "o_totalprice", "o_orderstatus")
+    save_as_parquet(out, path, partition_by=["o_orderstatus"])
+    back = read_parquet(spark, path, schema=out.schema)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"))

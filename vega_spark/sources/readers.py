@@ -48,10 +48,13 @@ def range_inclusive(spark: SparkSession, start: int, end: int,
 
 
 def read_parquet(spark: SparkSession, path: str,
-                 columns: Sequence[str] | None = None) -> DataFrame:
+                 columns: Sequence[str] | None = None,
+                 schema: T.StructType | str | None = None) -> DataFrame:
     """Columnar scan; select columns immediately so pruning reaches
-    the reader (check ReadSchema in .explain)."""
-    df = spark.read.parquet(path)
+    the reader (check ReadSchema in .explain). Without ``schema`` the
+    footer schema is inferred, which runs one Spark job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     return df.select(*columns) if columns else df
 
 
