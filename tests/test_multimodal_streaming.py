@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vega_spark.functions import multimodal as M
+from vega_spark.streaming import sources as S
 from vega_spark.streaming import windows as W
 
 
@@ -124,10 +125,13 @@ def test_streaming_memory_sink(spark, tmp_path):
     src = str(tmp_path / "stream_src")
     _event_frame(spark).write.parquet(src)
     schema = "ts timestamp, event_type string, value double"
-    stream = spark.readStream.schema(schema).parquet(src)
-    agg = W.windowed_counts(stream, "ts", "event_type", window_len="5 minutes")
-    W.run_stream_to_memory(agg, "win_out", output_mode="complete")
-    rows = spark.sql("SELECT * FROM win_out").collect()
+
+    def build(s):
+        stream = s.readStream.schema(schema).parquet(src)
+        return W.windowed_counts(stream, "ts", "event_type",
+                                 window_len="5 minutes")
+    rows = S.drain_to_memory(spark, build, src,
+                             output_mode="complete").collect()
     assert sum(r.n for r in rows) == 5
 
 

@@ -9,11 +9,17 @@ import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
 
-from vega_spark.tables import load_table
+from vega_spark.tables import (
+    footer_col_max,
+    footer_rows,
+    footer_uncompressed_bytes,
+    load_table,
+)
 
 
 def _write(tmp_path, name: str, table: pa.Table) -> str:
@@ -84,3 +90,50 @@ def test_concurrent_misses_store_one_schema(spark, tmp_path, jobs_launched):
     assert all(s == schemas[0] for s in schemas)
     again, n = jobs_launched(lambda: load_table(spark, d, "t"))
     assert n == 0 and again.schema == schemas[0]
+
+
+def _footers(sf_dir: str, name: str) -> tuple:
+    return (footer_rows(sf_dir, name),
+            footer_uncompressed_bytes(sf_dir, name),
+            footer_col_max(sf_dir, name, "v"))
+
+
+def _pyarrow_footers(files: list[str], with_stats: bool = True) -> tuple:
+    table = pq.read_table(files)
+    size = sum(md.row_group(g).total_byte_size
+               for md in map(pq.read_metadata, files)
+               for g in range(md.num_row_groups))
+    top = pc.max(table["v"]).as_py() if with_stats else None
+    return table.num_rows, size, top
+
+
+def test_footer_stats_single_file(tmp_path):
+    path = os.path.join(tmp_path, "t.parquet")
+    pq.write_table(pa.table({"k": list(range(10)), "v": [3, 9, 1] * 3 + [4]}),
+                   path, row_group_size=4)
+    assert pq.read_metadata(path).num_row_groups == 3
+    assert _footers(str(tmp_path), "t") == _pyarrow_footers([path])
+    assert _footers(str(tmp_path), "t")[2] == 9
+
+
+def test_footer_stats_two_file_directory(tmp_path):
+    d = os.path.join(tmp_path, "t.parquet")
+    os.makedirs(d)
+    files = [os.path.join(d, f"part-{i}.parquet") for i in range(2)]
+    pq.write_table(pa.table({"v": [1, 5, 2]}), files[0])
+    pq.write_table(pa.table({"v": [7, 3]}), files[1])
+    open(os.path.join(d, "_SUCCESS"), "w").close()
+    assert _footers(str(tmp_path), "t") == _pyarrow_footers(files)
+    assert _footers(str(tmp_path), "t")[0::2] == (5, 7)
+
+
+def test_footer_col_max_none_without_statistics(tmp_path):
+    path = os.path.join(tmp_path, "t.parquet")
+    pq.write_table(pa.table({"v": [1, 5, 2]}), path, write_statistics=False)
+    got = _footers(str(tmp_path), "t")
+    assert got == _pyarrow_footers([path], with_stats=False)
+    assert got[0] == 3 and got[2] is None
+
+
+def test_footer_stats_missing_path_is_none(tmp_path):
+    assert _footers(str(tmp_path), "absent") == (None, None, None)

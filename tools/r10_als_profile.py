@@ -25,7 +25,7 @@ def main() -> None:
     from vega_spark.session import get_session
     from vega_spark.functions.recommender import (
         als_explicit, als_rmse_vs_baseline, recommend_top_k, _solve_side)
-    from vega_spark.registry import _t, _meta_rows
+    from vega_spark.registry import _t
 
     spark = get_session("r10-als-profile")
     spark.range(1000).count()
@@ -38,7 +38,8 @@ def main() -> None:
 def _run_once(spark, sf_dir):
     from vega_spark.functions.recommender import (
         als_rmse_vs_baseline, recommend_top_k, _solve_side)
-    from vega_spark.registry import _t, _meta_rows
+    from vega_spark.registry import _t
+    from vega_spark.tables import footer_rows
 
     t = {}
 
@@ -58,7 +59,7 @@ def _run_once(spark, sf_dir):
                .localCheckpoint())
     mark("ratings_checkpoint", t0)
     print(f"# ratings rows: {ratings.count()}")
-    li_rows = _meta_rows(sf_dir, "lineitem")
+    li_rows = footer_rows(sf_dir, "lineitem")
 
     # --- training, phase by phase (mirrors als_explicit iters=2) ---
     from vega_spark.functions.recommender import _init_factors

@@ -41,6 +41,9 @@ from vega_spark.operators.core import (
 from vega_spark.session import ensure_engine_conf
 from vega_spark.session import run_overlapped as X_run_overlapped
 from vega_spark.tables import (
+    footer_col_max,
+    footer_rows,
+    footer_uncompressed_bytes,
     load_table,
     ts_date,
     ts_hour_bucket_epoch_s,
@@ -163,85 +166,6 @@ def _op(name: str):
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_engine_conf(spark)
     return load_table(spark, sf_dir, name)
-
-
-def _meta_rows(sf_dir: str, name: str) -> int | None:
-    """Table row count from parquet FOOTER metadata — zero Spark
-    jobs, milliseconds. Used to pre-decide scale-dependent plan
-    choices (e.g. als_explicit's ``copart`` hint, r9 ADVICE) without
-    paying a count job on tiny inputs. Returns None when the footer
-    can't be read (caller falls back to its own counting)."""
-    import os
-
-    import pyarrow.parquet as pq
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            import pyarrow.dataset as pads
-            # count_rows() with no filter is a pure footer-metadata
-            # sum for parquet datasets — no column data is read
-            return pads.dataset(path, format="parquet").count_rows()
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-
-
-def _meta_uncompressed_bytes(sf_dir: str, name: str) -> int | None:
-    """Total UNCOMPRESSED byte size of a table from parquet footer
-    row-group metadata — zero Spark jobs (r10: sizes the
-    mine_duplicate_spans digest shuffle from input scale). None when
-    footers can't be read (caller skips the hint)."""
-    import os
-
-    import pyarrow.parquet as pq
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            import pyarrow.dataset as pads
-            frags = [pq.ParquetFile(fr.path) for fr in
-                     pads.dataset(path, format="parquet").get_fragments()]
-        else:
-            frags = [pq.ParquetFile(path)]
-        total = 0
-        for pf in frags:
-            for g in range(pf.metadata.num_row_groups):
-                total += pf.metadata.row_group(g).total_byte_size
-        return total
-    except Exception:
-        return None
-
-
-def _meta_col_max(sf_dir: str, name: str, col: str):
-    """Max of a column from parquet FOOTER column statistics — zero
-    Spark jobs (the streaming_left_outer_interval_join probe, r8,
-    factored out in r9 so the other drain choreographies reuse it).
-    Returns the raw statistics max (int for INT64-encoded columns,
-    datetime/pandas.Timestamp for timestamp columns) or None when any
-    row group lacks statistics (caller falls back to a Spark max())."""
-    import os
-
-    import pyarrow.parquet as pq
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            import pyarrow.dataset as pads
-            frags = list(pads.dataset(path,
-                                      format="parquet").get_fragments())
-        else:
-            frags = [pq.ParquetFile(path)]
-        stats = []
-        for fr in frags:
-            pf = fr if isinstance(fr, pq.ParquetFile) \
-                else pq.ParquetFile(fr.path)
-            idx = pf.schema_arrow.get_field_index(col)
-            for g in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(g).column(idx).statistics
-                if st is None or st.max is None:
-                    return None
-                stats.append(st.max)
-        return max(stats) if stats else None
-    except Exception:
-        return None
 
 
 # ---------------------------------------------------------------------------
@@ -1684,7 +1608,6 @@ def streaming_windowed_counts_q(spark, sf_dir):
     result. Window starts are epoch-aligned, so the BIGINT epoch-second
     output is session-timezone independent on both engines."""
     import tempfile
-    import uuid
 
     from vega_spark.streaming import sources as SS
 
@@ -1695,25 +1618,16 @@ def streaming_windowed_counts_q(spark, sf_dir):
                "event_type", "value")
        .write.mode("overwrite").parquet(stage))
 
-    stream = SS.stream_parquet(
-        spark, stage, "event_id long, ts timestamp, event_type string, value double")
-    agg = (stream.withWatermark("ts", "1 hour")
-           .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("total")))
-    name = "stream_wc_" + uuid.uuid4().hex[:8]
-    # right-size state partitions for the bounded drain (r9 opt; the
-    # interval joins' rationale): store count pins at first batch and
-    # near-empty HDFS-backed stores are pure per-batch overhead —
-    # sized from the staged arrival bytes (floor 8 binds at bench
-    # SFs; grows with the data, the one knob AQE cannot rescue)
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with pinned_conf(spark, "spark.sql.shuffle.partitions",
-                     drain_shuffle_partitions(stage)):
-        q = SS.to_memory(agg, name, output_mode="complete")
-        q.processAllAvailable()
-        q.stop()
-    return (spark.table(name)
+    def build(s):
+        stream = SS.stream_parquet(
+            s, stage,
+            "event_id long, ts timestamp, event_type string, value double")
+        return (stream.withWatermark("ts", "1 hour")
+                .groupBy(F.window("ts", "1 hour").alias("win"),
+                         "event_type")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.round(F.sum("value"), 2).alias("total")))
+    return (SS.drain_to_memory(spark, build, stage, output_mode="complete")
             .select(F.col("win.start").cast("long").alias("win_start_s"),
                     "event_type", "n", "total"))
 
@@ -2630,12 +2544,10 @@ def streaming_kmv_rollup_q(spark, sf_dir):
         (kmv_sketch_by(batch_df, ["event_type"], "user_id", k=2048)
          .write.mode("append").parquet(rollup))
 
-    q = (stream.writeStream.foreachBatch(write_partial)
-         .option("checkpointLocation",
-                 os.path.join(stage, "ckpt_" + uuid.uuid4().hex[:8]))
-         .start())
-    q.processAllAvailable()
-    q.stop()
+    SS.to_foreach_batch(
+        stream, write_partial,
+        os.path.join(stage, "ckpt_" + uuid.uuid4().hex[:8]),
+        output_mode="append").awaitTermination()
     partials = spark.read.parquet(rollup)
     merged = kmv_merge_by(partials, ["event_type"], k=2048)
     out = kmv_estimate_by(merged, ["event_type"], k=2048)
@@ -5281,9 +5193,9 @@ def cache_reuse_scan_count_q(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
     # n is the raw lineitem row count, used only in the accumulator
     # inequalities — parquet footer stats instead of a count job
-    # (r9 opt, the _meta_rows estimator pattern; identical value by
+    # (r9 opt, the footer_rows estimator pattern; identical value by
     # construction, count() fallback when footers are unreadable)
-    meta_n = _meta_rows(sf_dir, "lineitem")
+    meta_n = footer_rows(sf_dir, "lineitem")
     n = li.count() if meta_n is None else meta_n
     sc = spark.sparkContext
 
@@ -5360,7 +5272,6 @@ def streaming_stream_static_join_q(spark, sf_dir):
     (broadcast); only the (segment, type) agg exchanges — identical
     on a 1000-executor continuous job."""
     import tempfile
-    import uuid
 
     from vega_spark.streaming import sources as SS
     from vega_spark.streaming.joins import stream_static_join
@@ -5372,24 +5283,17 @@ def streaming_stream_static_join_q(spark, sf_dir):
     # handful of micro-batches instead of one per tiny part file
     (ev.select("event_id", "user_id", "event_type", "value")
        .coalesce(8).write.mode("overwrite").parquet(stage))
-    stream = SS.stream_parquet(
-        spark, stage,
-        "event_id long, user_id long, event_type string, value double")
-    joined = stream_static_join(stream, cust,
-                                F.col("user_id") == F.col("c_custkey"))
-    agg = (joined.groupBy("c_mktsegment", "event_type")
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("total")))
-    name = "stream_ssj_" + uuid.uuid4().hex[:8]
-    # right-size state partitions for the bounded drain (r9 opt —
-    # see streaming_windowed_counts; sized from staged arrival bytes)
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with pinned_conf(spark, "spark.sql.shuffle.partitions",
-                     drain_shuffle_partitions(stage)):
-        q = SS.to_memory(agg, name, output_mode="complete")
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name)
+
+    def build(s):
+        stream = SS.stream_parquet(
+            s, stage,
+            "event_id long, user_id long, event_type string, value double")
+        joined = stream_static_join(stream, cust,
+                                    F.col("user_id") == F.col("c_custkey"))
+        return (joined.groupBy("c_mktsegment", "event_type")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.round(F.sum("value"), 2).alias("total")))
+    return SS.drain_to_memory(spark, build, stage, output_mode="complete")
 
 
 @_q("streaming_dedup_exact", """
@@ -5405,7 +5309,6 @@ def streaming_dedup_exact_q(spark, sf_dir):
     independent of how the files split into micro-batches."""
     import os
     import tempfile
-    import uuid
 
     from vega_spark.streaming import sources as SS
     from vega_spark.streaming.stateful import dedup_exact_stream
@@ -5425,21 +5328,13 @@ def streaming_dedup_exact_q(spark, sf_dir):
         if f.endswith(".parquet"):
             os.link(os.path.join(stage, "arrival=1", f),
                     os.path.join(stage, "arrival=2", f))
-    stream = SS.stream_parquet(
-        spark, os.path.join(stage, "*"),
-        "event_id long, event_type string, value double")
-    deduped = dedup_exact_stream(stream, ["event_id"])
-    name = "stream_dd_" + uuid.uuid4().hex[:8]
-    # right-size state partitions for the dedup state drain (r9 opt —
-    # see streaming_windowed_counts; sized from the staged arrival
-    # bytes, both hardlinked arrivals counted — both are drained)
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with pinned_conf(spark, "spark.sql.shuffle.partitions",
-                     drain_shuffle_partitions(stage)):
-        q = SS.to_memory(deduped, name, output_mode="append")
-        q.processAllAvailable()
-        q.stop()
-    return (spark.table(name)
+
+    def build(s):
+        stream = SS.stream_parquet(
+            s, os.path.join(stage, "*"),
+            "event_id long, event_type string, value double")
+        return dedup_exact_stream(stream, ["event_id"])
+    return (SS.drain_to_memory(spark, build, stage)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.count_distinct("event_id").alias("n_ids"),
@@ -5609,7 +5504,7 @@ def bfs_parts_distance_q(spark, sf_dir):
     # entities) — broadcast the frontier/visited state and skip AQE
     # re-planning inside the hop loop; scale path (big inputs) keeps
     # the adaptive join
-    li_rows = _meta_rows(sf_dir, "lineitem")
+    li_rows = footer_rows(sf_dir, "lineitem")
     return bfs_distances(pairs, "u", "v", max_hops=4,
                          broadcast_state=li_rows is not None
                          and li_rows <= 50_000_000)
@@ -5718,7 +5613,7 @@ def sssp_parts_weighted_q(spark, sf_dir):
                       .otherwise(2).alias("w"))
     # r10 opt: see bfs_parts_distance — size-gated broadcast of the
     # node-sized dists frame + loop-scoped AQE pin
-    li_rows = _meta_rows(sf_dir, "lineitem")
+    li_rows = footer_rows(sf_dir, "lineitem")
     return shortest_paths(we, "u", "v", "w", max_rounds=4,
                           broadcast_state=li_rows is not None
                           and li_rows <= 50_000_000)
@@ -5781,7 +5676,6 @@ def streaming_anomaly_flags_q(spark, sf_dir):
     identical flags because scoring is per-row against a fixed
     baseline."""
     import tempfile
-    import uuid
 
     from vega_spark.functions.analytics import robust_stats
     from vega_spark.streaming import sources as SS
@@ -5794,20 +5688,18 @@ def streaming_anomaly_flags_q(spark, sf_dir):
     stage = tempfile.mkdtemp(prefix="vega_stream_anom_")
     (ev.select("event_id", "event_type", "value")
        .coalesce(8).write.mode("overwrite").parquet(stage))
-    stream = SS.stream_parquet(
-        spark, stage, "event_id long, event_type string, value double")
-    scored = (stream_static_join(stream, stats,
-                                 F.col("event_type") == F.col("__t"))
-              .withColumn("robust_z",
-                          F.round(0.6745 * (F.col("value") - F.col("med"))
-                                  / F.col("mad"), 3))
-              .filter(F.abs(F.col("robust_z")) > 3.5)
-              .select("event_id", "event_type", "value", "robust_z"))
-    name = "stream_anom_" + uuid.uuid4().hex[:8]
-    q = SS.to_memory(scored, name, output_mode="append")
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name)
+
+    def build(s):
+        stream = SS.stream_parquet(
+            s, stage, "event_id long, event_type string, value double")
+        return (stream_static_join(stream, stats,
+                                   F.col("event_type") == F.col("__t"))
+                .withColumn("robust_z",
+                            F.round(0.6745 * (F.col("value") - F.col("med"))
+                                    / F.col("mad"), 3))
+                .filter(F.abs(F.col("robust_z")) > 3.5)
+                .select("event_id", "event_type", "value", "robust_z"))
+    return SS.drain_to_memory(spark, build, stage)
 
 
 @_q("trend_event_hours", """
@@ -5907,7 +5799,7 @@ def kcore_parts_q(spark, sf_dir):
              .filter(F.col("n") >= 2).select("u", "v"))
     # r10 opt: see bfs_parts_distance — size-gated broadcast of the
     # node-sized keep set + loop-scoped AQE pin
-    li_rows = _meta_rows(sf_dir, "lineitem")
+    li_rows = footer_rows(sf_dir, "lineitem")
     return k_core(pairs, "u", "v", k=2, max_rounds=2,
                   broadcast_state=li_rows is not None
                   and li_rows <= 50_000_000)
@@ -7083,7 +6975,6 @@ def streaming_watermark_drops_q(spark, sf_dir):
     import os
     import shutil
     import tempfile
-    import uuid
 
     from vega_spark.streaming import sources as SS
 
@@ -7092,13 +6983,13 @@ def streaming_watermark_drops_q(spark, sf_dir):
                   F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
                   "event_type", "value")
     # max event time from parquet FOOTER statistics (r9 opt, guide §6
-    # metadata over jobs — _meta_col_max, the loj-query probe). The
+    # metadata over jobs — footer_col_max, the loj-query probe). The
     # cut instants are computed in the raw µs domain and rebuilt with
     # timestamp_micros, so they are TZ-independent and equal by
     # construction to the collected max (the staged ts column IS
     # timestamp_micros(raw div 1000)). Spark max() job only as the
     # stats-missing fallback.
-    mx_ns = _meta_col_max(sf_dir, "events", "ts")
+    mx_ns = footer_col_max(sf_dir, "events", "ts")
     if isinstance(mx_ns, int):
         day_us = 24 * 3600 * 1_000_000
         mx_us = mx_ns // 1000
@@ -7126,6 +7017,7 @@ def streaming_watermark_drops_q(spark, sf_dir):
         src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         dst = os.path.join(stage, f"{tag}.parquet")
         shutil.copy(os.path.join(tmp, src), dst)
+        shutil.rmtree(tmp, ignore_errors=True)
         return dst
     # r9 opt (guide §2.6): the three per-band staging writes are
     # independent single-task jobs — overlap them; arrival ORDER is
@@ -7137,26 +7029,17 @@ def streaming_watermark_drops_q(spark, sf_dir):
     for i, p in enumerate(order[1:], start=1):
         os.utime(p, (base + 60 * i, base + 60 * i))
 
-    stream = SS.stream_parquet(
-        spark, stage,
-        "event_id long, ts timestamp, event_type string, value double",
-        max_files_per_trigger=1)
-    agg = (stream.withWatermark("ts", "1 hour")
-           .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("total")))
-    name = "stream_wm_" + uuid.uuid4().hex[:8]
-    # right-size state partitions for the 3 stateful micro-batches
-    # (same rationale as the interval joins: store count pins at
-    # first batch; near-empty stores are pure per-batch overhead —
-    # sized from the staged band bytes, floor 8 at bench SFs)
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with pinned_conf(spark, "spark.sql.shuffle.partitions",
-                     drain_shuffle_partitions(stage)):
-        q = SS.to_memory(agg, name, output_mode="append")
-        q.processAllAvailable()
-        q.stop()
-    return (spark.table(name)
+    def build(s):
+        stream = SS.stream_parquet(
+            s, stage,
+            "event_id long, ts timestamp, event_type string, value double",
+            max_files_per_trigger=1)
+        return (stream.withWatermark("ts", "1 hour")
+                .groupBy(F.window("ts", "1 hour").alias("win"),
+                         "event_type")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.round(F.sum("value"), 2).alias("total")))
+    return (SS.drain_to_memory(spark, build, stage)
             .select(F.col("win.start").cast("long").alias("win_start_s"),
                     "event_type", "n", "total"))
 
@@ -7354,7 +7237,7 @@ def als_recommend_parts_q(spark, sf_dir):
     # copies OOMed the single 16 GiB JVM at the 300x smoke (r9,
     # VERDICT r8 #6)
     from pyspark.storagelevel import StorageLevel
-    li_rows = _meta_rows(sf_dir, "lineitem")
+    li_rows = footer_rows(sf_dir, "lineitem")
 
     # materialize the tiny user set and the recommendation frame ONCE
     # (r9 opt round, guide §5 caching-when-reused): users feeds four
@@ -7427,7 +7310,7 @@ def als_recommend_parts_op(spark, sf_dir):
                .agg(F.sum("l_quantity").alias("r"))
                .localCheckpoint())
     from pyspark.storagelevel import StorageLevel
-    li_rows = _meta_rows(sf_dir, "lineitem")
+    li_rows = footer_rows(sf_dir, "lineitem")
     xu, yi = als_explicit(ratings, "user", "item", "r",
                           rank=4, iters=2, reg=0.1,
                           copart=None if li_rows is None
@@ -8065,7 +7948,6 @@ def streaming_session_windows_q(spark, sf_dir):
     (sessionize_gap's oracle) exactly — the stream/batch parity
     contract of the unified model."""
     import tempfile
-    import uuid
 
     from vega_spark.streaming import sources as SS
 
@@ -8074,21 +7956,14 @@ def streaming_session_windows_q(spark, sf_dir):
     (ev.select("user_id",
                F.timestamp_micros(F.expr("ts div 1000")).alias("ts"))
        .write.mode("overwrite").parquet(stage))
-    stream = SS.stream_parquet(spark, stage, "user_id long, ts timestamp")
-    agg = (stream
-           .groupBy(F.session_window("ts", "30 minutes").alias("session"),
-                    "user_id")
-           .agg(F.count(F.lit(1)).alias("n_events")))
-    name = "stream_sess_" + uuid.uuid4().hex[:8]
-    # right-size state partitions for the bounded drain (r9 opt —
-    # see streaming_windowed_counts; sized from staged arrival bytes)
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with pinned_conf(spark, "spark.sql.shuffle.partitions",
-                     drain_shuffle_partitions(stage)):
-        q = SS.to_memory(agg, name, output_mode="complete")
-        q.processAllAvailable()
-        q.stop()
-    return (spark.table(name)
+
+    def build(s):
+        stream = SS.stream_parquet(s, stage, "user_id long, ts timestamp")
+        return (stream
+                .groupBy(F.session_window("ts", "30 minutes")
+                         .alias("session"), "user_id")
+                .agg(F.count(F.lit(1)).alias("n_events")))
+    return (SS.drain_to_memory(spark, build, stage, output_mode="complete")
             .select("user_id",
                     F.unix_micros(F.col("session.start"))
                     .alias("session_start_us"),
@@ -8666,7 +8541,6 @@ def streaming_interval_join_pairs_q(spark, sf_dir):
     the result must equal the batch interval join the oracle runs —
     the stream/batch parity contract again."""
     import tempfile
-    import uuid
 
     from vega_spark.streaming import joins as SJ
     from vega_spark.streaming import sources as SS
@@ -8677,33 +8551,21 @@ def streaming_interval_join_pairs_q(spark, sf_dir):
                F.timestamp_micros(F.expr("ts div 1000")).alias("ts"))
        .write.mode("overwrite").parquet(stage))
     schema = "event_id long, user_id long, event_type string, ts timestamp"
-    src_c = SS.stream_parquet(spark, stage, schema)
-    src_v = SS.stream_parquet(spark, stage, schema)
-    clicks = (src_c.filter(F.col("event_type") == "click")
-              .select("user_id", F.col("ts").alias("click_ts"),
-                      F.col("event_id").alias("click_id")))
-    views = (src_v.filter(F.col("event_type") == "view")
-             .select("user_id", F.col("ts").alias("view_ts"),
-                     F.col("event_id").alias("view_id")))
-    joined = SJ.interval_join(clicks, views, "user_id",
-                              "click_ts", "view_ts",
-                              lower="0 seconds", upper="30 minutes")
-    name = "stream_ssj_" + uuid.uuid4().hex[:8]
-    # right-size state partitions, same rationale as the left-outer
-    # variant below: the stream-stream join keeps 4 state stores per
-    # shuffle partition (2 sides x key-to-numValues), their count is
-    # pinned at first batch, and 32 near-empty HDFS-backed stores are
-    # pure per-batch overhead — sized from the staged arrival bytes
-    # (both stream sides read the same staging dir; floor 8 binds at
-    # bench SFs)
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with pinned_conf(spark, "spark.sql.shuffle.partitions",
-                     drain_shuffle_partitions(stage)):
-        q = SS.to_memory(joined.select("user_id", "click_id", "view_id"),
-                         name, output_mode="append")
-        q.processAllAvailable()
-        q.stop()
-    return (spark.table(name).groupBy("user_id")
+
+    def build(s):
+        src_c = SS.stream_parquet(s, stage, schema)
+        src_v = SS.stream_parquet(s, stage, schema)
+        clicks = (src_c.filter(F.col("event_type") == "click")
+                  .select("user_id", F.col("ts").alias("click_ts"),
+                          F.col("event_id").alias("click_id")))
+        views = (src_v.filter(F.col("event_type") == "view")
+                 .select("user_id", F.col("ts").alias("view_ts"),
+                         F.col("event_id").alias("view_id")))
+        return (SJ.interval_join(clicks, views, "user_id",
+                                 "click_ts", "view_ts",
+                                 lower="0 seconds", upper="30 minutes")
+                .select("user_id", "click_id", "view_id"))
+    return (SS.drain_to_memory(spark, build, stage).groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_pairs"))
             .orderBy("user_id"))
 
@@ -8738,9 +8600,10 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
     batch and filter complementarily, 5x the rows actually joined —
     staged as (base, one far-future advancer). The advancer's
     watermark is computed at batch-2 end and applied one batch late,
-    by the engine's NO-DATA batch (noDataMicroBatches, pinned on
-    explicitly since the final flush now rides on it): 3 micro-batch
-    cycles instead of the old 4 (two advancers + trailing no-data).
+    by the engine's NO-DATA batch (noDataMicroBatches, which
+    ``drain_to_memory`` keeps on since the final flush rides on it):
+    3 micro-batch cycles instead of the old 4 (two advancers +
+    trailing no-data).
     The advancer files and the max-ts probe are plain pyarrow (a
     1-row createDataFrame().write() costs a ~6s Spark job EACH at
     this scale; column-statistics max from parquet metadata costs
@@ -8748,7 +8611,6 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
     import os
     import shutil
     import tempfile
-    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -8763,8 +8625,8 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
     # max event time from parquet column statistics — no Spark job.
     # r8 (ADVICE): a stats-disabled writer or a directory dataset
     # must fall back to the Spark max() aggregate (the r9 refactor
-    # moved the probe into _meta_col_max; None = stats missing).
-    mx = _meta_col_max(sf_dir, "events", "ts")
+    # moved the probe into footer_col_max; None = stats missing).
+    mx = footer_col_max(sf_dir, "events", "ts")
     if mx is None:
         mx = ev.agg(F.max("ts")).collect()[0][0]  # raw ns since epoch
     if hasattr(mx, "value"):           # pandas.Timestamp -> ns int
@@ -8786,6 +8648,7 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
         src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         dst = os.path.join(stage, "f1_base.parquet")
         shutil.copy(os.path.join(tmp, src), dst)
+        shutil.rmtree(tmp, ignore_errors=True)
         adv = pa.table(
             {"event_id": [-1], "user_id": [-1], "event_type": [typ],
              "ts": pa.array([adv_us], pa.timestamp("us"))},
@@ -8805,77 +8668,57 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
     # frame is read-only to both)
     stage_c, stage_v = X_run_overlapped(
         lambda: stage_side("click"), lambda: stage_side("view"))
-    src_c = SS.stream_parquet(spark, stage_c, schema,
-                              max_files_per_trigger=1)
-    src_v = SS.stream_parquet(spark, stage_v, schema,
-                              max_files_per_trigger=1)
-    clicks = src_c.select("user_id", F.col("ts").alias("click_ts"),
-                          F.col("event_id").alias("click_id"))
-    views = src_v.select(F.col("user_id").alias("user_id"),
-                         F.col("ts").alias("view_ts"),
-                         F.col("event_id").alias("view_id"))
-    joined = SJ.interval_join(clicks, views, "user_id",
-                              "click_ts", "view_ts",
-                              lower="0 seconds", upper="30 minutes",
-                              watermark_delay="10 minutes",
-                              how="leftOuter")
-    name = "stream_loj_" + uuid.uuid4().hex[:8]
-    # right-size state partitions: the state-store partition count
-    # is fixed at first batch, and 32 near-empty HDFS-backed stores
-    # per batch is pure overhead at this state size (at cluster
-    # scale, size this to state volume)
-    from contextlib import ExitStack
 
-    from vega_spark.session import drain_shuffle_partitions, pinned_conf
-    with ExitStack() as st:
-        st.enter_context(pinned_conf(
-            spark, "spark.sql.shuffle.partitions",
-            drain_shuffle_partitions(stage_c, stage_v)))
-        st.enter_context(pinned_conf(
-            spark, "spark.sql.streaming.noDataMicroBatches.enabled",
-            "true"))
-        q = SS.to_memory(joined.select("user_id", "click_id",
-                                       "view_id"),
-                         name, output_mode="append")
-        q.processAllAvailable()
-        # r8 (ADVICE): the final outer flush rides on the engine's
-        # no-data micro-batch completing inside processAllAvailable().
-        # Verify the null-extended rows actually landed (the memory
-        # sink is driver-local, this is cheap); one extra drain cycle
-        # if the no-data batch raced, loud failure over a silently
-        # wrong answer otherwise.
-        def _n_null():
-            return (spark.table(name)
-                    .filter((F.col("user_id") >= 0)
-                            & F.col("view_id").isNull()).count())
-        if _n_null() == 0:
-            q.processAllAvailable()
-            if _n_null() == 0:
-                # r9 (ADVICE): zero null-extended rows is
-                # data-dependent — legitimate when every click has a
-                # same-user view inside the interval. Only fail after
-                # the batch-side anti-join proves unmatched clicks
-                # exist (every base click's window IS finalized here:
-                # the advancer sits 4h past max ts vs a 30min bound +
-                # 10min delay). Rare path: the check runs only when
-                # the sink read zero nulls twice.
-                cb = base.filter(F.col("event_type") == "click") \
-                    .select("user_id", F.col("ts").alias("cts"))
-                vb = base.filter(F.col("event_type") == "view") \
-                    .select(F.col("user_id").alias("vu"),
-                            F.col("ts").alias("vts"))
-                expected = cb.join(
-                    vb, (F.col("user_id") == F.col("vu"))
-                    & (F.col("vts") >= F.col("cts"))
-                    & (F.col("vts") <= F.col("cts")
-                       + F.expr("INTERVAL 30 MINUTES")),
-                    "left_anti").count()
-                assert expected == 0, (
-                    "streaming LOJ outer flush missing: batch side "
-                    f"expects {expected} null-extended rows, memory "
-                    "sink has none after drain")
-        q.stop()
-    return (spark.table(name).filter(F.col("user_id") >= 0)
+    def build(s):
+        src_c = SS.stream_parquet(s, stage_c, schema,
+                                  max_files_per_trigger=1)
+        src_v = SS.stream_parquet(s, stage_v, schema,
+                                  max_files_per_trigger=1)
+        clicks = src_c.select("user_id", F.col("ts").alias("click_ts"),
+                              F.col("event_id").alias("click_id"))
+        views = src_v.select(F.col("user_id").alias("user_id"),
+                             F.col("ts").alias("view_ts"),
+                             F.col("event_id").alias("view_id"))
+        return (SJ.interval_join(clicks, views, "user_id",
+                                 "click_ts", "view_ts",
+                                 lower="0 seconds", upper="30 minutes",
+                                 watermark_delay="10 minutes",
+                                 how="leftOuter")
+                .select("user_id", "click_id", "view_id"))
+
+    def n_null(sink):
+        return sink.filter((F.col("user_id") >= 0)
+                           & F.col("view_id").isNull()).count()
+    # r8 (ADVICE): the final outer flush rides on the engine's no-data
+    # micro-batch completing inside the drain. Verify the null-extended
+    # rows actually landed (the memory sink is driver-local, this is
+    # cheap); the helper runs one extra drain cycle if the no-data
+    # batch raced, loud failure over a silently wrong answer otherwise.
+    out = SS.drain_to_memory(spark, build, stage_c, stage_v,
+                             settled=lambda sink: n_null(sink) > 0)
+    if n_null(out) == 0:
+        # r9 (ADVICE): zero null-extended rows is data-dependent —
+        # legitimate when every click has a same-user view inside the
+        # interval. Only fail after the batch-side anti-join proves
+        # unmatched clicks exist (every base click's window IS
+        # finalized here: the advancer sits 4h past max ts vs a 30min
+        # bound + 10min delay).
+        cb = base.filter(F.col("event_type") == "click") \
+            .select("user_id", F.col("ts").alias("cts"))
+        vb = base.filter(F.col("event_type") == "view") \
+            .select(F.col("user_id").alias("vu"),
+                    F.col("ts").alias("vts"))
+        expected = cb.join(
+            vb, (F.col("user_id") == F.col("vu"))
+            & (F.col("vts") >= F.col("cts"))
+            & (F.col("vts") <= F.col("cts")
+               + F.expr("INTERVAL 30 MINUTES")),
+            "left_anti").count()
+        assert expected == 0, (
+            "streaming LOJ outer flush missing: batch side "
+            f"expects {expected} null-extended rows, memory "
+            "sink has none after drain")
+    return (out.filter(F.col("user_id") >= 0)
             .groupBy("user_id")
             .agg(F.count("view_id").alias("n_pairs"),
                  F.sum(F.when(F.col("view_id").isNull(), 1)
@@ -9010,11 +8853,11 @@ def geo_copresence_users_q(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").withColumn(
         "ts", F.timestamp_micros(F.expr("ts div 1000")))
     # grid sizing needs only the events row count — parquet footer
-    # stats instead of a count job (r9 opt, the als copart/_meta_rows
+    # stats instead of a count job (r9 opt, the als copart/footer_rows
     # pattern: estimator-only, falls back to counting when footers
     # are unreadable; same value by construction — ev is the full
     # events table, one row per source row)
-    n_events = _meta_rows(sf_dir, "events")
+    n_events = footer_rows(sf_dir, "events")
     cell = adaptive_cell_deg(ev.count() if n_events is None else n_events,
                              base_deg=45.0)
     pts = synthetic_coords(ev, "event_id")
@@ -9829,7 +9672,7 @@ def mine_duplicate_spans_q(spark, sf_dir):
                                # size the digest shuffle from footer
                                # metadata (no Spark job; no-op below
                                # the session partition count)
-                               est_text_bytes=_meta_uncompressed_bytes(
+                               est_text_bytes=footer_uncompressed_bytes(
                                    sf_dir, "documents"))
     return out.select("doc_id",
                       F.col("start_pos").cast("long").alias("start_pos"),
@@ -10184,11 +10027,11 @@ def image_curation_pipeline_q(spark, sf_dir):
     surv = with_png.join(keep.select("doc_id"), "doc_id")
     stats = image_pixel_stats(surv)
     # n_images is the raw documents row count — parquet footer stats
-    # instead of a count job (r9 opt, the _meta_rows estimator
+    # instead of a count job (r9 opt, the footer_rows estimator
     # pattern; docs is the unfiltered table projected to doc_id, so
     # the values agree by construction; count() fallback when footers
     # are unreadable). n_pass counts a checkpointed frame — cheap.
-    meta_docs = _meta_rows(sf_dir, "documents")
+    meta_docs = footer_rows(sf_dir, "documents")
     n_images = docs.count() if meta_docs is None else meta_docs
     n_pass = passing.count()
     return (stats.agg(F.count(F.lit(1)).alias("n_kept"),
@@ -10355,7 +10198,7 @@ def write_size_targeted_roundtrip_q(spark, sf_dir):
     # estimator jobs (count + head sample-write) are replaced by the
     # source FOOTER stats — exact row count, whole-table bytes/row.
     # Falls back to the measured path if the footer can't be read.
-    meta_n = _meta_rows(sf_dir, "lineitem")
+    meta_n = footer_rows(sf_dir, "lineitem")
     bpr = None
     if meta_n:
         src = os.path.join(sf_dir, "lineitem.parquet")

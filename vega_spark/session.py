@@ -27,16 +27,16 @@ from pyspark.sql import SparkSession
 @contextmanager
 def pinned_conf(spark: SparkSession, key: str, value: str):
     """Temporarily set a session conf, restoring the prior value on
-    exit (even on error). Used to right-size
-    ``spark.sql.shuffle.partitions`` for stateful streaming drains,
-    where the state-store partition count is fixed at first batch.
+    exit (even on error). Used to turn AQE off around iterative loops
+    (the graph loops' ``_loop_ctx``) and while ALS checkpoints its
+    co-partitioned rating copies.
 
     SINGLE-THREADED ASSUMPTION: this mutates session-global state,
     which is safe under the sequential driver/bench harness but racy
     if registry queries ever run concurrently on one session (the
-    restore could clobber a concurrent query's setting). If
-    concurrency is introduced, scope the setting per-query with a
-    dedicated session/newSession() instead."""
+    restore could clobber a concurrent query's setting). Streaming
+    drains avoid it: ``streaming.sources.drain_to_memory`` sets its
+    confs on a ``cloneSession()`` copy instead."""
     prev = spark.conf.get(key)
     spark.conf.set(key, value)
     try:
@@ -121,7 +121,8 @@ def drain_shuffle_partitions(*staged_paths: str,
     staging is far below one partition's budget, so the floor binds
     and bench readings are unchanged by construction; the value only
     grows when the arrival data does. Returns a string, ready for
-    ``pinned_conf``. Paths may be files or directories (walked).
+    ``conf.set`` (``drain_to_memory`` sets it on its drain session).
+    Paths may be files or directories (walked).
     The walk deliberately counts EVERY directory entry: Spark
     sidecars (_SUCCESS, .crc) are noise well under the 64 MB
     granularity, and hardlinked duplicate arrivals (streaming_dedup's

@@ -19,11 +19,15 @@ Scale notes (100 TB design intent):
 
 from __future__ import annotations
 
+import shutil
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from vega_spark.session import drain_shuffle_partitions
 
 
 def stream_parquet(spark: SparkSession, path: str,
@@ -64,6 +68,52 @@ def to_memory(df: DataFrame, name: str, output_mode: str = "append",
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
+
+
+def drain_to_memory(spark: SparkSession,
+                    build: Callable[[SparkSession], DataFrame],
+                    *staged: str, output_mode: str = "append",
+                    settled: Callable[[DataFrame], bool] | None = None
+                    ) -> DataFrame:
+    """Drain a bounded stream into a memory sink and return the sink's
+    table, without touching ``spark``.
+
+    The query runs on a clone of ``spark`` (``cloneSession()`` copies
+    confs, temp views and UDFs; ``newSession()`` would drop the
+    runtime confs ``ensure_engine_conf`` set). On the clone only, the
+    state-store partition count is sized from the ``staged`` arrival
+    directories (``drain_shuffle_partitions``) and no-data micro-batches
+    are on (Spark's default; outer-join flushes ride on them).
+    ``build(clone)`` returns the streaming frame: its stream sources
+    must read through the clone, static frames of ``spark`` may join it.
+
+    ``settled(table)``, when given, is checked after the drain; if it
+    is false the query runs one more ``processAllAvailable()`` (a
+    no-data batch that raced the first drain). The query is always
+    stopped and the ``staged`` directories removed: the sink holds the
+    drained rows, and its temp view lives in the clone's catalog, so
+    neither outlives the returned frame. Batch work on that frame
+    plans with the caller's ``spark.sql.shuffle.partitions``.
+    """
+    key = "spark.sql.shuffle.partitions"
+    clone = SparkSession(spark.sparkContext,
+                         spark._jsparkSession.cloneSession())
+    clone.conf.set(key, drain_shuffle_partitions(*staged))
+    clone.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    name = "drain_" + uuid.uuid4().hex[:8]
+    try:
+        q = to_memory(build(clone), name, output_mode)
+        try:
+            q.processAllAvailable()
+            if settled is not None and not settled(clone.table(name)):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        for p in staged:
+            shutil.rmtree(p, ignore_errors=True)
+    clone.conf.set(key, spark.conf.get(key))
+    return clone.table(name)
 
 
 def to_parquet(df: DataFrame, path: str, checkpoint: str,

@@ -6,8 +6,8 @@ readStream → event-time windows with watermarks → writeStream.
 
 The batch/stream duality is deliberate: every function takes any
 DataFrame — a ``readStream`` source in production, a bounded batch
-frame in tests (the memory sink + processAllAvailable() drives a
-bounded stream to completion synchronously).
+frame in tests. A bounded stream is driven to completion into a
+memory sink by ``sources.drain_to_memory``.
 
 Scale notes: state store size is bounded by the watermark — without
 it a windowed agg keys state forever. Sessionization uses
@@ -51,13 +51,3 @@ def sessionize(events: DataFrame, ts_col: str, key_col: str,
             .groupBy(F.session_window(ts_col, gap).alias("session"),
                      F.col(key_col))
             .agg(F.count(F.lit(1)).alias("n_events")))
-
-
-def run_stream_to_memory(stream_df: DataFrame, query_name: str,
-                         output_mode: str = "append") -> None:
-    """Drive a bounded stream to completion into an in-memory table
-    (test harness): results land in ``spark.sql(f"SELECT * FROM {query_name}")``."""
-    q = (stream_df.writeStream.outputMode(output_mode)
-         .format("memory").queryName(query_name).start())
-    q.processAllAvailable()
-    q.stop()

@@ -149,6 +149,64 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _row_groups(path: str):
+    """Footer metadata of every row group of a parquet file, or of
+    every data file of a dataset directory. Reads footers only: no
+    column data, no Spark job. Raises when the path can't be read."""
+    import pyarrow.parquet as pq
+    if os.path.isdir(path):
+        import pyarrow.dataset as pads
+        files = [fr.path for fr in
+                 pads.dataset(path, format="parquet").get_fragments()]
+    else:
+        files = [path]
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            yield md.row_group(g)
+
+
+def _footer_stat(sf_dir: str, name: str, reduce):
+    """``reduce`` over the row groups of table ``name``; None when its
+    footers can't be read (callers then count with Spark or skip)."""
+    try:
+        return reduce(_row_groups(os.path.join(sf_dir, f"{name}.parquet")))
+    except Exception:
+        return None
+
+
+def footer_rows(sf_dir: str, name: str) -> int | None:
+    """Row count of a table from its parquet footers. Used to decide
+    scale-dependent plan choices (e.g. als_explicit's ``copart``
+    hint) without paying a count job."""
+    return _footer_stat(sf_dir, name,
+                        lambda rgs: sum(rg.num_rows for rg in rgs))
+
+
+def footer_uncompressed_bytes(sf_dir: str, name: str) -> int | None:
+    """Total uncompressed byte size of a table from its row-group
+    footers (sizes mine_duplicate_spans' digest shuffle)."""
+    return _footer_stat(sf_dir, name,
+                        lambda rgs: sum(rg.total_byte_size for rg in rgs))
+
+
+def footer_col_max(sf_dir: str, name: str, col: str):
+    """Max of column ``col`` from footer statistics: the raw
+    statistics value (int for INT64-encoded columns, datetime or
+    pandas.Timestamp for timestamps). None when any row group lacks
+    statistics for it (callers then run a Spark ``max()``)."""
+    def top(rgs):
+        maxes = []
+        for rg in rgs:
+            st = next(rg.column(i) for i in range(rg.num_columns)
+                      if rg.column(i).path_in_schema == col).statistics
+            if st is None or st.max is None:
+                return None
+            maxes.append(st.max)
+        return max(maxes, default=None)
+    return _footer_stat(sf_dir, name, top)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
