@@ -1,10 +1,10 @@
 """Dump `.explain("formatted")` for named registry queries into
-plans/r09/<query>_<tag>.txt (the r9 optimization-round evidence files:
-`_before` captured at the pre-optimization HEAD, `_after` at the
-committed state).
+plans/<round>/<query>_<tag>.txt (an optimization round's evidence
+files: `_before` captured at the pre-optimization HEAD, `_after` at
+the committed state).
 
-Usage: python tools/r09_plans.py <tag> q1 [q2 ...]
-       python tools/r09_plans.py before dedup_simhash_collapsed
+Usage: python tools/round_plans.py <round> <tag> q1 [q2 ...]
+       python tools/round_plans.py r10 before dedup_simhash_collapsed
 """
 
 from __future__ import annotations
@@ -22,11 +22,11 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    out_dir = os.path.join(_REPO, "plans", "r09")
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
+    out_dir = os.path.join(_REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_session("r09-plans")
+    spark = get_session(f"{rnd}-plans")
     for name in names:
         fn = registry.QUERIES.get(name) or registry.OPERATOR_ONLY.get(name)
         if fn is None:

@@ -278,62 +278,19 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     )
 
 
-def shingle_hashes(col: Column | str, n: int = 3) -> Column:
-    """Hashes of word n-gram shingles WITHOUT materializing shingle
-    strings: each token is xxhash64'd once, then consecutive token
-    hashes combine arithmetically (polynomial in mod-p space) via
-    zip_with over shifted slices. No string concat, no array_distinct
-    (MinHash's min is idempotent over duplicates) — an order of
-    magnitude less interpreted-HOF work than string shingling.
-
-    Documents shorter than ``n`` tokens collapse to one whole-doc
-    shingle hash, mirroring word_shingles' fallback."""
-    th = F.transform(tokens(col), lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE)))
-    m = F.size(th) - (n - 1)
-    sliced = [F.slice(th, i + 1, m) for i in range(n)]
-    combined = sliced[0]
-    for s in sliced[1:]:
-        combined = F.zip_with(combined, s,
-                              lambda acc, x: (acc * 8191 + x) % F.lit(_MERSENNE))
-    whole_doc = F.array(F.aggregate(
-        th, F.lit(0).cast("long"),
-        lambda acc, x: (acc * 8191 + x) % F.lit(_MERSENNE)))
-    return F.when(F.size(th) >= n, combined).otherwise(whole_doc)
-
-
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        num_hashes: int = 64, shingle_n: int = 3,
-                       seed: int = 42, impl: str = "pandas") -> DataFrame:
+                       seed: int = 42) -> DataFrame:
     """MinHash signature per document: lane_i = min over shingles of
     (a_i * x + b_i) mod 2^31-1, x an arithmetic shingle hash.
 
-    Two implementations, both NARROW (zero shuffles — signatures
-    stream out of the scan stage; an explode+groupBy formulation
-    would push |docs|x|shingles| rows through an exchange):
-
-    - impl='expr':   pure Column expressions. Correct but the k hash
-      lanes are interpreted (higher-order functions don't enter
-      whole-stage codegen) and the 64-way expression tree costs
-      seconds of planning/JIT on first use.
-    - impl='pandas': Arrow-batched numpy — token hashes via crc32,
-      lane matrix (k x shingles) minimized vectorized. The sanctioned
-      slow path that is actually the fast path here.
-
-    The two impls use different token hash functions, so signatures
-    are impl-consistent but not cross-impl comparable (LSH guarantees
-    are identical)."""
-    if impl == "expr":
-        params = _hash_params(num_hashes, seed)
-        hashed = df.select(F.col(id_col).alias("doc"),
-                           shingle_hashes(text_col, shingle_n).alias("__hs"))
-
-        def lane(a: int, b: int):
-            return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MERSENNE)
-
-        sig = F.array(*[F.array_min(F.transform(F.col("__hs"), lane(a, b)))
-                        for a, b in params])
-        return hashed.select("doc", sig.alias("signature"))
-
+    NARROW (zero shuffles — signatures stream out of the scan stage;
+    an explode+groupBy formulation would push |docs|x|shingles| rows
+    through an exchange) and Arrow-batched numpy: token hashes via
+    crc32, lane matrix (k x shingles) minimized vectorized. A pure
+    Column form would run the k hash lanes interpreted
+    (higher-order functions don't enter whole-stage codegen) and pay
+    seconds of planning/JIT for the 64-way expression tree."""
     params = _hash_params(num_hashes, seed)
     a_vec = [a for a, _ in params]
     b_vec = [b for _, b in params]
@@ -387,8 +344,7 @@ def _banded_buckets(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 
 def lsh_index(corpus: DataFrame, text_col: str, id_col: str,
               num_hashes: int = 64, bands: int = 16, shingle_n: int = 3,
-              seed: int = 42, impl: str = "pandas") -> tuple[DataFrame,
-                                                             DataFrame]:
+              seed: int = 42) -> tuple[DataFrame, DataFrame]:
     """Persistable near-dup index over a corpus: the pair of tables a
     continuous-ingest pipeline maintains so NEW batches never rescan
     historical text —
@@ -406,7 +362,7 @@ def lsh_index(corpus: DataFrame, text_col: str, id_col: str,
     of fixed-width keys — payloads never enter it."""
     assert num_hashes % bands == 0
     sig = minhash_signatures(corpus, text_col, id_col, num_hashes,
-                             shingle_n, seed, impl=impl)
+                             shingle_n, seed)
     banded = _banded_buckets(sig, num_hashes, bands)
     sizes = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("n_in_bucket"))
@@ -418,8 +374,7 @@ def near_dup_against_index(batch: DataFrame, signatures: DataFrame,
                            num_hashes: int = 64, bands: int = 16,
                            shingle_n: int = 3, seed: int = 42,
                            threshold: float = 0.5,
-                           max_bucket: int = 1000,
-                           impl: str = "pandas") -> DataFrame:
+                           max_bucket: int = 1000) -> DataFrame:
     """Incremental near-dup: flag rows of ``batch`` whose MinHash
     signature agrees with some already-indexed document on
     ≥ ``threshold`` of lanes (lane-agreement is an unbiased Jaccard
@@ -440,7 +395,7 @@ def near_dup_against_index(batch: DataFrame, signatures: DataFrame,
     REQUIRED (signatures must come from the same hash family)."""
     assert num_hashes % bands == 0
     sigb = minhash_signatures(batch, text_col, id_col, num_hashes,
-                              shingle_n, seed, impl=impl)
+                              shingle_n, seed)
     bb = _banded_buckets(sigb, num_hashes, bands)
     cands = (bb.join(buckets.filter(F.col("n_in_bucket") <= max_bucket)
                      .select("band", "bucket",
@@ -485,8 +440,7 @@ def near_dup_against_index(batch: DataFrame, signatures: DataFrame,
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_hashes: int = 64, bands: int = 16,
                       shingle_n: int = 3, seed: int = 42,
-                      max_bucket: int | None = 1000,
-                      impl: str = "pandas") -> DataFrame:
+                      max_bucket: int | None = 1000) -> DataFrame:
     """Banded LSH over MinHash signatures → candidate pairs (a < b).
 
     bands x rows = num_hashes; a pair lands in a bucket iff one band
@@ -497,7 +451,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     collision (e.g. a 100%-recall pin on a bounded corpus)."""
     assert num_hashes % bands == 0
     sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
-                             seed, impl=impl)
+                             seed)
     banded = _banded_buckets(sig, num_hashes, bands)
     docs_agg = F.sort_array(F.collect_list("doc"))
     if max_bucket is not None:

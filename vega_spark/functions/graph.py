@@ -18,6 +18,10 @@ from contextlib import nullcontext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the lazy loops (pagerank, label_propagation) cut their state's
+# lineage with a localCheckpoint every this many supersteps
+_CHECKPOINT_EVERY = 8
+
 
 def _loop_ctx(df: DataFrame, broadcast_state: bool):
     """Loop-scoped AQE pin for iterative graph loops that materialize
@@ -31,7 +35,13 @@ def _loop_ctx(df: DataFrame, broadcast_state: bool):
     edge frame every round (measured: hint alone 2.93 → 2.54 s on
     sssp; hint + AQE-off 2.37 s; AQE-off alone would regress).
     The pin is scoped to the loop's actions; edge derivation and
-    everything downstream keep AQE."""
+    everything downstream keep AQE.
+
+    Contract: ``broadcast_state`` is True only when the CALLER has
+    bounded the graph's node count (every state frame is at most one
+    row per node) from input metadata, not from an edge- or
+    fact-row proxy; the registry's part graph gates on the part
+    table's footer row count (``_part_graph_broadcastable``)."""
     from vega_spark.session import pinned_conf
     if not broadcast_state:
         return nullcontext()
@@ -69,9 +79,6 @@ def _symmetrize(edges: DataFrame, src: str, dst: str,
 
 def pagerank(edges: DataFrame, src: str, dst: str,
              iters: int = 3, damping: float = 0.85,
-             checkpoint_every: int = 8,
-             broadcast_ranks: bool = False,
-             materialize_edges: bool = True,
              fixed_point: bool = False) -> DataFrame:
     """PageRank over an UNDIRECTED graph (edges symmetrized), classic
     formulation: rank₀ = 1, rankₜ₊₁(v) = (1-d) + d·Σ_{u→v} rankₜ(u)/deg(u).
@@ -93,29 +100,18 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     node — orders of magnitude smaller than edges) → groupBy(dst)
     partial+final sum. Degrees are computed once and carried inside
     the rank frame so each superstep is exactly one join + one
-    aggregate. Lineage is cut every ``checkpoint_every`` iterations
+    aggregate. Lineage is cut every ``_CHECKPOINT_EVERY`` iterations
     (localCheckpoint) so long runs don't accrete a plan the optimizer
-    must re-walk.
-
-    ``broadcast_ranks=True`` hints the node-sized ranks frame as the
-    broadcast side of every superstep join: the edge table is then
-    NEVER shuffled (map-side join per superstep; only the node-keyed
-    aggregate exchanges), which at a high edge:node ratio removes the
-    dominant per-superstep shuffle. NOTE: with AQE on, runtime stats
-    already convert the join to a broadcast whenever ranks fits the
-    threshold (measured ~equal-or-faster than the explicit hint at
-    sf0.1), so the flag matters mainly when AQE is disabled or its
-    stats mislead; leave False by default.
+    must re-walk. With AQE on, runtime stats already broadcast the
+    node-sized ranks side of each superstep join whenever it fits
+    (an explicit hint measured equal-or-slower at sf0.1).
     """
-    sym = _symmetrize(edges, src, dst)
-    if materialize_edges:
-        # every superstep re-reads the edge frame; materializing it
-        # once (localCheckpoint) stops the per-iteration recompute of
-        # its derivation (measured ~30% at sf0.1 on derived edges).
-        # On a cluster prefer .persist(DISK_ONLY-ish) for the same
-        # effect with replication; pass False when edges are already
-        # a cheap parquet scan.
-        sym = sym.localCheckpoint(eager=True)
+    # every superstep re-reads the edge frame; materializing it once
+    # (localCheckpoint) stops the per-iteration recompute of its
+    # derivation (measured ~30% at sf0.1 on derived edges). On a
+    # cluster prefer .persist(DISK_ONLY-ish) for the same effect with
+    # replication.
+    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=True)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
 
     if fixed_point:
@@ -126,8 +122,7 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         base = round((1 - damping) * scale)
         ranks = deg.withColumn("m", F.lit(scale).cast("bigint"))
         for i in range(iters):
-            r = F.broadcast(ranks) if broadcast_ranks else ranks
-            contribs = (sym.join(r, "u")
+            contribs = (sym.join(ranks, "u")
                         .select(F.col("v").alias("u"),
                                 F.expr("m DIV deg").alias("c")))
             new = (contribs.groupBy("u")
@@ -135,17 +130,15 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                    .select("u", F.expr(f"CAST({base} AS BIGINT) "
                                        f"+ ({p} * in_sum) DIV {q}")
                            .alias("m")))
-            ranks = deg.join(
-                F.broadcast(new) if broadcast_ranks else new, "u")
-            if (i + 1) % checkpoint_every == 0:
+            ranks = deg.join(new, "u")
+            if (i + 1) % _CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
         return ranks.select(F.col("u").alias("node"),
                             F.col("m").alias("microrank"))
 
     ranks = deg.withColumn("rank", F.lit(1.0))
     for i in range(iters):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
-        contribs = (sym.join(r, "u")
+        contribs = (sym.join(ranks, "u")
                     .select(F.col("v").alias("u"),
                             (F.col("rank") / F.col("deg")).alias("c")))
         new = (contribs.groupBy("u")
@@ -154,8 +147,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                              + F.lit(damping) * F.col("in_sum"))
                        .alias("rank")))
         # every node has degree>=1 (symmetric); new is node-sized too
-        ranks = deg.join(F.broadcast(new) if broadcast_ranks else new, "u")
-        if (i + 1) % checkpoint_every == 0:
+        ranks = deg.join(new, "u")
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(F.col("u").alias("node"), "rank")
 
@@ -213,9 +206,7 @@ def triangle_count(edges: DataFrame, src: str = "src",
 
 
 def label_propagation(edges: DataFrame, src: str = "src",
-                      dst: str = "dst", iters: int = 2,
-                      checkpoint_every: int = 8,
-                      materialize_edges: bool = True) -> DataFrame:
+                      dst: str = "dst", iters: int = 2) -> DataFrame:
     """Synchronous label propagation (community detection): every
     node starts as its own community; each superstep it adopts the
     most frequent label among its neighbors, ties to the SMALLEST
@@ -226,13 +217,11 @@ def label_propagation(edges: DataFrame, src: str = "src",
     Superstep plan: one equi-join (labels onto symmetric edges) + one
     (node, label) count + one per-node rank window — all keyed by
     node id, no cartesian, no global window. Lineage cut every
-    ``checkpoint_every`` rounds."""
+    ``_CHECKPOINT_EVERY`` rounds."""
     from pyspark.sql.window import Window
 
-    sym = _symmetrize(edges, src, dst)
-    if materialize_edges:
-        # see pagerank: pay the edge derivation once, not per superstep
-        sym = sym.localCheckpoint(eager=True)
+    # see pagerank: pay the edge derivation once, not per superstep
+    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=True)
     labels = (sym.select("u").distinct()
               .select(F.col("u").alias("node"), F.col("u").alias("label")))
     w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
@@ -242,14 +231,13 @@ def label_propagation(edges: DataFrame, src: str = "src",
                  .agg(F.count(F.lit(1)).alias("c")))
         labels = (votes.withColumn("__rk", F.row_number().over(w))
                   .filter(F.col("__rk") == 1).select("node", "label"))
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))
 
 
 def bfs_distances(edges: DataFrame, src: str = "u", dst: str = "v",
                   source: DataFrame | None = None, max_hops: int = 4,
-                  materialize_edges: bool = True,
                   broadcast_state: bool = False) -> DataFrame:
     """Single-source BFS hop distance over an UNDIRECTED graph
     (edges symmetrized): returns ``(node, dist)`` for every node
@@ -272,14 +260,13 @@ def bfs_distances(edges: DataFrame, src: str = "u", dst: str = "v",
     frontier comes back empty (one cheap isEmpty job per hop — the
     standard Pregel-style driver loop).
 
-    ``broadcast_state`` (r10 opt, size-gated by the CALLER): hint
-    both node-sized state frames — the frontier on the expansion
-    join and the visited set on the anti-join — and pin AQE off for
-    the loop's per-hop actions (see _loop_ctx). Results identical;
-    pass False whenever the node set may not fit a broadcast."""
-    sym = _symmetrize(edges, src, dst).distinct()
-    if materialize_edges:
-        sym = sym.localCheckpoint(eager=True)
+    ``broadcast_state`` (r10 opt): hint both node-sized state
+    frames — the frontier on the expansion join and the visited set
+    on the anti-join — and pin AQE off for the loop's per-hop
+    actions. Results identical. Pass True only with the node count
+    bounded below a broadcast-safe cut (see _loop_ctx)."""
+    sym = _symmetrize(edges, src, dst).distinct() \
+        .localCheckpoint(eager=True)
     if source is None:
         source = sym.agg(F.min("u").alias("node"))
     with _loop_ctx(sym, broadcast_state):
@@ -320,13 +307,12 @@ def shortest_paths(edges: DataFrame, src: str = "u", dst: str = "v",
     filtering the join's left side to nodes whose dist improved last
     round.
 
-    ``broadcast_state`` (r10 opt, size-gated by the CALLER from input
-    metadata): hint the node-sized dists frame as the broadcast side
-    of every relaxation join — the edge frame is then never shuffled
-    inside the loop — and pin AQE off for the loop's per-round
-    actions (see _loop_ctx). Results identical (pinned by
-    test_graph_broadcast_state_paths_agree); pass False whenever the
-    node set may not fit a broadcast."""
+    ``broadcast_state`` (r10 opt): hint the node-sized dists frame
+    as the broadcast side of every relaxation join — the edge frame
+    is then never shuffled inside the loop — and pin AQE off for the
+    loop's per-round actions. Results identical (pinned by
+    test_graph_broadcast_state_paths_agree). Pass True only with the
+    node count bounded below a broadcast-safe cut (see _loop_ctx)."""
     sym = _symmetrize(edges, src, dst, weight)
     sym = sym.localCheckpoint(eager=True)
     if source is None:
@@ -364,11 +350,12 @@ def k_core(edges: DataFrame, src: str = "u", dst: str = "v",
     edges never replicated. Lineage cut every round. Returns
     ``(node, deg)`` on the surviving subgraph.
 
-    ``broadcast_state`` (r10 opt, size-gated by the CALLER): hint the
-    node-sized keep set as the broadcast side of both induced-
-    subgraph semi-joins — the surviving edge frame is then never
-    shuffled inside the loop — and pin AQE off for the loop's
-    per-round actions (see _loop_ctx)."""
+    ``broadcast_state`` (r10 opt): hint the node-sized keep set as
+    the broadcast side of both induced-subgraph semi-joins — the
+    surviving edge frame is then never shuffled inside the loop —
+    and pin AQE off for the loop's per-round actions. Pass True only
+    with the node count bounded below a broadcast-safe cut (see
+    _loop_ctx)."""
     sym = _symmetrize(edges, src, dst).distinct() \
         .localCheckpoint(eager=True)
     with _loop_ctx(sym, broadcast_state):
@@ -433,8 +420,7 @@ def clustering_coefficient(edges: DataFrame, src: str = "src",
 
 def personalized_pagerank(edges: DataFrame, src: str, dst: str,
                           seeds: DataFrame,
-                          iters: int = 3, damping: float = 0.85,
-                          materialize_edges: bool = True) -> DataFrame:
+                          iters: int = 3, damping: float = 0.85) -> DataFrame:
     """Personalized PageRank (seeded restart — the graph-proximity
     scorer behind related-item / trust propagation): identical
     superstep algebra to `pagerank`, but the teleport term restarts
@@ -447,9 +433,7 @@ def personalized_pagerank(edges: DataFrame, src: str, dst: str,
     keyed aggregate; edges never reshuffled under AQE broadcast);
     the seed indicator is carried inside the rank frame so the
     restart term adds no extra join."""
-    sym = _symmetrize(edges, src, dst)
-    if materialize_edges:
-        sym = sym.localCheckpoint(eager=True)
+    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=True)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     pvec = (deg.join(seeds.select(F.col(seeds.columns[0]).alias("u"),
                                   F.lit(1.0).alias("p")), "u", "left")

@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vega_spark.operators.stats import min_max_bin_grid
+
 LOG_SCALE = 1_000_000  # fixed 1e-6 grid for log-prob integerization
 
 
@@ -275,17 +277,9 @@ def decision_stump(df: DataFrame, label_col, score_col: str,
     the smallest split index), output thresholds are the bin's left
     edge in feature units."""
     lab = label_col if not isinstance(label_col, str) else F.col(label_col)
-    rng = df.agg(F.min(score_col).alias("__lo"),
-                 F.max(score_col).alias("__hi"))
-    b = (df.crossJoin(F.broadcast(rng))
-         .select(F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-                 .otherwise(F.least(
-                     F.lit(bins - 1),
-                     F.floor((F.col(score_col) - F.col("__lo"))
-                             / (F.col("__hi") - F.col("__lo")) * bins)
-                     .cast("int"))).alias("b"),
-                 lab.cast("int").alias("y"),
-                 F.col("__lo"), F.col("__hi")))
+    grid, bin_ = min_max_bin_grid(df, score_col, bins)
+    b = grid.select(bin_.alias("b"), lab.cast("int").alias("y"),
+                    F.col("__lo"), F.col("__hi"))
     cells = b.groupBy("b").agg(
         F.sum("y").alias("np"),
         F.sum(F.lit(1) - F.col("y")).alias("nn"),
@@ -619,18 +613,9 @@ def cv_decision_stump(df: DataFrame, label_col, score_col: str,
     fold = (F.conv(F.substring(F.md5(F.col(id_col).cast("string")),
                                1, 12), 16, 10).cast("long")
             % folds).alias("fold")
-    rng = df.agg(F.min(score_col).alias("__lo"),
-                 F.max(score_col).alias("__hi"))
-    binned = (df.crossJoin(F.broadcast(rng))
-              .select(fold,
-                      F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-                      .otherwise(F.least(
-                          F.lit(bins - 1),
-                          F.floor((F.col(score_col) - F.col("__lo"))
-                                  / (F.col("__hi") - F.col("__lo"))
-                                  * bins).cast("int"))).alias("b"),
-                      lab.cast("int").alias("y"),
-                      F.col("__lo"), F.col("__hi")))
+    grid, bin_ = min_max_bin_grid(df, score_col, bins)
+    binned = grid.select(fold, bin_.alias("b"), lab.cast("int").alias("y"),
+                         F.col("__lo"), F.col("__hi"))
     cells = binned.groupBy("fold", "b").agg(
         F.sum("y").alias("np"),
         F.sum(F.lit(1) - F.col("y")).alias("nn"),

@@ -166,7 +166,7 @@ def line_dedup_corpus(df: DataFrame, text_col: str = "text",
                             4).alias("kept_ratio")))
 
 
-def strip_html(html: Column | str, keep_block_breaks: bool = True) -> Column:
+def strip_html(html: Column | str) -> Column:
     """Extract visible text from an HTML string — the boilerplate-
     strip pass every CommonCrawl-style ingest runs before any quality
     heuristic sees the text. Pure stacked regexp_replace (one codegen
@@ -184,10 +184,9 @@ def strip_html(html: Column | str, keep_block_breaks: bool = True) -> Column:
     c = F.col(html) if isinstance(html, str) else html
     c = F.regexp_replace(c, r"(?is)<script[^>]*>.*?</script>", " ")
     c = F.regexp_replace(c, r"(?is)<style[^>]*>.*?</style>", " ")
-    if keep_block_breaks:
-        c = F.regexp_replace(
-            c, r"(?i)</(p|div|h[1-6]|li|tr|table|blockquote)>", "\n")
-        c = F.regexp_replace(c, r"(?i)<br[^>]*>", "\n")
+    c = F.regexp_replace(
+        c, r"(?i)</(p|div|h[1-6]|li|tr|table|blockquote)>", "\n")
+    c = F.regexp_replace(c, r"(?i)<br[^>]*>", "\n")
     c = F.regexp_replace(c, r"(?s)<[^>]+>", " ")
     c = F.regexp_replace(c, r"&nbsp;", " ")
     c = F.regexp_replace(c, r"&amp;", "&")

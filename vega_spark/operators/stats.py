@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -428,6 +428,24 @@ def benford_screen(df: DataFrame, group_col: str, value_col: str,
                  .alias("benford_chi2")))
 
 
+def min_max_bin_grid(df: DataFrame, score_col: str,
+                     bins: int) -> tuple[DataFrame, Column]:
+    """A ``bins``-cell grid between the observed min and max of
+    ``score_col``: returns ``df`` cross-joined with its one-row range
+    frame (``__lo``, ``__hi``; two tiny aggregates, broadcast) and the
+    int bin Column over it. The max lands in the last cell; every row
+    is in cell 0 when min == max."""
+    rng = df.agg(F.min(score_col).alias("__lo"),
+                 F.max(score_col).alias("__hi"))
+    b = (F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
+         .otherwise(F.least(
+             F.lit(bins - 1),
+             F.floor((F.col(score_col) - F.col("__lo"))
+                     / (F.col("__hi") - F.col("__lo")) * bins)
+             .cast("int"))))
+    return df.crossJoin(F.broadcast(rng)), b
+
+
 def binned_roc_auc(df: DataFrame, label_col, score_col: str,
                    bins: int = 256, round_dp: int = 6) -> DataFrame:
     """Binned ROC AUC for a boolean label vs a numeric score — the
@@ -446,16 +464,8 @@ def binned_roc_auc(df: DataFrame, label_col, score_col: str,
     no sort of the data itself. Capability superset (reference has no
     metrics layer; SURVEY.md §2.11)."""
     lab = label_col if not isinstance(label_col, str) else F.col(label_col)
-    rng = df.agg(F.min(score_col).alias("__lo"),
-                 F.max(score_col).alias("__hi"))
-    b = (df.crossJoin(F.broadcast(rng))
-         .select(F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-                 .otherwise(F.least(
-                     F.lit(bins - 1),
-                     F.floor((F.col(score_col) - F.col("__lo"))
-                             / (F.col("__hi") - F.col("__lo")) * bins)
-                     .cast("int"))).alias("b"),
-                 lab.cast("int").alias("y")))
+    grid, bin_ = min_max_bin_grid(df, score_col, bins)
+    b = grid.select(bin_.alias("b"), lab.cast("int").alias("y"))
     cells = b.groupBy("b").agg(
         F.sum("y").alias("np"),
         F.sum(F.lit(1) - F.col("y")).alias("nn"))
@@ -639,16 +649,8 @@ def decile_lift(df: DataFrame, label_col, score_col: str,
     assigns each bin to a tier by cumulative population (top scores
     first), then a bounded re-aggregation to the tier table."""
     lab = label_col if not isinstance(label_col, str) else F.col(label_col)
-    rng = df.agg(F.min(score_col).alias("__lo"),
-                 F.max(score_col).alias("__hi"))
-    b = (df.crossJoin(F.broadcast(rng))
-         .select(F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-                 .otherwise(F.least(
-                     F.lit(bins - 1),
-                     F.floor((F.col(score_col) - F.col("__lo"))
-                             / (F.col("__hi") - F.col("__lo")) * bins)
-                     .cast("int"))).alias("b"),
-                 lab.cast("int").alias("y")))
+    grid, bin_ = min_max_bin_grid(df, score_col, bins)
+    b = grid.select(bin_.alias("b"), lab.cast("int").alias("y"))
     cells = b.groupBy("b").agg(F.count(F.lit(1)).alias("m"),
                                F.sum("y").alias("mp"))
     one = cells.agg(F.sum("m").alias("n"), F.sum("mp").alias("np"),

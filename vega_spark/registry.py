@@ -2073,13 +2073,48 @@ def web_line_dedup_corpus_q(spark, sf_dir):
                                    max_doc_freq=2)
 
 
-@_q("triangle_count_parts", """
-WITH baskets AS (
+# --- the part co-purchase graph --------------------------------------------
+# Parts are nodes; two parts share an edge when >= 2 orders contain
+# both. The graph queries below all run on it: the Spark side builds
+# it with _part_pairs, the oracles open with _PART_PAIRS_CTE.
+
+_PART_PAIRS_CTE = """baskets AS (
   SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
 pairs AS (
-  SELECT x.i AS u, y.i AS v
+  SELECT x.i AS u, y.i AS v, COUNT(*) AS n
   FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2),
+  GROUP BY x.i, y.i HAVING COUNT(*) >= 2)"""
+
+
+def _part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edges ``(u, v, n)`` of the part co-purchase graph, ``u < v``,
+    ``n`` the number of shared orders: a basket self-join (distinct
+    (order, part) rows joined on the order)."""
+    li = _t(spark, sf_dir, "lineitem")
+    baskets = li.select(F.col("l_orderkey").alias("b"),
+                        F.col("l_partkey").alias("i")).distinct()
+    x = baskets.select("b", F.col("i").alias("u"))
+    y = baskets.select("b", F.col("i").alias("v"))
+    return (x.join(y, "b").filter(F.col("u") < F.col("v"))
+            .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") >= 2))
+
+
+# Node cut for broadcasting the part graph's loop state: 50M lineitem
+# rows (the r10 cut) at TPC-H's 30:1 lineitem:part ratio.
+_PART_GRAPH_BROADCAST_NODES = 50_000_000 // 30
+
+
+def _part_graph_broadcastable(sf_dir: str) -> bool:
+    """Whether the graph loops may broadcast their node-sized state
+    (``broadcast_state``): every node is a part key, so the part
+    table's footer row count bounds the node count."""
+    parts = footer_rows(sf_dir, "part")
+    return parts is not None and parts <= _PART_GRAPH_BROADCAST_NODES
+
+
+@_q("triangle_count_parts", f"""
+WITH {_PART_PAIRS_CTE},
 e AS (SELECT u AS a, v AS b FROM pairs),
 deg AS (SELECT n, COUNT(*) AS d
         FROM (SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) t
@@ -2105,14 +2140,7 @@ def triangle_count_parts_q(spark, sf_dir):
     generation is skew-immune (Suri-Vassilvitskii). The oracle
     replays orientation, wedge join and closure exactly."""
     from vega_spark.functions.graph import triangle_count
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(F.col("l_orderkey").alias("b"),
-                        F.col("l_partkey").alias("i")).distinct()
-    x = baskets.select("b", F.col("i").alias("u"))
-    y = baskets.select("b", F.col("i").alias("v"))
-    pairs = (x.join(y, "b").filter(F.col("u") < F.col("v"))
-             .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2).select("u", "v"))
+    pairs = _part_pairs(spark, sf_dir)
     return triangle_count(pairs, "u", "v")
 
 
@@ -2405,13 +2433,8 @@ def attribution_first_last_touch_q(spark, sf_dir):
     return attribution_touch(ev)
 
 
-@_q("label_propagation_parts", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS u, y.i AS v
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2),
+@_q("label_propagation_parts", f"""
+WITH {_PART_PAIRS_CTE},
 sym AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
 l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym),
 n1 AS (SELECT s.v AS node, l.label, COUNT(*) AS c
@@ -2436,14 +2459,7 @@ def label_propagation_parts_q(spark, sf_dir):
     the oracle unrolls them as CTEs. Each superstep: one keyed join
     + one (node,label) count + one per-node rank window."""
     from vega_spark.functions.graph import label_propagation
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(F.col("l_orderkey").alias("b"),
-                        F.col("l_partkey").alias("i")).distinct()
-    x = baskets.select("b", F.col("i").alias("u"))
-    y = baskets.select("b", F.col("i").alias("v"))
-    pairs = (x.join(y, "b").filter(F.col("u") < F.col("v"))
-             .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2).select("u", "v"))
+    pairs = _part_pairs(spark, sf_dir)
     return label_propagation(pairs, "u", "v", iters=2)
 
 
@@ -4447,15 +4463,8 @@ def training_shard_manifest_q(spark, sf_dir):
 
 # --- iterative graph: PageRank with an unrolled-superstep oracle -----------
 
-@_q("pagerank_part_affinity", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2
-),
-pairs AS (
-  SELECT x.i AS u, y.i AS v
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2
-),
+@_q("pagerank_part_affinity", f"""
+WITH {_PART_PAIRS_CTE},
 sym AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
 deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
 r0 AS (SELECT u, CAST(1000000000 AS BIGINT) AS m FROM deg),
@@ -4491,10 +4500,6 @@ def pagerank_part_affinity_q(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     edges = cooccurrence_pairs(li, "l_orderkey", "l_partkey", min_count=2,
                                max_basket=200)
-    # broadcast_ranks stays False here: AQE already broadcasts the
-    # node-sized side from runtime stats at any SF where it fits (the
-    # measured hint variant was ~equal-or-slower — it only pays off
-    # when AQE is off or stats mislead at extreme edge:node ratios)
     out = pagerank(edges, "item_a", "item_b", iters=3, damping=0.85,
                    fixed_point=True)
     return out.select("node", "microrank")
@@ -5469,13 +5474,8 @@ def item_neighbors_parts_q(spark, sf_dir):
     return out.withColumnRenamed("rank", "nb_rank")
 
 
-@_q("bfs_parts_distance", """
-WITH RECURSIVE baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS u, y.i AS v
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2),
+@_q("bfs_parts_distance", f"""
+WITH RECURSIVE {_PART_PAIRS_CTE},
 e AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
 src AS (SELECT MIN(u) AS s FROM e),
 bfs(node, dist) AS (
@@ -5492,22 +5492,9 @@ def bfs_parts_distance_q(spark, sf_dir):
     lineage cut every hop. Oracle: bounded recursive CTE with
     UNION-dedup (working set ≤ nodes×hops), min-dist per node."""
     from vega_spark.functions.graph import bfs_distances
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(F.col("l_orderkey").alias("b"),
-                        F.col("l_partkey").alias("i")).distinct()
-    x = baskets.select("b", F.col("i").alias("u"))
-    y = baskets.select("b", F.col("i").alias("v"))
-    pairs = (x.join(y, "b").filter(F.col("u") < F.col("v"))
-             .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2).select("u", "v"))
-    # r10 opt: node set bounded by the part-key space (<= li_rows/30
-    # entities) — broadcast the frontier/visited state and skip AQE
-    # re-planning inside the hop loop; scale path (big inputs) keeps
-    # the adaptive join
-    li_rows = footer_rows(sf_dir, "lineitem")
+    pairs = _part_pairs(spark, sf_dir)
     return bfs_distances(pairs, "u", "v", max_hops=4,
-                         broadcast_state=li_rows is not None
-                         and li_rows <= 50_000_000)
+                         broadcast_state=_part_graph_broadcastable(sf_dir))
 
 
 @_q("forecast_backtest_events", """
@@ -5576,13 +5563,8 @@ def dsir_select_en_q(spark, sf_dir):
     return dsir_importance_weights(docs, F.col("lang") == "en")
 
 
-@_q("sssp_parts_weighted", """
-WITH RECURSIVE baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS u, y.i AS v, COUNT(*) AS n
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2),
+@_q("sssp_parts_weighted", f"""
+WITH RECURSIVE {_PART_PAIRS_CTE},
 we AS (
   SELECT u, v, CASE WHEN n >= 3 THEN 1 ELSE 2 END AS w FROM pairs),
 e AS (SELECT u, v, w FROM we UNION ALL SELECT v, u, w FROM we),
@@ -5601,22 +5583,11 @@ def sssp_parts_weighted_q(spark, sf_dir):
     join + one min-aggregate; the oracle replays the relaxation in a
     bounded hop-counting recursive CTE."""
     from vega_spark.functions.graph import shortest_paths
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(F.col("l_orderkey").alias("b"),
-                        F.col("l_partkey").alias("i")).distinct()
-    x = baskets.select("b", F.col("i").alias("u"))
-    y = baskets.select("b", F.col("i").alias("v"))
-    pairs = (x.join(y, "b").filter(F.col("u") < F.col("v"))
-             .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2))
+    pairs = _part_pairs(spark, sf_dir)
     we = pairs.select("u", "v", F.when(F.col("n") >= 3, 1)
                       .otherwise(2).alias("w"))
-    # r10 opt: see bfs_parts_distance — size-gated broadcast of the
-    # node-sized dists frame + loop-scoped AQE pin
-    li_rows = footer_rows(sf_dir, "lineitem")
     return shortest_paths(we, "u", "v", "w", max_rounds=4,
-                          broadcast_state=li_rows is not None
-                          and li_rows <= 50_000_000)
+                          broadcast_state=_part_graph_broadcastable(sf_dir))
 
 
 @_q("jackknife_event_means", """
@@ -5766,13 +5737,8 @@ def mi_event_type_value_q(spark, sf_dir):
                               y_bins=4, y_lo=0.0, y_hi=100.0)
 
 
-@_q("kcore_parts", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS u, y.i AS v
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2),
+@_q("kcore_parts", f"""
+WITH {_PART_PAIRS_CTE},
 e0 AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
 d1 AS (SELECT u, COUNT(*) AS d FROM e0 GROUP BY 1),
 k1 AS (SELECT u FROM d1 WHERE d >= 2),
@@ -5789,20 +5755,9 @@ def kcore_parts_q(spark, sf_dir):
     rounds — per round one degree aggregate + two semi-joins, all
     keyed. Oracle unrolls the peels exactly."""
     from vega_spark.functions.graph import k_core
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(F.col("l_orderkey").alias("b"),
-                        F.col("l_partkey").alias("i")).distinct()
-    x = baskets.select("b", F.col("i").alias("u"))
-    y = baskets.select("b", F.col("i").alias("v"))
-    pairs = (x.join(y, "b").filter(F.col("u") < F.col("v"))
-             .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2).select("u", "v"))
-    # r10 opt: see bfs_parts_distance — size-gated broadcast of the
-    # node-sized keep set + loop-scoped AQE pin
-    li_rows = footer_rows(sf_dir, "lineitem")
+    pairs = _part_pairs(spark, sf_dir)
     return k_core(pairs, "u", "v", k=2, max_rounds=2,
-                  broadcast_state=li_rows is not None
-                  and li_rows <= 50_000_000)
+                  broadcast_state=_part_graph_broadcastable(sf_dir))
 
 
 @_q("chi2_event_type_value", """
@@ -6602,6 +6557,29 @@ def image_header_decode_q(spark, sf_dir):
     return out.select("asset_id", "format", "width", "height")
 
 
+def _pattern_pngs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, payload)``: one deterministic grayscale pattern PNG
+    per document (pixel = (31x+57y) mod 256, width 8 + doc_id % 25,
+    height 6 + doc_id % 17), encoded on executors by one narrow
+    mapInPandas. The image oracles replay every pixel from the
+    dims."""
+    import pandas as pd
+
+    from vega_spark.functions.multimodal import make_pattern_png
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+
+    def gen(batches):
+        for b in batches:
+            yield pd.DataFrame({
+                "doc_id": b["doc_id"],
+                "payload": [make_pattern_png(8 + int(i) % 25,
+                                             6 + int(i) % 17)
+                            for i in b["doc_id"]],
+            })
+
+    return docs.mapInPandas(gen, "doc_id long, payload binary")
+
+
 @_q("png_pixel_decode_stats", """
 SELECT d.doc_id AS asset_id,
        (8 + d.doc_id % 25) * (6 + d.doc_id % 17) AS n_px,
@@ -6621,23 +6599,8 @@ def png_pixel_decode_stats_q(spark, sf_dir):
     the exact integer pixel sums from (w, h) alone, so a decoder
     that mishandles any filter or drops a mod-256 carry fails the
     hash. Narrow end to end; blob-scan partition sizing applies."""
-    import pandas as pd
-
-    from vega_spark.functions.multimodal import (image_pixel_stats,
-                                                 make_pattern_png)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"],
-                "payload": [make_pattern_png(8 + int(i) % 25,
-                                             6 + int(i) % 17)
-                            for i in b["doc_id"]],
-            })
-
-    with_png = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return image_pixel_stats(with_png)
+    from vega_spark.functions.multimodal import image_pixel_stats
+    return image_pixel_stats(_pattern_pngs(spark, sf_dir))
 
 
 @_q("png_resize_roundtrip", """
@@ -6658,25 +6621,10 @@ def png_resize_roundtrip_q(spark, sf_dir):
     (src = floor(dst*src_dim/dst_dim)), so the resample kernel, the
     re-encode, and the second decode must all be exact. Two narrow
     mapInPandas stages, no shuffle."""
-    import pandas as pd
-
     from vega_spark.functions.multimodal import (image_pixel_stats,
-                                                 make_pattern_png,
                                                  resize_images)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"],
-                "payload": [make_pattern_png(8 + int(i) % 25,
-                                             6 + int(i) % 17)
-                            for i in b["doc_id"]],
-            })
-
-    with_png = docs.mapInPandas(gen, "doc_id long, payload binary")
-    small = resize_images(with_png, 12, 10, id_col="doc_id",
-                          decode="real")
+    small = resize_images(_pattern_pngs(spark, sf_dir), 12, 10,
+                          id_col="doc_id", decode="real")
     stats = image_pixel_stats(small, id_col="asset_id")
     return stats.select("asset_id",
                         F.lit(12).alias("width"),
@@ -7773,13 +7721,8 @@ def l_diversity_docs_q(spark, sf_dir):
     return l_diversity_audit(docs, ["lang", "len_b"], "source")
 
 
-@_q("clustering_coeff_parts", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS u, y.i AS v
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2),
+@_q("clustering_coeff_parts", f"""
+WITH {_PART_PAIRS_CTE},
 e AS (SELECT u AS a, v AS b FROM pairs),
 deg AS (SELECT n, COUNT(*) AS d
         FROM (SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) t
@@ -7821,14 +7764,7 @@ def clustering_coeff_parts_q(spark, sf_dir):
     triangle_count_parts, per-node cc quantized to 1e-6 integers so
     the cross-node mean replays exactly."""
     from vega_spark.functions.graph import clustering_coefficient
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(F.col("l_orderkey").alias("b"),
-                        F.col("l_partkey").alias("i")).distinct()
-    x = baskets.select("b", F.col("i").alias("u"))
-    y = baskets.select("b", F.col("i").alias("v"))
-    pairs = (x.join(y, "b").filter(F.col("u") < F.col("v"))
-             .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2).select("u", "v"))
+    pairs = _part_pairs(spark, sf_dir)
     return clustering_coefficient(pairs, "u", "v")
 
 
@@ -9453,23 +9389,8 @@ def image_dhash_census_q(spark, sf_dir):
     the pinned nearest index map — any deviation in decode, resample,
     bit order, or the two's-complement wrap fails the hash. Narrow
     end to end (no shuffle)."""
-    import pandas as pd
-
-    from vega_spark.functions.multimodal import (image_dhash,
-                                                 make_pattern_png)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"],
-                "payload": [make_pattern_png(8 + int(i) % 25,
-                                             6 + int(i) % 17)
-                            for i in b["doc_id"]],
-            })
-
-    with_png = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return image_dhash(with_png)
+    from vega_spark.functions.multimodal import image_dhash
+    return image_dhash(_pattern_pngs(spark, sf_dir))
 
 
 @_q("image_near_dup_hamming", """
@@ -9512,23 +9433,9 @@ def image_near_dup_hamming_q(spark, sf_dir):
     signature formula; any candidate the blocking misses or any
     phantom pair fails the count. Linear candidate generation, one
     equi-join shuffle — the 100 TB plan, never all-pairs."""
-    import pandas as pd
-
     from vega_spark.functions.multimodal import (hamming_near_dup_pair_counts,
-                                                 image_dhash,
-                                                 make_pattern_png)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"],
-                "payload": [make_pattern_png(8 + int(i) % 25,
-                                             6 + int(i) % 17)
-                            for i in b["doc_id"]],
-            })
-
-    with_png = docs.mapInPandas(gen, "doc_id long, payload binary")
+                                                 image_dhash)
+    with_png = _pattern_pngs(spark, sf_dir)
     # r9 opt round (guide §2.5): counts via collapsed signature
     # classes — the doc-level pigeonhole self-join is quadratic in
     # identical-signature class size (425 distinct patterns here, so
@@ -9864,15 +9771,8 @@ def streaming_versioned_rollup_q(spark, sf_dir):
     return out
 
 
-@_q("ppr_part_affinity", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2
-),
-pairs AS (
-  SELECT x.i AS u, y.i AS v
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY x.i, y.i HAVING COUNT(*) >= 2
-),
+@_q("ppr_part_affinity", f"""
+WITH {_PART_PAIRS_CTE},
 sym AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
 deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
 seeds AS (SELECT u FROM deg ORDER BY u LIMIT 2),
@@ -9989,23 +9889,9 @@ def image_curation_pipeline_q(spark, sf_dir):
     the keep-first rule, and the survivors' exact luma sums from
     doc_id alone. Every stage is narrow or digest-keyed; payloads
     never enter a shuffle wider than the survivor fetch."""
-    import pandas as pd
-
     from vega_spark.functions.multimodal import (image_dhash,
                                                  image_header_metadata,
-                                                 image_pixel_stats,
-                                                 make_pattern_png)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"],
-                "payload": [make_pattern_png(8 + int(i) % 25,
-                                             6 + int(i) % 17)
-                            for i in b["doc_id"]],
-            })
-
+                                                 image_pixel_stats)
     # materialize the synthesized PNG frame ONCE (r9 opt round, guide
     # §5): it feeds THREE differently-shaped consumers (header gate,
     # gated decode, survivor fetch) plus the n_pass count action —
@@ -10014,8 +9900,7 @@ def image_curation_pipeline_q(spark, sf_dir):
     # Payloads are ~KB PNGs, so the pinned copy is corpus-bounded
     # and released with the session; at 100 TB the equivalent is a
     # staged parquet of the decoded-once assets (guide §8 pattern).
-    with_png = docs.mapInPandas(gen, "doc_id long, payload binary") \
-        .localCheckpoint(eager=True)
+    with_png = _pattern_pngs(spark, sf_dir).localCheckpoint(eager=True)
     hdr = image_header_metadata(with_png)
     passing = (hdr.filter(F.col("width") >= 12)
                .select(F.col("asset_id").alias("doc_id"))

@@ -44,11 +44,9 @@ def interval_join(left: DataFrame, right: DataFrame,
 
 
 def stream_static_join(stream: DataFrame, static: DataFrame,
-                       on: Column | str, how: str = "inner",
-                       broadcast_static: bool = True) -> DataFrame:
+                       on: Column | str, how: str = "inner") -> DataFrame:
     """Enrich a stream with a batch dimension table. The static side
     re-resolves per micro-batch (picks up overwrites of the backing
-    files); broadcast by default — dimension tables at 100 TB scale
-    are still the small side."""
-    s = F.broadcast(static) if broadcast_static else static
-    return stream.join(s, on, how)
+    files) and is broadcast — dimension tables at 100 TB scale are
+    still the small side."""
+    return stream.join(F.broadcast(static), on, how)
