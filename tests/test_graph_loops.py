@@ -107,3 +107,50 @@ def test_part_graph_gate_bounds_nodes_by_part_rows(spark, sf_dir,
                          .collect()))
         assert got == want[n], n
     assert seen == [False, False, False]
+
+
+def _exchanges(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString() \
+        .count("Exchange hashpartitioning")
+
+
+def test_broadcast_state_loop_leaves_caller_conf_alone(spark):
+    """A broadcast_state loop runs AQE-off on its own clone: a reader
+    polling the caller's confs beside it and a run_overlapped leg sees
+    them unchanged, the result belongs to the caller's session, and
+    its checkpoint keeps the loop's hash partitioning (so the loop's
+    actions really planned without AQE)."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from vega_spark.session import run_overlapped
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = tuple(spark.conf.get(k) for k in keys)
+    w = spark.createDataFrame([(u, v, 1 + (u + v) % 3) for u, v in _EDGES],
+                              "u long, v long, w long")
+    other = spark.range(2000).withColumn("k", F.col("id") % 13)
+    seen: set[tuple[str, ...]] = set()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(tuple(spark.conf.get(k) for k in keys))
+            done.wait(0.002)
+    reader = threading.Thread(target=poll)
+    reader.start()
+    try:
+        out, _ = run_overlapped(
+            lambda: graph.shortest_paths(w, broadcast_state=True),
+            lambda: other.repartition("k").localCheckpoint())
+    finally:
+        done.set()
+        reader.join(timeout=10)
+    assert not reader.is_alive()
+    assert seen == {before}
+    assert out.sparkSession is spark
+    assert _exchanges(out.groupBy("node").count()) == 0
+    adaptive = graph.shortest_paths(w, broadcast_state=False)
+    assert _exchanges(adaptive.groupBy("node").count()) == 1
+    assert sorted(out.collect()) == sorted(adaptive.collect())

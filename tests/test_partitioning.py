@@ -220,3 +220,18 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
     spark.range(0, 1000).repartition(10).write.mode("overwrite").parquet(p)
     compact_parquet(spark, p, target_file_mb=128, sort_within=["id"])
     assert spark.read.parquet(p).count() == 1000
+
+
+def test_repartition_by_range_orders_keys_across_partitions(spark):
+    df = ints(spark, [(v * 37) % 101 for v in range(101)], 5)
+    out = P.repartition_by_range(df, 4, ["value"])
+    assert P.num_partitions(out) == 4
+    spans = sorted((r.pid, r.lo, r.hi, r.n) for r in
+                   out.groupBy(F.spark_partition_id().alias("pid"))
+                   .agg(F.min("value").alias("lo"),
+                        F.max("value").alias("hi"),
+                        F.count(F.lit(1)).alias("n")).collect())
+    assert sum(n for *_, n in spans) == 101
+    # each partition holds one key range, ascending by partition id
+    assert all(a[2] < b[1] for a, b in zip(spans, spans[1:]))
+    assert spans[0][1] == 0 and spans[-1][2] == 100

@@ -96,3 +96,59 @@ def test_rmse_vs_baseline_matches_separate_jobs(spark):
         df.agg(F.stddev_pop("r").alias("sd")).collect()[0]["sd"])
     assert rmse_f == rmse_sep
     assert sd_f == sd_sep
+
+
+def test_als_copart_matches_plain_and_leaves_caller_aqe_on(spark,
+                                                          monkeypatch):
+    """The co-partitioned ratings copies give the same factors, feed
+    half-steps that plan no hash exchange on the ratings side, and are
+    built without ever turning the caller's AQE off."""
+    import threading
+
+    from vega_spark.functions import recommender as R
+
+    df = _lowrank_ratings(spark, seed=5).localCheckpoint()
+    halves = []
+    real = R._solve_side
+
+    def solve_side(*args, **kwargs):
+        out = real(*args, **kwargs)
+        halves.append(out)
+        return out
+    monkeypatch.setattr(R, "_solve_side", solve_side)
+
+    def exchanges(frames):
+        return [f._jdf.queryExecution().executedPlan().toString()
+                .count("Exchange hashpartitioning") for f in frames]
+
+    key = "spark.sql.adaptive.enabled"
+    seen: set[str] = set()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            done.wait(0.002)
+    reader = threading.Thread(target=poll)
+    reader.start()
+    try:
+        xu_c, yi_c = als_explicit(df, "user", "item", "r", rank=2,
+                                  iters=2, copart=True)
+    finally:
+        done.set()
+        reader.join(timeout=10)
+    assert not reader.is_alive()
+    assert seen == {"true"}
+    assert exchanges(halves) == [0, 0, 0, 0]
+    halves.clear()
+    xu_p, yi_p = als_explicit(df, "user", "item", "r", rank=2, iters=2,
+                              copart=False)
+    assert all(n > 0 for n in exchanges(halves))
+
+    def factors(f):
+        return sorted((r.id, r.f) for r in f.collect())
+    for got, want in ((xu_c, xu_p), (yi_c, yi_p)):
+        g, w = factors(got), factors(want)
+        assert [i for i, _ in g] == [i for i, _ in w]
+        np.testing.assert_allclose([f for _, f in g], [f for _, f in w],
+                                   rtol=1e-9, atol=1e-12)

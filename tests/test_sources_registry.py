@@ -36,6 +36,16 @@ def test_csv_text_roundtrip(spark, tmp_path):
     assert sorted(r.value for r in lines.collect()) == ["line1", "line2"]
 
 
+def test_read_json_applies_schema(spark, tmp_path):
+    p = tmp_path / "j.json"
+    p.write_text('{"k": 1, "v": "a", "x": 9}\n{"k": 2}\n'
+                 '{"k": 3, "v": "c"}\n')
+    back = SR.read_json(spark, str(p), "k int, v string")
+    assert back.columns == ["k", "v"]
+    assert sorted((r.k, r.v) for r in back.collect()) == [
+        (1, "a"), (2, None), (3, "c")]
+
+
 def test_whole_files_reader(spark, tmp_path):
     # reference LocalFsReader whole-file-bytes mode (F7 shape)
     d = tmp_path / "files"

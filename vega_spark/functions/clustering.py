@@ -71,22 +71,6 @@ def assign_clusters(points: DataFrame, vec_col: str,
     return points.withColumn(out_col, nearest(F.col(vec_col)))
 
 
-def _update_centroids(assigned: DataFrame, vec_col: str, dim: int,
-                      k: int, prev: list[list[float]]) -> list[list[float]]:
-    rows = (assigned
-            .select("cluster", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect())
-    out = [list(c) for c in prev]          # empty cluster keeps centroid
-    acc: dict[int, list[float]] = {}
-    for r in rows:
-        acc.setdefault(r.cluster, [0.0] * dim)[r.pos] = r.m
-    for cid, vec in acc.items():
-        out[cid] = vec
-    return out
-
-
 def _iterate_partials(points: DataFrame, vec_col: str,
                       centroids: list[list[float]],
                       k: int, dim: int) -> list:

@@ -13,40 +13,40 @@ iteration) — this module adds weighted propagation (PageRank).
 
 from __future__ import annotations
 
-from contextlib import nullcontext
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from vega_spark.session import cloned_session, rebind
 
 # the lazy loops (pagerank, label_propagation) cut their state's
 # lineage with a localCheckpoint every this many supersteps
 _CHECKPOINT_EVERY = 8
 
 
-def _loop_ctx(df: DataFrame, broadcast_state: bool):
-    """Loop-scoped AQE pin for iterative graph loops that materialize
-    per round (r10 opt, guide §2/VERDICT r9 #3): each round's plan is
-    a FIXED one-join+one-aggregate shape over a checkpointed edge
-    frame, so AQE re-planning buys nothing inside the loop and costs
-    a stage-barrier re-optimization per stage (~50-80 ms each at
+def _loop_session(df: DataFrame) -> SparkSession:
+    """AQE off on a loop-scoped clone of ``df``'s session, for the
+    ``broadcast_state`` loops that materialize per round (r10 opt,
+    guide §2/VERDICT r9 #3): each round's plan is a FIXED
+    one-join+one-aggregate shape over a checkpointed edge frame, so
+    AQE re-planning buys nothing inside the loop and costs a
+    stage-barrier re-optimization per stage (~50-80 ms each at
     sf0.1). Only valid TOGETHER with the explicit broadcast hint on
     the node-sized state frame — without the hint, static estimates
     would demote the per-round join to sort-merge and shuffle the
     edge frame every round (measured: hint alone 2.93 → 2.54 s on
     sssp; hint + AQE-off 2.37 s; AQE-off alone would regress).
-    The pin is scoped to the loop's actions; edge derivation and
-    everything downstream keep AQE.
+    The loop's frames are rebound onto the clone and its result back
+    to the caller's session, so edge derivation and everything
+    downstream keep the caller's AQE, and the caller's conf is never
+    written.
 
     Contract: ``broadcast_state`` is True only when the CALLER has
     bounded the graph's node count (every state frame is at most one
     row per node) from input metadata, not from an edge- or
     fact-row proxy; the registry's part graph gates on the part
     table's footer row count (``_part_graph_broadcastable``)."""
-    from vega_spark.session import pinned_conf
-    if not broadcast_state:
-        return nullcontext()
-    return pinned_conf(df.sparkSession,
-                       "spark.sql.adaptive.enabled", "false")
+    return cloned_session(df.sparkSession,
+                          {"spark.sql.adaptive.enabled": "false"})
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str,
@@ -262,29 +262,35 @@ def bfs_distances(edges: DataFrame, src: str = "u", dst: str = "v",
 
     ``broadcast_state`` (r10 opt): hint both node-sized state
     frames — the frontier on the expansion join and the visited set
-    on the anti-join — and pin AQE off for the loop's per-hop
-    actions. Results identical. Pass True only with the node count
-    bounded below a broadcast-safe cut (see _loop_ctx)."""
+    on the anti-join — and run the loop's per-hop actions with AQE
+    off on a loop-scoped clone. Results identical. Pass True only
+    with the node count bounded below a broadcast-safe cut (see
+    _loop_session)."""
     sym = _symmetrize(edges, src, dst).distinct() \
         .localCheckpoint(eager=True)
+    spark = sym.sparkSession
+    if broadcast_state:
+        loop = _loop_session(sym)
+        sym = rebind(sym, loop)
+        if source is not None:
+            source = rebind(source, loop)
     if source is None:
         source = sym.agg(F.min("u").alias("node"))
-    with _loop_ctx(sym, broadcast_state):
-        frontier = source.select("node", F.lit(0).alias("dist"))
-        visited = frontier.localCheckpoint(eager=True)
-        for h in range(1, max_hops + 1):
-            f = F.broadcast(frontier) if broadcast_state else frontier
-            seen = visited.select("node")
-            nxt = (f.join(sym, f["node"] == sym["u"])
-                   .select(F.col("v").alias("node")).distinct()
-                   .join(F.broadcast(seen) if broadcast_state else seen,
-                         "node", "left_anti")
-                   .withColumn("dist", F.lit(h)))
-            frontier = nxt.localCheckpoint(eager=True)
-            if frontier.isEmpty():
-                break
-            visited = visited.union(frontier).localCheckpoint(eager=True)
-    return visited
+    frontier = source.select("node", F.lit(0).alias("dist"))
+    visited = frontier.localCheckpoint(eager=True)
+    for h in range(1, max_hops + 1):
+        f = F.broadcast(frontier) if broadcast_state else frontier
+        seen = visited.select("node")
+        nxt = (f.join(sym, f["node"] == sym["u"])
+               .select(F.col("v").alias("node")).distinct()
+               .join(F.broadcast(seen) if broadcast_state else seen,
+                     "node", "left_anti")
+               .withColumn("dist", F.lit(h)))
+        frontier = nxt.localCheckpoint(eager=True)
+        if frontier.isEmpty():
+            break
+        visited = visited.union(frontier).localCheckpoint(eager=True)
+    return rebind(visited, spark)
 
 
 def shortest_paths(edges: DataFrame, src: str = "u", dst: str = "v",
@@ -309,27 +315,33 @@ def shortest_paths(edges: DataFrame, src: str = "u", dst: str = "v",
 
     ``broadcast_state`` (r10 opt): hint the node-sized dists frame
     as the broadcast side of every relaxation join — the edge frame
-    is then never shuffled inside the loop — and pin AQE off for the
-    loop's per-round actions. Results identical (pinned by
-    test_graph_broadcast_state_paths_agree). Pass True only with the
-    node count bounded below a broadcast-safe cut (see _loop_ctx)."""
+    is then never shuffled inside the loop — and run the loop's
+    per-round actions with AQE off on a loop-scoped clone. Results
+    identical (pinned by test_graph_broadcast_state_paths_agree).
+    Pass True only with the node count bounded below a
+    broadcast-safe cut (see _loop_session)."""
     sym = _symmetrize(edges, src, dst, weight)
     sym = sym.localCheckpoint(eager=True)
+    spark = sym.sparkSession
+    if broadcast_state:
+        loop = _loop_session(sym)
+        sym = rebind(sym, loop)
+        if source is not None:
+            source = rebind(source, loop)
     if source is None:
         source = sym.agg(F.min("u").alias("node"))
-    with _loop_ctx(sym, broadcast_state):
-        dists = source.select("node",
-                              F.lit(0).cast("long").alias("dist")) \
-            .localCheckpoint(eager=True)
-        for _ in range(max_rounds):
-            d = F.broadcast(dists) if broadcast_state else dists
-            relaxed = (d.join(sym, d["node"] == sym["u"])
-                       .select(F.col("v").alias("node"),
-                               (F.col("dist") + F.col("w")).alias("dist")))
-            dists = (dists.union(relaxed)
-                     .groupBy("node").agg(F.min("dist").alias("dist"))
-                     .localCheckpoint(eager=True))
-    return dists
+    dists = source.select("node",
+                          F.lit(0).cast("long").alias("dist")) \
+        .localCheckpoint(eager=True)
+    for _ in range(max_rounds):
+        d = F.broadcast(dists) if broadcast_state else dists
+        relaxed = (d.join(sym, d["node"] == sym["u"])
+                   .select(F.col("v").alias("node"),
+                           (F.col("dist") + F.col("w")).alias("dist")))
+        dists = (dists.union(relaxed)
+                 .groupBy("node").agg(F.min("dist").alias("dist"))
+                 .localCheckpoint(eager=True))
+    return rebind(dists, spark)
 
 
 def k_core(edges: DataFrame, src: str = "u", dst: str = "v",
@@ -353,20 +365,22 @@ def k_core(edges: DataFrame, src: str = "u", dst: str = "v",
     ``broadcast_state`` (r10 opt): hint the node-sized keep set as
     the broadcast side of both induced-subgraph semi-joins — the
     surviving edge frame is then never shuffled inside the loop —
-    and pin AQE off for the loop's per-round actions. Pass True only
-    with the node count bounded below a broadcast-safe cut (see
-    _loop_ctx)."""
+    and run the loop's per-round actions with AQE off on a
+    loop-scoped clone. Pass True only with the node count bounded
+    below a broadcast-safe cut (see _loop_session)."""
     sym = _symmetrize(edges, src, dst).distinct() \
         .localCheckpoint(eager=True)
-    with _loop_ctx(sym, broadcast_state):
-        for _ in range(max_rounds):
-            deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-            keep = deg.filter(F.col("deg") >= k).select("u")
-            kb = F.broadcast(keep) if broadcast_state else keep
-            sym = (sym.join(kb, "u", "semi")
-                   .join(kb.withColumnRenamed("u", "v"), "v", "semi")
-                   .select("u", "v").localCheckpoint(eager=True))
-    return (sym.groupBy(F.col("u").alias("node"))
+    spark = sym.sparkSession
+    if broadcast_state:
+        sym = rebind(sym, _loop_session(sym))
+    for _ in range(max_rounds):
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        keep = deg.filter(F.col("deg") >= k).select("u")
+        kb = F.broadcast(keep) if broadcast_state else keep
+        sym = (sym.join(kb, "u", "semi")
+               .join(kb.withColumnRenamed("u", "v"), "v", "semi")
+               .select("u", "v").localCheckpoint(eager=True))
+    return (rebind(sym, spark).groupBy(F.col("u").alias("node"))
             .agg(F.count(F.lit(1)).alias("deg")))
 
 

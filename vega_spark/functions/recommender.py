@@ -166,7 +166,9 @@ def als_explicit(ratings: DataFrame, user_col: str, item_col: str,
     # already satisfied. Two shuffles paid once instead of 10 GB per
     # half-step; skipped when ratings is small enough that the extra
     # materializations cost more than they save.
-    from vega_spark.session import pinned_conf, release_local_checkpoint
+    from vega_spark.session import (cloned_session, rebind,
+                                    release_local_checkpoint,
+                                    run_overlapped)
     if copart is None:
         copart = ratings.count() > 5_000_000
     if copart:
@@ -175,19 +177,19 @@ def als_explicit(ratings: DataFrame, user_col: str, item_col: str,
         # whose outputPartitioning reads as unknown, so the
         # checkpointed scan loses its hash partitioning and every
         # half-step re-inserts the exchange this copy exists to kill
-        # (verified on the executed plan both ways). AQE stays on for
-        # the half-steps themselves.
+        # (verified on the executed plan both ways). So the copies
+        # are built on an AQE-off clone and rebound to the caller's
+        # session, where the half-steps run with AQE on.
         spark = ratings.sparkSession
-        from vega_spark.session import run_overlapped
-        with pinned_conf(spark, "spark.sql.adaptive.enabled", "false"):
-            # the two copies are independent shuffles of the same
-            # checkpointed input — overlap them (guide §2.6); both
-            # run inside the pinned-AQE-off window either way
-            r_user, r_item = run_overlapped(
-                lambda: (ratings.repartition(F.col(user_col))
-                         .localCheckpoint(storageLevel=copart_storage)),
-                lambda: (ratings.repartition(F.col(item_col))
-                         .localCheckpoint(storageLevel=copart_storage)))
+        off = rebind(ratings, cloned_session(
+            spark, {"spark.sql.adaptive.enabled": "false"}))
+        # the two copies are independent shuffles of the same
+        # checkpointed input — overlap them (guide §2.6)
+        r_user, r_item = (rebind(r, spark) for r in run_overlapped(
+            lambda: (off.repartition(F.col(user_col))
+                     .localCheckpoint(storageLevel=copart_storage)),
+            lambda: (off.repartition(F.col(item_col))
+                     .localCheckpoint(storageLevel=copart_storage))))
     else:
         r_user = r_item = ratings
     # broadcast eligibility decided ONCE per run per side (r5 ADVICE:

@@ -304,10 +304,6 @@ def embedding_near_dup_pairs(df: DataFrame, dim: int,
             .distinct())
 
 
-def _lit_vec(v: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
-
-
 def _nearest_cells_udf(centroids: list[list[float]], n: int = 1):
     """Vectorized (Arrow-batched) nearest-cell scorer: one numpy
     matmul per batch against the unit-normalized centroid matrix.
@@ -395,18 +391,6 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     return (cand.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= k)
             .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rk"))
-
-
-def exact_cosine_threshold_count(df: DataFrame, other: DataFrame,
-                                 threshold: float,
-                                 vec_col: str = "embedding") -> int:
-    """Diagnostic exact count of pairs above threshold (small inputs
-    only — used by tests to measure LSH recall)."""
-    a = df.select(F.col(vec_col).alias("va"))
-    bb = other.select(F.col(vec_col).alias("vb"))
-    return (a.crossJoin(bb)
-            .filter(cosine(F.col("va"), F.col("vb")) >= threshold)
-            .count())
 
 
 def cosine_topk_arrow(corpus: DataFrame, queries: DataFrame,

@@ -216,20 +216,6 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                  .alias("distinct_frac")))
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Bundle: all text-analysis columns in one narrow projection."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        word_token_count(text_col).alias("n_word_tokens"),
-        language_id(text_col).alias("lang_pred"),
-        F.round(punct_ratio(text_col), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(text_col), 6).alias("stopword_ratio"),
-        F.round(quality_score(text_col), 2).alias("quality"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 # --- normalization / redaction (cleaning stages before dedup) -----------------
 
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"

@@ -36,11 +36,6 @@ def select_map(df: DataFrame, *exprs: ColumnLike) -> DataFrame:
     return df.select(*exprs)
 
 
-def with_column_map(df: DataFrame, name: str, expr: Column) -> DataFrame:
-    """``map(f)`` preserving all input columns (withColumn form)."""
-    return df.withColumn(name, expr)
-
-
 def filter_rows(df: DataFrame, predicate: ColumnLike) -> DataFrame:
     """``filter(p)``. Predicate is a Column so Catalyst can push it
     down to the parquet scan (check .explain for PushedFilters)."""

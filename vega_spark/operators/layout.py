@@ -92,11 +92,6 @@ def write_bucketed_at(df: DataFrame, table: str, path: str, bucket_col: str,
     w.saveAsTable(table)
 
 
-def bucketed_join_ready(spark, table: str) -> bool:
-    """True if ``table`` already exists in the session catalog."""
-    return spark.catalog.tableExists(table)
-
-
 def compact_parquet(spark, path: str, target_file_mb: int = 128,
                     sort_within: Sequence[str] | None = None) -> dict:
     """Small-file compaction — the table-maintenance chore every

@@ -14,35 +14,47 @@ Scale notes (100 TB design intent):
 - ``spark.sql.shuffle.partitions`` is only the *initial* value; AQE
   re-plans. On a real cluster set it ~2-3x total cores.
 - Arrow enabled for any pandas-UDF path (the sanctioned slow path).
+
+Scoped confs: an operator that needs a conf other than the caller's
+(AQE off around a fixed-shape loop, a drain's state-store partition
+count) sets it on a ``cloned_session`` and runs there, moving frames
+across with ``rebind``. It never sets it on the caller's session,
+whose confs are shared with every query running on it concurrently
+(``run_overlapped`` legs included).
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
-@contextmanager
-def pinned_conf(spark: SparkSession, key: str, value: str):
-    """Temporarily set a session conf, restoring the prior value on
-    exit (even on error). Used to turn AQE off around iterative loops
-    (the graph loops' ``_loop_ctx``) and while ALS checkpoints its
-    co-partitioned rating copies.
+def cloned_session(spark: SparkSession,
+                   confs: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``confs`` set on the clone only.
 
-    SINGLE-THREADED ASSUMPTION: this mutates session-global state,
-    which is safe under the sequential driver/bench harness but racy
-    if registry queries ever run concurrently on one session (the
-    restore could clobber a concurrent query's setting). Streaming
-    drains avoid it: ``streaming.sources.drain_to_memory`` sets its
-    confs on a ``cloneSession()`` copy instead."""
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    ``cloneSession()`` copies the caller's confs, temp views and UDFs
+    (``newSession()`` would drop the runtime confs
+    ``ensure_engine_conf`` set) and shares its SparkContext and cache;
+    later conf changes on either side do not reach the other."""
+    clone = SparkSession(spark.sparkContext,
+                         spark._jsparkSession.cloneSession())
+    for k, v in confs.items():
+        clone.conf.set(k, v)
+    return clone
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s logical plan re-rooted in ``session``: actions on the
+    result plan with ``session``'s confs. A checkpointed frame keeps
+    its recorded output partitioning. Returns ``df`` itself when it
+    already belongs to ``session``."""
+    if df.sparkSession is session:
+        return df
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.queryExecution().logical())
+    return DataFrame(jdf, session)
 
 
 def get_session(

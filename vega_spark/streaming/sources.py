@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from vega_spark.session import drain_shuffle_partitions
+from vega_spark.session import cloned_session, drain_shuffle_partitions
 
 
 def stream_parquet(spark: SparkSession, path: str,
@@ -42,17 +42,6 @@ def stream_parquet(spark: SparkSession, path: str,
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def stream_json(spark: SparkSession, path: str,
-                schema: StructType | str) -> DataFrame:
-    return spark.readStream.schema(schema).json(path)
-
-
-def stream_rate(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Rate source: (timestamp, value) rows — load/latency testing."""
-    return (spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second).load())
 
 
 def to_memory(df: DataFrame, name: str, output_mode: str = "append",
@@ -78,12 +67,11 @@ def drain_to_memory(spark: SparkSession,
     """Drain a bounded stream into a memory sink and return the sink's
     table, without touching ``spark``.
 
-    The query runs on a clone of ``spark`` (``cloneSession()`` copies
-    confs, temp views and UDFs; ``newSession()`` would drop the
-    runtime confs ``ensure_engine_conf`` set). On the clone only, the
-    state-store partition count is sized from the ``staged`` arrival
-    directories (``drain_shuffle_partitions``) and no-data micro-batches
-    are on (Spark's default; outer-join flushes ride on them).
+    The query runs on a ``cloned_session`` of ``spark``. On the clone
+    only, the state-store partition count is sized from the ``staged``
+    arrival directories (``drain_shuffle_partitions``) and no-data
+    micro-batches are on (Spark's default; outer-join flushes ride on
+    them).
     ``build(clone)`` returns the streaming frame: its stream sources
     must read through the clone, static frames of ``spark`` may join it.
 
@@ -96,10 +84,9 @@ def drain_to_memory(spark: SparkSession,
     plans with the caller's ``spark.sql.shuffle.partitions``.
     """
     key = "spark.sql.shuffle.partitions"
-    clone = SparkSession(spark.sparkContext,
-                         spark._jsparkSession.cloneSession())
-    clone.conf.set(key, drain_shuffle_partitions(*staged))
-    clone.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    clone = cloned_session(spark, {
+        key: drain_shuffle_partitions(*staged),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true"})
     name = "drain_" + uuid.uuid4().hex[:8]
     try:
         q = to_memory(build(clone), name, output_mode)
