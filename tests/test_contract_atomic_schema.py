@@ -21,14 +21,11 @@ Two legs:
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 from pyspark.sql import types as T
 
+from tools.check_oracle import duck_views
 from vega_spark import registry
-from vega_spark.tables import TABLE_NAMES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -37,10 +34,7 @@ _NESTED_SPARK = (T.ArrayType, T.MapType, T.StructType)
 
 
 def test_every_oracle_is_atomic_only():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{os.path.join(SF_DIR, t)}.parquet'")
+    con = duck_views(SF_DIR)
     offenders = {}
     for name, sql in registry.ORACLES.items():
         rel = con.sql(sql)

@@ -11,6 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.check_oracle import duck_views  # noqa: E402
 from tools.fuzz_differential import (gen_decimal_query,  # noqa: E402
                                      gen_join_query, gen_map_null_query,
                                      gen_nested_query, gen_pivot_query,
@@ -25,19 +26,12 @@ from tools.fuzz_differential import (gen_decimal_query,  # noqa: E402
 
 
 def test_random_query_shapes_agree_with_duckdb(spark, sf_dir):
-    import duckdb
-
     from vega_spark.tables import load_table
 
-    load_table(spark, sf_dir, "lineitem") \
-        .createOrReplaceTempView("lineitem")
-    for t in ("orders", "customer", "documents", "embeddings"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    con = duckdb.connect()
     for t in ("lineitem", "orders", "customer", "documents",
               "embeddings"):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{os.path.join(sf_dir, t + '.parquet')}'")
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    con = duck_views(sf_dir)
     rng = random.Random(1234)
     gens = [gen_query, gen_join_query, gen_window_query,
             gen_setop_query, gen_three_way_join_query,
@@ -59,15 +53,11 @@ def test_pivot_absent_value_count_divergence(spark, sf_dir):
     for every missing cell — including COUNT. SUM/MAX agree (NULL
     both sides). If either engine changes, this test fails and the
     generator's carve-out should be revisited."""
-    import duckdb
-
     from vega_spark.tables import load_table
 
     load_table(spark, sf_dir, "lineitem") \
         .createOrReplaceTempView("lineitem")
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM "
-            f"'{os.path.join(sf_dir, 'lineitem.parquet')}'")
+    con = duck_views(sf_dir)
     q = ("SELECT * FROM (SELECT l_linenumber AS g, l_linestatus AS p,"
          " l_orderkey AS m0 FROM lineitem) "
          "PIVOT (COUNT(m0) AS a0, SUM(m0) AS a1 FOR p IN ('ZZ')) "

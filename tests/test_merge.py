@@ -203,3 +203,33 @@ def test_refresh_join_view_signed_handles_deletes(spark):
     want = sorted(tuple(r) for r in to_multiset(L1.join(R1, "k")).collect())
     got = sorted(tuple(r) for r in v1.collect())
     assert got == want
+
+
+def test_apply_changes_hints_only_buildable_sides(spark):
+    """With ``broadcast_changes`` the delete anti-join and the update
+    join broadcast their change side, while the inserts anti-join —
+    whose LEFT side is the changefeed, which Spark cannot build for a
+    left anti join — carries no hint at all."""
+    from vega_spark.operators.merge import apply_changes
+    snap = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0), (3, 30.0)], "k long, v double")
+    ch = spark.createDataFrame(
+        [(1, "upsert", 1, 11.0), (2, "delete", 1, None),
+         (9, "upsert", 1, 90.0)], "k long, op string, seq int, v double")
+    qe = apply_changes(snap, ch, ["k"], ["seq"])._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    joins = [ln.split("Join ", 1)[1] for ln in plan.splitlines()
+             if "Join " in ln]
+    hint = "rightHint=(strategy=broadcast)"
+    anti = [j for j in joins if j.startswith("LeftAnti")]
+    assert "leftHint" not in plan
+    # the inserts anti-join is the one without a hint; the delete
+    # anti-join (under both the update and the inserts branch) keeps it
+    assert [j for j in anti if "Hint" in j] == \
+        [j for j in anti if j.endswith(hint)]
+    assert sum("Hint" not in j for j in anti) == 1
+    assert any(j.startswith("LeftOuter") and j.endswith(hint)
+               for j in joins)
+    physical = qe.executedPlan().toString()
+    assert "LeftAnti, BuildRight" in physical
+    assert "LeftOuter, BuildRight" in physical

@@ -3,35 +3,25 @@
 DuckDB widens integer aggregates (SUM(BIGINT) -> HUGEINT); the
 driver's Arrow-mediated value hash then sees decimal128/float64 where
 Spark has int64, and numerically identical results hash differently —
-the root cause of every round-2 hash_match:false row.  registry pins
-the columns recorded in vega_spark/oracle_casts.py back to BIGINT;
-this test replans every oracle (types are data-independent) so a new
-or edited oracle that reintroduces a widened type, or a stale
-generated file, fails CI instead of failing the driver.
+the root cause of every round-2 hash_match:false row.  Each oracle
+casts such a column to BIGINT in its own SQL; this test replans every
+oracle (types are data-independent) so a new or edited oracle that
+reintroduces a widened type fails CI instead of failing the driver.
 """
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
+from tools.check_oracle import WIDENED, duck_views, rows_sha256
 from vega_spark import registry
-from vega_spark.tables import TABLE_NAMES
-
-from tools.gen_oracle_casts import WIDENED, detect
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                  f"'{os.path.join(SF_DIR, t)}.parquet'")
-    return c
+    return duck_views(SF_DIR)
 
 
 def test_no_widened_types_in_pinned_oracles(con):
@@ -44,14 +34,7 @@ def test_no_widened_types_in_pinned_oracles(con):
             offenders[name] = bad
     assert not offenders, (
         f"{len(offenders)} oracles expose widened DuckDB types "
-        f"(run tools/gen_oracle_casts.py): {offenders}")
-
-
-def test_generated_cast_file_is_current():
-    from vega_spark.oracle_casts import WIDENED_COLS
-    assert detect(SF_DIR) == WIDENED_COLS, (
-        "vega_spark/oracle_casts.py is stale — "
-        "run tools/gen_oracle_casts.py")
+        f"(cast them to BIGINT in the oracle): {offenders}")
 
 
 def test_checker_fails_widened_and_cross_family_types():
@@ -63,3 +46,18 @@ def test_checker_fails_widened_and_cross_family_types():
     # integer width differences are driver-tolerated
     assert not type_problems({"rk": "int"}, {"rk": "BIGINT"})
     assert not type_problems({"v": "double"}, {"v": "DOUBLE"})
+
+
+def test_rows_sha256_ignores_order_and_sees_every_cell():
+    rows = [(1, "a", 0.5), (2, "b", None), (3, "c", float("nan"))]
+    cols = ["k", "s", "x"]
+    h = rows_sha256(rows, cols)
+    # row order and column order do not matter
+    assert rows_sha256(rows[::-1], cols) == h
+    assert rows_sha256([(x, s, k) for k, s, x in rows],
+                       ["x", "s", "k"]) == h
+    # any one changed cell does
+    assert rows_sha256([(1, "a", 0.5), (2, "b", None),
+                        (3, "d", float("nan"))], cols) != h
+    assert rows_sha256([(1, "a", 0.5000000000000001), (2, "b", None),
+                        (3, "c", float("nan"))], cols) != h

@@ -38,7 +38,11 @@ def _views(spark) -> set[str]:
 
 
 @pytest.mark.parametrize("name", DRAINS)
-def test_drain_leaves_caller_session_untouched(spark, sf_dir, name):
+def test_drain_leaves_caller_session_untouched(spark, sf_dir, name,
+                                               tmp_path, monkeypatch):
+    # a private temp dir: another engine process staging drains on the
+    # same host must not show up in (or vanish from) this drain's view
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     prev = spark.conf.get(KEY)
     spark.conf.set(KEY, "7")
     views, dirs = _views(spark), _staging_dirs()

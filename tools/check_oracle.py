@@ -20,11 +20,15 @@ Strictness contract (calibrated against the round-2 driver rows):
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
        python tools/check_oracle.py --json OUT.json [sf_dir] [query ...]
   --json also writes the per-query results as a LOCALVERIFY-shaped
-  artifact (status/rows/sec per query + pass counts).
+  artifact (status/rows/sec per query + pass counts).  Each query that
+  ran records ``spark_sha256`` (its normalized rows) and, with an
+  oracle, ``oracle_sha256`` plus ``oracle_types``, so two trees give
+  the same results exactly when their artifacts' hashes agree.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -38,6 +42,10 @@ from vega_spark import registry  # noqa: E402
 from vega_spark.session import get_session  # noqa: E402
 from vega_spark.tables import TABLE_NAMES  # noqa: E402
 
+# DuckDB types that must never reach the driver's comparator: SUM over
+# integers returns HUGEINT (int128), and the driver's Arrow-mediated
+# value hash reads it as decimal128/float64 where Spark has int64.  An
+# oracle casts any such output column to BIGINT in its own SQL.
 WIDENED = ("HUGEINT", "UHUGEINT", "UBIGINT", "UINTEGER",
            "USMALLINT", "UTINYINT", "DECIMAL")
 
@@ -74,12 +82,14 @@ def _duck_family(t: str) -> str:
 
 def type_problems(spark_types: dict[str, str],
                   duck_types: dict[str, str]) -> list[str]:
-    """Type-level failures the driver's hash would surface."""
+    """Type-level failures the driver's hash would surface.  A widened
+    DuckDB type is fixed in the oracle SQL: cast that output column to
+    BIGINT at the oracle's outermost projection."""
     probs = []
     for c, dt in duck_types.items():
         if any(k in dt.upper() for k in WIDENED):
             probs.append(f"widened duckdb type {c}:{dt} "
-                         "(run tools/gen_oracle_casts.py)")
+                         "(cast it to BIGINT in the oracle)")
     for c, st in spark_types.items():
         if c in duck_types:
             sf, df = _spark_family(st), _duck_family(duck_types[c])
@@ -107,6 +117,22 @@ def normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
     return out
 
 
+def rows_sha256(rows: list[tuple], cols: list[str]) -> str:
+    """sha256 of ``normalize(rows, cols)``: independent of row and
+    column order, sensitive to every cell."""
+    return hashlib.sha256(repr(normalize(rows, cols)).encode()).hexdigest()
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per engine table over the
+    parquet files in ``sf_dir`` — the names the oracles query."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{os.path.join(sf_dir, t)}.parquet'")
+    return con
+
+
 def main() -> int:
     args = sys.argv[1:]
     json_out = None
@@ -118,10 +144,7 @@ def main() -> int:
     results: dict[str, dict] = {}
     spark = get_session("oracle-check")
 
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t)}.parquet'")
+    con = duck_views(sf_dir)
 
     failures = []
     attempted = 0
@@ -155,9 +178,10 @@ def main() -> int:
             results[name] = {"status": "nested_output", "cols": nested}
             print(f"FAIL  {name:28s} nested output columns {nested}")
             continue
+        hashes = {"spark_sha256": rows_sha256(srows, scols)}
         if name not in registry.ORACLES:
             results[name] = {"status": "ok_rows_only", "rows": len(srows),
-                             "sec": round(time.time() - t0, 1)}
+                             "sec": round(time.time() - t0, 1), **hashes}
             print(f"ok*   {name:28s} rows={len(srows):7d} (no oracle, rows-only) "
                   f"{time.time()-t0:5.1f}s")
             continue
@@ -171,6 +195,8 @@ def main() -> int:
             results[name] = {"status": "duckdb_error", "err": str(e)[:300]}
             print(f"FAIL  {name:28s} duckdb error: {e}")
             continue
+        hashes.update(oracle_sha256=rows_sha256(drows, dcols),
+                      oracle_types=dtypes)
 
         problems = []
         if len(srows) != len(drows):
@@ -187,11 +213,11 @@ def main() -> int:
         if problems:
             failures.append((name, "; ".join(problems)))
             results[name] = {"status": "fail",
-                             "err": "; ".join(problems)[:300]}
+                             "err": "; ".join(problems)[:300], **hashes}
             print(f"FAIL  {name:28s} {'; '.join(problems)[:300]}")
         else:
             results[name] = {"status": "ok", "rows": len(srows),
-                             "sec": round(time.time() - t0, 1)}
+                             "sec": round(time.time() - t0, 1), **hashes}
             print(f"ok    {name:28s} rows={len(srows):7d} {time.time()-t0:5.1f}s")
 
     print(f"\n{attempted - len(failures)}/{attempted} passed")

@@ -1293,8 +1293,7 @@ def run_case(spark, con, sql) -> tuple[bool, str]:
 
 
 def main() -> int:
-    import duckdb
-
+    from tools.check_oracle import duck_views
     from vega_spark.session import get_session
     from vega_spark.tables import load_table
 
@@ -1303,21 +1302,9 @@ def main() -> int:
     seed = int(sys.argv[3]) if len(sys.argv) > 3 else 42
 
     spark = get_session("vega-fuzz")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM "
-            f"'{os.path.join(sf_dir, 'lineitem.parquet')}'")
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load_table(spark, sf_dir, "customer") \
-        .createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("documents")
-    load_table(spark, sf_dir, "embeddings") \
-        .createOrReplaceTempView("embeddings")
-    for t in ("orders", "customer", "documents", "embeddings"):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{os.path.join(sf_dir, t + '.parquet')}'")
+    for t in ("lineitem", "orders", "customer", "documents", "embeddings"):
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    con = duck_views(sf_dir)
 
     rng = random.Random(seed)
     gens = [gen_query, gen_join_query, gen_window_query, gen_setop_query,

@@ -169,10 +169,13 @@ def apply_changes(snapshot: DataFrame, changes: DataFrame,
                    .alias("__m"))
               .select(*keys, F.col("__m.__op").alias(op_col),
                       *[F.col(f"__m.{c}").alias(c) for c in payload]))
-    if broadcast_changes:
-        latest = F.broadcast(latest)
     dels = latest.filter(F.col(op_col) == "delete").select(*keys)
     ups = latest.filter(F.col(op_col) == "upsert").drop(op_col)
+    # hint the delete side only: merge_into hints its own update side,
+    # and a hint on ``ups`` would reach its inserts anti-join as the
+    # LEFT side, which Spark cannot build
+    if broadcast_changes:
+        dels = F.broadcast(dels)
     kept = snapshot.join(dels, on=keys, how="left_anti")
     return merge_into(kept, ups, keys,
                       broadcast_source=broadcast_changes)

@@ -6,9 +6,14 @@ Contract (driver): each query is ``fn(spark, sf_dir) -> DataFrame``;
 the oracle SQL runs on DuckDB views named after the tables. Column
 names and types are aligned on both sides; doubles are rounded on
 both sides (same decimals) so cross-engine float noise can't flip
-the value hash. Queries whose results are inherently engine-specific
-(seeded sampling, xxhash64-based sketches, timeout-bounded partials)
-have no oracle — the driver records a weaker rows-only check and the
+the value hash. ``ORACLES[name]`` is the declared SQL, used verbatim:
+an output column DuckDB widens past 64 bits (SUM over integers gives
+HUGEINT) is cast to BIGINT in the oracle itself, at its outermost
+projection (tests/test_oracle_types.py replans every oracle to hold
+this). SQL that several oracles share lives in one named fragment.
+Queries whose results are inherently engine-specific (seeded
+sampling, xxhash64-based sketches, timeout-bounded partials) have
+no oracle — the driver records a weaker rows-only check and the
 unit tests pin their properties instead.
 
 Scale notes per query are in the operator modules; the registry only
@@ -981,31 +986,43 @@ def dedup_exact_q(spark, sf_dir):
     return X_dedup.exact_dedup(_t(spark, sf_dir, "documents"), "text", "doc_id")
 
 
-_NGRAM_JACCARD_SQL = """
-WITH toks AS (
+# Each document's lowercased whitespace tokens as a list t.
+_DOC_TOKS_CTE = """toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+         list_filter(string_split_regex(lower(text), '\\s+'),
+                     x -> x <> '') AS t
   FROM documents
-), sh AS (
+)"""
+
+
+# Word 3-gram shingle sets per document (sh), and — over a shingle
+# index idx(doc, shingle) — each doc's set size and every doc pair's
+# shared-shingle count (common).
+_DOC_SHINGLES_CTE = f"""{_DOC_TOKS_CTE}, sh AS (
   SELECT doc_id,
          CASE WHEN len(t) >= 3 THEN
            list_distinct(list_transform(generate_series(1, len(t) - 2),
                                         i -> array_to_string(t[i:i+2], ' ')))
          ELSE [array_to_string(t, ' ')] END AS shingles
   FROM toks
-), idx0 AS (
-  SELECT DISTINCT doc_id AS doc, unnest(shingles) AS shingle FROM sh
-), hot AS (
-  SELECT shingle FROM idx0 GROUP BY shingle HAVING COUNT(*) > 1000
-), idx AS (
-  SELECT doc, shingle FROM idx0 ANTI JOIN hot USING (shingle)
-), sizes AS (
+)"""
+_SHINGLE_OVERLAP_CTE = """sizes AS (
   SELECT doc, COUNT(*) AS n FROM idx GROUP BY doc
 ), common AS (
   SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS common
   FROM idx a JOIN idx b USING (shingle)
   WHERE a.doc < b.doc GROUP BY 1, 2
-)
+)"""
+
+
+_NGRAM_JACCARD_SQL = f"""
+WITH {_DOC_SHINGLES_CTE}, idx0 AS (
+  SELECT DISTINCT doc_id AS doc, unnest(shingles) AS shingle FROM sh
+), hot AS (
+  SELECT shingle FROM idx0 GROUP BY shingle HAVING COUNT(*) > 1000
+), idx AS (
+  SELECT doc, shingle FROM idx0 ANTI JOIN hot USING (shingle)
+), {_SHINGLE_OVERLAP_CTE}
 SELECT doc_a, doc_b,
        ROUND(common / (sa.n + sb.n - common), 6) AS jaccard
 FROM common
@@ -1026,17 +1043,25 @@ def dedup_ngram_jaccard_q(spark, sf_dir):
                                        max_doc_freq=1000)
 
 
-@_q("dedup_components", f"""
-WITH RECURSIVE pairs AS ({_NGRAM_JACCARD_SQL}),
-e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs),
-reach(u, v) AS (
+# Connected components of the symmetric edge list e(u, v) by
+# recursive reachability (needs WITH RECURSIVE): comp labels each
+# node with the smallest node of its component.  The near-dup
+# flavour takes its edges from the 0.5-Jaccard doc pairs.
+_COMPONENTS_CTE = """reach(u, v) AS (
   SELECT u, v FROM e
   UNION
-  SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u
-)
-SELECT u AS doc_id, LEAST(u, MIN(v)) AS component
-FROM reach GROUP BY u
+  SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u),
+comp AS (SELECT u AS node, LEAST(u, MIN(v)) AS component
+         FROM reach GROUP BY u)"""
+_NGRAM_COMPONENTS_CTE = f"""pairs AS ({_NGRAM_JACCARD_SQL}),
+e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+      UNION SELECT doc_b, doc_a FROM pairs),
+{_COMPONENTS_CTE}"""
+
+
+@_q("dedup_components", f"""
+WITH RECURSIVE {_NGRAM_COMPONENTS_CTE}
+SELECT node AS doc_id, component FROM comp
 """)
 def dedup_components_q(spark, sf_dir):
     """Near-dup clusters: deterministic jaccard pairs -> min-label
@@ -1051,18 +1076,9 @@ def dedup_components_q(spark, sf_dir):
 
 
 @_q("dedup_keep_representatives", f"""
-WITH RECURSIVE pairs AS ({_NGRAM_JACCARD_SQL}),
-e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs),
-reach(u, v) AS (
-  SELECT u, v FROM e
-  UNION
-  SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u
-),
-comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS component
-         FROM reach GROUP BY u)
+WITH RECURSIVE {_NGRAM_COMPONENTS_CTE}
 SELECT d.doc_id FROM documents d
-LEFT JOIN comp c ON d.doc_id = c.doc_id
+LEFT JOIN comp c ON d.doc_id = c.node
 WHERE c.component IS NULL OR c.component = d.doc_id
 """)
 def dedup_keep_representatives_q(spark, sf_dir):
@@ -1076,27 +1092,10 @@ def dedup_keep_representatives_q(spark, sf_dir):
     return X_dedup.keep_representatives(docs, comp).select("doc_id")
 
 
-_TRUE_PAIRS_090_SQL = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN
-           list_distinct(list_transform(generate_series(1, len(t) - 2),
-                                        i -> array_to_string(t[i:i+2], ' ')))
-         ELSE [array_to_string(t, ' ')] END AS shingles
-  FROM toks
-), idx AS (
+_TRUE_PAIRS_090_SQL = f"""
+WITH {_DOC_SHINGLES_CTE}, idx AS (
   SELECT DISTINCT doc_id AS doc, unnest(shingles) AS shingle FROM sh
-), sizes AS (
-  SELECT doc, COUNT(*) AS n FROM idx GROUP BY doc
-), common AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS common
-  FROM idx a JOIN idx b USING (shingle)
-  WHERE a.doc < b.doc GROUP BY 1, 2
-), truth AS (
+), {_SHINGLE_OVERLAP_CTE}, truth AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_true
   FROM common
   JOIN sizes sa ON sa.doc = doc_a
@@ -1309,37 +1308,48 @@ def dedup_simhash_collapsed_op(spark, sf_dir):
 
 # --- north-star: text analysis ---------------------------------------------------
 
-@_q("text_features", """
-WITH base AS (
+# Each document's text with its token list t (base); the per-language
+# stopword hit counts s_de .. s_fr over t and the language they predict
+# (``und`` when no stopword hits); the text's punctuation share and t's
+# English-stopword share.
+_DOC_WORDS_CTE = """base AS (
   SELECT doc_id, text,
          list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
   FROM documents
-), scored AS (
-  SELECT doc_id, text, t,
-         len(list_filter(['der','die','das','und','ist','nicht','ein','mit','auf','zu'],
+)"""
+_LANG_SCORES = """len(list_filter(['der','die','das','und','ist','nicht','ein','mit','auf','zu'],
              s -> list_contains(list_distinct(t), s))) AS s_de,
          len(list_filter(['the','and','of','to','in','is','that','it','was','for'],
              s -> list_contains(list_distinct(t), s))) AS s_en,
          len(list_filter(['el','la','los','de','que','y','en','un','es','por'],
              s -> list_contains(list_distinct(t), s))) AS s_es,
          len(list_filter(['le','la','les','et','est','dans','pour','que','une','des'],
-             s -> list_contains(list_distinct(t), s))) AS s_fr
+             s -> list_contains(list_distinct(t), s))) AS s_fr"""
+_LANG_PRED = """CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
+            WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
+            WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
+            WHEN s_es >= s_fr THEN 'es'
+            ELSE 'fr' END AS lang_pred"""
+_PUNCT_RATIO = """CASE WHEN length(text) > 0 THEN
+         (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
+         / length(text) ELSE 0.0 END"""
+_STOPWORD_RATIO = """CASE WHEN len(t) > 0 THEN
+         len(list_filter(t, x -> list_contains(
+           ['the','and','of','to','in','is','that','it','was','for'], x)))
+         / len(t) ELSE 0.0 END"""
+
+
+@_q("text_features", f"""
+WITH {_DOC_WORDS_CTE}, scored AS (
+  SELECT doc_id, text, t,
+         {_LANG_SCORES}
   FROM base
 )
 SELECT doc_id,
        len(t) AS n_tokens,
-       CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
-            WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-            WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-            WHEN s_es >= s_fr THEN 'es'
-            ELSE 'fr' END AS lang_pred,
-       ROUND(CASE WHEN length(text) > 0 THEN
-         (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
-         / length(text) ELSE 0.0 END, 6) AS punct_ratio,
-       ROUND(CASE WHEN len(t) > 0 THEN
-         len(list_filter(t, x -> list_contains(
-           ['the','and','of','to','in','is','that','it','was','for'], x)))
-         / len(t) ELSE 0.0 END, 6) AS stopword_ratio
+       {_LANG_PRED},
+       ROUND({_PUNCT_RATIO}, 6) AS punct_ratio,
+       ROUND({_STOPWORD_RATIO}, 6) AS stopword_ratio
 FROM scored
 """)
 def text_features_q(spark, sf_dir):
@@ -1632,17 +1642,24 @@ def streaming_windowed_counts_q(spark, sf_dir):
                     "event_type", "n", "total"))
 
 
-@_q("sessionize_gap", """
-WITH o AS (
+# Sessionization for the session oracles: o flags each event that
+# opens a session (``brk``), s numbers each user's sessions (``sess``,
+# the running count of breaks); the default gap is 30 minutes.
+_SESSION_NUMBER_CTE = """s AS (
+  SELECT user_id, ts,
+         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
+                        ROWS UNBOUNDED PRECEDING) AS sess
+  FROM o)"""
+_SESSIONS_30M_CTE = f"""o AS (
   SELECT user_id, ts,
          CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
                    >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
   FROM events),
-s AS (
-  SELECT user_id, ts,
-         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sess
-  FROM o)
+{_SESSION_NUMBER_CTE}"""
+
+
+@_q("sessionize_gap", f"""
+WITH {_SESSIONS_30M_CTE}
 SELECT user_id, epoch_us(MIN(ts)) AS session_start_us,
        COUNT(*) AS n_events
 FROM s GROUP BY user_id, sess
@@ -1816,10 +1833,7 @@ def ann_ivf_topk_op(spark, sf_dir):
                               n_cells=16, n_probe=6)
 
 
-@_q("ann_pq_topk", """
-SELECT COUNT(*) AS n_queries, 1 AS recall_ok
-FROM embeddings WHERE vec_id < 5
-""")
+@_q("ann_pq_topk", ORACLES["ann_ivf_topk"])
 def ann_pq_topk_q(spark, sf_dir):
     """Product-quantization ANN recall contract (codebooks trained on
     a deterministic bounded sample, vectors encoded to 8 code bytes,
@@ -1859,10 +1873,7 @@ def ann_pq_topk_op(spark, sf_dir):
     return X_sim.pq_adc_topk(enc, queries, cbs, k=5, refine=15)
 
 
-@_q("ann_ivfpq_topk", """
-SELECT COUNT(*) AS n_queries, 1 AS recall_ok
-FROM embeddings WHERE vec_id < 5
-""")
+@_q("ann_ivfpq_topk", ORACLES["ann_ivf_topk"])
 def ann_ivfpq_topk_q(spark, sf_dir):
     """IVF-PQ ANN recall contract (r9 — the FAISS IndexIVFPQ
     billion-scale layout): hashed-init coarse cells, PQ codes of the
@@ -2100,6 +2111,28 @@ def _part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n") >= 2))
 
 
+# Degree-ordered triangle listing over the part graph, after
+# _PART_PAIRS_CTE: edges e (a < b), node degrees deg, one tri row
+# (u, v1, v2) per triangle, and tri_nodes with each triangle's corners.
+_PART_TRIANGLES_CTE = """e AS (SELECT u AS a, v AS b FROM pairs),
+deg AS (SELECT n, COUNT(*) AS d
+        FROM (SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) t
+        GROUP BY n),
+wd AS (SELECT e.a, e.b, x.d AS da, y.d AS db
+       FROM e JOIN deg x ON e.a = x.n JOIN deg y ON e.b = y.n),
+o AS (SELECT CASE WHEN da < db OR (da = db AND a < b)
+                  THEN a ELSE b END AS u,
+             CASE WHEN da < db OR (da = db AND a < b)
+                  THEN b ELSE a END AS w
+      FROM wd),
+tri AS (SELECT w1.u AS u, w1.w AS v1, w2.w AS v2
+        FROM o w1 JOIN o w2 ON w1.u = w2.u AND w1.w < w2.w
+        JOIN e ON e.a = w1.w AND e.b = w2.w),
+tri_nodes AS (SELECT u AS node FROM tri
+              UNION ALL SELECT v1 FROM tri
+              UNION ALL SELECT v2 FROM tri)"""
+
+
 # Node cut for broadcasting the part graph's loop state: 50M lineitem
 # rows (the r10 cut) at TPC-H's 30:1 lineitem:part ratio.
 _PART_GRAPH_BROADCAST_NODES = 50_000_000 // 30
@@ -2115,24 +2148,8 @@ def _part_graph_broadcastable(sf_dir: str) -> bool:
 
 @_q("triangle_count_parts", f"""
 WITH {_PART_PAIRS_CTE},
-e AS (SELECT u AS a, v AS b FROM pairs),
-deg AS (SELECT n, COUNT(*) AS d
-        FROM (SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) t
-        GROUP BY n),
-wd AS (SELECT e.a, e.b, x.d AS da, y.d AS db
-       FROM e JOIN deg x ON e.a = x.n JOIN deg y ON e.b = y.n),
-o AS (SELECT CASE WHEN da < db OR (da = db AND a < b)
-                  THEN a ELSE b END AS u,
-             CASE WHEN da < db OR (da = db AND a < b)
-                  THEN b ELSE a END AS w
-      FROM wd),
-tri AS (SELECT w1.u AS u, w1.w AS v1, w2.w AS v2
-        FROM o w1 JOIN o w2 ON w1.u = w2.u AND w1.w < w2.w
-        JOIN e ON e.a = w1.w AND e.b = w2.w),
-n AS (SELECT u AS node FROM tri
-      UNION ALL SELECT v1 FROM tri
-      UNION ALL SELECT v2 FROM tri)
-SELECT node, COUNT(*) AS triangles FROM n GROUP BY node
+{_PART_TRIANGLES_CTE}
+SELECT node, COUNT(*) AS triangles FROM tri_nodes GROUP BY node
 """)
 def triangle_count_parts_q(spark, sf_dir):
     """Triangle counting on the part co-purchase graph (same edge
@@ -2222,26 +2239,38 @@ def key_skew_report_parts_q(spark, sf_dir):
                            ["l_partkey"], top_n=20)
 
 
-@_q("fuzzy_match_suppliers", """
-WITH n AS (SELECT s_suppkey AS id, lower(s_name) AS s FROM supplier),
+# Supplier-name trigram blocking for the fuzzy-match oracles: n (id,
+# lowercased name), g (one row per distinct 3-gram of a name), the
+# candidate pairs cand that share a gram held by <= 50 names, and the
+# tail that keeps pairs at edit distance 1-2 and counts them per id.
+_SUPPLIER_GRAMS_CTE = """n AS (
+  SELECT s_suppkey AS id, lower(s_name) AS s FROM supplier),
 g0 AS (SELECT id, s,
         list_distinct(list_transform(
           generate_series(1, greatest(len(s) - 2, 1)),
           i -> substr(s, i, 3))) AS grams FROM n),
-g AS (SELECT id, s, unnest(grams) AS gram FROM g0),
-rare AS (SELECT gram FROM (SELECT gram, COUNT(*) AS c FROM g GROUP BY 1)
-         WHERE c <= 50),
+g AS (SELECT id, s, unnest(grams) AS gram FROM g0)"""
+_SUPPLIER_RARE_CANDS_CTE = """rare AS (
+  SELECT gram FROM (SELECT gram, COUNT(*) AS c FROM g GROUP BY 1)
+  WHERE c <= 50),
 gg AS (SELECT g.id, g.s, g.gram FROM g JOIN rare USING (gram)),
 cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
                 a.s AS s_a, b.s AS s_b
-         FROM gg a JOIN gg b ON a.gram = b.gram AND a.id < b.id),
-v AS (SELECT id_a, id_b, levenshtein(s_a, s_b) AS dist
-      FROM cand WHERE abs(len(s_a) - len(s_b)) <= 2),
+         FROM gg a JOIN gg b ON a.gram = b.gram AND a.id < b.id)"""
+_SUPPLIER_FUZZY_TAIL = """v AS (
+  SELECT id_a, id_b, levenshtein(s_a, s_b) AS dist
+  FROM cand WHERE abs(len(s_a) - len(s_b)) <= 2),
 p AS (SELECT id_a, id_b, dist FROM v WHERE dist BETWEEN 1 AND 2),
 sym AS (SELECT id_a AS id, dist FROM p
         UNION ALL SELECT id_b AS id, dist FROM p)
 SELECT id AS s_suppkey, COUNT(*) AS n_fuzzy, MIN(dist) AS min_dist
-FROM sym GROUP BY id
+FROM sym GROUP BY id"""
+
+
+@_q("fuzzy_match_suppliers", f"""
+WITH {_SUPPLIER_GRAMS_CTE},
+{_SUPPLIER_RARE_CANDS_CTE},
+{_SUPPLIER_FUZZY_TAIL}
 """)
 def fuzzy_match_suppliers_q(spark, sf_dir):
     """Record linkage: q-gram blocked fuzzy self-match of supplier
@@ -2265,13 +2294,8 @@ def fuzzy_match_suppliers_q(spark, sf_dir):
                  F.min("dist").alias("min_dist")))
 
 
-@_q("fuzzy_match_suppliers_banded", """
-WITH n AS (SELECT s_suppkey AS id, lower(s_name) AS s FROM supplier),
-g0 AS (SELECT id, s,
-        list_distinct(list_transform(
-          generate_series(1, greatest(len(s) - 2, 1)),
-          i -> substr(s, i, 3))) AS grams FROM n),
-g AS (SELECT id, s, unnest(grams) AS gram FROM g0),
+@_q("fuzzy_match_suppliers_banded", f"""
+WITH {_SUPPLIER_GRAMS_CTE},
 freq AS (SELECT gram, COUNT(*) AS df_ FROM g GROUP BY 1),
 gg AS (SELECT g.id, g.s, g.gram, freq.df_
        FROM g JOIN freq USING (gram) WHERE df_ <= 50),
@@ -2287,13 +2311,7 @@ cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
                 a.s AS s_a, b.s AS s_b
          FROM gs a JOIN gs b
            ON a.gram = b.gram AND a.sub = b.sub AND a.id < b.id),
-v AS (SELECT id_a, id_b, levenshtein(s_a, s_b) AS dist
-      FROM cand WHERE abs(len(s_a) - len(s_b)) <= 2),
-p AS (SELECT id_a, id_b, dist FROM v WHERE dist BETWEEN 1 AND 2),
-sym AS (SELECT id_a AS id, dist FROM p
-        UNION ALL SELECT id_b AS id, dist FROM p)
-SELECT id AS s_suppkey, COUNT(*) AS n_fuzzy, MIN(dist) AS min_dist
-FROM sym GROUP BY id
+{_SUPPLIER_FUZZY_TAIL}
 """)
 def fuzzy_match_suppliers_banded_q(spark, sf_dir):
     """The scale-safe fuzzy-match escape hatch (r9, VERDICT r8 #4):
@@ -2645,7 +2663,8 @@ WITH f AS (
   WHERE g.i * 64 + 32 <= len(text)
 )
 SELECT doc_id AS asset_id, COUNT(*) AS n_frames,
-       SUM(CASE WHEN energy > 100.0 THEN 1 ELSE 0 END) AS n_active,
+       CAST(SUM(CASE WHEN energy > 100.0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_active,
        ROUND(SUM(CASE WHEN energy > 100.0 THEN 1 ELSE 0 END)
              * 1.0 / COUNT(*), 4) AS active_ratio
 FROM f GROUP BY doc_id
@@ -2696,8 +2715,8 @@ ins AS (
     AND k NOT IN (SELECT o_orderkey FROM orders)),
 allr AS (SELECT * FROM applied UNION ALL SELECT * FROM ins)
 SELECT COUNT(*) AS n_rows, ROUND(SUM(price), 2) AS total,
-       SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END)
-         AS n_inserted
+       CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_inserted
 FROM allr
 """)
 def cdc_apply_changes_orders_q(spark, sf_dir):
@@ -2775,7 +2794,8 @@ hits AS (SELECT * FROM post WHERE term IN ('agg', 'scan')),
 m AS (SELECT doc_id, COUNT(DISTINCT term) AS n_matched,
              SUM(tf) AS total_tf
       FROM hits GROUP BY doc_id)
-SELECT doc_id, n_matched, total_tf FROM m WHERE n_matched = 2
+SELECT doc_id, n_matched, CAST(total_tf AS BIGINT) AS total_tf
+FROM m WHERE n_matched = 2
 """)
 def inverted_index_search_q(spark, sf_dir):
     """Inverted-index AND-search: build the (term, doc, tf) posting
@@ -2821,7 +2841,7 @@ WITH a AS (
     ROUND(SUM(CASE WHEN user_id % 2 = 1 THEN value END), 2) AS s_t,
     ROUND(SUM(CASE WHEN user_id % 2 = 1 THEN value * value END), 4) AS q_t
   FROM events GROUP BY 1)
-SELECT event_type, n_c, n_t,
+SELECT event_type, CAST(n_c AS BIGINT) AS n_c, CAST(n_t AS BIGINT) AS n_t,
        s_c / n_c AS mean_control,
        s_t / n_t AS mean_treatment,
        (s_t / n_t - s_c / n_c)
@@ -2935,33 +2955,17 @@ def top_event_paths_q(spark, sf_dir):
     return top_event_paths(ev, path_len=3, top_n=20)
 
 
-@_q("resolve_supplier_entities", """
-WITH RECURSIVE n AS (
-  SELECT s_suppkey AS id, lower(s_name) AS s FROM supplier),
-g0 AS (SELECT id, s,
-        list_distinct(list_transform(
-          generate_series(1, greatest(len(s) - 2, 1)),
-          i -> substr(s, i, 3))) AS grams FROM n),
-g AS (SELECT id, s, unnest(grams) AS gram FROM g0),
-rare AS (SELECT gram FROM (SELECT gram, COUNT(*) AS c FROM g GROUP BY 1)
-         WHERE c <= 50),
-gg AS (SELECT g.id, g.s, g.gram FROM g JOIN rare USING (gram)),
-cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-                a.s AS s_a, b.s AS s_b
-         FROM gg a JOIN gg b ON a.gram = b.gram AND a.id < b.id),
+@_q("resolve_supplier_entities", f"""
+WITH RECURSIVE {_SUPPLIER_GRAMS_CTE},
+{_SUPPLIER_RARE_CANDS_CTE},
 p AS (SELECT id_a AS a, id_b AS b FROM cand
       WHERE abs(len(s_a) - len(s_b)) <= 2
         AND levenshtein(s_a, s_b) BETWEEN 1 AND 2),
 e AS (SELECT a AS u, b AS v FROM p UNION SELECT b, a FROM p),
-reach(u, v) AS (
-  SELECT u, v FROM e
-  UNION
-  SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u),
-comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-         FROM reach GROUP BY u),
+{_COMPONENTS_CTE},
 lab AS (SELECT s.s_suppkey, s.s_name, s.s_nationkey, s.s_acctbal,
                COALESCE(c.component, s.s_suppkey) AS entity
-        FROM supplier s LEFT JOIN comp c ON s.s_suppkey = c.id),
+        FROM supplier s LEFT JOIN comp c ON s.s_suppkey = c.node),
 base AS (SELECT entity, COUNT(*) AS n_members,
                 MIN(s_suppkey) AS rep_id,
                 MAX(s_acctbal) AS max_s_acctbal
@@ -3116,36 +3120,16 @@ def window_lead_lag_q(spark, sf_dir):
 
 # --- north-star: end-to-end training-data pipeline -----------------------------
 
-_PIPELINE_CLEAN_SQL = """
-WITH base AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), feats AS (
+_PIPELINE_CLEAN_SQL = f"""
+WITH {_DOC_WORDS_CTE}, feats AS (
   SELECT doc_id, text, len(t) AS n_tokens,
-         CASE WHEN length(text) > 0 THEN
-           (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
-           / length(text) ELSE 0.0 END AS praw,
-         CASE WHEN len(t) > 0 THEN
-           len(list_filter(t, x -> list_contains(
-             ['the','and','of','to','in','is','that','it','was','for'], x)))
-           / len(t) ELSE 0.0 END AS sraw,
-         len(list_filter(['der','die','das','und','ist','nicht','ein','mit','auf','zu'],
-             s -> list_contains(list_distinct(t), s))) AS s_de,
-         len(list_filter(['the','and','of','to','in','is','that','it','was','for'],
-             s -> list_contains(list_distinct(t), s))) AS s_en,
-         len(list_filter(['el','la','los','de','que','y','en','un','es','por'],
-             s -> list_contains(list_distinct(t), s))) AS s_es,
-         len(list_filter(['le','la','les','et','est','dans','pour','que','une','des'],
-             s -> list_contains(list_distinct(t), s))) AS s_fr
+         {_PUNCT_RATIO} AS praw,
+         {_STOPWORD_RATIO} AS sraw,
+         {_LANG_SCORES}
   FROM base
 ), scored AS (
   SELECT doc_id, text, n_tokens,
-         CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
-              WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-              WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-              WHEN s_es >= s_fr THEN 'es'
-              ELSE 'fr' END AS lang_pred,
+         {_LANG_PRED},
          CAST(ROUND((CASE WHEN n_tokens BETWEEN 5 AND 100000 THEN 0.4 ELSE 0.0 END)
              + (CASE WHEN praw < 0.2 THEN 0.3 ELSE 0.0 END)
              + (CASE WHEN sraw > 0.05 THEN 0.3 ELSE 0.0 END), 2) AS DOUBLE) AS quality
@@ -3598,7 +3582,7 @@ def unigram_lm_score_q(spark, sf_dir):
 @_q("repetition_stats", f"""
 WITH toks AS ({_TOKS_SQL}),
 pt AS (SELECT doc, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2)
-SELECT doc, SUM(cnt) AS n_tokens, COUNT(*) AS n_distinct,
+SELECT doc, CAST(SUM(cnt) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
        ROUND(MAX(cnt) / SUM(cnt), 6) AS top_term_frac,
        ROUND(COUNT(*) / SUM(cnt), 6) AS distinct_frac
 FROM pt GROUP BY doc
@@ -3610,14 +3594,21 @@ def repetition_stats_q(spark, sf_dir):
         _t(spark, sf_dir, "documents"), "text", "doc_id")
 
 
-@_q("dedup_incremental", """
-WITH corpus AS (SELECT * FROM documents WHERE doc_id % 3 <> 0),
-batch AS (SELECT * FROM documents WHERE doc_id % 3 = 0),
+def _incremental_dedup_sql(mod: int) -> str:
+    """Oracle of an incremental exact dedup: the documents with
+    ``doc_id % mod == 0`` arrive as a batch against the rest, and each
+    text new to the corpus is kept once, at its smallest doc_id."""
+    return f"""
+WITH corpus AS (SELECT * FROM documents WHERE doc_id % {mod} <> 0),
+batch AS (SELECT * FROM documents WHERE doc_id % {mod} = 0),
 firsts AS (SELECT text, MIN(doc_id) AS doc_id FROM batch GROUP BY text)
 SELECT b.* FROM batch b
 JOIN firsts f ON b.doc_id = f.doc_id AND b.text = f.text
 WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)
-""")
+"""
+
+
+@_q("dedup_incremental", _incremental_dedup_sql(3))
 def dedup_incremental_q(spark, sf_dir):
     """Incremental ingestion dedup: new-batch docs not already in the
     corpus, keep-first within the batch. Digest-only anti-join — the
@@ -3700,8 +3691,9 @@ def zipf_rank_frequency_q(spark, sf_dir):
 @_q("vocab_stats", f"""
 WITH toks AS ({_TOKS_SQL}),
 counts AS (SELECT term, COUNT(*) AS cnt FROM toks GROUP BY term)
-SELECT SUM(cnt) AS total_tokens, COUNT(*) AS vocab_size,
-       SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS hapax_terms,
+SELECT CAST(SUM(cnt) AS BIGINT) AS total_tokens, COUNT(*) AS vocab_size,
+       CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS hapax_terms,
        ROUND(COUNT(*) / SUM(cnt), 6) AS type_token_ratio
 FROM counts
 """)
@@ -3710,13 +3702,8 @@ def vocab_stats_q(spark, sf_dir):
     return X_text.vocab_stats(_t(spark, sf_dir, "documents"), "text")
 
 
-@_q("dedup_spans", """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     x -> x <> '') AS t
-  FROM documents
-),
+@_q("dedup_spans", f"""
+WITH {_DOC_TOKS_CTE},
 starts AS (
   SELECT doc_id, t,
          unnest(generate_series(
@@ -3830,7 +3817,7 @@ WITH g AS (
 )
 SELECT user_id, COUNT(*) AS n_events,
        COUNT(gap) AS n_gaps,
-       COALESCE(SUM(gap), 0) AS sum_gap,
+       CAST(COALESCE(SUM(gap), 0) AS BIGINT) AS sum_gap,
        MAX(gap) AS max_gap
 FROM g GROUP BY user_id
 """)
@@ -3927,7 +3914,7 @@ def kmv_distinct_jaccard_q(spark, sf_dir):
 
 @_q("json_props_agg", """
 SELECT event_type,
-       SUM(CAST(props->>'k' AS INTEGER)) AS sum_k,
+       CAST(SUM(CAST(props->>'k' AS INTEGER)) AS BIGINT) AS sum_k,
        COUNT(CASE WHEN CAST(props->>'k' AS INTEGER) >= 50 THEN 1 END)
          AS n_high
 FROM events GROUP BY event_type
@@ -4034,13 +4021,8 @@ from vega_spark import registry_tpch  # noqa: E402,F401  (adapted Q2-Q22)
 
 # --- training-pipeline: benchmark decontamination ---------------------------
 
-@_q("decontaminate_against_eval", r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '\s+'),
-                     x -> x <> '') AS t
-  FROM documents
-),
+@_q("decontaminate_against_eval", rf"""
+WITH {_DOC_TOKS_CTE},
 base AS (
   SELECT doc_id, GREATEST(len(t) - 4, 0) AS n_ngrams
   FROM toks WHERE doc_id % 50 <> 0
@@ -4078,17 +4060,19 @@ def decontaminate_against_eval_q(spark, sf_dir):
 
 # --- CDC / warehouse: SCD2 dimension build ---------------------------------
 
-@_q("scd2_user_state", """
-WITH e AS (
+# The events c at which a user's event type (their state) changes.
+_STATE_CHANGES_CTE = """e AS (
   SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
          LAG(event_type) OVER (PARTITION BY user_id
                                ORDER BY ts, event_id) AS prev
-  FROM events
-),
+  FROM events),
 c AS (
   SELECT user_id, event_type, ts_us, event_id FROM e
-  WHERE prev IS NULL OR prev <> event_type
-)
+  WHERE prev IS NULL OR prev <> event_type)"""
+
+
+@_q("scd2_user_state", f"""
+WITH {_STATE_CHANGES_CTE}
 SELECT user_id, event_type AS state, ts_us AS valid_from_us,
        LEAD(ts_us) OVER (PARTITION BY user_id
                          ORDER BY ts_us, event_id) AS valid_to_us,
@@ -4179,7 +4163,7 @@ v AS (
          SUM(CASE WHEN l_returnflag NOT IN ('A', 'N', 'R') THEN 1 ELSE 0 END)
     FROM lineitem
 )
-SELECT check_name, n_rows, n_violations,
+SELECT check_name, n_rows, CAST(n_violations AS BIGINT) AS n_violations,
        ROUND(1 - n_violations / CAST(n_rows AS DOUBLE), 6) AS pass_rate,
        n_violations = 0 AS passed
 FROM v, n
@@ -4202,14 +4186,19 @@ def dq_expectations_lineitem_q(spark, sf_dir):
 
 # --- deterministic train/val/test split ------------------------------------
 
-@_q("split_assign_counts", """
-WITH s AS (
-  SELECT source,
-         CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd'
+# A document's split by the first byte of md5(doc_id): train below
+# 0xcd, val below 0xe6, test above.
+_DOC_SPLIT = """CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd'
                 THEN 'train'
               WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
                 THEN 'val'
-              ELSE 'test' END AS split
+              ELSE 'test' END AS split"""
+
+
+@_q("split_assign_counts", f"""
+WITH s AS (
+  SELECT source,
+         {_DOC_SPLIT}
   FROM documents
 )
 SELECT split, source, COUNT(*) AS n FROM s GROUP BY 1, 2
@@ -4405,7 +4394,8 @@ b AS (
            / 512.0) AS INTEGER) AS bin
   FROM t
 )
-SELECT lang, bin, COUNT(*) AS n_docs, SUM(n_tokens) AS tokens_in_bin
+SELECT lang, bin, COUNT(*) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS tokens_in_bin
 FROM b GROUP BY 1, 2
 """)
 def pack_sequences_manifest_q(spark, sf_dir):
@@ -4422,14 +4412,10 @@ def pack_sequences_manifest_q(spark, sf_dir):
 
 # --- end-to-end: training shard manifest -----------------------------------
 
-@_q("training_shard_manifest", """
+@_q("training_shard_manifest", f"""
 WITH s AS (
   SELECT doc_id,
-         CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd'
-                THEN 'train'
-              WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
-                THEN 'val'
-              ELSE 'test' END AS split
+         {_DOC_SPLIT}
   FROM documents
 ),
 r AS (
@@ -4572,14 +4558,7 @@ def table_diff_orders_q(spark, sf_dir):
 
 # --- bloom-gated incremental dedup (runtime-filter pattern) ----------------
 
-@_q("dedup_incremental_bloom", """
-WITH corpus AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
-batch AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
-firsts AS (SELECT text, MIN(doc_id) AS doc_id FROM batch GROUP BY text)
-SELECT b.* FROM batch b
-JOIN firsts f ON b.doc_id = f.doc_id AND b.text = f.text
-WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)
-""")
+@_q("dedup_incremental_bloom", _incremental_dedup_sql(5))
 def dedup_incremental_bloom_q(spark, sf_dir):
     """Incremental dedup gated by a hand-built distributed Bloom
     filter: the corpus digest set compresses to a ~16 KB bit array
@@ -4797,13 +4776,8 @@ def drift_psi_event_values_q(spark, sf_dir):
 
 # --- vocabulary build + order-preserving token-id encoding -----------------
 
-@_q("encode_docs_vocab1k", r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '\s+'),
-                     x -> x <> '') AS t
-  FROM documents
-),
+@_q("encode_docs_vocab1k", rf"""
+WITH {_DOC_TOKS_CTE},
 tf AS (
   SELECT u.term, COUNT(*) AS n FROM toks, unnest(t) AS u(term)
   GROUP BY u.term
@@ -5069,7 +5043,7 @@ def is_empty_flags_q(spark, sf_dir):
 
 
 @_q("save_text_roundtrip", """
-SELECT COUNT(*) AS n_rows, SUM(n_nationkey) AS key_sum,
+SELECT COUNT(*) AS n_rows, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
        MIN(n_name) AS first_name, MAX(n_name) AS last_name
 FROM nation
 """)
@@ -5146,7 +5120,8 @@ def take_sample_contract_q(spark, sf_dir):
 
 @_q("for_each_observe_metrics", """
 SELECT COUNT(*) AS n_rows, ROUND(SUM(l_quantity), 2) AS qty_sum,
-       SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS n_discounted
+       CAST(SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_discounted
 FROM lineitem
 """)
 def for_each_observe_metrics_q(spark, sf_dir):
@@ -5403,16 +5378,11 @@ def spikes_event_hours_q(spark, sf_dir):
     return hourly_spikes(ev, "event_type", "ts")
 
 
-@_q("assoc_rules_parts", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS a, y.i AS bb, COUNT(*) AS n
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+@_q("assoc_rules_parts", f"""
+WITH {_PART_PAIRS_CTE},
 directed AS (
-  SELECT a AS ante, bb AS cons, n FROM pairs
-  UNION ALL SELECT bb, a, n FROM pairs),
+  SELECT u AS ante, v AS cons, n FROM pairs
+  UNION ALL SELECT v, u, n FROM pairs),
 items AS (SELECT i AS item, COUNT(*) AS n_item FROM baskets GROUP BY 1),
 tot AS (SELECT COUNT(DISTINCT b) AS nb FROM baskets)
 SELECT d.ante, d.cons, d.n AS n_baskets,
@@ -5436,16 +5406,11 @@ def assoc_rules_parts_q(spark, sf_dir):
                              min_count=2)
 
 
-@_q("item_neighbors_parts", """
-WITH baskets AS (
-  SELECT l_orderkey AS b, l_partkey AS i FROM lineitem GROUP BY 1, 2),
-pairs AS (
-  SELECT x.i AS a, y.i AS bb, COUNT(*) AS n
-  FROM baskets x JOIN baskets y ON x.b = y.b AND x.i < y.i
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+@_q("item_neighbors_parts", f"""
+WITH {_PART_PAIRS_CTE},
 directed AS (
-  SELECT a AS item, bb AS neighbor, n FROM pairs
-  UNION ALL SELECT bb, a, n FROM pairs),
+  SELECT u AS item, v AS neighbor, n FROM pairs
+  UNION ALL SELECT v, u, n FROM pairs),
 items AS (SELECT i AS item, COUNT(*) AS n_item FROM baskets GROUP BY 1),
 scored AS (
   SELECT d.item, d.neighbor, d.n,
@@ -5549,7 +5514,8 @@ llr AS (
 scored AS (
   SELECT dw.doc_id, SUM(c) AS n_tokens, SUM(c * llr) / SUM(c) AS w
   FROM dw JOIN llr USING (bucket) GROUP BY 1)
-SELECT doc_id, n_tokens, ROUND(w, 6) AS llr_weight, w > 0 AS selected
+SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+       ROUND(w, 6) AS llr_weight, w > 0 AS selected
 FROM scored
 """)
 def dsir_select_en_q(spark, sf_dir):
@@ -5604,7 +5570,7 @@ loo AS (
          (t.ts - f.s) / (t.tn - f.n) AS loo
   FROM f JOIN t USING (grp) WHERE t.tn > f.n),
 m AS (SELECT grp, AVG(loo) AS mbar FROM loo GROUP BY 1)
-SELECT l.grp AS event_type, MAX(l.tn) AS n,
+SELECT l.grp AS event_type, CAST(MAX(l.tn) AS BIGINT) AS n,
        ROUND(MAX(l.ts / l.tn), 6) AS mean,
        MAX(l.gf) AS g_folds,
        ROUND(SQRT((MAX(l.gf) - 1.0) / MAX(l.gf)
@@ -5621,22 +5587,7 @@ def jackknife_event_means_q(spark, sf_dir):
     return jackknife_mean(ev, "value", "event_type", "event_id", g=20)
 
 
-@_q("streaming_anomaly_flags", """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS m
-  FROM events GROUP BY 1),
-j AS (
-  SELECT e.event_id, e.event_type, e.value, m.m
-  FROM events e JOIN med m USING (event_type)),
-mad AS (
-  SELECT event_type, quantile_cont(abs(value - m), 0.5) AS md
-  FROM j GROUP BY 1)
-SELECT j.event_id, j.event_type, j.value,
-       ROUND(0.6745 * (j.value - j.m) / d.md, 3) AS robust_z
-FROM j JOIN mad d USING (event_type)
-WHERE d.md > 0
-  AND ABS(ROUND(0.6745 * (j.value - j.m) / d.md, 3)) > 3.5
-""")
+@_q("streaming_anomaly_flags", ORACLES["anomalies_event_values"])
 def streaming_anomaly_flags_q(spark, sf_dir):
     """Streaming robust anomaly detection: the per-type (median, MAD)
     baseline is computed ONCE on the batch table (robust_stats — a
@@ -5710,8 +5661,9 @@ def trend_event_hours_q(spark, sf_dir):
     return hourly_trend(ev, "event_type", "ts")
 
 
-@_q("mi_event_type_value", """
-WITH cells AS (
+# Contingency table of event type (x) by 25-wide value bin (yb) with
+# its margins mx, my and total n: shared by the chi2 and MI oracles.
+_TYPE_VALUE_CELLS_CTE = """cells AS (
   SELECT event_type AS x,
          LEAST(3, GREATEST(0, CAST(FLOOR((value - 0.0) / 25.0) AS INTEGER)))
          AS yb,
@@ -5719,8 +5671,12 @@ WITH cells AS (
   FROM events GROUP BY 1, 2),
 mx AS (SELECT x, SUM(nxy) AS nx FROM cells GROUP BY 1),
 my AS (SELECT yb, SUM(nxy) AS ny FROM cells GROUP BY 1),
-tot AS (SELECT SUM(nxy) AS n FROM cells)
-SELECT MAX(t.n) AS n, COUNT(*) AS n_cells,
+tot AS (SELECT SUM(nxy) AS n FROM cells)"""
+
+
+@_q("mi_event_type_value", f"""
+WITH {_TYPE_VALUE_CELLS_CTE}
+SELECT CAST(MAX(t.n) AS BIGINT) AS n, COUNT(*) AS n_cells,
        ROUND(SUM((CAST(c.nxy AS DOUBLE) / t.n)
                  * LN(CAST(c.nxy * t.n AS DOUBLE)
                       / CAST(mx.nx * my.ny AS DOUBLE))), 6) AS mi_nats
@@ -5760,21 +5716,13 @@ def kcore_parts_q(spark, sf_dir):
                   broadcast_state=_part_graph_broadcastable(sf_dir))
 
 
-@_q("chi2_event_type_value", """
-WITH cells AS (
-  SELECT event_type AS x,
-         LEAST(3, GREATEST(0, CAST(FLOOR((value - 0.0) / 25.0) AS INTEGER)))
-         AS yb,
-         COUNT(*) AS nxy
-  FROM events GROUP BY 1, 2),
-mx AS (SELECT x, SUM(nxy) AS nx FROM cells GROUP BY 1),
-my AS (SELECT yb, SUM(nxy) AS ny FROM cells GROUP BY 1),
-tot AS (SELECT SUM(nxy) AS n FROM cells),
+@_q("chi2_event_type_value", f"""
+WITH {_TYPE_VALUE_CELLS_CTE},
 grid AS (
   SELECT mx.x, my.yb, mx.nx, my.ny, t.n, COALESCE(c.nxy, 0) AS o
   FROM mx CROSS JOIN my CROSS JOIN tot t
   LEFT JOIN cells c ON c.x = mx.x AND c.yb = my.yb)
-SELECT MAX(n) AS n, COUNT(*) AS n_cells,
+SELECT CAST(MAX(n) AS BIGINT) AS n, COUNT(*) AS n_cells,
        (COUNT(DISTINCT x) - 1) * (COUNT(DISTINCT yb) - 1) AS dof,
        ROUND(SUM(POW(o - CAST(nx * ny AS DOUBLE) / n, 2)
                  / (CAST(nx * ny AS DOUBLE) / n)), 4) AS chi2
@@ -5815,7 +5763,7 @@ WITH cells AS (
   SELECT source AS grp, lang AS cat, COUNT(*) AS c
   FROM documents GROUP BY 1, 2),
 tot AS (SELECT grp, SUM(c) AS n FROM cells GROUP BY 1)
-SELECT c.grp AS source, MAX(t.n) AS n, COUNT(*) AS n_cats,
+SELECT c.grp AS source, CAST(MAX(t.n) AS BIGINT) AS n, COUNT(*) AS n_cats,
        ROUND(-SUM((CAST(c.c AS DOUBLE) / t.n)
                   * LN(CAST(c.c AS DOUBLE) / t.n)), 6) AS shannon_nats,
        ROUND(1.0 - SUM((CAST(c.c AS DOUBLE) / t.n)
@@ -5844,7 +5792,7 @@ grid AS (
   SELECT t.grp, d.digit, t.n, COALESCE(c.o, 0) AS o
   FROM tot t CROSS JOIN digits d
   LEFT JOIN cells c ON c.grp = t.grp AND c.digit = d.digit)
-SELECT grp AS event_type, MAX(n) AS n,
+SELECT grp AS event_type, CAST(MAX(n) AS BIGINT) AS n,
        ROUND(SUM(POW(o - LOG10(1.0 + 1.0 / digit) * n, 2)
                  / (LOG10(1.0 + 1.0 / digit) * n)), 6) AS benford_chi2
 FROM grid GROUP BY 1
@@ -5893,13 +5841,19 @@ def weighted_sample_docs_by_lang_q(spark, sf_dir):
 # pipeline runs as first-class jobs)
 # ---------------------------------------------------------------------------
 
-@_q("roc_auc_purchase_value", """
-WITH rng AS (SELECT MIN(value) AS lo, MAX(value) AS hi FROM events),
+# Each event's value bucket b (256 equal-width bins over the value
+# range) and its purchase label y.
+_PURCHASE_VALUE_BINS_CTE = """rng AS (
+  SELECT MIN(value) AS lo, MAX(value) AS hi FROM events),
 b AS (
   SELECT LEAST(255, CAST(FLOOR((value - lo) / (hi - lo) * 256) AS INTEGER))
            AS b,
          CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events, rng),
+  FROM events, rng)"""
+
+
+@_q("roc_auc_purchase_value", f"""
+WITH {_PURCHASE_VALUE_BINS_CTE},
 cells AS (
   SELECT b, SUM(y) AS np, SUM(1 - y) AS nn FROM b GROUP BY b),
 c AS (
@@ -5907,8 +5861,8 @@ c AS (
          COALESCE(SUM(nn) OVER (ORDER BY b
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cn
   FROM cells)
-SELECT (SELECT SUM(np) FROM cells) AS n_pos,
-       (SELECT SUM(nn) FROM cells) AS n_neg,
+SELECT CAST((SELECT SUM(np) FROM cells) AS BIGINT) AS n_pos,
+       CAST((SELECT SUM(nn) FROM cells) AS BIGINT) AS n_neg,
        ROUND(CAST(SUM(2 * np * cn + np * nn) AS DOUBLE)
              / (2.0 * (SELECT SUM(np) FROM cells)
                 * (SELECT SUM(nn) FROM cells)), 6) AS auc
@@ -5941,7 +5895,7 @@ c AS (
   SELECT SUM(na) OVER (ORDER BY b) AS ca,
          SUM(nb) OVER (ORDER BY b) AS cb
   FROM cells)
-SELECT t.n_a, t.n_b,
+SELECT CAST(t.n_a AS BIGINT) AS n_a, CAST(t.n_b AS BIGINT) AS n_b,
        ROUND(CAST(MAX(ABS(ca * t.n_b - cb * t.n_a)) AS DOUBLE)
              / CAST(t.n_a * t.n_b AS DOUBLE), 6) AS ks_stat
 FROM c, tot t GROUP BY t.n_a, t.n_b
@@ -5991,7 +5945,9 @@ a AS (
          ROUND(CAST(SUM(CASE WHEN sz < k THEN sz ELSE 0 END) AS DOUBLE)
                / SUM(sz), 6) AS risk_share
   FROM sizes, (SELECT UNNEST([2, 5, 10]) AS k) ks GROUP BY k)
-SELECT * FROM a
+SELECT * REPLACE (CAST(classes_at_risk AS BIGINT) AS classes_at_risk,
+                  CAST(rows_at_risk AS BIGINT) AS rows_at_risk)
+FROM a
 """)
 def k_anonymity_docs_q(spark, sf_dir):
     """k-anonymity audit of documents under the quasi-identifier
@@ -6355,7 +6311,7 @@ WITH s AS (
          CAST(ROUND(value / 500.0 * 1000000, 0) AS BIGINT) AS s6,
          CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
   FROM events)
-SELECT bin, COUNT(*) AS n, SUM(y) AS n_pos,
+SELECT bin, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS n_pos,
        ROUND(CAST(SUM(s6) AS DOUBLE) / (COUNT(*) * 1000000.0), 6)
          AS mean_score,
        ROUND(CAST(SUM(y) AS DOUBLE) / COUNT(*), 6) AS pos_rate
@@ -6372,13 +6328,8 @@ def calibration_value_purchase_q(spark, sf_dir):
                             "score", bins=10, lo=0.0, hi=1.0)
 
 
-@_q("decile_lift_purchase", """
-WITH rng AS (SELECT MIN(value) AS lo, MAX(value) AS hi FROM events),
-b AS (
-  SELECT LEAST(255, CAST(FLOOR((value - lo) / (hi - lo) * 256) AS INTEGER))
-           AS b,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events, rng),
+@_q("decile_lift_purchase", f"""
+WITH {_PURCHASE_VALUE_BINS_CTE},
 cells AS (SELECT b, COUNT(*) AS m, SUM(y) AS mp FROM b GROUP BY b),
 t AS (SELECT SUM(m) AS n, SUM(mp) AS np FROM cells),
 c AS (
@@ -6390,7 +6341,8 @@ tiers AS (
   SELECT LEAST(9, CAST(FLOOR(CAST(cum * 10 AS DOUBLE) / t.n) AS INTEGER))
            AS tier, m, mp
   FROM c, t)
-SELECT tier, SUM(m) AS n_rows, SUM(mp) AS n_pos,
+SELECT tier, CAST(SUM(m) AS BIGINT) AS n_rows,
+       CAST(SUM(mp) AS BIGINT) AS n_pos,
        ROUND(CAST(SUM(mp) AS DOUBLE) / SUM(m), 6) AS pos_rate,
        ROUND((CAST(SUM(mp) AS DOUBLE) / SUM(m))
              / (CAST(t.np AS DOUBLE) / t.n), 6) AS lift
@@ -6440,7 +6392,7 @@ WITH s AS (SELECT o_orderstatus AS v FROM orders),
 p AS (SELECT o_orderpriority AS v FROM orders),
 k AS (SELECT CAST(o_custkey AS VARCHAR) AS v FROM orders)
 SELECT 'o_orderstatus' AS column, COUNT(*) AS n_rows,
-       SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS n_null,
+       CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
        COUNT(DISTINCT v) AS n_distinct,
        (SELECT v FROM s WHERE v IS NOT NULL GROUP BY v
         ORDER BY COUNT(*) DESC, v LIMIT 1) AS top_value,
@@ -6449,7 +6401,8 @@ SELECT 'o_orderstatus' AS column, COUNT(*) AS n_rows,
 FROM s
 UNION ALL
 SELECT 'o_orderpriority', COUNT(*),
-       SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END), COUNT(DISTINCT v),
+       CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+       COUNT(DISTINCT v),
        (SELECT v FROM p WHERE v IS NOT NULL GROUP BY v
         ORDER BY COUNT(*) DESC, v LIMIT 1),
        (SELECT COUNT(*) FROM p WHERE v IS NOT NULL GROUP BY v
@@ -6457,7 +6410,8 @@ SELECT 'o_orderpriority', COUNT(*),
 FROM p
 UNION ALL
 SELECT 'o_custkey', COUNT(*),
-       SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END), COUNT(DISTINCT v),
+       CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+       COUNT(DISTINCT v),
        (SELECT v FROM k WHERE v IS NOT NULL GROUP BY v
         ORDER BY COUNT(*) DESC, v LIMIT 1),
        (SELECT COUNT(*) FROM k WHERE v IS NOT NULL GROUP BY v
@@ -6474,12 +6428,13 @@ def profile_orders_q(spark, sf_dir):
                          ["o_orderstatus", "o_orderpriority", "o_custkey"])
 
 
-@_q("bigram_lm_docs", """
-WITH base AS (
-  SELECT doc_id AS doc,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     x -> x <> '') AS ts
-  FROM documents),
+# _DOC_TOKS_CTE keyed as (doc, ts).
+_DOC_TOKEN_LISTS_CTE = f"""{_DOC_TOKS_CTE},
+base AS (SELECT doc_id AS doc, t AS ts FROM toks)"""
+
+
+@_q("bigram_lm_docs", f"""
+WITH {_DOC_TOKEN_LISTS_CTE},
 b2 AS (SELECT doc, ts FROM base WHERE len(ts) >= 2),
 uni AS (
   SELECT t, COUNT(*) AS n
@@ -6644,7 +6599,8 @@ v2 AS (
                 THEN o_totalprice + 10.0 ELSE o_totalprice END * 100, 0)
            AS BIGINT)) AS sum_cents
   FROM orders WHERE o_orderstatus <> 'F')
-SELECT * FROM v1 UNION ALL SELECT * FROM v2 ORDER BY version
+SELECT * REPLACE (CAST(sum_cents AS BIGINT) AS sum_cents)
+FROM (SELECT * FROM v1 UNION ALL SELECT * FROM v2) ORDER BY version
 """)
 def versioned_time_travel_orders_q(spark, sf_dir):
     """Lakehouse snapshot versioning end to end: commit orders as v1,
@@ -6677,10 +6633,15 @@ def versioned_time_travel_orders_q(spark, sf_dir):
     return outs[0].unionAll(outs[1]).orderBy("version")
 
 
-@_q("versioned_data_skipping_orders", """
-SELECT o_orderpriority,
+# Orders per priority with their exact price sum in cents.
+_PRIORITY_CENTS = """SELECT o_orderpriority,
        COUNT(*) AS n,
-       SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS sum_cents
+       CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
+         AS sum_cents"""
+
+
+@_q("versioned_data_skipping_orders", f"""
+{_PRIORITY_CENTS}
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
   AND o_orderdate <= TIMESTAMP '1996-12-31 23:59:59'
@@ -6725,7 +6686,8 @@ WITH per AS (
          COUNT(*) AS n_orders,
          MAX(o_orderdate) AS last_order
   FROM orders GROUP BY 1)
-SELECT p.o_custkey, p.spend_cents, p.n_orders, p.last_order
+SELECT p.o_custkey, CAST(p.spend_cents AS BIGINT) AS spend_cents,
+       p.n_orders, p.last_order
 FROM per p
 WHERE NOT EXISTS (
   SELECT 1 FROM per q
@@ -6864,9 +6826,10 @@ ev AS (
   SELECT c.fold, m.n_train, c.np, c.nn, m.sb,
          CASE WHEN c.b < m.sb THEN m.left_pred ELSE m.right_pred END AS pred
   FROM cells c JOIN model m ON c.fold = m.fold)
-SELECT e.fold, MAX(e.n_train) AS n_train,
-       SUM(e.np + e.nn) AS n_test,
-       SUM(CASE WHEN e.pred = 1 THEN e.np ELSE e.nn END) AS n_correct,
+SELECT e.fold, CAST(MAX(e.n_train) AS BIGINT) AS n_train,
+       CAST(SUM(e.np + e.nn) AS BIGINT) AS n_test,
+       CAST(SUM(CASE WHEN e.pred = 1 THEN e.np ELSE e.nn END) AS BIGINT)
+         AS n_correct,
        ROUND(MIN(r.lo) + MAX(e.sb) * ((MIN(r.hi) - MIN(r.lo)) / 20), 6)
          AS split_value,
        ROUND(CAST(SUM(CASE WHEN e.pred = 1 THEN e.np ELSE e.nn END)
@@ -7002,7 +6965,7 @@ WITH s AS (
          SUM(CASE WHEN regexp_matches(o_orderpriority, '^[1-3]-')
                   THEN 1 ELSE 0 END) AS m3
   FROM orders)
-SELECT * FROM (
+SELECT * REPLACE (CAST(observed AS BIGINT) AS observed) FROM (
   SELECT 'completeness' AS "check", 'o_custkey' AS "column",
          m0 AS observed, n AS expected,
          ROUND(CAST(m0 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS metric,
@@ -7106,7 +7069,8 @@ model AS (
 SELECT r.g, MAX(model.n_cal) AS n_cal, MAX(model.k) AS k,
        ROUND(MAX(model.qhat), 6) AS qhat,
        COUNT(*) AS n_serve,
-       SUM(CASE WHEN r.r <= model.qhat THEN 1 ELSE 0 END) AS n_covered,
+       CAST(SUM(CASE WHEN r.r <= model.qhat THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_covered,
        ROUND(CAST(SUM(CASE WHEN r.r <= model.qhat THEN 1 ELSE 0 END)
                   AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS coverage
 FROM r JOIN model ON r.g = model.g WHERE NOT r.cal
@@ -7351,10 +7315,8 @@ def versioned_change_feed_orders_q(spark, sf_dir):
     return change_feed(spark, tdir, 1, 2, ["o_orderkey"])
 
 
-@_q("versioned_zorder_2d_skipping", """
-SELECT o_orderpriority,
-       COUNT(*) AS n,
-       SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS sum_cents
+@_q("versioned_zorder_2d_skipping", f"""
+{_PRIORITY_CENTS}
 FROM orders
 WHERE o_custkey >= 100 AND o_custkey <= 300
   AND o_orderdate >= TIMESTAMP '1997-01-01'
@@ -7433,7 +7395,8 @@ def contrastive_negatives_docs_q(spark, sf_dir):
 
 @_q("versioned_delete_keys_orders", """
 SELECT COUNT(*) AS n_rows,
-       SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS sum_cents,
+       CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
+         AS sum_cents,
        COUNT(DISTINCT o_orderstatus) AS n_status
 FROM orders WHERE o_orderkey NOT IN (1, 2, 3, 7)
 """)
@@ -7463,14 +7426,19 @@ def versioned_delete_keys_orders_q(spark, sf_dir):
         F.count_distinct(F.col("o_orderstatus")).alias("n_status"))
 
 
-@_q("acf_hourly_events", """
-WITH hourly AS (
+# Event counts y per (event type, hour xh) and, per type, the count
+# n of non-empty hours with the sums sy and syy of y and y squared.
+_HOURLY_MOMENTS_CTE = """hourly AS (
   SELECT event_type, CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS xh,
          COUNT(*) AS y
   FROM events GROUP BY 1, 2),
 tot AS (
   SELECT event_type, COUNT(*) AS n, SUM(y) AS sy, SUM(y*y) AS syy
-  FROM hourly GROUP BY 1),
+  FROM hourly GROUP BY 1)"""
+
+
+@_q("acf_hourly_events", f"""
+WITH {_HOURLY_MOMENTS_CTE},
 probe AS (
   SELECT event_type, xh, y, k
   FROM hourly CROSS JOIN (SELECT UNNEST([1, 2, 3]) AS k)),
@@ -7505,8 +7473,10 @@ def acf_hourly_events_q(spark, sf_dir):
     return hourly_autocorrelation(ev, lags=(1, 2, 3))
 
 
-@_q("stl_decompose_hourly", """
-WITH hourly AS (
+# Hourly event counts per event type with every empty hour between a
+# type's first and last event filled in as y = 0 (dense), and the
+# centred 25-hour moving window the STL oracles take their trend over.
+_HOURLY_DENSE_CTE = """hourly AS (
   SELECT event_type, CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) AS xh,
          COUNT(*) AS n
   FROM events GROUP BY 1, 2),
@@ -7517,14 +7487,18 @@ dense0 AS (
 dense AS (
   SELECT d.event_type, d.xh, COALESCE(h.n, 0) AS y
   FROM dense0 d LEFT JOIN hourly h
-    ON h.event_type = d.event_type AND h.xh = d.xh),
+    ON h.event_type = d.event_type AND h.xh = d.xh)"""
+_TREND_WINDOW = """PARTITION BY event_type ORDER BY xh
+             ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING"""
+
+
+@_q("stl_decompose_hourly", f"""
+WITH {_HOURLY_DENSE_CTE},
 t AS (
   SELECT event_type, xh, y,
          CAST((SUM(y) OVER w * 1000000) // (COUNT(*) OVER w) AS BIGINT)
            AS trend_micro
-  FROM dense
-  WINDOW w AS (PARTITION BY event_type ORDER BY xh
-               ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+  FROM dense WINDOW w AS ({_TREND_WINDOW})),
 t2 AS (SELECT *, y * 1000000 - trend_micro AS det_micro FROM t),
 seas AS (
   SELECT event_type, xh % 24 AS hod,
@@ -7552,14 +7526,8 @@ def stl_decompose_hourly_q(spark, sf_dir):
     return stl_lite_hourly(ev, micro=True)
 
 
-@_q("cusum_changepoint_hours", """
-WITH hourly AS (
-  SELECT event_type, CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS xh,
-         COUNT(*) AS y
-  FROM events GROUP BY 1, 2),
-tot AS (
-  SELECT event_type, COUNT(*) AS n, SUM(y) AS sy, SUM(y*y) AS syy
-  FROM hourly GROUP BY 1),
+@_q("cusum_changepoint_hours", f"""
+WITH {_HOURLY_MOMENTS_CTE},
 run AS (
   SELECT event_type, xh,
          SUM(y) OVER (PARTITION BY event_type ORDER BY xh) AS run,
@@ -7625,7 +7593,8 @@ s AS (
                      ELSE CAST(n_risk - d AS DOUBLE) / n_risk END))
            OVER (ORDER BY dur) AS lsum
   FROM k)
-SELECT dur AS dur_units, n_risk, d AS n_converted,
+SELECT dur AS dur_units, CAST(n_risk AS BIGINT) AS n_risk,
+       CAST(d AS BIGINT) AS n_converted,
        ROUND(CASE WHEN zeros > 0 THEN 0.0 ELSE EXP(lsum) END, 6)
        AS survival
 FROM s WHERE d > 0 ORDER BY dur
@@ -7705,8 +7674,10 @@ classes AS (
   FROM cells GROUP BY 1, 2),
 l AS (SELECT UNNEST([2, 3, 5]) AS l)
 SELECT l.l, COUNT(*) AS n_classes,
-       SUM(CASE WHEN l_val < l.l THEN 1 ELSE 0 END) AS classes_at_risk,
-       SUM(CASE WHEN l_val < l.l THEN sz ELSE 0 END) AS rows_at_risk,
+       CAST(SUM(CASE WHEN l_val < l.l THEN 1 ELSE 0 END) AS BIGINT)
+         AS classes_at_risk,
+       CAST(SUM(CASE WHEN l_val < l.l THEN sz ELSE 0 END) AS BIGINT)
+         AS rows_at_risk,
        ROUND(CAST(SUM(CASE WHEN l_val < l.l THEN sz ELSE 0 END)
                   AS DOUBLE) / SUM(sz), 6) AS risk_share
 FROM classes CROSS JOIN l GROUP BY 1
@@ -7723,24 +7694,8 @@ def l_diversity_docs_q(spark, sf_dir):
 
 @_q("clustering_coeff_parts", f"""
 WITH {_PART_PAIRS_CTE},
-e AS (SELECT u AS a, v AS b FROM pairs),
-deg AS (SELECT n, COUNT(*) AS d
-        FROM (SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) t
-        GROUP BY n),
-wd AS (SELECT e.a, e.b, x.d AS da, y.d AS db
-       FROM e JOIN deg x ON e.a = x.n JOIN deg y ON e.b = y.n),
-o AS (SELECT CASE WHEN da < db OR (da = db AND a < b)
-                  THEN a ELSE b END AS u,
-             CASE WHEN da < db OR (da = db AND a < b)
-                  THEN b ELSE a END AS w
-      FROM wd),
-tri AS (SELECT w1.u AS u, w1.w AS v1, w2.w AS v2
-        FROM o w1 JOIN o w2 ON w1.u = w2.u AND w1.w < w2.w
-        JOIN e ON e.a = w1.w AND e.b = w2.w),
-nn AS (SELECT u AS node FROM tri
-       UNION ALL SELECT v1 FROM tri
-       UNION ALL SELECT v2 FROM tri),
-tc AS (SELECT node, COUNT(*) AS t FROM nn GROUP BY node),
+{_PART_TRIANGLES_CTE},
+tc AS (SELECT node, COUNT(*) AS t FROM tri_nodes GROUP BY node),
 per AS (
   SELECT deg.n AS node, deg.d, COALESCE(tc.t, 0) AS t
   FROM deg LEFT JOIN tc ON deg.n = tc.node),
@@ -7752,7 +7707,7 @@ q AS (
               ELSE 0 END AS ccq
   FROM per)
 SELECT COUNT(*) AS n_nodes,
-       SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) AS n_deg_ge2,
+       CAST(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_deg_ge2,
        CAST(SUM(t) / 3 AS BIGINT) AS n_triangles,
        ROUND(CAST(SUM(ccq) AS DOUBLE) / 1e6
              / SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END), 6) AS avg_cc
@@ -7861,21 +7816,7 @@ def geo_nearest_hub_nations_q(spark, sf_dir):
     return nearest_hub(c, hubs, "c_custkey", "n_nationkey")
 
 
-@_q("streaming_session_windows", """
-WITH o AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-  FROM events),
-s AS (
-  SELECT user_id, ts,
-         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sess
-  FROM o)
-SELECT user_id, epoch_us(MIN(ts)) AS session_start_us,
-       COUNT(*) AS n_events
-FROM s GROUP BY user_id, sess
-""")
+@_q("streaming_session_windows", ORACLES["sessionize_gap"])
 def streaming_session_windows_q(spark, sf_dir):
     """STREAMING gap sessions: real readStream → ``session_window``
     state (adjacent windows MERGE as events arrive — the stateful op
@@ -7906,12 +7847,8 @@ def streaming_session_windows_q(spark, sf_dir):
                     "n_events"))
 
 
-@_q("pmi_collocations_docs", """
-WITH base AS (
-  SELECT doc_id AS doc,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     x -> x <> '') AS ts
-  FROM documents),
+@_q("pmi_collocations_docs", f"""
+WITH {_DOC_TOKEN_LISTS_CTE},
 uni AS (SELECT t, COUNT(*) AS n
         FROM (SELECT unnest(ts) AS t FROM base) GROUP BY t),
 tot AS (SELECT SUM(n) AS nu FROM uni),
@@ -7940,16 +7877,21 @@ def pmi_collocations_docs_q(spark, sf_dir):
     return pmi_collocations(docs, "text", min_count=5, top=20)
 
 
-@_q("gini_event_values", """
-WITH r AS (
+# Event values in cents c ranked within their event type grp (rn,
+# ties broken by event_id), with the type's row count n.
+_RANKED_CENTS_CTE = """r AS (
   SELECT event_type AS grp,
          CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         ROW_NUMBER() OVER (
-           PARTITION BY event_type
-           ORDER BY CAST(ROUND(value * 100, 0) AS BIGINT), event_id)
-         AS i
-  FROM events),
-a AS (SELECT grp, COUNT(*) AS n, SUM(c) AS s, SUM(i * c) AS si
+         ROW_NUMBER() OVER (PARTITION BY event_type
+                            ORDER BY CAST(ROUND(value * 100, 0) AS BIGINT),
+                                     event_id) AS rn,
+         COUNT(*) OVER (PARTITION BY event_type) AS n
+  FROM events)"""
+
+
+@_q("gini_event_values", f"""
+WITH {_RANKED_CENTS_CTE},
+a AS (SELECT grp, COUNT(*) AS n, SUM(c) AS s, SUM(rn * c) AS si
       FROM r GROUP BY 1)
 SELECT grp AS event_type, n, ROUND(s / 100.0, 2) AS total,
        ROUND(2.0 * CAST(si AS DOUBLE) / CAST(n * s AS DOUBLE)
@@ -7987,7 +7929,8 @@ w AS (
          (ps - ns) * LN(ps / ns) AS c
   FROM per),
 iv AS (SELECT ROUND(SUM(c), 6) AS iv FROM w)
-SELECT bin, pos, neg, woe, iv_contrib, iv
+SELECT bin, CAST(pos AS BIGINT) AS pos, CAST(neg AS BIGINT) AS neg,
+       woe, iv_contrib, iv
 FROM w CROSS JOIN iv ORDER BY bin
 """)
 def woe_iv_purchase_value_q(spark, sf_dir):
@@ -8007,8 +7950,8 @@ WITH f AS (
   FROM events GROUP BY 1),
 d AS (SELECT d0 AS day, COUNT(*) AS new_users FROM f GROUP BY 1)
 SELECT day, new_users,
-       SUM(new_users) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-       AS cum_users
+       CAST(SUM(new_users) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
+            AS BIGINT) AS cum_users
 FROM d ORDER BY day
 """)
 def user_growth_daily_q(spark, sf_dir):
@@ -8021,15 +7964,8 @@ def user_growth_daily_q(spark, sf_dir):
     return user_growth(ev)
 
 
-@_q("scd2_temporal_purchases", """
-WITH e AS (
-  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
-         LAG(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev
-  FROM events),
-c AS (
-  SELECT user_id, event_type, ts_us, event_id FROM e
-  WHERE prev IS NULL OR prev <> event_type),
+@_q("scd2_temporal_purchases", f"""
+WITH {_STATE_CHANGES_CTE},
 runs AS (
   SELECT user_id, event_type AS state, ts_us AS vf,
          LEAD(ts_us) OVER (PARTITION BY user_id
@@ -8106,7 +8042,7 @@ def rfm_user_segments_q(spark, sf_dir):
     return rfm_segments(ev)
 
 
-@_q("active_time_per_user", """
+@_q("active_time_per_user", f"""
 WITH o AS (
   SELECT user_id, ts,
          CASE WHEN epoch_us(ts)
@@ -8114,11 +8050,7 @@ WITH o AS (
                                              ORDER BY ts)
                    >= 300000000 THEN 1 ELSE 0 END AS brk
   FROM events),
-s AS (
-  SELECT user_id, ts,
-         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sess
-  FROM o),
+{_SESSION_NUMBER_CTE},
 i AS (
   SELECT user_id,
          MAX(epoch_us(ts)) + 300000000 - MIN(epoch_us(ts)) AS dur_us
@@ -8515,7 +8447,7 @@ views AS (
   WHERE event_type = 'view')
 SELECT c.user_id,
        COUNT(v.event_id) AS n_pairs,
-       SUM(CASE WHEN v.event_id IS NULL THEN 1 ELSE 0 END)
+       CAST(SUM(CASE WHEN v.event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_unmatched
 FROM clicks c LEFT JOIN views v
   ON v.user_id = c.user_id
@@ -8671,8 +8603,8 @@ v2 AS (
   FROM orders WHERE o_orderkey % 2 = 1),
 u AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
 SELECT COUNT(*) AS n_rows,
-       SUM(CASE WHEN o_discount_pct IS NULL THEN 1 ELSE 0 END)
-       AS n_legacy,
+       CAST(SUM(CASE WHEN o_discount_pct IS NULL THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_legacy,
        ROUND(SUM(COALESCE(o_discount_pct, 0)), 2) AS sum_discount,
        ROUND(SUM(o_totalprice), 2) AS sum_price
 FROM u
@@ -8817,11 +8749,12 @@ u3 AS (
          MIN(CASE WHEN t = 'purchase' AND e.ts > t2
                        AND e.ts <= t2 + 86400000000 THEN e.ts END) AS t3
   FROM e JOIN u2 ON e.u = u2.u GROUP BY 1)
-SELECT SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS n_stage1,
-       SUM(CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END)
-       AS n_stage2_within,
-       SUM(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END)
-       AS n_stage3_within
+SELECT CAST(SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_stage1,
+       CAST(SUM(CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_stage2_within,
+       CAST(SUM(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_stage3_within
 FROM u1 JOIN u2 USING (u) JOIN u3 USING (u)
 """)
 def funnel_time_boxed_1h_24h_q(spark, sf_dir):
@@ -8907,16 +8840,8 @@ def activity_heatmap_dow_hour_q(spark, sf_dir):
     return activity_heatmap(ev)
 
 
-@_q("session_depth_bounce", """
-WITH o AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-  FROM events),
-s AS (
-  SELECT user_id, SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                                 ROWS UNBOUNDED PRECEDING) AS sess
-  FROM o),
+@_q("session_depth_bounce", f"""
+WITH {_SESSIONS_30M_CTE},
 c AS (SELECT COUNT(*) AS n FROM s GROUP BY user_id, sess),
 b AS (
   SELECT CASE WHEN n = 1 THEN '1 (bounce)' WHEN n <= 2 THEN '2'
@@ -8996,7 +8921,7 @@ WITH lag AS (
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
 SELECT pri AS o_orderpriority, COUNT(*) AS n,
        MIN(days) AS min_days, MAX(days) AS max_days,
-       SUM(days) AS total_days,
+       CAST(SUM(days) AS BIGINT) AS total_days,
        ROUND(CAST(SUM(days) AS DOUBLE) / COUNT(*), 6) AS avg_days
 FROM lag GROUP BY 1 ORDER BY 1
 """)
@@ -9061,7 +8986,7 @@ g AS (
   SELECT *, s - LAG(s) OVER (PARTITION BY u ORDER BY s, i) AS gap
   FROM e)
 SELECT u AS user_id, COUNT(*) AS n_events,
-       SUM(CASE WHEN t = 'purchase' THEN 1 ELSE 0 END)
+       CAST(SUM(CASE WHEN t = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
        AS n_conversions,
        COUNT(DISTINCT s // 86400) AS active_days,
        MAX(s // 86400) - MIN(s // 86400) + 1 AS span_days,
@@ -9082,7 +9007,7 @@ def user_feature_mart_q(spark, sf_dir):
 
 @_q("custom_sink_jsonl_roundtrip", """
 SELECT COUNT(*) AS n_rows,
-       SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS sum_cents
+       CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
 FROM events WHERE event_type = 'click'
 """)
 def custom_sink_jsonl_roundtrip_q(spark, sf_dir):
@@ -9138,19 +9063,24 @@ CAST(ROUND((CAST(idf_q AS DOUBLE) * (CAST(tf AS DOUBLE) * 2.2))
            0) AS BIGINT)
 """
 
+# BM25 score s_micro of each (doc, term) hit of the query
+# 'agg scan vector'.
+_BM25_HITS_CTE = f"""hits AS (
+  SELECT p.doc_id, {_BM25_SCORE_SQL} AS s_micro
+  FROM post p JOIN idf USING (term) JOIN dlen USING (doc_id), scal
+  WHERE p.term IN ('agg', 'scan', 'vector'))"""
+
 
 @_q("bm25_rank_docs", f"""
 WITH {_BM25_CORE_SQL},
-hits AS (
-  SELECT p.doc_id, {_BM25_SCORE_SQL} AS s_micro
-  FROM post p JOIN idf USING (term) JOIN dlen USING (doc_id), scal
-  WHERE p.term IN ('agg', 'scan', 'vector')),
+{_BM25_HITS_CTE},
 sc AS (SELECT doc_id, SUM(s_micro) AS score_micro FROM hits GROUP BY 1),
 ranked AS (
   SELECT doc_id, score_micro,
          ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS rk
   FROM sc)
-SELECT doc_id, score_micro, rk FROM ranked WHERE rk <= 10
+SELECT doc_id, CAST(score_micro AS BIGINT) AS score_micro, rk
+FROM ranked WHERE rk <= 10
 """)
 def bm25_rank_docs_q(spark, sf_dir):
     """BM25 ranked retrieval over the documents corpus: postings
@@ -9212,7 +9142,8 @@ ranked AS (
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY rrf_nano DESC, doc_id) AS rk
   FROM fused)
-SELECT query_id, doc_id, rrf_nano, rk FROM ranked WHERE rk <= 5
+SELECT query_id, doc_id, CAST(rrf_nano AS BIGINT) AS rrf_nano, rk
+FROM ranked WHERE rk <= 5
 """)
 def hybrid_search_rrf_q(spark, sf_dir):
     """Hybrid retrieval capstone: per query doc (ids < 3) a BM25
@@ -9284,8 +9215,8 @@ hits AS (
 SELECT i.query_id,
        COALESCE(n_hits, 0) AS n_hits,
        COALESCE(rr_raw, 0) AS rr_ppm,
-       COALESCE(dcg_micro, 0) AS dcg_micro,
-       idcg_micro,
+       CAST(COALESCE(dcg_micro, 0) AS BIGINT) AS dcg_micro,
+       CAST(idcg_micro AS BIGINT) AS idcg_micro,
        CAST(ROUND(CAST(COALESCE(dcg_micro, 0) AS DOUBLE) * 1000000.0
                   / CAST(idcg_micro AS DOUBLE), 0) AS BIGINT) AS ndcg_ppm
 FROM ideal i LEFT JOIN hits USING (query_id)
@@ -9393,25 +9324,32 @@ def image_dhash_census_q(spark, sf_dir):
     return image_dhash(_pattern_pngs(spark, sf_dir))
 
 
-@_q("image_near_dup_hamming", """
-WITH d AS (SELECT doc_id, 8 + doc_id % 25 AS w, 6 + doc_id % 17 AS h
-           FROM documents),
-c AS (SELECT w, h, COUNT(*) AS n FROM d GROUP BY 1, 2),
-g AS (SELECT w, h, x.g AS x, y.g AS y,
-             ((((x.g * w) // 9) * 31 + ((y.g * h) // 8) * 57) % 256) AS p
-      FROM c JOIN generate_series(0, 8) x(g) ON TRUE
-             JOIN generate_series(0, 7) y(g) ON TRUE),
+# The synthetic pattern image of each (w, h) row of cls: its 9x8
+# grey grid g, the 64 dHash bits, and hc — cls's columns plus s, the
+# dHash as the signed BIGINT with the same 64 bits.
+_PATTERN_DHASH_CTE = """g AS (SELECT c.w, c.h, x.g AS x, y.g AS y,
+             ((((x.g * c.w) // 9) * 31 + ((y.g * c.h) // 8) * 57) % 256)
+               AS p
+      FROM cls c JOIN generate_series(0, 8) x(g) ON TRUE
+                 JOIN generate_series(0, 7) y(g) ON TRUE),
 bit AS (SELECT a.w, a.h, (a.y * 8 + a.x) AS k,
                CASE WHEN a.p > b.p THEN 1 ELSE 0 END AS bit
         FROM g a JOIN g b ON b.w = a.w AND b.h = a.h AND b.y = a.y
                           AND b.x = a.x + 1
         WHERE a.x < 8),
 hu AS (SELECT w, h, SUM(bit::HUGEINT << k) AS u FROM bit GROUP BY 1, 2),
-hc AS (SELECT hu.w, hu.h,
+hc AS (SELECT c.*,
               (CASE WHEN u >= 9223372036854775808::HUGEINT
                     THEN u - 18446744073709551616::HUGEINT
-                    ELSE u END)::BIGINT AS s, n
-       FROM hu JOIN c ON c.w = hu.w AND c.h = hu.h),
+                    ELSE u END)::BIGINT AS s
+       FROM hu JOIN cls c ON c.w = hu.w AND c.h = hu.h)"""
+
+
+@_q("image_near_dup_hamming", f"""
+WITH d AS (SELECT doc_id, 8 + doc_id % 25 AS w, 6 + doc_id % 17 AS h
+           FROM documents),
+cls AS (SELECT w, h, COUNT(*) AS n FROM d GROUP BY 1, 2),
+{_PATTERN_DHASH_CTE},
 pairs AS (
   SELECT 0 AS hamming, SUM(n * (n - 1) // 2) AS n_pairs FROM hc
   UNION ALL
@@ -9450,12 +9388,8 @@ def image_near_dup_hamming_q(spark, sf_dir):
                                         max_hamming=3)
 
 
-@_q("mine_repeated_ngrams", """
-WITH base AS (
-  SELECT doc_id AS doc,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     x -> x <> '') AS ts
-  FROM documents),
+@_q("mine_repeated_ngrams", f"""
+WITH {_DOC_TOKEN_LISTS_CTE},
 tokix AS (
   SELECT doc, unnest(ts) AS t, generate_subscripts(ts, 1) AS i
   FROM base WHERE len(ts) >= 3),
@@ -9586,13 +9520,9 @@ def mine_duplicate_spans_q(spark, sf_dir):
                       F.col("span_len").cast("long").alias("span_len"))
 
 
-@_q("maxsim_late_interaction", """
-WITH base AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     x -> x <> '') AS ts
-  FROM documents),
-dt AS (SELECT DISTINCT doc_id, unnest(ts) AS t FROM base),
+@_q("maxsim_late_interaction", f"""
+WITH {_DOC_TOKEN_LISTS_CTE},
+dt AS (SELECT DISTINCT doc AS doc_id, unnest(ts) AS t FROM base),
 q AS (SELECT * FROM (VALUES ('agg'), ('scan'), ('vector')) v(qt)),
 dotj AS (
   SELECT d.doc_id, d.t, q.qt,
@@ -9658,10 +9588,7 @@ def parquet_footer_census_q(spark, sf_dir):
 
 @_q("mmr_diverse_rerank", f"""
 WITH {_BM25_CORE_SQL},
-hits AS (
-  SELECT p.doc_id, {_BM25_SCORE_SQL} AS s_micro
-  FROM post p JOIN idf USING (term) JOIN dlen USING (doc_id), scal
-  WHERE p.term IN ('agg', 'scan', 'vector')),
+{_BM25_HITS_CTE},
 sc AS (SELECT doc_id, SUM(s_micro) AS rel FROM hits GROUP BY 1),
 cand AS MATERIALIZED (SELECT doc_id, rel FROM sc ORDER BY rel DESC, doc_id LIMIT 20),
 ct AS MATERIALIZED (SELECT DISTINCT t.doc_id, t.term FROM tok t JOIN cand USING (doc_id)),
@@ -9697,11 +9624,11 @@ r5 AS (SELECT c.doc_id, c.rel, c.rel - COALESCE(MAX(s.s), 0) AS mmr
             AND s.db IN (SELECT doc_id FROM s4)
        WHERE c.doc_id NOT IN (SELECT doc_id FROM s4) GROUP BY 1, 2),
 p5 AS (SELECT doc_id, rel FROM r5 ORDER BY mmr DESC, doc_id LIMIT 1)
-SELECT 1 AS rk, doc_id, rel FROM p1
-UNION ALL SELECT 2, doc_id, rel FROM p2
-UNION ALL SELECT 3, doc_id, rel FROM p3
-UNION ALL SELECT 4, doc_id, rel FROM p4
-UNION ALL SELECT 5, doc_id, rel FROM p5
+SELECT 1 AS rk, doc_id, CAST(rel AS BIGINT) AS rel FROM p1
+UNION ALL SELECT 2, doc_id, CAST(rel AS BIGINT) FROM p2
+UNION ALL SELECT 3, doc_id, CAST(rel AS BIGINT) FROM p3
+UNION ALL SELECT 4, doc_id, CAST(rel AS BIGINT) FROM p4
+UNION ALL SELECT 5, doc_id, CAST(rel AS BIGINT) FROM p5
 """)
 def mmr_diverse_rerank_q(spark, sf_dir):
     """MMR diversity re-ranking of the BM25 head: 5 greedy picks from
@@ -9720,7 +9647,7 @@ def mmr_diverse_rerank_q(spark, sf_dir):
 
 @_q("streaming_versioned_rollup", """
 SELECT event_type, COUNT(*) AS n,
-       SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS sum_cents,
+       CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
        4 AS n_versions
 FROM events GROUP BY 1
 """)
@@ -9843,27 +9770,12 @@ def theil_sen_event_trend_q(spark, sf_dir):
     return theil_sen_daily_trend(ev)
 
 
-@_q("image_curation_pipeline", """
+@_q("image_curation_pipeline", f"""
 WITH d AS (SELECT doc_id, 8 + doc_id % 25 AS w, 6 + doc_id % 17 AS h
            FROM documents),
 f AS (SELECT * FROM d WHERE w >= 12),
 cls AS (SELECT w, h, MIN(doc_id) AS mindoc FROM f GROUP BY 1, 2),
-g AS (SELECT c.w, c.h, x.g AS x, y.g AS y,
-             ((((x.g * c.w) // 9) * 31 + ((y.g * c.h) // 8) * 57) % 256)
-               AS p
-      FROM cls c JOIN generate_series(0, 8) x(g) ON TRUE
-                 JOIN generate_series(0, 7) y(g) ON TRUE),
-bit AS (SELECT a.w, a.h, (a.y * 8 + a.x) AS k,
-               CASE WHEN a.p > b.p THEN 1 ELSE 0 END AS bit
-        FROM g a JOIN g b ON b.w = a.w AND b.h = a.h AND b.y = a.y
-                          AND b.x = a.x + 1
-        WHERE a.x < 8),
-hu AS (SELECT w, h, SUM(bit::HUGEINT << k) AS u FROM bit GROUP BY 1, 2),
-hc AS (SELECT hu.w, hu.h,
-              (CASE WHEN u >= 9223372036854775808::HUGEINT
-                    THEN u - 18446744073709551616::HUGEINT
-                    ELSE u END)::BIGINT AS s, c.mindoc
-       FROM hu JOIN cls c ON c.w = hu.w AND c.h = hu.h),
+{_PATTERN_DHASH_CTE},
 keep AS (SELECT s, MIN(mindoc) AS keeper FROM hc GROUP BY s),
 surv AS (SELECT k.keeper AS doc_id, d.w, d.h
          FROM keep k JOIN d ON d.doc_id = k.keeper),
@@ -9959,15 +9871,8 @@ def diff_in_diff_purchases_q(spark, sf_dir):
     return diff_in_diff(ev)
 
 
-@_q("trimmed_mean_event_values", """
-WITH r AS (
-  SELECT event_type AS grp,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY CAST(ROUND(value * 100, 0) AS BIGINT),
-                                     event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM events),
+@_q("trimmed_mean_event_values", f"""
+WITH {_RANKED_CENTS_CTE},
 mid AS (SELECT grp, c, n, (n // 10) AS k FROM r
         WHERE rn > n // 10 AND rn <= n - n // 10)
 SELECT grp AS event_type, MAX(n) AS n, MAX(k) AS k_trimmed,
@@ -10041,7 +9946,8 @@ WITH tok AS (
 tf AS (SELECT term, COUNT(*) AS n FROM tok GROUP BY 1),
 vocab AS (SELECT term FROM tf ORDER BY n DESC, term LIMIT 1000)
 SELECT t.lang, COUNT(*) AS total_tokens,
-       SUM(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS oov_tokens,
+       CAST(SUM(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS oov_tokens,
        CAST(FLOOR(1000000.0
                   * SUM(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END)
                   / COUNT(*)) AS BIGINT) AS oov_ppm
@@ -10144,10 +10050,8 @@ def approx_accuracy_contract_q(spark, sf_dir):
         .alias("p50_within_1pct"))
 
 
-@_q("optimize_table_orders", """
-SELECT o_orderpriority,
-       COUNT(*) AS n,
-       SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS sum_cents,
+@_q("optimize_table_orders", f"""
+{_PRIORITY_CENTS},
        1 AS content_unchanged, 1 AS pruning_improved
 FROM orders GROUP BY 1
 """)
@@ -10195,7 +10099,8 @@ def optimize_table_orders_q(spark, sf_dir):
 @_q("incremental_join_view_orders", """
 SELECT c.c_mktsegment,
        COUNT(*) AS n,
-       SUM(CAST(ROUND(o.o_totalprice * 100, 0) AS BIGINT)) AS sum_cents
+       CAST(SUM(CAST(ROUND(o.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
+         AS sum_cents
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1
 """)
@@ -10282,7 +10187,7 @@ WITH v AS (
   FROM customer WHERE c_nationkey < 10)
 SELECT c_mktsegment, COUNT(*) AS n,
        COUNT(DISTINCT c_custkey) AS n_tokens,
-       SUM(c_acctbal) AS sum_bucketed,
+       CAST(SUM(c_acctbal) AS BIGINT) AS sum_bucketed,
        MIN(c_name) AS first_masked_name
 FROM v GROUP BY 1
 """)
@@ -10312,26 +10217,13 @@ def secure_view_customers_q(spark, sf_dir):
                  F.min("c_name").alias("first_masked_name")))
 
 
-@_q("stl_residual_anomalies", """
-WITH hourly AS (
-  SELECT event_type, CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) AS xh,
-         COUNT(*) AS n
-  FROM events GROUP BY 1, 2),
-span AS (SELECT event_type, MIN(xh) AS lo, MAX(xh) AS hi
-         FROM hourly GROUP BY 1),
-dense0 AS (
-  SELECT event_type, UNNEST(generate_series(lo, hi)) AS xh FROM span),
-dense AS (
-  SELECT d.event_type, d.xh, COALESCE(h.n, 0) AS y
-  FROM dense0 d LEFT JOIN hourly h
-    ON h.event_type = d.event_type AND h.xh = d.xh),
+@_q("stl_residual_anomalies", f"""
+WITH {_HOURLY_DENSE_CTE},
 t AS (
   SELECT event_type, xh, y,
          CAST(SUM(y) OVER w AS DOUBLE)
            / CAST(COUNT(*) OVER w AS DOUBLE) AS trend
-  FROM dense
-  WINDOW w AS (PARTITION BY event_type ORDER BY xh
-               ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+  FROM dense WINDOW w AS ({_TREND_WINDOW})),
 t2 AS (SELECT *, CAST(ROUND((y - trend) * 1000000, 0) AS BIGINT) AS det
        FROM t),
 seas AS (
@@ -10371,15 +10263,8 @@ def stl_residual_anomalies_q(spark, sf_dir):
     return stl_residual_anomalies(ev, k_mad=4)
 
 
-@_q("winsorized_mean_event_values", """
-WITH r AS (
-  SELECT event_type AS grp,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY CAST(ROUND(value * 100, 0) AS BIGINT),
-                                     event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM events),
+@_q("winsorized_mean_event_values", f"""
+WITH {_RANKED_CENTS_CTE},
 b AS (SELECT grp, MIN(c) AS lo, MAX(c) AS hi
       FROM r WHERE rn = n // 10 + 1 OR rn = n - n // 10
       GROUP BY 1)
@@ -10399,41 +10284,3 @@ def winsorized_mean_event_values_q(spark, sf_dir):
     return winsorized_mean_by(ev, "event_type", "value", "event_id",
                               trim_frac=0.1)
 
-
-# ---------------------------------------------------------------------------
-# Oracle result-type pinning.
-#
-# DuckDB widens integer aggregates past 64 bits: SUM(BIGINT) -> HUGEINT
-# (int128).  Python's fetchall() hides the difference (both engines hand
-# back plain ints), but any Arrow/pandas-mediated comparison — the
-# driver's value hash — materializes HUGEINT as decimal128/float64 while
-# the Spark column is int64, so numerically identical results hash
-# differently.  Round-2 evidence: all 14 driver hash_match:false rows
-# (and only those, among the windowed queries) carried a HUGEINT column;
-# int32-vs-int64 width differences passed.
-#
-# Column types depend only on the plan, never the data, so
-# tools/gen_oracle_casts.py plans every oracle once against the sf0.001
-# views and commits the affected (query, columns) pairs to
-# vega_spark/oracle_casts.py; here each one is wrapped in
-# SELECT * REPLACE (CAST(col AS BIGINT) AS col) — name/order preserving.
-# tests/test_oracle_types.py fails if a future oracle reintroduces a
-# widened type or the generated file goes stale.
-
-RAW_ORACLES: dict[str, str] = dict(ORACLES)
-
-
-def _pin_oracle_types() -> None:
-    try:
-        from vega_spark.oracle_casts import WIDENED_COLS
-    except ImportError:  # pre-codegen bootstrap only
-        return
-    for name, cols in WIDENED_COLS.items():
-        sql = ORACLES.get(name)
-        if sql is None:
-            continue
-        rep = ", ".join(f"CAST({c} AS BIGINT) AS {c}" for c in cols)
-        ORACLES[name] = f"SELECT * REPLACE ({rep})\nFROM (\n{sql}\n) __pin64"
-
-
-_pin_oracle_types()

@@ -225,10 +225,10 @@ def tpch_q4_order_priority(spark, sf_dir):
 
 @_q("tpch_q12_late_shipments", """
 SELECT l_returnflag,
-       SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS high_line_count,
-       SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS low_line_count
+       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
 FROM orders JOIN lineitem ON o_orderkey = l_orderkey
 WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
   AND l_shipdate >= TIMESTAMP '1997-01-01'
@@ -675,9 +675,12 @@ WITH s1 AS (
   SELECT u, ANY_VALUE(t1) AS t1, ANY_VALUE(t2) AS t2, ANY_VALUE(t3) AS t3
   FROM s3 GROUP BY u
 )
-SELECT SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS n_stage1,
-       SUM(CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END) AS n_stage2,
-       SUM(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS n_stage3
+SELECT CAST(SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_stage1,
+       CAST(SUM(CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_stage2,
+       CAST(SUM(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_stage3
 FROM per_user
 """)
 def funnel_view_click_purchase(spark, sf_dir):
