@@ -1,12 +1,14 @@
-"""Guard: registry.ADJUDICATED_WARNS stays in sync with reality.
+"""Guard: each query spec's ``adjudicated`` WARNs stay in sync with
+reality.
 
-The adjudication dict converts hand-reviewed plan-audit WARNs into a
-machine-readable record (tools/scale_audit.py prints the rationale
-inline and reports 0 unadjudicated WARNs). Two rot modes this pins:
+``adjudicated=`` on a query's ``@_q`` turns hand-reviewed plan-audit
+WARNs into a machine-readable record (tools/scale_audit.py prints the
+rationale inline and reports 0 unadjudicated WARNs). Two rot modes
+this pins:
 
-* a STALE entry — the query was renamed/removed, or its plan no
-  longer produces the adjudicated finding (the rationale would then
-  assert something false about the code);
+* a STALE entry — the query's plan no longer produces the
+  adjudicated finding (the rationale would then assert something
+  false about the code);
 * a PHANTOM entry — a (name, code) pair for a finding class the
   advisor does not emit.
 
@@ -26,23 +28,25 @@ SF_DIR = "/root/testdata/sf0.001"
 _KNOWN_WARN_CODES = {"cross-nlj", "row-python-udf"}
 
 
-def test_adjudication_keys_are_real_queries():
-    missing = [n for n in registry.ADJUDICATED_WARNS
-               if n not in registry.QUERIES]
-    assert not missing, f"adjudications for unknown queries: {missing}"
-    bad_codes = {(n, c) for n, codes in registry.ADJUDICATED_WARNS.items()
-                 for c in codes if c not in _KNOWN_WARN_CODES}
+_ADJUDICATED = sorted(n for n, s in registry.SPECS.items() if s.adjudicated)
+
+
+def test_adjudication_codes_are_known():
+    bad_codes = {(n, c) for n in _ADJUDICATED
+                 for c in registry.SPECS[n].adjudicated
+                 if c not in _KNOWN_WARN_CODES}
     assert not bad_codes, f"adjudications for unknown codes: {bad_codes}"
 
 
-@pytest.mark.parametrize("name", sorted(registry.ADJUDICATED_WARNS))
+@pytest.mark.parametrize("name", _ADJUDICATED)
 def test_adjudicated_finding_still_occurs(name, spark):
     # every adjudicated (query, code) must still be a live finding —
     # if an operator rework removes the warn, the entry (and its
     # now-false rationale) must be deleted with it
-    findings = analyze_plan(registry.QUERIES[name](spark, SF_DIR))
+    spec = registry.SPECS[name]
+    findings = analyze_plan(spec.fn(spark, SF_DIR))
     live = {f["code"] for f in findings if f["severity"] == "WARN"}
-    stale = set(registry.ADJUDICATED_WARNS[name]) - live
+    stale = set(spec.adjudicated) - live
     assert not stale, (
         f"{name} no longer produces {sorted(stale)} — delete the "
-        f"stale ADJUDICATED_WARNS entry (its rationale is now false)")
+        f"stale adjudicated= entry (its rationale is now false)")

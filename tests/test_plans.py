@@ -544,6 +544,17 @@ def test_tpch_plan_build_launches_no_job(spark, sf_dir, jobs_launched):
         assert n == 0, q
 
 
+def test_partitioned_scan_rebuild_launches_no_job(spark, sf_dir,
+                                                  jobs_launched):
+    # the partitioned copy is written and its schema inferred on the
+    # first build; later builds re-read it with that schema, no job
+    from vega_spark.registry import QUERIES
+    q = "partitioned_scan_prune"
+    QUERIES[q](spark, sf_dir)  # warm: writes the copy, caches its schema
+    _, n = jobs_launched(lambda: QUERIES[q](spark, sf_dir))
+    assert n == 0
+
+
 def test_parquet_roundtrip_build_launches_one_job(spark, sf_dir,
                                                    jobs_launched):
     # the read-back passes the written frame's schema, so building the

@@ -5,6 +5,7 @@ oracle keys stay a subset of the queries)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vega_spark import registry
@@ -68,13 +69,28 @@ def test_registry_contract(spark):
 
 def test_registry_all_queries_run(spark, sf_dir):
     failures = []
-    for name, fn in registry.QUERIES.items():
+    for name, spec in registry.SPECS.items():
         try:
-            df = fn(spark, sf_dir)
+            df = spec.fn(spark, sf_dir)
             df.limit(1).collect()
         except Exception as e:  # noqa: BLE001
             failures.append((name, str(e)[:200]))
     assert not failures, failures
+
+
+_LEGS = [(n, leg) for n, s in registry.SPECS.items()
+         for leg in ("op", "diag") if getattr(s, leg) is not None]
+
+
+@pytest.mark.parametrize("name,leg", _LEGS,
+                         ids=[f"{n}-{leg}" for n, leg in _LEGS])
+def test_op_and_diag_legs_run(spark, sf_dir, name, leg):
+    # the operator-only legs and scale diagnostics run only from
+    # bench.py and the scale smoke; each must build and count, and a
+    # diagnostic is a one-row report
+    n = getattr(registry.SPECS[name], leg)(spark, sf_dir).count()
+    if leg == "diag":
+        assert n == 1
 
 
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
@@ -171,18 +187,20 @@ def test_custom_datasource_kv_decoder(spark):
 
 
 def test_bench_and_oracle_sets_consistent(spark):
-    # drift guards: every bench query is registered; every oracle has
-    # a query; entry-module ordering returns the full registry
+    # drift guards: the bench set is the 218 bench=True specs;
+    # QUERIES and ORACLES are the specs' driver-facing views; entry-
+    # module ordering returns the full registry
     import importlib.util
     import os
-    import sys
 
     from vega_spark import registry
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, root)
-    import bench
-    assert set(bench.BENCH_QUERIES) <= set(registry.QUERIES)
-    assert set(registry.ORACLES) <= set(registry.QUERIES)
+    specs = registry.SPECS
+    assert sum(s.bench for s in specs.values()) == 218
+    assert registry.QUERIES == {n: s.fn for n, s in specs.items()}
+    assert list(registry.QUERIES) == list(specs)
+    assert registry.ORACLES == {n: s.oracle for n, s in specs.items()
+                                if s.oracle is not None}
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(root, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)

@@ -51,7 +51,8 @@ def run_single(name: str, runs: int, sf_dir: str) -> dict:
 
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")),
                             "sf0.001")
-    fn = registry.QUERIES[name]
+    spec = registry.SPECS[name]
+    fn = spec.fn
     spark = get_session(f"ab-{name}")
     spark.range(1000).count()
     if os.path.isdir(warm_dir):
@@ -62,7 +63,7 @@ def run_single(name: str, runs: int, sf_dir: str) -> dict:
         t0 = time.perf_counter()
         fn(spark, sf_dir).count()
         readings.append(round(time.perf_counter() - t0, 3))
-    op = registry.OPERATOR_ONLY.get(name)
+    op = spec.op
     op_readings = []
     if op is not None:
         op(spark, sf_dir).count()

@@ -1,7 +1,8 @@
 """Dump `.explain("formatted")` for named registry queries into
 plans/<round>/<query>_<tag>.txt (an optimization round's evidence
 files: `_before` captured at the pre-optimization HEAD, `_after` at
-the committed state).
+the committed state). A query with an operator-only leg also gets
+plans/<round>/<query>_op_<tag>.txt.
 
 Usage: python tools/round_plans.py <round> <tag> q1 [q2 ...]
        python tools/round_plans.py r10 before dedup_simhash_collapsed
@@ -28,17 +29,21 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session(f"{rnd}-plans")
     for name in names:
-        fn = registry.QUERIES.get(name) or registry.OPERATOR_ONLY.get(name)
-        if fn is None:
+        spec = registry.SPECS.get(name)
+        if spec is None:
             print(f"?? unknown query {name}", file=sys.stderr)
             continue
-        df = fn(spark, SF)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path} ({len(plan)} bytes)")
+        legs = {f"{name}_{tag}": spec.fn, f"{name}_op_{tag}": spec.op}
+        for stem, fn in legs.items():
+            if fn is None:
+                continue
+            df = fn(spark, SF)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            path = os.path.join(out_dir, f"{stem}.txt")
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote {path} ({len(plan)} bytes)")
     spark.stop()
 
 

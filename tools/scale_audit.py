@@ -31,14 +31,14 @@ def main() -> int:
     adjudicated: list[tuple[str, str, str]] = []
     bounded_cross = 0
     errors: list[tuple[str, str]] = []
-    for name, fn in registry.QUERIES.items():
+    for name, spec in registry.SPECS.items():
         try:
-            df = fn(spark, SF)
+            df = spec.fn(spark, SF)
             findings = analyze_plan(df)
         except Exception as exc:
             errors.append((name, repr(exc)[:120]))
             continue
-        adj = registry.ADJUDICATED_WARNS.get(name, {})
+        adj = spec.adjudicated
         for f in findings:
             if f["severity"] == "FATAL":
                 fatals.append((name, f["code"]))
@@ -49,17 +49,17 @@ def main() -> int:
                     warn_list.append((name, f["code"]))
             elif f["code"] == "bounded-cross-broadcast":
                 bounded_cross += 1
-    print(f"audited {len(registry.QUERIES)} queries: "
+    print(f"audited {len(registry.SPECS)} queries: "
           f"{len(fatals)} FATAL, {len(warn_list)} unadjudicated WARN, "
           f"{len(adjudicated)} adjudicated WARN "
-          f"(registry.ADJUDICATED_WARNS), {bounded_cross} bounded-cross "
+          f"(spec adjudicated=), {bounded_cross} bounded-cross "
           f"INFO (Catalyst maxRows-proven scalar attaches), "
           f"{len(errors)} build-errors")
     for name, code in fatals:
         print(f"FATAL {name}: {code}")
     for name, code in warn_list:
         print(f"WARN  {name}: {code} (UNADJUDICATED — inspect, then "
-              f"fix or record in registry.ADJUDICATED_WARNS)")
+              f"fix or declare adjudicated= on its @_q)")
     for name, code, why in adjudicated:
         print(f"adjudicated {name}: {code} — {why}")
     for name, err in errors:

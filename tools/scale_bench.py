@@ -241,7 +241,7 @@ def main() -> int:
         # operator sub-plan (skip the full query): the exact-truth
         # verification legs are unguarded by design and dominate wall
         # time at large factors without answering the scale question.
-        # Names without an OPERATOR_ONLY leg still run in full.
+        # Names without an op leg still run in full.
         selector = selector[3:]
     if selector.startswith("min:"):
         floor = float(selector.split(":", 1)[1])
@@ -308,8 +308,9 @@ def main() -> int:
 
     results: dict[str, dict] = {}
     for name in names:
-        skip_full = op_only_mode and name in registry.OPERATOR_ONLY
-        fn = registry.QUERIES[name]
+        spec = registry.SPECS[name]
+        skip_full = op_only_mode and spec.op is not None
+        fn = spec.fn
         if skip_full:
             results[name] = {"full_query": "skipped (op: selector)"}
         else:
@@ -326,7 +327,7 @@ def main() -> int:
                              "ratio": ratio, "rows": n}
             print(f"# {name}: {base:.2f}s -> {big:.2f}s ({ratio}x)",
                   file=sys.stderr)
-        note = registry.SCALE_NOTES.get(name)
+        note = spec.note
         if note is not None:
             results[name]["note"] = note
             print(f"#   note {name}: {note}", file=sys.stderr)
@@ -337,7 +338,7 @@ def main() -> int:
             print(f"# WARN {name}: 0 rows at {factor}x — bounded-but-"
                   f"EMPTY output; read its guard diagnostic below",
                   file=sys.stderr)
-        diag = registry.SCALE_DIAGNOSTICS.get(name)
+        diag = spec.diag
         if diag is not None:
             drow = diag(spark, out_dir).first().asDict()
             results[name]["diagnostic"] = drow
@@ -346,7 +347,7 @@ def main() -> int:
         # alone — the contract's exact truth leg is unguarded by
         # design, so only the operator ratio answers the 100 TB
         # question (r4 verdict #3)
-        op = registry.OPERATOR_ONLY.get(name)
+        op = spec.op
         if op is not None:
             if skip_full:
                 # the full-query sf0.01 warm-up was skipped — warm the

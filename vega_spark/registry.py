@@ -16,17 +16,32 @@ sampling, xxhash64-based sketches, timeout-bounded partials) have
 no oracle — the driver records a weaker rows-only check and the
 unit tests pin their properties instead.
 
-Scale notes per query are in the operator modules; the registry only
-composes them.
+Every fact about a query is declared once, on its ``@_q`` decorator,
+and lands in one ``Spec`` record in ``SPECS`` (registration order):
+``fn`` the query, ``oracle`` its DuckDB SQL, ``bench`` whether
+bench.py times it, ``diag`` a 1-row guard report tools/scale_bench.py
+prints after timing it (for operators whose guards can bound the
+output all the way to empty), ``note`` the fixed line the scale smoke
+prints beside its ratio, and ``adjudicated`` the hand-reviewed
+plan-advisor WARN codes (code -> rationale) that tools/scale_audit.py
+reports apart from unadjudicated ones -- sides bounded by meaning but
+opaque to Catalyst's maxRows. ``@_op`` placed after a contract query
+fills its ``op``: the shipped operator alone, without the
+verification leg that dominates the contract's time, so bench.py and
+the scale smoke can grade operator cost; correctness still flows
+through the contract query. ``QUERIES`` and ``ORACLES`` are the
+driver-facing views of the same declarations.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from vega_spark.functions import dedup as X_dedup
 from vega_spark.functions import multimodal as X_mm
@@ -57,102 +72,29 @@ from vega_spark.tables import (
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+
+@dataclass
+class Spec:
+    fn: QueryFn
+    oracle: str | None = None
+    bench: bool = False
+    op: QueryFn | None = None
+    diag: QueryFn | None = None
+    note: str | None = None
+    adjudicated: dict[str, str] = field(default_factory=dict)
+
+
+SPECS: dict[str, Spec] = {}
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Operator sub-plans for contract-wrapped flagships (r4 verdict #3):
-# several registry queries wrap the production operator in a
-# verification CONTRACT whose truth/witness leg (an exact replay the
-# oracle can also compute) dominates the bench timing — e.g. the
-# minhash contract costs ~5.5s at sf0.1 where the operator alone is
-# ~1.2s. Entries here run JUST the shipped operator configuration so
-# bench_detail.json and the scale smoke can grade operator cost
-# against the 2x gate without hand-adjudicating contract overhead.
-# Keys match QUERIES keys; correctness still flows through the
-# contract query — these are perf instruments only.
-OPERATOR_ONLY: dict[str, QueryFn] = {}
 
-# Scale-smoke observability hooks (r5 verdict #4/#8). DIAGNOSTICS:
-# (spark, sf_dir) -> 1-row DataFrame printed by tools/scale_bench.py
-# after timing its query — for operators whose guards can bound the
-# output all the way to EMPTY (bounded != visible otherwise). NOTES:
-# a fixed adjudication line the smoke prints next to a query's ratio
-# so a known-benign reading (e.g. a bucket-saturation transition)
-# carries its explanation in the artifact itself.
-SCALE_DIAGNOSTICS: dict[str, QueryFn] = {}
-SCALE_NOTES: dict[str, str] = {}
-
-# Hand-adjudicated plan-audit WARNs (r4 adjudication, made
-# machine-readable r6). The advisor now auto-downgrades Cross joins
-# whose side Catalyst PROVES tiny (maxRows — 39 of the r4 census);
-# these are the rest: sides that are semantically bounded (id-range
-# query heads, small categorical domains, entity-count factor frames)
-# but opaque to Catalyst (filters on scans, Python-kernel outputs),
-# plus the one row-UDF the UDTF API forces. tools/scale_audit.py
-# prints them separately so the unadjudicated WARN count is 0.
-ADJUDICATED_WARNS: dict[str, dict[str, str]] = {
-    "cartesian": {"cross-nlj": (
-        "the §2 cartesian OPERATOR itself — a cross product is its "
-        "contract (reference cartesian_rdd.rs materializes the right "
-        "side per task); callers must keep one side small")},
-    "ann_cosine_topk": {"cross-nlj": (
-        "broadcast side is the bounded query head (vec_id < 3 "
-        "filter) — an id filter on a scan has no Catalyst maxRows, "
-        "but the brute-force baseline is |Q|x|n| by design")},
-    "ann_lsh_topk": {"cross-nlj": (
-        "bounded probe set + per-table hyperplane literals; LSH "
-        "candidate join is bucket-keyed — the cross is the bounded "
-        "query attach only")},
-    "ann_ivf_topk": {"cross-nlj": (
-        "bounded query attach + nprobe-selected centroid frame "
-        "(k-means centroids, driver-bounded constant)")},
-    "ann_pq_topk": {"cross-nlj": (
-        "bounded query attach + PQ codebook frame (k_codes x "
-        "subspaces, driver-bounded constant)")},
-    "ann_ivfpq_topk": {"cross-nlj": (
-        "bounded query attach (recall-contract crossJoins over "
-        "1-row aggregates + the probe frame, |Q| x n_probe rows); "
-        "candidate generation itself is the cell equi-join")},
-    "chi2_event_type_value": {"cross-nlj": (
-        "marginal-x-marginal grid: both sides are grouped aggregates "
-        "over the event-type / value-bin DOMAINS — bounded by "
-        "category cardinality, invisible to maxRows")},
-    "naive_bayes_lang_confusion": {"cross-nlj": (
-        "label-prior and vocab-head attaches: label domain (5) x "
-        "scalar totals; vocab head is a bounded TakeOrdered")},
-    "cv_stump_orders_priority": {"cross-nlj": (
-        "fold_ids x bin-total grid: folds (5) x bins — bounded by "
-        "construction, both sides grouped aggregates over scans")},
-    # als_recommend_parts: the cross-nlj adjudication (broadcast
-    # selected-user-factors x item factors — bounded user side, one
-    # pass over items, by design) was deleted in the r9 opt round:
-    # the recommendation frame is now eagerly materialized once (see
-    # the query), so the cross join executes inside that
-    # materialization job and no longer appears in the RETURNED plan
-    # the advisor analyzes. The join itself is unchanged and still
-    # bounded; the old rationale lives in git history.
-    "geo_nearest_hub_nations": {"cross-nlj": (
-        "broadcast hub list (25 nation-seeded hubs) against points "
-        "— the k-NN-to-hubs primitive is |hubs| x n by design")},
-    "embedding_truncation_recall": {"cross-nlj": (
-        "scalar denominator attach (global count) downstream of a "
-        "brute-force top-k whose query side is the bounded eval set")},
-    "hybrid_search_rrf": {"cross-nlj": (
-        "scalar corpus-stats attach (n_docs, total_len) into the "
-        "BM25 idf computation — global aggregate, 1 row")},
-    "retrieval_mrr_ndcg_trunc": {"cross-nlj": (
-        "scalar corpus-stats attach into BM25 + bounded eval-query "
-        "set; postings join is term-keyed")},
-    "udtf_sentences": {"row-python-udf": (
-        "Spark UDTFs are row-based by API design (BatchEvalPythonUDTF "
-        "has no Arrow variant for lateral joins in 4.1); the "
-        "vectorized alternative (explode over a pandas-UDF split) is "
-        "documented next to the operator")},
-}
-
-
-def _q(name: str, oracle: str | None = None):
+def _q(name: str, oracle: str | None = None, *, bench: bool = False,
+       diag: QueryFn | None = None, note: str | None = None,
+       adjudicated: dict[str, str] | None = None):
     def deco(fn: QueryFn) -> QueryFn:
+        SPECS[name] = Spec(fn, oracle, bench, diag=diag, note=note,
+                           adjudicated=adjudicated or {})
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -161,9 +103,10 @@ def _q(name: str, oracle: str | None = None):
 
 
 def _op(name: str):
-    """Register the operator-only sub-plan of a contract query."""
+    """Attach the operator-only sub-plan to the contract query
+    ``name`` registered above it."""
     def deco(fn: QueryFn) -> QueryFn:
-        OPERATOR_ONLY[name] = fn
+        SPECS[name].op = fn
         return fn
     return deco
 
@@ -184,7 +127,7 @@ SELECT event_type,
        ROUND(SUM(value), 2) AS sum_value,
        COUNT(*) AS n
 FROM events GROUP BY 1, 2
-""")
+""", bench=True)
 def weblog_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the reference computes the group mean as a (sum, count) combiner
     # pair (examples/file_read.rs:26-28) — we expose the same pair;
@@ -308,7 +251,7 @@ def take_ordered_q(spark, sf_dir):
 SELECT l_orderkey, l_linenumber, ROUND(l_extendedprice, 2) AS price
 FROM lineitem
 ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC LIMIT 10
-""")
+""", bench=True)
 def top_k(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     out = li.orderBy(F.col("l_extendedprice").desc(), F.col("l_orderkey").asc(),
@@ -410,7 +353,7 @@ SELECT o_orderstatus, COUNT(*) AS n,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 1) AS revenue
 FROM orders JOIN lineitem ON o_orderkey = l_orderkey
 GROUP BY o_orderstatus
-""")
+""", bench=True)
 def join_inner(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -488,7 +431,10 @@ def cogroup_q(spark, sf_dir):
 
 @_q("cartesian", """
 SELECT r_name, n_name FROM region CROSS JOIN nation
-""")
+""", adjudicated={"cross-nlj": (
+    "the §2 cartesian OPERATOR itself — a cross product is its "
+    "contract (reference cartesian_rdd.rs materializes the right "
+    "side per task); callers must keep one side small")})
 def cartesian_q(spark, sf_dir):
     r = _t(spark, sf_dir, "region").select("r_name")
     n = _t(spark, sf_dir, "nation").select("n_name")
@@ -503,7 +449,7 @@ WITH a AS (
   FROM customer
 )
 SELECT a.c_custkey, b.c_name FROM a JOIN b ON a.idx = b.idx
-""")
+""", bench=True)
 def zip_q(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     out = J.zip_by_order(
@@ -585,7 +531,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
-""")
+""", bench=True)
 def agg_sweep(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return (li.filter(F.col("l_shipdate") <=
@@ -660,7 +606,8 @@ def union_bag_q(spark, sf_dir):
     return u.groupBy("n_regionkey").agg(F.count(F.lit(1)).alias("n"))
 
 
-@_q("distinct", "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer")
+@_q("distinct", "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer",
+    bench=True)
 def distinct_q(spark, sf_dir):
     return S.distinct(_t(spark, sf_dir, "customer"),
                       ["c_mktsegment", "c_nationkey"])
@@ -670,7 +617,7 @@ def distinct_q(spark, sf_dir):
 SELECT c_nationkey AS nationkey FROM customer
 INTERSECT
 SELECT s_nationkey FROM supplier
-""")
+""", bench=True)
 def intersection_q(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey"))
@@ -823,7 +770,7 @@ FROM (
                             ORDER BY l_extendedprice DESC, l_linenumber) AS rk
   FROM lineitem
 ) WHERE rk <= 2
-""")
+""", bench=True)
 def window_topk_per_group(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     out = K.topk_per_group(li.select("l_orderkey", "l_linenumber", "l_extendedprice"),
@@ -876,7 +823,7 @@ JOIN lineitem ON l_orderkey = o_orderkey
 WHERE c_mktsegment = 'BUILDING'
 GROUP BY l_orderkey, CAST(o_orderdate AS DATE)
 ORDER BY revenue DESC, l_orderkey LIMIT 10
-""")
+""", bench=True)
 def tpch_q3_shipping(spark, sf_dir):
     # dimension sides broadcast; the only exchange is the final group
     c = _t(spark, sf_dir, "customer").filter(
@@ -901,7 +848,7 @@ JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
 JOIN nation ON s_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY n_name
-""")
+""", bench=True)
 def tpch_q5_local_supplier(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -981,7 +928,7 @@ def count_approx_q(spark, sf_dir):
 @_q("dedup_exact", """
 SELECT MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
 FROM documents GROUP BY text
-""")
+""", bench=True)
 def dedup_exact_q(spark, sf_dir):
     return X_dedup.exact_dedup(_t(spark, sf_dir, "documents"), "text", "doc_id")
 
@@ -1032,7 +979,7 @@ WHERE common / (sa.n + sb.n - common) >= 0.5
 """
 
 
-@_q("dedup_ngram_jaccard", _NGRAM_JACCARD_SQL)
+@_q("dedup_ngram_jaccard", _NGRAM_JACCARD_SQL, bench=True)
 def dedup_ngram_jaccard_q(spark, sf_dir):
     """max_doc_freq=1000 keeps the hot-shingle skew guard ON in the
     flagship (r3 verdict: a boilerplate shingle shared by M docs makes
@@ -1062,7 +1009,7 @@ e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
 @_q("dedup_components", f"""
 WITH RECURSIVE {_NGRAM_COMPONENTS_CTE}
 SELECT node AS doc_id, component FROM comp
-""")
+""", bench=True)
 def dedup_components_q(spark, sf_dir):
     """Near-dup clusters: deterministic jaccard pairs -> min-label
     connected components (dedup.connected_components). The oracle
@@ -1080,7 +1027,7 @@ WITH RECURSIVE {_NGRAM_COMPONENTS_CTE}
 SELECT d.doc_id FROM documents d
 LEFT JOIN comp c ON d.doc_id = c.node
 WHERE c.component IS NULL OR c.component = d.doc_id
-""")
+""", bench=True)
 def dedup_keep_representatives_q(spark, sf_dir):
     """Full near-dedup: collapse each cluster to its lowest-id doc,
     pass singletons through. Hot-shingle cap on (oracle `hot` CTE)."""
@@ -1108,7 +1055,7 @@ WITH {_DOC_SHINGLES_CTE}, idx AS (
 {_TRUE_PAIRS_090_SQL}
 SELECT n_true AS n_true_pairs, n_true AS n_true_found, 1 AS pairs_valid
 FROM truth
-""")
+""", bench=True)
 def dedup_minhash_lsh_q(spark, sf_dir):
     """MinHash+LSH RECALL contract: with 16 bands of 4 rows, a pair at
     Jaccard >= 0.9 collides in at least one band with prob
@@ -1156,7 +1103,25 @@ def dedup_minhash_lsh_op(spark, sf_dir):
 {_TRUE_PAIRS_090_SQL}
 SELECT n_true AS n_true_pairs, 1 AS recall_ge_half, 1 AS pairs_valid
 FROM truth
-""")
+""", bench=True, note=(
+    "Manku combinatorial block keys since r7 (~32-bit tables, "
+    "C(6,3)=20 of them for h=3): chance bucket collisions fall from "
+    "n^2/2^16 to n^2/2^33, removing the saturation transition the "
+    "r4-r6 smokes measured (60.8x at 100x then; 4.8x at 100x now, "
+    "corpus v4). r9 DECOMPOSITION of the 1000x tail (78-93s, 5M "
+    "docs): fp UDF 22.5s + postings build ~15s + a 1.57e9-candidate "
+    "codegen verify for 8.26M survivors (0.5%). NOT cliques (99% of "
+    "fps distinct on v4), NOT the cap (binds on 262 of 45M buckets), "
+    "NOT chance collisions (~3k pairs) — mid-size (10-999 doc) "
+    "NEAR-fp buckets from the corpus's low token entropy. Candidate "
+    "density grows linearly (0.18 -> 5.21 -> 15.7 pairs/posting at "
+    "1x/300x/1000x), i.e. the exact candidate stream is QUADRATIC "
+    "in corpus; two in-code escape hatches bound it: "
+    "collapse_identical (boilerplate-clique corpora) and "
+    "band_bucket (pair work ∝ postings, the linear asymptote — at "
+    "1000x it is only 1.1x faster, recall 0.71, because the "
+    "crossover is just beginning; past the cap-saturation decade it "
+    "is the only linear configuration)"))
 def dedup_simhash_q(spark, sf_dir):
     """SimHash near-dup contract: SimHash measures weighted-feature
     cosine, not Jaccard, so unlike MinHash (see dedup_minhash_lsh) a
@@ -1208,7 +1173,18 @@ def dedup_simhash_op(spark, sf_dir):
 SELECT n_true AS n_true_pairs, 1 AS recall_ge_half,
        1 AS components_match
 FROM truth
-""")
+""", bench=True, note=(
+    "the production simhash configuration for boilerplate-heavy "
+    "corpora: identical fingerprints collapse to one blocking "
+    "posting + linear star edges BEFORE Manku tables, so clique "
+    "cost falls from C(g,2) to g-1 while connected components stay "
+    "EXACTLY the exhaustive form's (equal fps have equal hamming "
+    "to everything). On corpus v4 the pre-pass is deliberately moot "
+    "(99% distinct fps — v4 restored fp diversity precisely to kill "
+    "clique artifacts), so its 1000x wall tracks dedup_simhash's; "
+    "the win appears exactly when a real corpus's boilerplate "
+    "does. fp is checkpointed once (the UDF re-ran per consumer "
+    "before r9: 141s vs 78s at 1000x)"))
 def dedup_simhash_collapsed_q(spark, sf_dir):
     """SimHash near-dup with the identical-fingerprint collapse
     pre-pass (r9, VERDICT r8 #5): exact-dedup on fingerprint
@@ -1351,7 +1327,7 @@ SELECT doc_id,
        ROUND({_PUNCT_RATIO}, 6) AS punct_ratio,
        ROUND({_STOPWORD_RATIO}, 6) AS stopword_ratio
 FROM scored
-""")
+""", bench=True)
 def text_features_q(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -1403,7 +1379,10 @@ WITH q AS (
 )
 SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cos, rk
 FROM ranked WHERE rk <= 5
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "broadcast side is the bounded query head (vec_id < 3 "
+    "filter) — an id filter on a scan has no Catalyst maxRows, "
+    "but the brute-force baseline is |Q|x|n| by design")})
 def ann_cosine_topk_q(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
@@ -1436,7 +1415,10 @@ def _ann_recall_contract(ann_df, exact_df, n_queries_df, floor: float):
 @_q("ann_lsh_topk", """
 SELECT COUNT(*) AS n_queries, 1 AS recall_ok
 FROM embeddings WHERE vec_id < 3
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "bounded probe set + per-table hyperplane literals; LSH "
+    "candidate join is bucket-keyed — the cross is the bounded "
+    "query attach only")})
 def ann_lsh_topk_q(spark, sf_dir):
     """Hyperplane-LSH ANN recall contract: 8 tables x 6 planes with
     10 multiprobe flips recover >= 60% of the exact cosine top-5
@@ -1488,7 +1470,7 @@ wit AS (SELECT qa, qb FROM s
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM wit) AS n_witness_pairs,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM wit) AS n_witness_found,
        1 AS no_false_positives
-""")
+""", bench=True)
 def embedding_near_dup_q(spark, sf_dir):
     """Embedding near-dup contract. Recall is pinned against a
     WITNESS set the oracle can replay without trusting the blocking:
@@ -1509,8 +1491,8 @@ def embedding_near_dup_q(spark, sf_dir):
     dim = len(emb.select("embedding").first()["embedding"])
     # max_bucket=None: this contract pins 100% recall over the witness
     # set, so the finder leg runs UNCAPPED (exactly dedup_minhash_lsh's
-    # reasoning) — the shipped capped configuration is what
-    # OPERATOR_ONLY times and the scale smoke grades
+    # reasoning) — the shipped capped configuration is what the
+    # op leg times and the scale smoke grades
     found = X_sim.embedding_near_dup_pairs(emb, dim=dim, threshold=0.9,
                                            num_planes=8,
                                            max_bucket=None) \
@@ -1610,7 +1592,14 @@ SELECT CAST(EXTRACT(epoch FROM date_trunc('hour', ts)) AS BIGINT) AS win_start_s
        COUNT(*) AS n,
        ROUND(SUM(value), 2) AS total
 FROM events GROUP BY 1, 2
-""")
+""", bench=True, note=(
+    "drain state partitions derive from STAGED ARRIVAL BYTES since "
+    "the r9 opt round (drain_shuffle_partitions: one partition per "
+    "64 MB, floor 8 — stateful streaming disables AQE and pins the "
+    "store count at first batch, so the initial value is the final "
+    "parallelism). Floor binds through 300x (2.1-2.3x wall); at "
+    "1000x the staging is 1.44 GB, the drain ran with 22 derived "
+    "partitions and read 4.7x wall for 1000x data"))
 def streaming_windowed_counts_q(spark, sf_dir):
     """End-to-end Structured Streaming: stage events as an arrival
     directory, run a real readStream → 1h tumbling window agg →
@@ -1663,7 +1652,7 @@ WITH {_SESSIONS_30M_CTE}
 SELECT user_id, epoch_us(MIN(ts)) AS session_start_us,
        COUNT(*) AS n_events
 FROM s GROUP BY user_id, sess
-""")
+""", bench=True)
 def sessionize_gap_q(spark, sf_dir):
     """Gap-based sessions per user (30 min): ``F.session_window`` —
     the batch twin of the streaming sessionizer (streaming/stateful.py).
@@ -1688,7 +1677,7 @@ ASOF JOIN (
   SELECT user_id, ts, MAX(value) AS value
   FROM events WHERE event_type = 'signup' GROUP BY user_id, ts
 ) r ON l.user_id = r.user_id AND l.ts >= r.ts
-""")
+""", bench=True)
 def asof_join_q(spark, sf_dir):
     """Backward as-of join: each event picks the user's most recent
     signup at-or-before it (right side deduped per (user, ts) so the
@@ -1707,7 +1696,7 @@ SELECT l.event_id AS left_id, r.event_id AS right_id
 FROM events l JOIN events r
   ON l.user_id = r.user_id
  AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 5 MINUTE
-""")
+""", bench=True)
 def range_join_q(spark, sf_dir):
     """Interval self-join: pairs of same-user events where the right
     event lands within 5 minutes after the left. Bucketed equi-join
@@ -1729,7 +1718,7 @@ SELECT l_returnflag, COUNT(*) AS n, ROUND(SUM(l_extendedprice), 2) AS total
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE o_orderstatus = 'F'
 GROUP BY l_returnflag
-""")
+""", bench=True)
 def skew_salted_join_q(spark, sf_dir):
     """Salted equi-join (operators/skew.py): identical results to the
     plain join — salting is physical re-layout only, so the oracle is
@@ -1798,7 +1787,9 @@ def percentile_exact_q(spark, sf_dir):
 @_q("ann_ivf_topk", """
 SELECT COUNT(*) AS n_queries, 1 AS recall_ok
 FROM embeddings WHERE vec_id < 5
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "bounded query attach + nprobe-selected centroid frame "
+    "(k-means centroids, driver-bounded constant)")})
 def ann_ivf_topk_q(spark, sf_dir):
     """IVF ANN recall contract (deterministic hashed-init k-means
     cells + probe join + exact rerank): probing 6/16 cells recovers
@@ -1833,7 +1824,10 @@ def ann_ivf_topk_op(spark, sf_dir):
                               n_cells=16, n_probe=6)
 
 
-@_q("ann_pq_topk", ORACLES["ann_ivf_topk"])
+@_q("ann_pq_topk", ORACLES["ann_ivf_topk"], bench=True,
+    adjudicated={"cross-nlj": (
+        "bounded query attach + PQ codebook frame (k_codes x "
+        "subspaces, driver-bounded constant)")})
 def ann_pq_topk_q(spark, sf_dir):
     """Product-quantization ANN recall contract (codebooks trained on
     a deterministic bounded sample, vectors encoded to 8 code bytes,
@@ -1873,7 +1867,11 @@ def ann_pq_topk_op(spark, sf_dir):
     return X_sim.pq_adc_topk(enc, queries, cbs, k=5, refine=15)
 
 
-@_q("ann_ivfpq_topk", ORACLES["ann_ivf_topk"])
+@_q("ann_ivfpq_topk", ORACLES["ann_ivf_topk"], bench=True,
+    adjudicated={"cross-nlj": (
+        "bounded query attach (recall-contract crossJoins over "
+        "1-row aggregates + the probe frame, |Q| x n_probe rows); "
+        "candidate generation itself is the cell equi-join")})
 def ann_ivfpq_topk_q(spark, sf_dir):
     """IVF-PQ ANN recall contract (r9 — the FAISS IndexIVFPQ
     billion-scale layout): hashed-init coarse cells, PQ codes of the
@@ -1940,7 +1938,7 @@ dup AS (SELECT DISTINCT x.vec_id
 SELECT r.vec_id, r.cluster, ROUND(r.csim, 6) AS centroid_sim,
        (dup.vec_id IS NOT NULL) AS is_dup
 FROM r LEFT JOIN dup ON r.vec_id = dup.vec_id
-""")
+""", bench=True)
 def semantic_dedup_flags_q(spark, sf_dir):
     """SemDeDup (arXiv:2303.09540) over the embeddings table:
     iteration-0 centroids (the 8 lowest-id vectors) keep the whole
@@ -1984,7 +1982,7 @@ r AS (SELECT doc_id, url, host, domain, norm_url,
                            ORDER BY n_chars DESC, doc_id) AS rk
       FROM f)
 SELECT doc_id, url, host, domain, norm_url FROM r WHERE rk = 1
-""")
+""", bench=True)
 def web_url_dedup_pipeline_q(spark, sf_dir):
     """C4/RefinedWeb URL-stage pipeline: parse host/path, compute the
     registered domain, drop blocklisted domains (broadcast anti-join),
@@ -2025,7 +2023,7 @@ SELECT doc_id, len(lines) AS n_lines, len(kept) AS n_kept,
        array_to_string(kept, chr(10)) AS clean_text,
        ROUND(len(kept) * 1.0 / GREATEST(len(lines), 1), 4) AS kept_ratio
 FROM f
-""")
+""", bench=True)
 def web_line_filter_q(spark, sf_dir):
     """RefinedWeb/MassiveText line-wise cleaning: drop short /
     few-word / digit-dominated lines, reassemble, report kept ratios.
@@ -2064,7 +2062,7 @@ SELECT n.doc_id, n.n_lines,
        ROUND(COALESCE(reb.n_kept, 0) * 1.0
              / GREATEST(n.n_lines, 1), 4) AS kept_ratio
 FROM n LEFT JOIN reb ON n.doc_id = reb.doc_id
-""")
+""", bench=True)
 def web_line_dedup_corpus_q(spark, sf_dir):
     """Corpus-level bulk line dedup (CCNet / RefinedWeb / Dolma):
     any line occurring in > 2 DISTINCT documents is boilerplate and
@@ -2150,7 +2148,7 @@ def _part_graph_broadcastable(sf_dir: str) -> bool:
 WITH {_PART_PAIRS_CTE},
 {_PART_TRIANGLES_CTE}
 SELECT node, COUNT(*) AS triangles FROM tri_nodes GROUP BY node
-""")
+""", bench=True)
 def triangle_count_parts_q(spark, sf_dir):
     """Triangle counting on the part co-purchase graph (same edge
     derivation as pagerank_part_affinity), degree-oriented so wedge
@@ -2170,7 +2168,7 @@ WITH t AS (
 SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
        1 AS tokens_ge_words, 1 AS tokens_le_chars
 FROM t
-""")
+""", bench=True)
 def bpe_encode_docs_q(spark, sf_dir):
     """BPE tokenizer contract: train 200 merges from the corpus
     word-count table (one keyed shuffle + bounded TakeOrdered head —
@@ -2207,7 +2205,7 @@ SELECT user_id, event_id, value,
        list_reduce(l, (a, b) -> a * 0.7::DOUBLE + b * 0.3::DOUBLE)
          AS ewma
 FROM h
-""")
+""", bench=True)
 def ewma_user_values_q(spark, sf_dir):
     """Per-user EWMA over the trailing 8 events (alpha=0.3): single
     hash exchange + per-key sorted window; deterministic fold order,
@@ -2228,7 +2226,7 @@ t AS (SELECT SUM(cnt) AS total, COUNT(*) AS groups FROM c)
 SELECT l_partkey, cnt, ROUND(cnt * 1.0 / total, 6) AS share,
        ROUND(cnt * groups * 1.0 / total, 4) AS x_mean
 FROM c, t ORDER BY cnt DESC, l_partkey LIMIT 20
-""")
+""", bench=True)
 def key_skew_report_parts_q(spark, sf_dir):
     """Shuffle-skew diagnostic for a join/agg key: the 20 heaviest
     l_partkey groups with row share and ratio to the mean group size
@@ -2267,11 +2265,34 @@ SELECT id AS s_suppkey, COUNT(*) AS n_fuzzy, MIN(dist) AS min_dist
 FROM sym GROUP BY id"""
 
 
+def _fuzzy_gram_guard_diag(spark, sf_dir):
+    """Gram-cap visibility for the smoke: the 10x replica corpus
+    clones supplier names, pushing every q-gram over the cap — the
+    operator is then bounded but EMPTY, and this row says why."""
+    from vega_spark.operators.fuzzy import gram_guard_report
+    return gram_guard_report(_t(spark, sf_dir, "supplier"), "s_name",
+                             q=3, max_gram_freq=50)
+
+
 @_q("fuzzy_match_suppliers", f"""
 WITH {_SUPPLIER_GRAMS_CTE},
 {_SUPPLIER_RARE_CANDS_CTE},
 {_SUPPLIER_FUZZY_TAIL}
-""")
+""", bench=True, diag=_fuzzy_gram_guard_diag, note=(
+    "ADJUDICATED quadratic band (r8): per-gram candidates grow as "
+    "sum C(df,2) and gram df grows ~linearly with rows on a short "
+    "fixed-alphabet key population (36^3 gram space saturates — v4 "
+    "diagnostic: avg df ~34 at 300x, 40.3x wall). The EXACT mode "
+    "keeps the q-gram lemma's recall guarantee, and both classical "
+    "tighteners degenerate here — length filtering (all keys same "
+    "length) and Ed-Join prefix filtering (7-char strings have ~5 "
+    "grams < the kq+1=7 prefix); raising q to 4 breaks the lemma "
+    "for len-7/dist-2 pairs. The max_gram_freq=1000 cap is the "
+    "asymptotic bound and exact-dedup of identical keys upstream is "
+    "one production answer; the OTHER, in code since r9, is "
+    "fuzzy_match_suppliers_banded (band_gram_df sub-bucket budget, "
+    "pair work ∝ postings) for pipelines that accept measured "
+    "recall in exchange for linear scaling"))
 def fuzzy_match_suppliers_q(spark, sf_dir):
     """Record linkage: q-gram blocked fuzzy self-match of supplier
     names (edit distance 1-2), rolled up per supplier. The oracle
@@ -2294,6 +2315,32 @@ def fuzzy_match_suppliers_q(spark, sf_dir):
                  F.min("dist").alias("min_dist")))
 
 
+def _fuzzy_banded_recall_diag(spark, sf_dir):
+    """Measured recall of the banded escape hatch against the exact
+    mode on the SAME corpus (r9, VERDICT r8 #4) — the number the
+    banded trade is priced in. banded ⊆ exact structurally (the
+    sub-bucket join only removes candidates; the verify is
+    identical), so banded_hits == banded_pairs doubles as an
+    invariant check."""
+    from vega_spark.operators.fuzzy import fuzzy_self_pairs
+    sup = _t(spark, sf_dir, "supplier")
+    kw = dict(max_dist=2, min_dist=1, q=3, max_gram_freq=50)
+    exact = fuzzy_self_pairs(sup, "s_name", "s_suppkey",
+                             **kw).select("id_a", "id_b")
+    banded = fuzzy_self_pairs(sup, "s_name", "s_suppkey",
+                              band_gram_df=16,
+                              **kw).select("id_a", "id_b")
+    hits = banded.join(exact, ["id_a", "id_b"], "semi")
+    return (exact.agg(F.count(F.lit(1)).alias("exact_pairs"))
+            .crossJoin(banded.agg(F.count(F.lit(1))
+                                  .alias("banded_pairs")))
+            .crossJoin(hits.agg(F.count(F.lit(1)).alias("banded_hits")))
+            .select("exact_pairs", "banded_pairs", "banded_hits",
+                    F.round(F.col("banded_hits")
+                            / F.greatest(F.col("exact_pairs"),
+                                         F.lit(1)), 4).alias("recall")))
+
+
 @_q("fuzzy_match_suppliers_banded", f"""
 WITH {_SUPPLIER_GRAMS_CTE},
 freq AS (SELECT gram, COUNT(*) AS df_ FROM g GROUP BY 1),
@@ -2312,7 +2359,12 @@ cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
          FROM gs a JOIN gs b
            ON a.gram = b.gram AND a.sub = b.sub AND a.id < b.id),
 {_SUPPLIER_FUZZY_TAIL}
-""")
+""", bench=True, diag=_fuzzy_banded_recall_diag, note=(
+    "the scale path for the fuzzy-match quadratic band: per-gram "
+    "pair work budgeted at df*band/2 via md5 sub-buckets (mirrors "
+    "sparse_cosine band_df), so candidates are linear in postings "
+    "at ANY factor. Recall vs exact mode is measured, not assumed — "
+    "the smoke prints matched-pair recall alongside wall ratio"))
 def fuzzy_match_suppliers_banded_q(spark, sf_dir):
     """The scale-safe fuzzy-match escape hatch (r9, VERDICT r8 #4):
     same blocked fuzzy self-match as ``fuzzy_match_suppliers`` but
@@ -2356,7 +2408,7 @@ SELECT l_returnflag, 'O' AS status, qty_O AS qty FROM agg
 UNION ALL
 SELECT l_returnflag, 'F' AS status, qty_F AS qty FROM agg
   WHERE qty_F IS NOT NULL
-""")
+""", bench=True)
 def pivot_unpivot_roundtrip_q(spark, sf_dir):
     """Pivot (long->wide conditional aggregation with a FIXED value
     list — never the two-pass value discovery) then unpivot back to
@@ -2391,7 +2443,7 @@ SELECT l_orderkey,
          AS max_pal_sum,
        len(list_filter(qs, x -> x = 40)) > 0 AS has_forty
 FROM a
-""")
+""", bench=True)
 def array_hof_sweep_q(spark, sf_dir):
     """Higher-order array-function sweep (transform / filter /
     aggregate / zip_with / exists) over per-order quantity arrays —
@@ -2437,7 +2489,7 @@ SELECT u AS user_id, id AS conversion_id, ts AS conversion_ts,
        f.t AS first_touch_type, f.ts AS first_touch_ts,
        l.t AS last_touch_type, l.ts AS last_touch_ts
 FROM tagged WHERE t = 'purchase'
-""")
+""", bench=True)
 def attribution_first_last_touch_q(spark, sf_dir):
     """Marketing attribution: first- and last-touch view/click before
     each purchase, one hash exchange (both touches are windows over
@@ -2470,7 +2522,7 @@ l2 AS (SELECT node, label FROM (
                                   ORDER BY c DESC, label) AS rk
         FROM n2) WHERE rk = 1)
 SELECT node, label AS community FROM l2
-""")
+""", bench=True)
 def label_propagation_parts_q(spark, sf_dir):
     """Label-propagation communities on the part co-purchase graph
     (same edges as pagerank/triangles), 2 deterministic supersteps —
@@ -2485,7 +2537,7 @@ def label_propagation_parts_q(spark, sf_dir):
 SELECT 32 AS files_before, 1 AS files_reduced,
        COUNT(*) AS n_rows, ROUND(SUM(o_totalprice), 2) AS sum_price
 FROM orders
-""")
+""", bench=True)
 def compact_small_files_q(spark, sf_dir):
     """Small-file compaction contract (lakehouse OPTIMIZE primitive):
     a deliberately fragmented copy of orders (exactly 32 tiny files —
@@ -2522,7 +2574,7 @@ WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
       / 281474976710656.0
       < CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25 ELSE 0.1 END
 GROUP BY lang
-""")
+""", bench=True)
 def stratified_sample_langs_q(spark, sf_dir):
     """Deterministic stratified sampling (hash-fraction Bernoulli per
     language): rerun- and engine-stable row selection, the property a
@@ -2543,7 +2595,7 @@ def stratified_sample_langs_q(spark, sf_dir):
 SELECT event_type,
        CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS ndv_est
 FROM events GROUP BY 1
-""")
+""", bench=True)
 def streaming_kmv_rollup_q(spark, sf_dir):
     """Incremental sketch maintenance on a stream: each micro-batch
     writes its per-group KMV partial (≤ k rows per group) to a
@@ -2602,7 +2654,7 @@ SELECT u, id,
        PERCENT_RANK() OVER w AS prank
 FROM e
 WINDOW w AS (PARTITION BY u ORDER BY ts, id)
-""")
+""", bench=True)
 def window_function_sweep_q(spark, sf_dir):
     """Full ranking/navigation window surface (lag, lead, rank,
     dense_rank, ntile, cume_dist, percent_rank) over ONE per-user
@@ -2633,7 +2685,7 @@ c AS (SELECT NULLIF(c_custkey % 7, 0) AS k, COUNT(*) AS n_cust
 SELECT o.k AS join_key, COUNT(*) AS n_orders, MAX(c.n_cust) AS n_cust
 FROM o JOIN c ON o.k IS NOT DISTINCT FROM c.k
 GROUP BY o.k
-""")
+""", bench=True)
 def null_safe_join_custkeys_q(spark, sf_dir):
     """Null-safe equi-join (<=> / IS NOT DISTINCT FROM): NULL keys
     MATCH each other instead of dropping — the semantic fork every
@@ -2668,7 +2720,7 @@ SELECT doc_id AS asset_id, COUNT(*) AS n_frames,
        ROUND(SUM(CASE WHEN energy > 100.0 THEN 1 ELSE 0 END)
              * 1.0 / COUNT(*), 4) AS active_ratio
 FROM f GROUP BY doc_id
-""")
+""", bench=True)
 def audio_frame_energy_vad_q(spark, sf_dir):
     """Audio curation plumbing end-to-end: binary payloads → framed
     energy features (1 asset → ≤8 frame rows, the flat_map shape) →
@@ -2718,7 +2770,7 @@ SELECT COUNT(*) AS n_rows, ROUND(SUM(price), 2) AS total,
        CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END)
             AS BIGINT) AS n_inserted
 FROM allr
-""")
+""", bench=True)
 def cdc_apply_changes_orders_q(spark, sf_dir):
     """CDC APPLY CHANGES: a synthetic ordered changefeed (price
     upserts, later deletes that supersede them, inserts of new keys)
@@ -2754,7 +2806,7 @@ WITH eff AS (
      OR o_orderkey % 4 = 0)
 SELECT o_orderpriority, ROUND(SUM(o_totalprice), 2) AS total, COUNT(*) AS n
 FROM eff GROUP BY 1
-""")
+""", bench=True)
 def mv_incremental_refresh_q(spark, sf_dir):
     """Incremental materialized-view maintenance: a per-priority
     revenue view built from the base snapshot is refreshed with a
@@ -2796,7 +2848,7 @@ m AS (SELECT doc_id, COUNT(DISTINCT term) AS n_matched,
       FROM hits GROUP BY doc_id)
 SELECT doc_id, n_matched, CAST(total_tf AS BIGINT) AS total_tf
 FROM m WHERE n_matched = 2
-""")
+""", bench=True)
 def inverted_index_search_q(spark, sf_dir):
     """Inverted-index AND-search: build the (term, doc, tf) posting
     table once, answer 'docs containing ALL of {agg, scan}' with
@@ -2814,7 +2866,7 @@ WITH d AS (SELECT event_type, CAST(EXTRACT(hour FROM ts) AS INTEGER) % 4
                     AS hour_bucket, user_id FROM events)
 SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct
 FROM d GROUP BY 1
-""")
+""", bench=True)
 def bitmap_distinct_rollup_q(spark, sf_dir):
     """Exact mergeable distinct via integer bitmaps: per
     (event_type, hour-bucket) bitmap partials roll up to per-type
@@ -2848,7 +2900,7 @@ SELECT event_type, CAST(n_c AS BIGINT) AS n_c, CAST(n_t AS BIGINT) AS n_t,
        / sqrt(((q_c - s_c * s_c / n_c) / (n_c - 1)) / n_c
               + ((q_t - s_t * s_t / n_t) / (n_t - 1)) / n_t) AS z_score
 FROM a
-""")
+""", bench=True)
 def ab_test_event_values_q(spark, sf_dir):
     """A/B experiment readout: Welch z per event type (variant =
     user-id parity). Sums round at their decimal grid, then the
@@ -2889,7 +2941,7 @@ SELECT event_type, q,
        MIN(0.0 + (bin + (q * n - (cum - cnt)) / cnt) * 1.5625)
          AS quantile_est
 FROM hit GROUP BY 1, 2
-""")
+""", bench=True)
 def hist_quantile_rollup_q(spark, sf_dir):
     """Mergeable quantiles: per (event_type, hour-bucket) fixed-bin
     histogram partials merge up to per-type p50/p95/p99 — the
@@ -2917,7 +2969,7 @@ active AS (SELECT DISTINCT u, p FROM e)
 SELECT cohort, p - cohort AS "offset",
        COUNT(DISTINCT u) AS n_active
 FROM active JOIN cohort USING (u) GROUP BY 1, 2
-""")
+""", bench=True)
 def retention_cohorts_daily_q(spark, sf_dir):
     """Daily retention cohorts: users bucketed by first-active day,
     counted per day-offset they return — two keyed shuffles on the
@@ -2942,7 +2994,7 @@ grams AS (
   FROM seq)
 SELECT path, COUNT(*) AS n FROM grams
 GROUP BY path ORDER BY n DESC, path LIMIT 20
-""")
+""", bench=True)
 def top_event_paths_q(spark, sf_dir):
     """Most common 3-event user paths ('what happens next'): ordered
     per-user sequences (one user-keyed exchange), narrow in-row
@@ -2983,7 +3035,7 @@ SELECT b.entity, b.n_members, rep.s_name AS canonical_name,
        b.max_s_acctbal, pick.s_nationkey AS voted_s_nationkey
 FROM base b JOIN rep ON b.entity = rep.entity
 JOIN pick ON b.entity = pick.entity
-""")
+""", bench=True)
 def resolve_supplier_entities_q(spark, sf_dir):
     """Entity-resolution capstone: fuzzy-name blocking + transitive
     closure + survivorship (smallest-id canonical name, majority-vote
@@ -3007,7 +3059,7 @@ FROM customer JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON o_orderkey = l_orderkey
 GROUP BY c_custkey, o_orderkey
 HAVING SUM(l_quantity) > 250
-""")
+""", bench=True)
 def tpch_q18_large_orders_q(spark, sf_dir):
     """TPC-H Q18 shape: big-big join then grouped HAVING filter. The
     lineitem-orders join shuffles on orderkey; customer broadcasts."""
@@ -3043,7 +3095,7 @@ FROM customer c
 WHERE EXISTS (SELECT 1 FROM orders o
               WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
   AND c_acctbal > 0
-""")
+""", bench=True)
 def sql_exists_subquery_q(spark, sf_dir):
     """Full SQL surface (reference has no SQL layer at all, SURVEY
     §2.11): the identical SQL text runs on Spark (registered temp
@@ -3143,7 +3195,7 @@ SELECT doc_id, n_tokens, lang_pred, quality FROM deduped WHERE rk = 1
 """
 
 
-@_q("pipeline_clean_corpus", _PIPELINE_CLEAN_SQL)
+@_q("pipeline_clean_corpus", _PIPELINE_CLEAN_SQL, bench=True)
 def pipeline_clean_corpus_q(spark, sf_dir):
     """Full training-data pipeline (functions/pipeline.py): feature
     pass (narrow) -> quality gate -> one-shuffle exact dedup. The
@@ -3158,7 +3210,7 @@ SELECT lang_pred, COUNT(*) AS n_docs,
        CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
        ROUND(AVG(quality), 4) AS avg_quality
 FROM clean GROUP BY lang_pred
-""")
+""", bench=True)
 def pipeline_corpus_stats_q(spark, sf_dir):
     from vega_spark.functions.pipeline import clean_corpus, corpus_stats
     return corpus_stats(clean_corpus(_t(spark, sf_dir, "documents")))
@@ -3176,7 +3228,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-""")
+""", bench=True)
 def tpch_q1_pricing_summary_q(spark, sf_dir):
     """TPC-H Q1: the canonical scan-heavy partial+final aggregate.
     One scan (shipdate filter pushed to parquet, 4-column ReadSchema),
@@ -3209,7 +3261,7 @@ JOIN nation ON s_nationkey = n_nationkey
 JOIN orders ON o_orderkey = l_orderkey
 WHERE p_name LIKE '%red%'
 GROUP BY n_name, YEAR(o_orderdate)
-""")
+""", bench=True)
 def tpch_q9_profit_by_nation_q(spark, sf_dir):
     """TPC-H Q9 shape (no partsupp table in the test schema, so the
     supplycost term drops out): profit per nation-year. part is
@@ -3276,7 +3328,7 @@ SELECT * FROM (
   UNION ALL
   SELECT 'l_extendedprice', 'l_discount',
          ROUND(corr(l_extendedprice, l_discount), 6) FROM lineitem) t
-""")
+""", bench=True)
 def corr_matrix_q(spark, sf_dir):
     """All pairwise correlations in ONE aggregate pass (stats.py) —
     the oracle needs three scans to say the same thing."""
@@ -3311,7 +3363,7 @@ def heavy_hitters_q(spark, sf_dir):
 @_q("kmeans_clusters", """
 SELECT COUNT(*) AS n_points, 1 AS coverage, 1 AS k_bounded
 FROM embeddings
-""")
+""", bench=True)
 def kmeans_clusters_q(spark, sf_dir):
     """Iterative Lloyd's k-means contract (functions/clustering.py):
     the broadcast-iterate loop SQL can't express and cluster geometry
@@ -3340,7 +3392,7 @@ def kmeans_clusters_q(spark, sf_dir):
 @_q("kmeans_silhouette", """
 SELECT COUNT(*) AS n_points, 1 AS coverage, 1 AS sil_in_range
 FROM embeddings
-""")
+""", bench=True)
 def kmeans_silhouette_q(spark, sf_dir):
     """Cluster-quality contract for the k-means family: rank-k
     clustering followed by the simplified (centroid-based) silhouette
@@ -3400,7 +3452,7 @@ FROM lineitem
 UNION ALL
 SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
 FROM lineitem
-""")
+""", bench=True)
 def unpivot_lineitem_measures_q(spark, sf_dir):
     """Wide -> long melt (aggregations.unpivot): narrow per-task
     fan-out, no shuffle — the oracle needs three scans."""
@@ -3895,7 +3947,7 @@ SELECT ROUND(ea, 4) AS ndv_a_est, ROUND(eb, 4) AS ndv_b_est,
        ROUND(eu, 4) AS ndv_union_est, ROUND(jac, 4) AS jaccard_est,
        ROUND(jac * eu, 4) AS intersection_est
 FROM est
-""")
+""", bench=True)
 def kmv_distinct_jaccard_q(spark, sf_dir):
     """KMV bottom-k sketch (k=256): distinct-count, Jaccard and
     intersection-size estimates between the order-placing customer
@@ -4045,7 +4097,7 @@ SELECT b.doc_id, b.n_ngrams,
        COALESCE(h.n_matched, 0) AS n_matched,
        COALESCE(h.n_matched, 0) >= 1 AS contaminated
 FROM base b LEFT JOIN hits h USING (doc_id)
-""")
+""", bench=True)
 def decontaminate_against_eval_q(spark, sf_dir):
     """Benchmark decontamination: docs with doc_id % 50 == 0 play the
     held-out eval set; every other doc is checked for shared word
@@ -4079,7 +4131,7 @@ SELECT user_id, event_type AS state, ts_us AS valid_from_us,
        LEAD(ts_us) OVER (PARTITION BY user_id
                          ORDER BY ts_us, event_id) IS NULL AS is_current
 FROM c
-""")
+""", bench=True)
 def scd2_user_state_q(spark, sf_dir):
     """Type-2 SCD build from the event stream: effective-dated
     event_type runs per user (µs-exact integer validity bounds)."""
@@ -4104,7 +4156,7 @@ SELECT event_id,
          PARTITION BY user_id ORDER BY epoch_us(ts)
          RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS n_in_window
 FROM events
-""")
+""", bench=True)
 def rolling_hour_value_q(spark, sf_dir):
     """Per-user trailing-1-hour rolling sum/count at every event —
     ANSI RANGE frame over integer microseconds (peer rows included
@@ -4313,7 +4365,7 @@ SELECT o_orderpriority,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM orders JOIN lineitem ON o_orderkey = l_orderkey
 GROUP BY o_orderpriority
-""")
+""", bench=True)
 def bucketed_join_priority_revenue_q(spark, sf_dir):
     """Join over BUCKETED tables: both sides are persisted bucketed
     by the join key (8 buckets, sorted), so the sort-merge join needs
@@ -4366,7 +4418,11 @@ SELECT doc_id, CAST(i - 1 AS INTEGER) AS idx, sents[i] AS sentence,
        CAST(len(list_filter(regexp_split_to_array(sents[i], '\s+'),
                             x -> x <> '')) AS INTEGER) AS n_words
 FROM s, unnest(generate_series(1, len(sents))) AS u(i)
-""")
+""", bench=True, adjudicated={"row-python-udf": (
+    "Spark UDTFs are row-based by API design (BatchEvalPythonUDTF "
+    "has no Arrow variant for lateral joins in 4.1); the "
+    "vectorized alternative (explode over a pandas-UDF split) is "
+    "documented next to the operator")})
 def udtf_sentences_q(spark, sf_dir):
     """LATERAL Python UDTF: one row per sentence per document (the
     reference's flat_map-closure shape as a Spark 4 table function;
@@ -4397,7 +4453,7 @@ b AS (
 SELECT lang, bin, COUNT(*) AS n_docs,
        CAST(SUM(n_tokens) AS BIGINT) AS tokens_in_bin
 FROM b GROUP BY 1, 2
-""")
+""", bench=True)
 def pack_sequences_manifest_q(spark, sf_dir):
     """Streaming sequence packing into 512-token bins per language
     (deterministic md5 order, exclusive-cumsum boundary rule) —
@@ -4467,7 +4523,7 @@ r3 AS (SELECT s.v AS u,
        FROM sym s JOIN r2 r ON s.u = r.u JOIN deg d ON s.u = d.u
        GROUP BY s.v)
 SELECT u AS node, m AS microrank FROM r3
-""")
+""", bench=True)
 def pagerank_part_affinity_q(spark, sf_dir):
     """PageRank (3 supersteps, d=0.85) over the part-co-order affinity
     graph — an ITERATIVE algorithm whose oracle unrolls the identical
@@ -4538,7 +4594,7 @@ SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
 FROM orders o FULL JOIN newt n ON o.o_orderkey = n.o_orderkey
 WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
    OR o.o_totalprice IS DISTINCT FROM n.o_totalprice
-""")
+""", bench=True)
 def table_diff_orders_q(spark, sf_dir):
     """Diff two synthetic versions of orders (deterministic deletes
     %101, price bumps %97, key-shifted inserts %103): digest-reduced
@@ -4558,7 +4614,7 @@ def table_diff_orders_q(spark, sf_dir):
 
 # --- bloom-gated incremental dedup (runtime-filter pattern) ----------------
 
-@_q("dedup_incremental_bloom", _incremental_dedup_sql(5))
+@_q("dedup_incremental_bloom", _incremental_dedup_sql(5), bench=True)
 def dedup_incremental_bloom_q(spark, sf_dir):
     """Incremental dedup gated by a hand-built distributed Bloom
     filter: the corpus digest set compresses to a ~16 KB bit array
@@ -4599,7 +4655,7 @@ SELECT (SELECT COUNT(*) FROM documents WHERE doc_id % 4 = 0)
        (SELECT COUNT(*) FROM documents WHERE doc_id % 8 = 1)
          AS n_recrawled,
        1 AS batch_covered, 1 AS recrawled_matched
-""")
+""", bench=True)
 def near_dup_incremental_lsh_q(spark, sf_dir):
     """Incremental NEAR-dup against a persisted MinHash-LSH index —
     the continuous-crawl companion to dedup_incremental (which is
@@ -4665,7 +4721,7 @@ WITH g AS (
 SELECT event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS total,
        COUNT(DISTINCT user_id) AS n_users
 FROM g GROUP BY event_type
-""")
+""", bench=True)
 def custom_source_events_q(spark, sf_dir):
     """Read through the registered Python DataSource ("vega_synth"):
     partition planning on the driver, per-partition decode on
@@ -4685,7 +4741,7 @@ def custom_source_events_q(spark, sf_dir):
 
 # --- partitioned layout + partition pruning --------------------------------
 
-_PARTITIONED_EVENTS: dict[tuple[str, str], str] = {}
+_PARTITIONED_EVENTS: dict[tuple[str, str], tuple[str, StructType]] = {}
 
 
 @_q("partitioned_scan_prune", """
@@ -4693,7 +4749,7 @@ SELECT event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS total
 FROM events
 WHERE ts >= TIMESTAMP '2024-01-15' AND ts < TIMESTAMP '2024-01-16'
 GROUP BY event_type
-""")
+""", bench=True)
 def partitioned_scan_prune_q(spark, sf_dir):
     """Hive-style partitioned layout + partition PRUNING: events are
     written once per (session, sf) partitioned by event_date; the
@@ -4701,7 +4757,9 @@ def partitioned_scan_prune_q(spark, sf_dir):
     lists ONE date directory out of 30 — at 100 TB this is the
     difference between scanning ~3 TB and 100 TB, before any row
     filter runs. (The pruning is asserted in test_plans; the oracle
-    replays the equivalent ts-range filter over the flat table.)"""
+    replays the equivalent ts-range filter over the flat table.)
+    The copy's schema is inferred once, beside its path, so later
+    builds re-read it without a schema-inference job."""
     import tempfile
 
     ensure_engine_conf(spark)
@@ -4711,8 +4769,9 @@ def partitioned_scan_prune_q(spark, sf_dir):
         ev = _t(spark, sf_dir, "events")
         (ev.withColumn("event_date", ts_date("ts").cast("string"))
          .write.mode("overwrite").partitionBy("event_date").parquet(path))
-        _PARTITIONED_EVENTS[key] = path
-    df = spark.read.parquet(_PARTITIONED_EVENTS[key])
+        _PARTITIONED_EVENTS[key] = (path, spark.read.parquet(path).schema)
+    path, schema = _PARTITIONED_EVENTS[key]
+    df = spark.read.schema(schema).parquet(path)
     return (df.filter(F.col("event_date") == "2024-01-15")
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"),
@@ -4758,7 +4817,7 @@ j AS (SELECT COALESCE(p.grp, q.grp) AS grp,
 SELECT grp AS event_type,
        ROUND(SUM((p - q) * LN((p + 1e-6) / (q + 1e-6))), 6) AS psi
 FROM j GROUP BY grp
-""")
+""", bench=True)
 def drift_psi_event_values_q(spark, sf_dir):
     """Population Stability Index of the value distribution per
     event_type, first half of January vs second half (10 fixed bins
@@ -4803,7 +4862,7 @@ SELECT toks.doc_id,
        array_to_string(COALESCE(g.token_ids, CAST([] AS INTEGER[])),
                        ' ') AS token_ids
 FROM toks LEFT JOIN g USING (doc_id)
-""")
+""", bench=True)
 def encode_docs_vocab1k_q(spark, sf_dir):
     """Corpus id-ification: frequency-ranked 1k vocabulary (ties by
     term → deterministic ids), then an order-preserving narrow encode
@@ -4842,7 +4901,7 @@ m AS (
 SELECT m.event_id, m.user_id, r.next_purchase_value
 FROM m JOIN r ON r.user_id = m.user_id AND r.ts = m.mts
 WHERE m.mts - m.ts <= INTERVAL 1 HOUR
-""")
+""", bench=True)
 def asof_join_forward_tolerance_q(spark, sf_dir):
     """FORWARD as-of with a 1-hour tolerance: each event picks the
     user's next purchase at-or-after it, but only if it lands within
@@ -5029,7 +5088,7 @@ def resample_hourly_grid_q(spark, sf_dir):
 SELECT (SELECT COUNT(*) FROM region WHERE r_regionkey < 0) = 0
          AS empty_when_filtered,
        (SELECT COUNT(*) FROM region) = 0 AS empty_full_table
-""")
+""", bench=True)
 def is_empty_flags_q(spark, sf_dir):
     """``is_empty`` action (reference rdd.rs:1071-1078) on an
     impossible filter (True) and the full table (False); the two
@@ -5046,7 +5105,7 @@ def is_empty_flags_q(spark, sf_dir):
 SELECT COUNT(*) AS n_rows, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
        MIN(n_name) AS first_name, MAX(n_name) AS last_name
 FROM nation
-""")
+""", bench=True)
 def save_text_roundtrip_q(spark, sf_dir):
     """``save_as_text_file`` (reference rdd.rs:254-272) + read-back:
     write nation keys/names as text (one part file per partition,
@@ -5073,7 +5132,7 @@ def save_text_roundtrip_q(spark, sf_dir):
 SELECT o_orderstatus, COUNT(*) AS n,
        ROUND(SUM(o_totalprice), 2) AS total
 FROM orders GROUP BY 1
-""")
+""", bench=True)
 def save_parquet_partitioned_roundtrip_q(spark, sf_dir):
     """Parquet sink superset of save_as_text_file: write orders
     partitioned by status (directory layout downstream readers prune
@@ -5098,7 +5157,7 @@ def save_parquet_partitioned_roundtrip_q(spark, sf_dir):
 @_q("take_sample_contract", """
 SELECT CAST(20 AS BIGINT) AS n_sampled, CAST(20 AS BIGINT) AS n_distinct,
        CAST(20 AS BIGINT) AS n_in_source
-""")
+""", bench=True)
 def take_sample_contract_q(spark, sf_dir):
     """``take_sample`` (reference rdd.rs:704-783, seeded driver-side
     pick with the same oversampling math). The sampled VALUES are
@@ -5123,7 +5182,7 @@ SELECT COUNT(*) AS n_rows, ROUND(SUM(l_quantity), 2) AS qty_sum,
        CAST(SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_discounted
 FROM lineitem
-""")
+""", bench=True)
 def for_each_observe_metrics_q(spark, sf_dir):
     """``for_each`` / accumulator pattern (reference rdd.rs:785-803;
     its accumulator field is an unfinished stub) via the Spark-native
@@ -5152,7 +5211,7 @@ def for_each_observe_metrics_q(spark, sf_dir):
 
 @_q("cache_reuse_scan_count", """
 SELECT 1 AS uncached_rescans, 1 AS cached_lt_uncached
-""")
+""", bench=True)
 def cache_reuse_scan_count_q(spark, sf_dir):
     """Cache/persist re-use contract (reference rdd.rs:57,72-76 —
     `should_cache` exists there but is never wired into execution;
@@ -5210,7 +5269,7 @@ def cache_reuse_scan_count_q(spark, sf_dir):
 SELECT * FROM (VALUES ('alpha.txt', CAST(14 AS BIGINT), 'alpha-contents'),
                       ('beta.txt',  CAST(13 AS BIGINT), 'beta-contents')
               ) AS t(file_name, length, content)
-""")
+""", bench=True)
 def read_whole_files_dir_q(spark, sf_dir):
     """LocalFsReader whole-file-bytes mode (reference
     local_file_reader.rs:20-100): deterministic files written to a
@@ -5240,7 +5299,7 @@ SELECT c.c_mktsegment, e.event_type, COUNT(*) AS n,
        ROUND(SUM(e.value), 2) AS total
 FROM events e JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY 1, 2
-""")
+""", bench=True)
 def streaming_stream_static_join_q(spark, sf_dir):
     """Stream-static enrichment end-to-end: readStream over staged
     events, broadcast join to the customer dimension (re-resolved per
@@ -5280,7 +5339,14 @@ def streaming_stream_static_join_q(spark, sf_dir):
 SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT event_id) AS n_ids,
        ROUND(SUM(value), 2) AS total
 FROM events GROUP BY 1
-""")
+""", bench=True, note=(
+    "scale smokes are bounded by the MEMORY-SINK harness, not the "
+    "stateful operator: the dedup drain's output is input-sized by "
+    "contract, and at 300x the sink's driver collect exceeds "
+    "spark.driver.maxResultSize (measured: 1035 MiB > 1 GiB). A "
+    "production drain sinks to files/a table; the dropDuplicates "
+    "state itself is keyed and partition-local. Drain partitions "
+    "derive from staged bytes like the other drains"))
 def streaming_dedup_exact_q(spark, sf_dir):
     """Exact streaming dedup: the arrival directory is staged TWICE
     (every event duplicated), the stream drops duplicates on
@@ -5341,7 +5407,7 @@ SELECT j.event_id, j.event_type, j.value,
 FROM j JOIN mad d USING (event_type)
 WHERE d.md > 0
   AND ABS(ROUND(0.6745 * (j.value - j.m) / d.md, 3)) > 3.5
-""")
+""", bench=True)
 def anomalies_event_values_q(spark, sf_dir):
     """Robust (median/MAD) per-type outlier screen over event values
     — flags |z| > 3.5 (Iglewicz-Hoaglin). Two keyed aggregates build
@@ -5367,7 +5433,7 @@ SELECT h.event_type, h.hour, h.n,
        CASE WHEN s.sd > 0
             THEN ROUND((h.n - s.mu) / s.sd, 3) END AS spike_z
 FROM h JOIN s USING (event_type)
-""")
+""", bench=True)
 def spikes_event_hours_q(spark, sf_dir):
     """Burst detection: per (type, hour) activity z-scored against
     that type's own hourly distribution. One pass over events to the
@@ -5394,7 +5460,7 @@ FROM directed d
 JOIN items ia ON d.ante = ia.item
 JOIN items ic ON d.cons = ic.item
 CROSS JOIN tot t
-""")
+""", bench=True)
 def assoc_rules_parts_q(spark, sf_dir):
     """Association rules (support/confidence/lift) over part
     co-purchases. The oracle uses the textbook self-join; our plan
@@ -5426,7 +5492,7 @@ r AS (
 SELECT item, neighbor, n AS n_baskets, ROUND(cosine, 6) AS cosine,
        CAST(rk AS INTEGER) AS nb_rank
 FROM r WHERE rk <= 3
-""")
+""", bench=True)
 def item_neighbors_parts_q(spark, sf_dir):
     """Item-item collaborative filtering: top-3 neighbors per part by
     co-occurrence cosine. Per-item top-k is a PARTITIONED window
@@ -5449,7 +5515,7 @@ bfs(node, dist) AS (
   SELECT e.v, b.dist + 1 FROM bfs b JOIN e ON e.u = b.node
   WHERE b.dist < 4)
 SELECT node, MIN(dist) AS dist FROM bfs GROUP BY node
-""")
+""", bench=True)
 def bfs_parts_distance_q(spark, sf_dir):
     """Single-source BFS hop distances on the part co-purchase graph
     (≤ 4 hops from the smallest part id). Frontier-expansion loop:
@@ -5475,7 +5541,7 @@ j AS (
 SELECT event_type, COUNT(*) AS n_hours,
        ROUND(AVG(CAST(ABS(n - pred) AS DOUBLE)), 4) AS mae
 FROM j GROUP BY event_type
-""")
+""", bench=True)
 def forecast_backtest_events_q(spark, sf_dir):
     """Seasonal-naive forecast backtest: predict each hour with the
     count 24 h earlier, score MAE per type. The self-join happens on
@@ -5517,7 +5583,7 @@ scored AS (
 SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
        ROUND(w, 6) AS llr_weight, w > 0 AS selected
 FROM scored
-""")
+""", bench=True)
 def dsir_select_en_q(spark, sf_dir):
     """DSIR importance weighting (hashed-unigram LLR, target = 'en'
     docs) — the published importance-resampling selection method at
@@ -5541,7 +5607,7 @@ walk(node, dist, hops) AS (
   SELECT e.v, b.dist + e.w, b.hops + 1
   FROM walk b JOIN e ON e.u = b.node WHERE b.hops < 4)
 SELECT node, MIN(dist) AS dist FROM walk GROUP BY node
-""")
+""", bench=True)
 def sssp_parts_weighted_q(spark, sf_dir):
     """Weighted single-source shortest paths (Bellman-Ford, 4
     relaxation rounds) on the part co-purchase graph — strong ties
@@ -5576,7 +5642,7 @@ SELECT l.grp AS event_type, CAST(MAX(l.tn) AS BIGINT) AS n,
        ROUND(SQRT((MAX(l.gf) - 1.0) / MAX(l.gf)
                   * SUM(POW(l.loo - m.mbar, 2))), 6) AS se_jack
 FROM loo l JOIN m USING (grp) GROUP BY 1
-""")
+""", bench=True)
 def jackknife_event_means_q(spark, sf_dir):
     """Delete-one-fold jackknife standard error of the mean event
     value per type (20 md5-hashed folds) — one shuffle over the data,
@@ -5587,7 +5653,7 @@ def jackknife_event_means_q(spark, sf_dir):
     return jackknife_mean(ev, "value", "event_type", "event_id", g=20)
 
 
-@_q("streaming_anomaly_flags", ORACLES["anomalies_event_values"])
+@_q("streaming_anomaly_flags", ORACLES["anomalies_event_values"], bench=True)
 def streaming_anomaly_flags_q(spark, sf_dir):
     """Streaming robust anomaly detection: the per-type (median, MAD)
     baseline is computed ONCE on the batch table (robust_stats — a
@@ -5649,7 +5715,7 @@ SELECT event_type, n AS n_hours,
                            / CAST(n * sxx - sx * sx AS DOUBLE) END)
                 * CAST(sx AS DOUBLE)) / n, 6) AS intercept
 FROM s
-""")
+""", bench=True)
 def trend_event_hours_q(spark, sf_dir):
     """Per-type linear activity trend (closed-form OLS over hourly
     counts, recentered hour index so every sum is an exact small
@@ -5682,7 +5748,7 @@ SELECT CAST(MAX(t.n) AS BIGINT) AS n, COUNT(*) AS n_cells,
                       / CAST(mx.nx * my.ny AS DOUBLE))), 6) AS mi_nats
 FROM cells c
 JOIN mx USING (x) JOIN my USING (yb) CROSS JOIN tot t
-""")
+""", bench=True)
 def mi_event_type_value_q(spark, sf_dir):
     """Mutual information between event type and a 4-bin fixed grid
     over value — exact integer contingency table, one log per cell.
@@ -5705,7 +5771,7 @@ k2 AS (SELECT u FROM d2 WHERE d >= 2),
 e2 AS (SELECT e1.u, e1.v FROM e1
        JOIN k2 a ON e1.u = a.u JOIN k2 b ON e1.v = b.u)
 SELECT u AS node, COUNT(*) AS deg FROM e2 GROUP BY 1
-""")
+""", bench=True)
 def kcore_parts_q(spark, sf_dir):
     """2-core of the part co-purchase graph after two bounded peel
     rounds — per round one degree aggregate + two semi-joins, all
@@ -5727,7 +5793,10 @@ SELECT CAST(MAX(n) AS BIGINT) AS n, COUNT(*) AS n_cells,
        ROUND(SUM(POW(o - CAST(nx * ny AS DOUBLE) / n, 2)
                  / (CAST(nx * ny AS DOUBLE) / n)), 4) AS chi2
 FROM grid
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "marginal-x-marginal grid: both sides are grouped aggregates "
+    "over the event-type / value-bin DOMAINS — bounded by "
+    "category cardinality, invisible to maxRows")})
 def chi2_event_type_value_q(spark, sf_dir):
     """Pearson chi-squared independence over the same contingency
     grid as mi_event_type_value — expected counts from exact integer
@@ -5747,7 +5816,7 @@ WITH s AS (
   FROM documents WHERE n_chars > 0)
 SELECT id, weight, ROUND(k, 6) AS sort_key
 FROM s ORDER BY k DESC, id LIMIT 50
-""")
+""", bench=True)
 def weighted_sample_docs_q(spark, sf_dir):
     """A-Res weighted sampling without replacement (Efraimidis-
     Spirakis keys from md5-derived uniforms): 50 documents with
@@ -5769,7 +5838,7 @@ SELECT c.grp AS source, CAST(MAX(t.n) AS BIGINT) AS n, COUNT(*) AS n_cats,
        ROUND(1.0 - SUM((CAST(c.c AS DOUBLE) / t.n)
                        * (CAST(c.c AS DOUBLE) / t.n)), 6) AS simpson
 FROM cells c JOIN tot t USING (grp) GROUP BY 1
-""")
+""", bench=True)
 def diversity_by_source_q(spark, sf_dir):
     """Language-diversity report per document source: Shannon entropy
     and Simpson index from exact integer counts — the data-card
@@ -5796,7 +5865,7 @@ SELECT grp AS event_type, CAST(MAX(n) AS BIGINT) AS n,
        ROUND(SUM(POW(o - LOG10(1.0 + 1.0 / digit) * n, 2)
                  / (LOG10(1.0 + 1.0 / digit) * n)), 6) AS benford_chi2
 FROM grid GROUP BY 1
-""")
+""", bench=True)
 def benford_event_values_q(spark, sf_dir):
     """Benford first-digit screen per event type — leading digit via
     exact integer-cents string math (engine-identical), chi-squared
@@ -5823,7 +5892,7 @@ r AS (
 SELECT stratum, id, weight, ROUND(k, 6) AS sort_key,
        CAST(rk AS INTEGER) AS rk
 FROM r WHERE rk <= 10
-""")
+""", bench=True)
 def weighted_sample_docs_by_lang_q(spark, sf_dir):
     """Stratified A-Res: 10 documents per language, inclusion odds ∝
     n_chars — per-stratum PARTITIONED window (per-key heap, no
@@ -5867,7 +5936,7 @@ SELECT CAST((SELECT SUM(np) FROM cells) AS BIGINT) AS n_pos,
              / (2.0 * (SELECT SUM(np) FROM cells)
                 * (SELECT SUM(nn) FROM cells)), 6) AS auc
 FROM c
-""")
+""", bench=True)
 def roc_auc_purchase_value_q(spark, sf_dir):
     """Binned ROC AUC (256 fixed cells, midrank ties): does `value`
     separate purchase events from the rest? Exact-integer rank fold
@@ -5899,7 +5968,7 @@ SELECT CAST(t.n_a AS BIGINT) AS n_a, CAST(t.n_b AS BIGINT) AS n_b,
        ROUND(CAST(MAX(ABS(ca * t.n_b - cb * t.n_a)) AS DOUBLE)
              / CAST(t.n_a * t.n_b AS DOUBLE), 6) AS ks_stat
 FROM c, tot t GROUP BY t.n_a, t.n_b
-""")
+""", bench=True)
 def ks_drift_purchase_view_q(spark, sf_dir):
     """Two-sample KS on a fixed 64-bin [0,500) grid: value
     distribution of purchase vs view events. Exact-integer max-gap
@@ -5923,7 +5992,7 @@ SELECT grp AS event_type,
              4) AS n_noisy,
        ROUND(-2.0 * SIGN(u - 0.5) * LN(1 - 2 * ABS(u - 0.5)), 4) AS noise
 FROM u
-""")
+""", bench=True)
 def dp_noisy_event_counts_q(spark, sf_dir):
     """ε-DP event-type counts (ε=0.5, Laplace b=2) with seeded
     md5-derived noise — reproducible privacy-preserving release of
@@ -5948,7 +6017,7 @@ a AS (
 SELECT * REPLACE (CAST(classes_at_risk AS BIGINT) AS classes_at_risk,
                   CAST(rows_at_risk AS BIGINT) AS rows_at_risk)
 FROM a
-""")
+""", bench=True)
 def k_anonymity_docs_q(spark, sf_dir):
     """k-anonymity audit of documents under the quasi-identifier
     (lang, source, n_chars/100 bucket): classes and rows below each
@@ -5991,7 +6060,7 @@ SELECT event_id,
 FROM (SELECT event_id, CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
              event_type, props
       FROM events), s
-""")
+""", bench=True)
 def feature_vector_events_q(spark, sf_dir):
     """Tabular feature prep over events: exact-decimal z-score +
     min-max of value, fixed-vocabulary one-hot of event_type, md5
@@ -6016,7 +6085,7 @@ SELECT cat AS o_orderpriority, n,
        ROUND(CAST(CAST(sc AS HUGEINT) * nn + 20 * ss AS DOUBLE)
              / (100.0 * CAST(nn * (n + 20) AS DOUBLE)), 6) AS target_enc
 FROM per, tot
-""")
+""", bench=True)
 def target_encode_orders_priority_q(spark, sf_dir):
     """Smoothed target encoding (m=20) of order priority by mean
     total price — exact decimal rational, one keyed agg + 1-row
@@ -6073,7 +6142,9 @@ pred AS (
   GROUP BY 1, 2)
 SELECT actual, predicted, COUNT(*) AS n_docs
 FROM pred GROUP BY 1, 2 ORDER BY 1, 2
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "label-prior and vocab-head attaches: label domain (5) x "
+    "scalar totals; vocab head is a bounded TakeOrdered")})
 def naive_bayes_lang_confusion_q(spark, sf_dir):
     """Multinomial Naive Bayes language classifier trained and scored
     in-engine (top-300 vocab, add-1 smoothing, 1e-6 integerized
@@ -6109,7 +6180,7 @@ SELECT event_type, n_hours,
        ROUND(b / 100.0, 6) AS trend,
        ROUND((l + 3.0 * b) / 100.0, 6) AS forecast_h3
 FROM r WHERE i = n_hours + 1 ORDER BY event_type
-""")
+""", bench=True)
 def holt_forecast_hourly_q(spark, sf_dir):
     """Holt double-exponential smoothing (α=.5, β=.25 — binary-exact
     constants) of hourly value sums per event type, 3-hour-ahead
@@ -6161,7 +6232,7 @@ SELECT doc_id, LENGTH(html) AS html_chars,
          AS text_density,
        substr(main_text, 1, 40) AS head
 FROM y
-""")
+""", bench=True)
 def html_extract_docs_q(spark, sf_dir):
     """HTML boilerplate strip over a deterministic page template
     wrapped around each document: script/style subtrees dropped,
@@ -6226,7 +6297,7 @@ SELECT CAST(n AS BIGINT) AS n,
        ROUND((b1 * CAST(P AS DOUBLE) + b2 * CAST(Q AS DOUBLE))
              / CAST(Syy AS DOUBLE), 6) AS r2
 FROM sol
-""")
+""", bench=True)
 def ols_price_qty_discount_q(spark, sf_dir):
     """Two-feature closed-form OLS: extended price on (quantity,
     discount) — exact decimal(38,0) normal equations in ONE aggregate
@@ -6268,7 +6339,7 @@ SELECT CAST(t.tp + t.tn AS BIGINT) AS n, CAST(t.tp AS BIGINT) AS n_pos,
        ROUND((2.0 * t.tp * t.tn / CAST(t.tp + t.tn AS DOUBLE)
               - best.cost) / CAST(t.tp + t.tn AS DOUBLE), 6) AS gini_gain
 FROM best, t, rng
-""")
+""", bench=True)
 def stump_return_price_q(spark, sf_dir):
     """Best single Gini split of extended price for predicting
     returned lineitems — the boosted-trees building block over a
@@ -6294,7 +6365,7 @@ SELECT p.cur, p.next, p.n,
        ROUND(CAST(p.n AS DOUBLE) / t.tot, 6) AS p
 FROM pairs p JOIN tot t ON p.cur = t.cur
 ORDER BY p.cur, p.next
-""")
+""", bench=True)
 def markov_next_event_q(spark, sf_dir):
     """First-order Markov next-event transition matrix over per-user
     sequences ((ts, id)-ordered lead pairing — one user-partitioned
@@ -6316,7 +6387,7 @@ SELECT bin, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS n_pos,
          AS mean_score,
        ROUND(CAST(SUM(y) AS DOUBLE) / COUNT(*), 6) AS pos_rate
 FROM s GROUP BY bin ORDER BY bin
-""")
+""", bench=True)
 def calibration_value_purchase_q(spark, sf_dir):
     """Reliability table: value/500 as a pseudo-probability vs the
     purchase outcome, 10 fixed bins — per-bin mean score (integerized
@@ -6347,7 +6418,7 @@ SELECT tier, CAST(SUM(m) AS BIGINT) AS n_rows,
        ROUND((CAST(SUM(mp) AS DOUBLE) / SUM(m))
              / (CAST(t.np AS DOUBLE) / t.n), 6) AS lift
 FROM tiers, t GROUP BY tier, t.np, t.n ORDER BY tier
-""")
+""", bench=True)
 def decile_lift_purchase_q(spark, sf_dir):
     """Gains/lift table over value-ranked deciles for the purchase
     outcome — histogram-derived tiers (no global sort), exact
@@ -6377,7 +6448,7 @@ SELECT doc_id, len(toks) AS n_words,
                        x -> NOT regexp_matches(x, '[aeiouy]')))
                  AS DOUBLE) / len(toks), 6) AS flesch
 FROM t WHERE len(toks) > 0
-""")
+""", bench=True)
 def readability_docs_q(spark, sf_dir):
     """Flesch reading ease per document from exact regex counts
     (words / sentence runs / vowel-group syllables with a no-vowel
@@ -6417,7 +6488,7 @@ SELECT 'o_custkey', COUNT(*),
        (SELECT COUNT(*) FROM k WHERE v IS NOT NULL GROUP BY v
         ORDER BY COUNT(*) DESC, v LIMIT 1)
 FROM k
-""")
+""", bench=True)
 def profile_orders_q(spark, sf_dir):
     """Column profiling census over orders (status, priority,
     custkey): exact distincts + deterministic top value per column —
@@ -6469,7 +6540,7 @@ SELECT doc AS doc_id, COUNT(*) AS n_bigrams,
        ROUND(CAST(SUM(s) AS DOUBLE) / (COUNT(*) * 1000000.0), 6)
          AS avg_logprob
 FROM terms GROUP BY doc
-""")
+""", bench=True)
 def bigram_lm_docs_q(spark, sf_dir):
     """Interpolated bigram LM score per document (top-200 vocab +
     <unk>, add-1 smoothing, λ=0.75) — word-ORDER-aware quality
@@ -6484,7 +6555,7 @@ def bigram_lm_docs_q(spark, sf_dir):
 SELECT doc_id AS asset_id, 'png' AS format,
        1 + doc_id % 16 AS width, 1 + doc_id % 9 AS height
 FROM documents
-""")
+""", bench=True)
 def image_header_decode_q(spark, sf_dir):
     """REAL codec-free image header decode: deterministic synthetic
     PNG payloads (dims derived from doc_id) built and parsed
@@ -6543,7 +6614,7 @@ FROM documents d
 JOIN generate_series(0, 32) x(g) ON x.g < 8 + d.doc_id % 25
 JOIN generate_series(0, 22) y(g) ON y.g < 6 + d.doc_id % 17
 GROUP BY 1, 2
-""")
+""", bench=True)
 def png_pixel_decode_stats_q(spark, sf_dir):
     """REAL pixel-level PNG decode, oracle-checked: deterministic
     grayscale pattern images (pixel = (31x+57y) mod 256, dims from
@@ -6568,7 +6639,7 @@ FROM documents d
 JOIN generate_series(0, 11) x(g) ON x.g < 12
 JOIN generate_series(0, 9) y(g) ON y.g < 10
 GROUP BY 1
-""")
+""", bench=True)
 def png_resize_roundtrip_q(spark, sf_dir):
     """REAL decode → nearest-neighbor resize → re-encode → decode
     round trip, oracle-checked: the resized image's pixel sum is
@@ -6601,7 +6672,7 @@ v2 AS (
   FROM orders WHERE o_orderstatus <> 'F')
 SELECT * REPLACE (CAST(sum_cents AS BIGINT) AS sum_cents)
 FROM (SELECT * FROM v1 UNION ALL SELECT * FROM v2) ORDER BY version
-""")
+""", bench=True)
 def versioned_time_travel_orders_q(spark, sf_dir):
     """Lakehouse snapshot versioning end to end: commit orders as v1,
     commit a mutated subset as v2 (urgent orders +10, F-status rows
@@ -6646,7 +6717,7 @@ FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
   AND o_orderdate <= TIMESTAMP '1996-12-31 23:59:59'
 GROUP BY 1
-""")
+""", bench=True)
 def versioned_data_skipping_orders_q(spark, sf_dir):
     """Delta-style DATA SKIPPING end to end: commit orders range-
     partitioned on o_orderdate so each file owns a contiguous date
@@ -6696,7 +6767,7 @@ WHERE NOT EXISTS (
     AND q.last_order >= p.last_order
     AND (q.spend_cents > p.spend_cents OR q.n_orders > p.n_orders
          OR q.last_order > p.last_order))
-""")
+""", bench=True)
 def pareto_customer_frontier_q(spark, sf_dir):
     """SKYLINE query: customers not dominated on (total spend, order
     count, recency) simultaneously — the multi-criteria "best
@@ -6755,7 +6826,7 @@ FROM (
          n*pdt - CAST(sd AS HUGEINT)*st FROM s
   UNION ALL SELECT n, 'l_tax', 'l_tax',
          n*ptt - CAST(st AS HUGEINT)*st FROM s)
-""")
+""", bench=True)
 def pca_covariance_lineitem_q(spark, sf_dir):
     """Exact covariance matrix of the four lineitem measures — the
     distributed half of PCA (functions/mlprep.pca_fit eigensolves
@@ -6837,7 +6908,9 @@ SELECT e.fold, CAST(MAX(e.n_train) AS BIGINT) AS n_train,
              / CAST(SUM(e.np + e.nn) AS DOUBLE), 6) AS acc
 FROM ev e, rng r
 GROUP BY 1
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "fold_ids x bin-total grid: folds (5) x bins — bounded by "
+    "construction, both sides grouped aggregates over scans")})
 def cv_stump_orders_priority_q(spark, sf_dir):
     """5-fold cross-validated decision stump (is this order
     urgent/high-priority, split on total price): the full CV —
@@ -6867,7 +6940,7 @@ SELECT r.win_start_s, r.event_type,
 FROM recent r, mx
 WHERE (r.win_start_s + 3600) * 1000000 <= mx.max_us - CAST(3600 AS BIGINT) * 1000000
 GROUP BY 1, 2
-""")
+""", bench=True)
 def streaming_watermark_drops_q(spark, sf_dir):
     """WATERMARK LATE-DATA SEMANTICS end to end: the arrival dir gets
     three files with ordered mtimes — the newest day of events, then
@@ -6985,7 +7058,7 @@ SELECT * REPLACE (CAST(observed AS BIGINT) AS observed) FROM (
          ROUND(CAST(m3 AS DOUBLE) / CAST(n AS DOUBLE), 6) >= 0.5 FROM s
   UNION ALL
   SELECT 'row_count', '*', n, 100, CAST(n AS DOUBLE), n >= 100 FROM s)
-""")
+""", bench=True)
 def quality_suite_orders_q(spark, sf_dir):
     """Deequ-style data-quality admission gate: five declared
     constraints (null-freedom, key uniqueness, value range, format
@@ -7021,7 +7094,7 @@ SELECT e.vec_id, rl.k,
                               z -> CAST(z[1] AS DOUBLE) * z[2]),
                (a, b) -> a + b) * 0.25, 6) AS y
 FROM embeddings e, rl
-""")
+""", bench=True)
 def jl_projection_embeddings_q(spark, sf_dir):
     """Johnson-Lindenstrauss projection of the 64-dim embedding
     corpus to 16 dims with a deterministic md5 Rademacher matrix —
@@ -7075,7 +7148,7 @@ SELECT r.g, MAX(model.n_cal) AS n_cal, MAX(model.k) AS k,
                   AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS coverage
 FROM r JOIN model ON r.g = model.g WHERE NOT r.cal
 GROUP BY 1
-""")
+""", bench=True)
 def conformal_orders_price_q(spark, sf_dir):
     """Split-conformal prediction intervals around a per-priority
     mean-price model: calibration/serve md5 split, conservative
@@ -7114,7 +7187,21 @@ SELECT COUNT(DISTINCT u) AS n_users,
        1 AS users_covered, 1 AS unseen_only,
        1 AS ranked_desc, 1 AS rmse_learned
 FROM r
-""")
+""", bench=True, note=(
+    "r8: eager checkpoint release + MLlib-style co-partitioned "
+    "ratings copies make every half-step exchange-free — 14.7x at "
+    "the 100x smoke (was 46.6x). The co-partition trade: 3 ratings "
+    "copies pinned in storage, so the SINGLE-JVM working set is "
+    "~3x the fact table; at 300x (180M ratings, ~20+ GB decoded vs "
+    "a 16 GiB heap) local[32] OOMs and local[16] completes "
+    "disk-spill-bound (1363.8s — the measured one-JVM floor, "
+    "recorded in BENCH_scale_300x.json). At cluster scale the "
+    "copies are the point: network-shuffle per half-step is what "
+    "they remove, and executor memory is sized per conf_for_scale. "
+    "r9: the copies are DISK_ONLY (they elide shuffles; heap "
+    "residency buys nothing for a sequential per-half-step scan) — "
+    "local[32] at 300x now COMPLETES, 1237.2s vs the local[16] "
+    "spill-bound floor of 1363.8s; the OOM failure mode is gone"))
 def als_recommend_parts_q(spark, sf_dir):
     """ALS collaborative filtering end to end: implicit
     (customer, part, quantity) interactions from orders ⋈ lineitem,
@@ -7237,7 +7324,7 @@ SELECT l_linenumber,
        CAST(ROUND(l_quantity, 0) AS BIGINT) AS qty,
        ROUND(l_extendedprice, 2) AS price
 FROM lineitem WHERE l_orderkey = 7
-""")
+""", bench=True)
 def versioned_bloom_point_lookup_q(spark, sf_dir):
     """Per-file BLOOM INDEX point lookup: commit lineitem hash-
     partitioned on l_orderkey, attach a per-file Bloom index to the
@@ -7284,7 +7371,7 @@ upd AS (
     AND o_orderpriority = '1-URGENT')
 SELECT * FROM ins UNION ALL SELECT * FROM del
 UNION ALL SELECT * FROM upd
-""")
+""", bench=True)
 def versioned_change_feed_orders_q(spark, sf_dir):
     """CHANGE DATA FEED between snapshot versions: commit orders as
     v1, commit a mutated v2 (urgent repriced +10, F-status dropped,
@@ -7322,7 +7409,7 @@ WHERE o_custkey >= 100 AND o_custkey <= 300
   AND o_orderdate >= TIMESTAMP '1997-01-01'
   AND o_orderdate <= TIMESTAMP '1997-06-30 23:59:59'
 GROUP BY 1
-""")
+""", bench=True)
 def versioned_zorder_2d_skipping_q(spark, sf_dir):
     """Z-ORDER + data skipping synergy: commit orders clustered by
     the Morton interleave of (custkey, order day) — a range layout on
@@ -7380,7 +7467,7 @@ draw AS (
 SELECT a.anchor, a.slot, i2.doc_id AS negative
 FROM draw a JOIN idx i2
   ON i2.i = CASE WHEN a.d = a.own THEN (a.d + 1) % a.n ELSE a.d END
-""")
+""", bench=True)
 def contrastive_negatives_docs_q(spark, sf_dir):
     """Deterministic negative sampling over the document corpus —
     4 contrastive negatives per anchor as a pure function of
@@ -7399,7 +7486,7 @@ SELECT COUNT(*) AS n_rows,
          AS sum_cents,
        COUNT(DISTINCT o_orderstatus) AS n_status
 FROM orders WHERE o_orderkey NOT IN (1, 2, 3, 7)
-""")
+""", bench=True)
 def versioned_delete_keys_orders_q(spark, sf_dir):
     """Targeted DELETE with copy-on-write file rewrite: orders
     committed hash-partitioned with a Bloom index, four keys deleted
@@ -7461,7 +7548,7 @@ SELECT p.event_type, p.k AS lag, p.m AS n_pairs,
    END, 6) AS acf
 FROM pairs p JOIN tot USING (event_type)
 ORDER BY 1, 2
-""")
+""", bench=True)
 def acf_hourly_events_q(spark, sf_dir):
     """Hourly-count autocorrelation at lags 1-3 per event type; the
     oracle replays the exact-integer sum expansion (capability
@@ -7509,7 +7596,7 @@ SELECT t2.event_type, t2.xh, t2.y,
        t2.det_micro - seas.seasonal_micro AS residual_micro
 FROM t2 JOIN seas
   ON t2.event_type = seas.event_type AND t2.xh % 24 = seas.hod
-""")
+""", bench=True)
 def stl_decompose_hourly_q(spark, sf_dir):
     """STL-lite decomposition of hourly event counts into trend
     (±12h centered moving average on a ZERO-FILLED dense grid),
@@ -7552,7 +7639,7 @@ WHERE rnk = 1
   AND (CAST(syy AS DOUBLE)
        - n * (CAST(sy AS DOUBLE)/n) * (CAST(sy AS DOUBLE)/n)) / n > 0
 ORDER BY 1
-""")
+""", bench=True)
 def cusum_changepoint_hours_q(spark, sf_dir):
     """CUSUM mean-shift screen per event type over the hourly grid;
     argmax chosen on the exact integer n·run − i·Σy so the change
@@ -7598,7 +7685,7 @@ SELECT dur AS dur_units, CAST(n_risk AS BIGINT) AS n_risk,
        ROUND(CASE WHEN zeros > 0 THEN 0.0 ELSE EXP(lsum) END, 6)
        AS survival
 FROM s WHERE d > 0 ORDER BY dur
-""")
+""", bench=True)
 def kaplan_meier_conversion_q(spark, sf_dir):
     """Kaplan-Meier time-to-first-purchase curve (hours), censored at
     end of data; the ordered risk-set recursion runs as a bounded
@@ -7652,7 +7739,7 @@ SELECT n, ROUND(w0, 6) AS w0, ROUND(w1, 6) AS w1,
        ROUND(CAST(hits AS DOUBLE) / n, 6) AS accuracy,
        ROUND(CAST(qll AS DOUBLE) / 1e6 / n, 6) AS log_loss
 FROM fin
-""")
+""", bench=True)
 def logreg_purchase_value_q(spark, sf_dir):
     """Binary logistic regression (is-purchase ~ value), two exact
     gradient-descent steps with broadcast 1-row weight frames — the
@@ -7681,7 +7768,7 @@ SELECT l.l, COUNT(*) AS n_classes,
        ROUND(CAST(SUM(CASE WHEN l_val < l.l THEN sz ELSE 0 END)
                   AS DOUBLE) / SUM(sz), 6) AS risk_share
 FROM classes CROSS JOIN l GROUP BY 1
-""")
+""", bench=True)
 def l_diversity_docs_q(spark, sf_dir):
     """l-diversity audit on documents: quasi-identifiers (lang,
     length bucket), sensitive attribute source — flags classes where
@@ -7712,7 +7799,7 @@ SELECT COUNT(*) AS n_nodes,
        ROUND(CAST(SUM(ccq) AS DOUBLE) / 1e6
              / SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END), 6) AS avg_cc
 FROM q
-""")
+""", bench=True)
 def clustering_coeff_parts_q(spark, sf_dir):
     """Average local clustering coefficient of the part co-purchase
     graph — same degree-oriented skew-immune wedge plan as
@@ -7740,7 +7827,7 @@ SELECT CAST(FLOOR(la / 1.0) AS BIGINT) AS cell_x,
        COUNT(*) AS n
 FROM p GROUP BY 1, 2
 ORDER BY n DESC, cell_x, cell_y LIMIT 20
-""")
+""", bench=True)
 def geo_cell_density_customers_q(spark, sf_dir):
     """Densest 1-degree grid cells over md5-synthesized customer
     coordinates — the bounded keyed count + TakeOrdered head every
@@ -7773,7 +7860,7 @@ j AS (
 SELECT id_a, id_b, ROUND(d2, 10) AS dist2
 FROM j WHERE d2 <= 4.0
 ORDER BY dist2, id_a, id_b LIMIT 20
-""")
+""", bench=True)
 def geo_neighbor_pairs_customers_q(spark, sf_dir):
     """Closest customer pairs within 2 degrees via the 3x3
     neighbor-cell equi-join — candidate generation linear in points,
@@ -7804,7 +7891,9 @@ r AS (
   FROM d)
 SELECT hub, COUNT(*) AS n_points FROM r WHERE rn = 1
 GROUP BY 1 ORDER BY 1
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "broadcast hub list (25 nation-seeded hubs) against points "
+    "— the k-NN-to-hubs primitive is |hubs| x n by design")})
 def geo_nearest_hub_nations_q(spark, sf_dir):
     """Nearest-hub assignment: 25 nation-derived hubs broadcast to
     every customer point, per-point argmin as one keyed
@@ -7816,7 +7905,13 @@ def geo_nearest_hub_nations_q(spark, sf_dir):
     return nearest_hub(c, hubs, "c_custkey", "n_nationkey")
 
 
-@_q("streaming_session_windows", ORACLES["sessionize_gap"])
+@_q("streaming_session_windows", ORACLES["sessionize_gap"], bench=True, note=(
+    "scale smokes are bounded by the COMPLETE-MODE memory sink: it "
+    "re-materializes every (user, session) row per batch on the "
+    "driver, which heap-OOMs at 300x. The session-window state "
+    "operator is keyed by user and partition-local; a production "
+    "drain uses append/update into a real sink. Drain partitions "
+    "derive from staged bytes like the other drains"))
 def streaming_session_windows_q(spark, sf_dir):
     """STREAMING gap sessions: real readStream → ``session_window``
     state (adjacent windows MERGE as events arrive — the stateful op
@@ -7867,7 +7962,7 @@ SELECT w1, w2, nxy,
 FROM bic JOIN uni ux ON bic.w1 = ux.t JOIN uni uy ON bic.w2 = uy.t
 CROSS JOIN tot CROSS JOIN nb
 ORDER BY pmi DESC, w1, w2 LIMIT 20
-""")
+""", bench=True)
 def pmi_collocations_docs_q(spark, sf_dir):
     """Top-PMI adjacent-token collocations over the documents corpus
     (min bigram count 5) — in-row bigram fan-out, two keyed counts,
@@ -7897,7 +7992,7 @@ SELECT grp AS event_type, n, ROUND(s / 100.0, 2) AS total,
        ROUND(2.0 * CAST(si AS DOUBLE) / CAST(n * s AS DOUBLE)
              - CAST(n + 1 AS DOUBLE) / n, 6) AS gini
 FROM a WHERE s > 0 ORDER BY 1
-""")
+""", bench=True)
 def gini_event_values_q(spark, sf_dir):
     """Gini concentration of event value per type — rank formulation
     on exact integer cents, one hash exchange (window + fold share
@@ -7932,7 +8027,7 @@ iv AS (SELECT ROUND(SUM(c), 6) AS iv FROM w)
 SELECT bin, CAST(pos AS BIGINT) AS pos, CAST(neg AS BIGINT) AS neg,
        woe, iv_contrib, iv
 FROM w CROSS JOIN iv ORDER BY bin
-""")
+""", bench=True)
 def woe_iv_purchase_value_q(spark, sf_dir):
     """Weight-of-evidence / information value of the value column for
     predicting purchases (10 fixed bins, 0.5 Laplace smoothing) —
@@ -7953,7 +8048,7 @@ SELECT day, new_users,
        CAST(SUM(new_users) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
             AS BIGINT) AS cum_users
 FROM d ORDER BY day
-""")
+""", bench=True)
 def user_growth_daily_q(spark, sf_dir):
     """Daily new + cumulative users (first-appearance day per user);
     the running total folds over the bounded day frame — no global
@@ -7984,7 +8079,7 @@ SELECT COALESCE(state, 'none') AS prev_state,
        COUNT(*) AS n_purchases,
        ROUND(SUM(cents) / 100.0, 2) AS total_value
 FROM j GROUP BY 1
-""")
+""", bench=True)
 def scd2_temporal_purchases_q(spark, sf_dir):
     """Point-in-time SCD2 enrichment: each purchase joined to the
     user's state run in effect 1µs BEFORE it (the state transitioned
@@ -8031,7 +8126,7 @@ s AS (
 SELECT r_score, f_score, m_score, COUNT(*) AS n_users,
        ROUND(SUM(m) / 100.0, 2) AS total_value
 FROM s GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-""")
+""", bench=True)
 def rfm_user_segments_q(spark, sf_dir):
     """RFM customer grid over events: fixed-threshold 1-4 scores on
     recency / frequency / monetary (exact cents), user counts and
@@ -8058,7 +8153,7 @@ i AS (
 SELECT user_id, COUNT(*) AS n_sessions,
        CAST(FLOOR(SUM(dur_us) / 1000000.0) AS BIGINT) AS active_s
 FROM i GROUP BY 1 ORDER BY 1
-""")
+""", bench=True)
 def active_time_per_user_q(spark, sf_dir):
     """Interval-union engagement: per user, merged 5-minute activity
     windows summed to total active seconds — session_window does the
@@ -8127,7 +8222,9 @@ SELECT 16, no, ROUND(CAST(no AS DOUBLE) / nf, 6) FROM o16 CROSS JOIN nf
 UNION ALL
 SELECT 32, no, ROUND(CAST(no AS DOUBLE) / nf, 6) FROM o32 CROSS JOIN nf
 ORDER BY 1
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "scalar denominator attach (global count) downstream of a "
+    "brute-force top-k whose query side is the bounded eval set")})
 def embedding_truncation_recall_q(spark, sf_dir):
     """Matryoshka-style truncation ablation: recall@5 of 8/16/32-dim
     embedding prefixes against the full 64-dim cosine top-5 — the
@@ -8137,6 +8234,15 @@ def embedding_truncation_recall_q(spark, sf_dir):
     from vega_spark.functions.similarity import truncation_recall
     emb = _t(spark, sf_dir, "embeddings")
     return truncation_recall(emb, dims=(8, 16, 32), k=5, n_queries=10)
+
+
+def _sparse_cosine_guard_diag(spark, sf_dir):
+    """Term-guard visibility for the smoke (r5 verdict #4): on a
+    corpus homogeneous enough that every term exceeds the df cut the
+    operator is bounded but EMPTY — this row says so out loud."""
+    from vega_spark.functions.search import sparse_cosine_term_guard
+    return sparse_cosine_term_guard(_t(spark, sf_dir, "documents"),
+                                    "text", max_df_frac=0.1, max_df=1000)
 
 
 @_q("sparse_cosine_doc_pairs", """
@@ -8182,7 +8288,7 @@ FROM dots
 JOIN norms na ON dots.d1 = na.doc
 JOIN norms nb ON dots.d2 = nb.doc
 ORDER BY cos DESC, d1, d2 LIMIT 20
-""")
+""", bench=True, diag=_sparse_cosine_guard_diag)
 def sparse_cosine_doc_pairs_q(spark, sf_dir):
     """Most-similar document pairs by sparse TF-IDF cosine through
     the postings term-join with BOTH df guards on (relative 10% +
@@ -8210,187 +8316,6 @@ def sparse_cosine_doc_pairs_q(spark, sf_dir):
                                max_df=1000, band_df=64, top=20)
 
 
-def _sparse_cosine_guard_diag(spark, sf_dir):
-    """Term-guard visibility for the smoke (r5 verdict #4): on a
-    corpus homogeneous enough that every term exceeds the df cut the
-    operator is bounded but EMPTY — this row says so out loud."""
-    from vega_spark.functions.search import sparse_cosine_term_guard
-    return sparse_cosine_term_guard(_t(spark, sf_dir, "documents"),
-                                    "text", max_df_frac=0.1, max_df=1000)
-
-
-SCALE_DIAGNOSTICS["sparse_cosine_doc_pairs"] = _sparse_cosine_guard_diag
-
-
-def _fuzzy_gram_guard_diag(spark, sf_dir):
-    """Gram-cap visibility for the smoke: the 10x replica corpus
-    clones supplier names, pushing every q-gram over the cap — the
-    operator is then bounded but EMPTY, and this row says why."""
-    from vega_spark.operators.fuzzy import gram_guard_report
-    return gram_guard_report(_t(spark, sf_dir, "supplier"), "s_name",
-                             q=3, max_gram_freq=50)
-
-
-SCALE_DIAGNOSTICS["fuzzy_match_suppliers"] = _fuzzy_gram_guard_diag
-
-
-def _fuzzy_banded_recall_diag(spark, sf_dir):
-    """Measured recall of the banded escape hatch against the exact
-    mode on the SAME corpus (r9, VERDICT r8 #4) — the number the
-    banded trade is priced in. banded ⊆ exact structurally (the
-    sub-bucket join only removes candidates; the verify is
-    identical), so banded_hits == banded_pairs doubles as an
-    invariant check."""
-    from vega_spark.operators.fuzzy import fuzzy_self_pairs
-    sup = _t(spark, sf_dir, "supplier")
-    kw = dict(max_dist=2, min_dist=1, q=3, max_gram_freq=50)
-    exact = fuzzy_self_pairs(sup, "s_name", "s_suppkey",
-                             **kw).select("id_a", "id_b")
-    banded = fuzzy_self_pairs(sup, "s_name", "s_suppkey",
-                              band_gram_df=16,
-                              **kw).select("id_a", "id_b")
-    hits = banded.join(exact, ["id_a", "id_b"], "semi")
-    return (exact.agg(F.count(F.lit(1)).alias("exact_pairs"))
-            .crossJoin(banded.agg(F.count(F.lit(1))
-                                  .alias("banded_pairs")))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("banded_hits")))
-            .select("exact_pairs", "banded_pairs", "banded_hits",
-                    F.round(F.col("banded_hits")
-                            / F.greatest(F.col("exact_pairs"),
-                                         F.lit(1)), 4).alias("recall")))
-
-
-SCALE_DIAGNOSTICS["fuzzy_match_suppliers_banded"] = \
-    _fuzzy_banded_recall_diag
-SCALE_NOTES["geo_copresence_users"] = (
-    "DENSITY-ADAPTIVE grid since r7: cell edge halves every 4x "
-    "points (adaptive_cell_deg), so cell count tracks n and bucket "
-    "occupancy stays ~constant — under the r6 FIXED 32-cell grid, "
-    "occupancy grew linearly and within-bucket pairs quadratically "
-    "(84.9x wall at 300x; 411x at 100x under cap=1000). "
-    "max_bucket=200 remains as a hot-spot backstop, no longer the "
-    "safety mechanism")
-SCALE_NOTES["dedup_simhash"] = (
-    "Manku combinatorial block keys since r7 (~32-bit tables, "
-    "C(6,3)=20 of them for h=3): chance bucket collisions fall from "
-    "n^2/2^16 to n^2/2^33, removing the saturation transition the "
-    "r4-r6 smokes measured (60.8x at 100x then; 4.8x at 100x now, "
-    "corpus v4). r9 DECOMPOSITION of the 1000x tail (78-93s, 5M "
-    "docs): fp UDF 22.5s + postings build ~15s + a 1.57e9-candidate "
-    "codegen verify for 8.26M survivors (0.5%). NOT cliques (99% of "
-    "fps distinct on v4), NOT the cap (binds on 262 of 45M buckets), "
-    "NOT chance collisions (~3k pairs) — mid-size (10-999 doc) "
-    "NEAR-fp buckets from the corpus's low token entropy. Candidate "
-    "density grows linearly (0.18 -> 5.21 -> 15.7 pairs/posting at "
-    "1x/300x/1000x), i.e. the exact candidate stream is QUADRATIC "
-    "in corpus; two in-code escape hatches bound it: "
-    "collapse_identical (boilerplate-clique corpora) and "
-    "band_bucket (pair work ∝ postings, the linear asymptote — at "
-    "1000x it is only 1.1x faster, recall 0.71, because the "
-    "crossover is just beginning; past the cap-saturation decade it "
-    "is the only linear configuration)")
-SCALE_NOTES["dedup_simhash_collapsed"] = (
-    "the production simhash configuration for boilerplate-heavy "
-    "corpora: identical fingerprints collapse to one blocking "
-    "posting + linear star edges BEFORE Manku tables, so clique "
-    "cost falls from C(g,2) to g-1 while connected components stay "
-    "EXACTLY the exhaustive form's (equal fps have equal hamming "
-    "to everything). On corpus v4 the pre-pass is deliberately moot "
-    "(99% distinct fps — v4 restored fp diversity precisely to kill "
-    "clique artifacts), so its 1000x wall tracks dedup_simhash's; "
-    "the win appears exactly when a real corpus's boilerplate "
-    "does. fp is checkpointed once (the UDF re-ran per consumer "
-    "before r9: 141s vs 78s at 1000x)")
-SCALE_NOTES["mine_duplicate_spans"] = (
-    "k-gram digest census: ONE corpus-wide digest-keyed shuffle "
-    "(32-byte unhexed digests) + per-doc island windows. r10: the "
-    "duplicate mark is a count() OVER (PARTITION BY digest) window — "
-    "the r1-r9 groupBy+join-back shape re-derived the whole gram "
-    "fan-out as the join's probe side (exchange not reusable across "
-    "the differing map stages), which carried most of the r9 "
-    "300x->1000x spill band (4.36x wall for 3.33x data). Measured "
-    "same-session at 1000x: join shape 429.9s, window 284.8s, window "
-    "+ footer-sized repartition 277.7s -> in-decade ratio 2.35x for "
-    "3.33x data (sub-linear; band closed). The digest shuffle is "
-    "additionally sized from footer text bytes (~44B gram per 6B "
-    "text, 128 MB/partition target; no-op at small SF where the "
-    "session default exceeds it). r9's 16-byte-md5 key rejection "
-    "stands — sha2-256 keys stay")
-SCALE_NOTES["streaming_windowed_counts"] = (
-    "drain state partitions derive from STAGED ARRIVAL BYTES since "
-    "the r9 opt round (drain_shuffle_partitions: one partition per "
-    "64 MB, floor 8 — stateful streaming disables AQE and pins the "
-    "store count at first batch, so the initial value is the final "
-    "parallelism). Floor binds through 300x (2.1-2.3x wall); at "
-    "1000x the staging is 1.44 GB, the drain ran with 22 derived "
-    "partitions and read 4.7x wall for 1000x data")
-SCALE_NOTES["streaming_dedup_exact"] = (
-    "scale smokes are bounded by the MEMORY-SINK harness, not the "
-    "stateful operator: the dedup drain's output is input-sized by "
-    "contract, and at 300x the sink's driver collect exceeds "
-    "spark.driver.maxResultSize (measured: 1035 MiB > 1 GiB). A "
-    "production drain sinks to files/a table; the dropDuplicates "
-    "state itself is keyed and partition-local. Drain partitions "
-    "derive from staged bytes like the other drains")
-SCALE_NOTES["streaming_session_windows"] = (
-    "scale smokes are bounded by the COMPLETE-MODE memory sink: it "
-    "re-materializes every (user, session) row per batch on the "
-    "driver, which heap-OOMs at 300x. The session-window state "
-    "operator is keyed by user and partition-local; a production "
-    "drain uses append/update into a real sink. Drain partitions "
-    "derive from staged bytes like the other drains")
-SCALE_NOTES["image_near_dup_hamming"] = (
-    "collapsed-class counting since the r9 opt round: the synthetic "
-    "image corpus has only 425 distinct (w,h) pattern classes, so "
-    "identical dHashes form size-n/425 classes and the doc-level "
-    "pigeonhole self-join emitted g² candidates per class — measured "
-    "423x wall for 300x data. Counts now come from class arithmetic "
-    "(within-class C(g,2) at hamming 0; cross-class g_a*g_b at the "
-    "classes' fp hamming >= 1) over a blocking join of DISTINCT "
-    "signatures — 9.1-13.5x across 300x re-runs, decode-bound. "
-    "hamming_near_dup_pairs (the pair-ENUMERATING operator) is "
-    "unchanged for consumers that need doc pairs; its output is "
-    "itself quadratic on identical-signature corpora, so pair "
-    "consumers at scale should dedup identical signatures first "
-    "(the dedup_simhash_collapsed pattern)")
-SCALE_NOTES["als_recommend_parts"] = (
-    "r8: eager checkpoint release + MLlib-style co-partitioned "
-    "ratings copies make every half-step exchange-free — 14.7x at "
-    "the 100x smoke (was 46.6x). The co-partition trade: 3 ratings "
-    "copies pinned in storage, so the SINGLE-JVM working set is "
-    "~3x the fact table; at 300x (180M ratings, ~20+ GB decoded vs "
-    "a 16 GiB heap) local[32] OOMs and local[16] completes "
-    "disk-spill-bound (1363.8s — the measured one-JVM floor, "
-    "recorded in BENCH_scale_300x.json). At cluster scale the "
-    "copies are the point: network-shuffle per half-step is what "
-    "they remove, and executor memory is sized per conf_for_scale. "
-    "r9: the copies are DISK_ONLY (they elide shuffles; heap "
-    "residency buys nothing for a sequential per-half-step scan) — "
-    "local[32] at 300x now COMPLETES, 1237.2s vs the local[16] "
-    "spill-bound floor of 1363.8s; the OOM failure mode is gone")
-SCALE_NOTES["fuzzy_match_suppliers"] = (
-    "ADJUDICATED quadratic band (r8): per-gram candidates grow as "
-    "sum C(df,2) and gram df grows ~linearly with rows on a short "
-    "fixed-alphabet key population (36^3 gram space saturates — v4 "
-    "diagnostic: avg df ~34 at 300x, 40.3x wall). The EXACT mode "
-    "keeps the q-gram lemma's recall guarantee, and both classical "
-    "tighteners degenerate here — length filtering (all keys same "
-    "length) and Ed-Join prefix filtering (7-char strings have ~5 "
-    "grams < the kq+1=7 prefix); raising q to 4 breaks the lemma "
-    "for len-7/dist-2 pairs. The max_gram_freq=1000 cap is the "
-    "asymptotic bound and exact-dedup of identical keys upstream is "
-    "one production answer; the OTHER, in code since r9, is "
-    "fuzzy_match_suppliers_banded (band_gram_df sub-bucket budget, "
-    "pair work ∝ postings) for pipelines that accept measured "
-    "recall in exchange for linear scaling")
-SCALE_NOTES["fuzzy_match_suppliers_banded"] = (
-    "the scale path for the fuzzy-match quadratic band: per-gram "
-    "pair work budgeted at df*band/2 via md5 sub-buckets (mirrors "
-    "sparse_cosine band_df), so candidates are linear in postings "
-    "at ANY factor. Recall vs exact mode is measured, not assumed — "
-    "the smoke prints matched-pair recall alongside wall ratio")
-
-
 @_q("streaming_interval_join_pairs", """
 WITH c AS (SELECT user_id, ts AS cts FROM events
            WHERE event_type = 'click'),
@@ -8400,7 +8325,7 @@ SELECT user_id, COUNT(*) AS n_pairs
 FROM c JOIN v ON user_id = vuser
   AND vts >= cts AND vts <= cts + INTERVAL 30 MINUTE
 GROUP BY 1 ORDER BY 1
-""")
+""", bench=True)
 def streaming_interval_join_pairs_q(spark, sf_dir):
     """STREAM-STREAM interval join end to end: clicks joined to the
     same user's views within the following 30 minutes, both sides
@@ -8453,7 +8378,7 @@ FROM clicks c LEFT JOIN views v
   ON v.user_id = c.user_id
  AND v.vus >= c.cus AND v.vus <= c.cus + 1800000000
 GROUP BY 1
-""")
+""", bench=True)
 def streaming_left_outer_interval_join_q(spark, sf_dir):
     """Stream-stream LEFT OUTER interval join with real null
     emission: a click with no same-user view in the next 30 min must
@@ -8608,7 +8533,7 @@ SELECT COUNT(*) AS n_rows,
        ROUND(SUM(COALESCE(o_discount_pct, 0)), 2) AS sum_discount,
        ROUND(SUM(o_totalprice), 2) AS sum_price
 FROM u
-""")
+""", bench=True)
 def read_merge_schema_evolution_q(spark, sf_dir):
     """Schema evolution at the SOURCE: two parquet generations (v2
     adds a column) read as ONE table via mergeSchema — legacy rows
@@ -8654,7 +8579,7 @@ SELECT k AS user_id, COUNT(*) AS n_steps,
              / 1e6, 6) AS path_deg
 FROM s WHERE pla IS NOT NULL
 GROUP BY 1 ORDER BY 1
-""")
+""", bench=True)
 def geo_trajectory_users_q(spark, sf_dir):
     """Per-user trajectory length over md5-synthesized per-event
     coordinates — one keyed window pass, 1e-6-quantized steps so the
@@ -8693,7 +8618,14 @@ FROM pres a JOIN pres b
   ON a.h = b.h AND a.cx = b.cx AND a.cy = b.cy AND a.k < b.k
 GROUP BY 1, 2
 ORDER BY n_shared DESC, k1, k2 LIMIT 20
-""")
+""", bench=True, note=(
+    "DENSITY-ADAPTIVE grid since r7: cell edge halves every 4x "
+    "points (adaptive_cell_deg), so cell count tracks n and bucket "
+    "occupancy stays ~constant — under the r6 FIXED 32-cell grid, "
+    "occupancy grew linearly and within-bucket pairs quadratically "
+    "(84.9x wall at 300x; 411x at 100x under cap=1000). "
+    "max_bucket=200 remains as a hot-spot backstop, no longer the "
+    "safety mechanism"))
 def geo_copresence_users_q(spark, sf_dir):
     """Co-presence contact pairs: users sharing a (grid cell, hour)
     bucket, ranked by shared buckets — candidates generated per
@@ -8756,7 +8688,7 @@ SELECT CAST(SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
        CAST(SUM(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_stage3_within
 FROM u1 JOIN u2 USING (u) JOIN u3 USING (u)
-""")
+""", bench=True)
 def funnel_time_boxed_1h_24h_q(spark, sf_dir):
     """Deadline funnel: first view → click within 1h → purchase
     within 24h, exact integer-µs comparisons, one user exchange."""
@@ -8783,7 +8715,7 @@ SELECT day, dau, wau, COALESCE(new_users, 0) AS new_users,
        ROUND(CAST(dau AS DOUBLE) / wau, 6) AS stickiness
 FROM dau JOIN wau USING (day) LEFT JOIN fst USING (day)
 ORDER BY day
-""")
+""", bench=True)
 def dau_wau_stickiness_q(spark, sf_dir):
     """Exact DAU / trailing-7-day WAU / stickiness per day via the
     presence fan-out (rolling DISTINCT as a bounded-frame vote
@@ -8812,7 +8744,7 @@ SELECT grp AS l_returnflag, n,
                      * SQRT(CAST(n * syy - sy * sy AS DOUBLE))) END, 6)
        AS corr
 FROM s ORDER BY 1
-""")
+""", bench=True)
 def corr_qty_discount_by_flag_q(spark, sf_dir):
     """Per-group Pearson correlation (quantity vs discount per
     returnflag) from exact integerized sufficient statistics."""
@@ -8830,7 +8762,7 @@ WITH cells AS (
 tot AS (SELECT SUM(n) AS t FROM cells)
 SELECT dow, hod, n, ROUND(CAST(n AS DOUBLE) / t, 6) AS share
 FROM cells CROSS JOIN tot ORDER BY dow, hod
-""")
+""", bench=True)
 def activity_heatmap_dow_hour_q(spark, sf_dir):
     """Weekly seasonality fingerprint: 168-cell dow × hour counts
     and traffic shares, epoch-arithmetic day-of-week."""
@@ -8853,7 +8785,7 @@ tot AS (SELECT SUM(n_sessions) AS t FROM b)
 SELECT depth, n_sessions,
        ROUND(CAST(n_sessions AS DOUBLE) / t, 6) AS share
 FROM b CROSS JOIN tot ORDER BY depth
-""")
+""", bench=True)
 def session_depth_bounce_q(spark, sf_dir):
     """Session depth distribution + bounce share (30-min gap
     sessions bucketed by event count)."""
@@ -8880,7 +8812,7 @@ j AS (
 SELECT t AS channel, COUNT(*) AS n_touches,
        ROUND(CAST(SUM(cq) AS DOUBLE) / 1e6, 6) AS credit
 FROM j GROUP BY 1 ORDER BY 1
-""")
+""", bench=True)
 def attribution_time_decay_q(spark, sf_dir):
     """Time-decay multi-touch attribution (24h lookback, 6h
     half-life): keyed equi-join on user with the window as a join
@@ -8903,7 +8835,7 @@ FROM daily a
 LEFT JOIN daily b ON a.k = b.k AND a.d = b.d + 1
 LEFT JOIN daily c ON a.k = c.k AND a.d = c.d + 7
 ORDER BY 1, 2
-""")
+""", bench=True)
 def dod_wow_event_changes_q(spark, sf_dir):
     """Day-over-day / week-over-week deltas per event type —
     calendar-gap-safe self-equi-joins on the bounded daily grid."""
@@ -8924,7 +8856,7 @@ SELECT pri AS o_orderpriority, COUNT(*) AS n,
        CAST(SUM(days) AS BIGINT) AS total_days,
        ROUND(CAST(SUM(days) AS DOUBLE) / COUNT(*), 6) AS avg_days
 FROM lag GROUP BY 1 ORDER BY 1
-""")
+""", bench=True)
 def fulfillment_lag_by_priority_q(spark, sf_dir):
     """Order→ship fulfillment lag per priority: exact day arithmetic
     across the orders⋈lineitem join (broadcast-eligible dimension
@@ -8995,7 +8927,7 @@ SELECT u AS user_id, COUNT(*) AS n_events,
        AS mean_value,
        MAX(gap) AS max_gap_s
 FROM g GROUP BY 1 ORDER BY 1
-""")
+""", bench=True)
 def user_feature_mart_q(spark, sf_dir):
     """Churn/LTV per-user feature table in one exchange (window +
     aggregate share the user partitioning); exact integer stats."""
@@ -9009,7 +8941,7 @@ def user_feature_mart_q(spark, sf_dir):
 SELECT COUNT(*) AS n_rows,
        CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
 FROM events WHERE event_type = 'click'
-""")
+""", bench=True)
 def custom_sink_jsonl_roundtrip_q(spark, sf_dir):
     """Custom Python DataSource SINK end to end: click events written
     through the vega_jsonl two-phase-commit writer (task temp files →
@@ -9081,7 +9013,7 @@ ranked AS (
   FROM sc)
 SELECT doc_id, CAST(score_micro AS BIGINT) AS score_micro, rk
 FROM ranked WHERE rk <= 10
-""")
+""", bench=True)
 def bm25_rank_docs_q(spark, sf_dir):
     """BM25 ranked retrieval over the documents corpus: postings
     pruned to the 3 query terms, per-doc EXACT micro-unit score sum
@@ -9144,7 +9076,9 @@ ranked AS (
   FROM fused)
 SELECT query_id, doc_id, CAST(rrf_nano AS BIGINT) AS rrf_nano, rk
 FROM ranked WHERE rk <= 5
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "scalar corpus-stats attach (n_docs, total_len) into the "
+    "BM25 idf computation — global aggregate, 1 row")})
 def hybrid_search_rrf_q(spark, sf_dir):
     """Hybrid retrieval capstone: per query doc (ids < 3) a BM25
     candidate list from its 4 rarest terms AND an exact-cosine
@@ -9220,7 +9154,9 @@ SELECT i.query_id,
        CAST(ROUND(CAST(COALESCE(dcg_micro, 0) AS DOUBLE) * 1000000.0
                   / CAST(idcg_micro AS DOUBLE), 0) AS BIGINT) AS ndcg_ppm
 FROM ideal i LEFT JOIN hits USING (query_id)
-""")
+""", bench=True, adjudicated={"cross-nlj": (
+    "scalar corpus-stats attach into BM25 + bounded eval-query "
+    "set; postings join is term-keyed")})
 def retrieval_mrr_ndcg_trunc_q(spark, sf_dir):
     """Retrieval-quality metrics (recall@10 hits / MRR / nDCG@10) of a
     Matryoshka-truncated 16-dim index against the exact full-dim
@@ -9261,7 +9197,7 @@ SELECT a, b, support, prefix_support,
        CAST(ROUND(CAST(support AS DOUBLE) * 1000000.0
                   / CAST(prefix_support AS DOUBLE), 0) AS BIGINT) AS conf_ppm
 FROM sup JOIN pre USING (a)
-""")
+""", bench=True)
 def seq_pairs_events_q(spark, sf_dir):
     """Gapped sequential 2-patterns (PrefixSpan-style) over user
     event streams: support and confidence of 'a then later b', each
@@ -9310,7 +9246,7 @@ SELECT du.doc_id AS asset_id,
              THEN au.u - 18446744073709551616::HUGEINT
              ELSE au.u END)::BIGINT AS ahash
 FROM du JOIN au ON au.doc_id = du.doc_id
-""")
+""", bench=True)
 def image_dhash_census_q(spark, sf_dir):
     """REAL perceptual-hash census, oracle-checked bit for bit:
     deterministic pattern PNGs (pixel = (31x+57y) mod 256, dims from
@@ -9359,7 +9295,20 @@ pairs AS (
   GROUP BY 1)
 SELECT hamming, SUM(n_pairs)::BIGINT AS n_pairs
 FROM pairs GROUP BY 1 HAVING SUM(n_pairs) > 0
-""")
+""", bench=True, note=(
+    "collapsed-class counting since the r9 opt round: the synthetic "
+    "image corpus has only 425 distinct (w,h) pattern classes, so "
+    "identical dHashes form size-n/425 classes and the doc-level "
+    "pigeonhole self-join emitted g² candidates per class — measured "
+    "423x wall for 300x data. Counts now come from class arithmetic "
+    "(within-class C(g,2) at hamming 0; cross-class g_a*g_b at the "
+    "classes' fp hamming >= 1) over a blocking join of DISTINCT "
+    "signatures — 9.1-13.5x across 300x re-runs, decode-bound. "
+    "hamming_near_dup_pairs (the pair-ENUMERATING operator) is "
+    "unchanged for consumers that need doc pairs; its output is "
+    "itself quadratic on identical-signature corpora, so pair "
+    "consumers at scale should dedup identical signatures first "
+    "(the dedup_simhash_collapsed pattern)"))
 def image_near_dup_hamming_q(spark, sf_dir):
     """Image near-dup detection at corpus scale, oracle-checked
     EXHAUSTIVELY: dHash signatures from real pixel decode, then
@@ -9403,7 +9352,7 @@ agg AS (SELECT ngram, SUM(c)::BIGINT AS total, COUNT(*) AS n_docs
         FROM pd GROUP BY 1 HAVING COUNT(*) >= 2)
 SELECT ngram, total, n_docs
 FROM agg ORDER BY total DESC, ngram LIMIT 50
-""")
+""", bench=True)
 def mine_repeated_ngrams_q(spark, sf_dir):
     """Corpus-wide duplicated 3-gram census (doc frequency >= 2, top
     50 by total count): the boilerplate/contamination screen that
@@ -9432,7 +9381,7 @@ z AS (SELECT c.doc_id, c.frame_idx,
       GROUP BY 1, 2)
 SELECT amp.doc_id AS asset_id, amp.frame_idx, z.zcr, amp.sum_abs
 FROM amp JOIN z ON z.doc_id = amp.doc_id AND z.frame_idx = amp.frame_idx
-""")
+""", bench=True)
 def audio_zcr_fingerprint_q(spark, sf_dir):
     """REAL audio fingerprint, oracle-checked sample for sample:
     deterministic 16-bit PCM ramps (sample = ((a*i + doc_id) mod
@@ -9487,7 +9436,21 @@ isl AS (SELECT doc_id, i,
 SELECT doc_id, (MIN(i) - 1)::BIGINT AS start_pos,
        (COUNT(*) + 7)::BIGINT AS span_len
 FROM isl GROUP BY doc_id, grp
-""")
+""", bench=True, note=(
+    "k-gram digest census: ONE corpus-wide digest-keyed shuffle "
+    "(32-byte unhexed digests) + per-doc island windows. r10: the "
+    "duplicate mark is a count() OVER (PARTITION BY digest) window — "
+    "the r1-r9 groupBy+join-back shape re-derived the whole gram "
+    "fan-out as the join's probe side (exchange not reusable across "
+    "the differing map stages), which carried most of the r9 "
+    "300x->1000x spill band (4.36x wall for 3.33x data). Measured "
+    "same-session at 1000x: join shape 429.9s, window 284.8s, window "
+    "+ footer-sized repartition 277.7s -> in-decade ratio 2.35x for "
+    "3.33x data (sub-linear; band closed). The digest shuffle is "
+    "additionally sized from footer text bytes (~44B gram per 6B "
+    "text, 128 MB/partition target; no-op at small SF where the "
+    "session default exceeds it). r9's 16-byte-md5 key rejection "
+    "stands — sha2-256 keys stay"))
 def mine_duplicate_spans_q(spark, sf_dir):
     """Exact-substring duplicate-span mining (Lee et al. 2022 shape)
     over the corpus with a known boilerplate injection: every doc
@@ -9538,7 +9501,7 @@ ranked AS (SELECT doc_id, score,
                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rk
            FROM sc)
 SELECT doc_id, score, rk FROM ranked WHERE rk <= 10
-""")
+""", bench=True)
 def maxsim_late_interaction_q(spark, sf_dir):
     """ColBERT-style late-interaction (MaxSim) retrieval: per query
     term, the max token-level dot product within each doc; per doc,
@@ -9563,7 +9526,7 @@ UNION ALL
 SELECT 'l_linenumber', COUNT(*), COUNT(*) - COUNT(l_linenumber),
        MIN(l_linenumber)::BIGINT, MAX(l_linenumber)::BIGINT
 FROM lineitem
-""")
+""", bench=True)
 def parquet_footer_census_q(spark, sf_dir):
     """Metadata-only footer statistics census over lineitem's parquet
     files: value counts, null counts, min/max per column read from
@@ -9629,7 +9592,7 @@ UNION ALL SELECT 2, doc_id, CAST(rel AS BIGINT) FROM p2
 UNION ALL SELECT 3, doc_id, CAST(rel AS BIGINT) FROM p3
 UNION ALL SELECT 4, doc_id, CAST(rel AS BIGINT) FROM p4
 UNION ALL SELECT 5, doc_id, CAST(rel AS BIGINT) FROM p5
-""")
+""", bench=True)
 def mmr_diverse_rerank_q(spark, sf_dir):
     """MMR diversity re-ranking of the BM25 head: 5 greedy picks from
     the top-20 maximizing rel − max-sim-to-selected (λ=1/2 scaled,
@@ -9650,7 +9613,7 @@ SELECT event_type, COUNT(*) AS n,
        CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
        4 AS n_versions
 FROM events GROUP BY 1
-""")
+""", bench=True)
 def streaming_versioned_rollup_q(spark, sf_dir):
     """Streaming ingest INTO the versioned-table layer: arrivals are
     staged as 4 files, drained one file per micro-batch, and each
@@ -9720,7 +9683,7 @@ r3 AS (SELECT pv.u, pv.deg, pv.p, 0.15 * pv.p + 0.85 * c.in_sum AS rank
              FROM sym s JOIN r2 r ON s.u = r.u GROUP BY s.v) c
        JOIN pvec pv ON pv.u = c.u)
 SELECT u AS node, ROUND(rank, 6) AS rank FROM r3 WHERE rank > 0
-""")
+""", bench=True)
 def ppr_part_affinity_q(spark, sf_dir):
     """Personalized PageRank from the two lowest-id parts of the
     co-order affinity graph (3 supersteps, d=0.85): proximity scores
@@ -9759,7 +9722,7 @@ med AS (SELECT slope AS slope_micro FROM slopes, c
         ORDER BY slope LIMIT 1 OFFSET ((SELECT (n_pairs + 1) // 2 - 1
                                         FROM c)))
 SELECT nd.n_days, c.n_pairs, med.slope_micro FROM nd, c, med
-""")
+""", bench=True)
 def theil_sen_event_trend_q(spark, sf_dir):
     """Theil–Sen robust daily-activity trend: exact lower-median of
     the integerized pairwise slopes. The oracle replays the daily
@@ -9789,7 +9752,7 @@ SELECT (SELECT COUNT(*) FROM d) AS n_images,
        (SELECT COUNT(*) FROM f) AS n_pass_size,
        (SELECT COUNT(*) FROM keep) AS n_kept,
        (SELECT SUM(spx) FROM px)::BIGINT AS total_px_kept
-""")
+""", bench=True)
 def image_curation_pipeline_q(spark, sf_dir):
     """END-TO-END image curation flagship, oracle-exact at every
     stage: synthetic pattern PNGs → REAL container-header gate
@@ -9859,7 +9822,7 @@ SELECT
      - MAX(CASE WHEN treated = 0 AND post = 0 THEN mean_micro END))
     AS did_micro
 FROM m
-""")
+""", bench=True)
 def diff_in_diff_purchases_q(spark, sf_dir):
     """Difference-in-differences over event values (treatment = even
     user ids, post = on/after 2024-01-16): the 2x2 cell means in
@@ -9880,7 +9843,7 @@ SELECT grp AS event_type, MAX(n) AS n, MAX(k) AS k_trimmed,
        CAST(FLOOR(10000.0 * SUM(c) / COUNT(*)) AS BIGINT)
          AS trimmed_mean_micro
 FROM mid GROUP BY 1
-""")
+""", bench=True)
 def trimmed_mean_event_values_q(spark, sf_dir):
     """10% two-sided trimmed mean of event values per type — exact
     micro-unit robust location. Partitioned rank window + one keyed
@@ -9926,7 +9889,7 @@ SELECT variant, nv AS n_users,
                    / CAST(n * sxx - sx * sx AS DOUBLE)) * 1000000, 0)
             AS BIGINT) AS theta_micro
 FROM pv, tot
-""")
+""", bench=True)
 def cuped_event_values_q(spark, sf_dir):
     """CUPED variance-reduced experiment readout: pre-period per-user
     means as the covariate, θ from exact int64 sufficient stats, the
@@ -9953,7 +9916,7 @@ SELECT t.lang, COUNT(*) AS total_tokens,
                   / COUNT(*)) AS BIGINT) AS oov_ppm
 FROM tok t LEFT JOIN vocab v ON v.term = t.term
 GROUP BY 1
-""")
+""", bench=True)
 def oov_rate_by_lang_q(spark, sf_dir):
     """Vocabulary coverage per language: OOV token share against the
     corpus-wide top-1000 vocabulary (bounded TakeOrdered head →
@@ -9968,7 +9931,7 @@ def oov_rate_by_lang_q(spark, sf_dir):
 SELECT COUNT(*) AS n_rows, COUNT(*) AS n_reread,
        1 AS roundtrip_ok, 1 AS sizing_in_band
 FROM lineitem
-""")
+""", bench=True)
 def write_size_targeted_roundtrip_q(spark, sf_dir):
     """Size-targeted write contract: lineitem rewritten at a
     256 KiB/file target must re-read to the exact source row count,
@@ -10023,7 +9986,7 @@ def write_size_targeted_roundtrip_q(spark, sf_dir):
 SELECT event_type, COUNT(DISTINCT user_id) AS exact_ndv,
        1 AS ndv_within_2pct, 1 AS p50_within_1pct
 FROM events GROUP BY 1
-""")
+""", bench=True)
 def approx_accuracy_contract_q(spark, sf_dir):
     """Accuracy CONTRACT for the approximate surface: per group,
     HyperLogLog++ distinct (rsd=0.01) must land within 2% of the
@@ -10054,7 +10017,7 @@ def approx_accuracy_contract_q(spark, sf_dir):
 {_PRIORITY_CENTS},
        1 AS content_unchanged, 1 AS pruning_improved
 FROM orders GROUP BY 1
-""")
+""", bench=True)
 def optimize_table_orders_q(spark, sf_dir):
     """OPTIMIZE on a versioned table, contract-checked: orders is
     committed as v1 in a fragmented random layout (16 hash-split
@@ -10103,7 +10066,7 @@ SELECT c.c_mktsegment,
          AS sum_cents
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1
-""")
+""", bench=True)
 def incremental_join_view_orders_q(spark, sf_dir):
     """Incremental JOIN-view maintenance, parity-checked: the
     orders⋈customer view is built on 80% of each table, then
@@ -10149,7 +10112,7 @@ r1 AS (
 SELECT l1.o_orderpriority, r1.c_mktsegment, COUNT(*) AS n
 FROM l1 JOIN r1 ON l1.o_custkey = r1.c_custkey
 GROUP BY 1, 2
-""")
+""", bench=True)
 def join_view_signed_retractions_q(spark, sf_dir):
     """Retraction-capable join-view maintenance, parity-checked: the
     orders⋈customer view is built on the FULL tables, then a signed
@@ -10190,7 +10153,7 @@ SELECT c_mktsegment, COUNT(*) AS n,
        CAST(SUM(c_acctbal) AS BIGINT) AS sum_bucketed,
        MIN(c_name) AS first_masked_name
 FROM v GROUP BY 1
-""")
+""", bench=True)
 def secure_view_customers_q(spark, sf_dir):
     """Row/column-level security view: analysts see nation<10 rows
     only, custkeys as salted sha256 tokens (still countable-distinct
@@ -10249,7 +10212,7 @@ mad AS (
 SELECT res.event_type, res.xh, res.y, res.res_micro, mad.mad_micro
 FROM res JOIN mad ON mad.event_type = res.event_type
 WHERE ABS(res.res_micro) > 4 * mad.mad_micro
-""")
+""", bench=True)
 def stl_residual_anomalies_q(spark, sf_dir):
     """Seasonality-aware burst detection: hours whose STL residual
     exceeds 4x the series MAD (exact micro-integers; lower-median
@@ -10273,7 +10236,7 @@ SELECT r.grp AS event_type, MAX(r.n) AS n,
                   / COUNT(*)) AS BIGINT) AS winsorized_mean_micro
 FROM r JOIN b ON b.grp = r.grp
 GROUP BY 1
-""")
+""", bench=True)
 def winsorized_mean_event_values_q(spark, sf_dir):
     """10% two-sided winsorized mean per event type: extremes clamped
     to the boundary order statistics instead of dropped. Partitioned

@@ -33,7 +33,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_shipdate < TIMESTAMP '1997-01-01'
   AND l_discount BETWEEN 0.03 AND 0.07
   AND l_quantity < 24
-""")
+""", bench=True)
 def tpch_q6_forecast_revenue(spark, sf_dir):
     """Scan-only aggregate: every predicate reaches the parquet scan
     (PushedFilters), projection is 4 columns of 11 — the plan is one
@@ -120,7 +120,7 @@ FROM (
     AND o_orderdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31'
 ) all_nations
 GROUP BY o_year
-""")
+""", bench=True)
 def tpch_q8_market_share(spark, sf_dir):
     """Market share of one supplier nation inside one region's
     market: 7 joins, all dimension sides broadcast, one shuffle for
@@ -264,7 +264,7 @@ FROM (
   GROUP BY c_custkey
 ) c_orders
 GROUP BY c_count
-""")
+""", bench=True)
 def tpch_q13_customer_distribution(spark, sf_dir):
     """Two-level aggregate: orders-per-customer, then the histogram of
     that count. LEFT join keeps zero-order customers (COUNT of a
@@ -371,7 +371,7 @@ WHERE p_brand = 'Brand#3'
   AND l_quantity < (
     SELECT 0.2 * AVG(l2.l_quantity) FROM lineitem l2
     WHERE l2.l_partkey = lineitem.l_partkey)
-""")
+""", bench=True)
 def tpch_q17_small_qty_revenue(spark, sf_dir):
     """Correlated per-part average decorrelated into a window: one
     shuffle on l_partkey computes AVG over the part's lines, the
@@ -463,7 +463,7 @@ FROM (
 JOIN supplier ON s_suppkey = l_suppkey
 GROUP BY s_name
 ORDER BY numwait DESC, s_name LIMIT 20
-""")
+""", bench=True)
 def tpch_q21_waiting_suppliers(spark, sf_dir):
     """Canonical Q21's commit/receipt dates are absent; the kept shape
     is the exists/not-exists per-order supplier comparison: the
@@ -496,7 +496,7 @@ WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
   AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                   AND o_orderdate >= TIMESTAMP '1999-01-01')
 GROUP BY c_nationkey
-""")
+""", bench=True)
 def tpch_q22_global_sales_opportunity(spark, sf_dir):
     """Above-average-balance customers with no RECENT orders (canonical
     Q22's "no orders in 7 years", window shifted so the driver data
@@ -604,7 +604,7 @@ FROM merged GROUP BY o_orderstatus
 """
 
 
-@_q("merge_upsert_orders", _MERGE_SQL)
+@_q("merge_upsert_orders", _MERGE_SQL, bench=True)
 def merge_upsert_orders(spark, sf_dir):
     """MERGE a synthetic delta into the orders snapshot (10% price
     updates + ~1% inserts with new keys), then summarize by status.
@@ -650,7 +650,7 @@ SELECT doc, term, tf, df, tfidf, rk FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY doc
                                ORDER BY tfidf DESC, term) AS rk
   FROM scored) WHERE rk <= 3
-""")
+""", bench=True)
 def tfidf_top_terms(spark, sf_dir):
     """Top-3 TF-IDF terms per document (functions/text.tf_idf);
     the oracle replays tokenization, smoothing and the tie-broken
@@ -682,7 +682,7 @@ SELECT CAST(SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
        CAST(SUM(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_stage3
 FROM per_user
-""")
+""", bench=True)
 def funnel_view_click_purchase(spark, sf_dir):
     """Ordered view→click→purchase funnel over events — one hash
     exchange on user (chained unordered windows; see
