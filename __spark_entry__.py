@@ -41,12 +41,12 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_vega_pkg_shipped", False):
         return
-    import tempfile
     import zipfile
 
+    from vega_spark.session import scratch_dir
+
     pkg_dir = os.path.join(_REPO_ROOT, "vega_spark")
-    zpath = os.path.join(tempfile.mkdtemp(prefix="vega_pkg_"),
-                         "vega_spark_pkg.zip")
+    zpath = os.path.join(scratch_dir(spark, "vega_pkg"), "vega_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:

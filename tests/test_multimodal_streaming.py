@@ -250,31 +250,20 @@ def test_watermark_drops_late_rows_after_one_batch_lag(spark):
     dropped (numRowsDroppedByWatermark counts them); the append sink
     must emit only head windows closed by the watermark."""
     import datetime
-    import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    stage = tempfile.mkdtemp(prefix="wm_drop_")
+    from vega_spark.streaming.sources import stage_arrivals
+
     D = datetime.datetime
-    files = [
-        ("b1", [(D(2024, 1, 10, 12, 0, 5), "a"),
-                (D(2024, 1, 10, 13, 59, 0), "a")]),
-        ("b2", [(D(2024, 1, 10, 11, 30, 0), "a")]),
-        ("b3", [(D(2024, 1, 10, 1, 0, 0), "late"),
-                (D(2024, 1, 10, 2, 30, 0), "late")]),
+    batches = [
+        [(D(2024, 1, 10, 12, 0, 5), "a"), (D(2024, 1, 10, 13, 59, 0), "a")],
+        [(D(2024, 1, 10, 11, 30, 0), "a")],
+        [(D(2024, 1, 10, 1, 0, 0), "late"), (D(2024, 1, 10, 2, 30, 0), "late")],
     ]
-    mt = None
-    for i, (tag, rows) in enumerate(files):
-        tmp = tempfile.mkdtemp()
-        (spark.createDataFrame(rows, "ts timestamp, k string")
-         .coalesce(1).write.mode("overwrite").parquet(tmp))
-        src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(stage, f"{tag}.parquet")
-        shutil.copy(os.path.join(tmp, src), dst)
-        mt = os.path.getmtime(dst) if mt is None else mt
-        os.utime(dst, (mt + 60 * i, mt + 60 * i))
+    stage = stage_arrivals(spark, *[
+        spark.createDataFrame(rows, "ts timestamp, k string")
+        for rows in batches])
     stream = (spark.readStream.schema("ts timestamp, k string")
               .option("maxFilesPerTrigger", 1).parquet(stage))
     agg = (stream.withWatermark("ts", "1 hour")

@@ -7,6 +7,8 @@ serial form (the multi-leg queries rely on exactly this)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,32 +66,40 @@ def test_spark_actions_from_threads_match_serial(spark):
             and o_ser.exceptAll(o_par).count() == 0)
 
 
-def test_drain_shuffle_partitions_sizing(tmp_path):
+def test_drain_shuffle_partitions_sizing(tmp_path, monkeypatch):
     # the drain partition count derives from staged arrival bytes:
     # floor binds for small staging (bench SFs; 4 since the r10
     # micro-batch-floor A/B), grows one partition per
-    # bytes_per_partition, caps defensively, sums multiple paths,
-    # walks directories, and tolerates missing paths
+    # DRAIN_BYTES_PER_PARTITION, caps defensively, sums multiple
+    # paths, walks directories, and tolerates missing paths
+    from vega_spark import session
     from vega_spark.session import drain_shuffle_partitions
 
     d = tmp_path / "stage"
     d.mkdir()
     (d / "a.parquet").write_bytes(b"x" * 1024)
     assert drain_shuffle_partitions(str(d)) == "4"          # floor
-    assert drain_shuffle_partitions(
-        str(d), floor=2, bytes_per_partition=512) == "2"    # ceil(1)<floor
-    assert drain_shuffle_partitions(
-        str(d), floor=1, bytes_per_partition=100) == "11"   # ceil(1024/100)
+    big = d / "big.parquet"
+    big.touch()
+    os.truncate(big, 64 << 20)                               # sparse
+    assert drain_shuffle_partitions(str(d)) == "4"          # ceil(1+)<floor
+    os.truncate(big, 5 * (64 << 20))
+    assert drain_shuffle_partitions(str(d)) == "6"          # grows
+    big.unlink()
+    monkeypatch.setattr(session, "DRAIN_FLOOR", 1)
+    monkeypatch.setattr(session, "DRAIN_BYTES_PER_PARTITION", 100)
+    assert drain_shuffle_partitions(str(d)) == "11"         # ceil(1024/100)
+    monkeypatch.setattr(session, "DRAIN_BYTES_PER_PARTITION", 1024)
     (d / "sub").mkdir()
     (d / "sub" / "b.parquet").write_bytes(b"y" * 1024)      # walked
-    assert drain_shuffle_partitions(
-        str(d), floor=1, bytes_per_partition=1024) == "2"
+    assert drain_shuffle_partitions(str(d)) == "2"
     two = tmp_path / "stage2"
     two.mkdir()
     (two / "c.parquet").write_bytes(b"z" * 2048)            # summed
+    assert drain_shuffle_partitions(str(d), str(two)) == "4"
+    monkeypatch.setattr(session, "DRAIN_BYTES_PER_PARTITION", 1)
+    monkeypatch.setattr(session, "DRAIN_CAP", 16)
+    assert drain_shuffle_partitions(str(d)) == "16"         # cap
+    monkeypatch.setattr(session, "DRAIN_FLOOR", 8)
     assert drain_shuffle_partitions(
-        str(d), str(two), floor=1, bytes_per_partition=1024) == "4"
-    assert drain_shuffle_partitions(
-        str(d), floor=1, bytes_per_partition=1, cap=16) == "16"  # cap
-    assert drain_shuffle_partitions(
-        str(tmp_path / "missing"), floor=8) == "8"          # tolerant
+        str(tmp_path / "missing")) == "8"                   # tolerant

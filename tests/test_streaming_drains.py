@@ -1,15 +1,19 @@
 """Streaming drains run on a clone of the caller's session: while a
 drain runs, the caller's confs stay as they were, and no temp view or
-staging directory outlives it."""
+staging directory outlives it. Arrivals are staged by
+``stage_arrivals``."""
 
 from __future__ import annotations
 
 import glob
 import os
-import tempfile
+import shutil
 import threading
 
+import pyarrow as pa
 import pytest
+from pyspark import SparkFiles
+from pyspark.sql import functions as F
 
 from vega_spark import registry
 from vega_spark.session import drain_shuffle_partitions
@@ -30,7 +34,8 @@ DRAINS = (
 
 
 def _staging_dirs() -> set[str]:
-    return set(glob.glob(os.path.join(tempfile.gettempdir(), "vega_stream*")))
+    return set(glob.glob(os.path.join(SparkFiles.getRootDirectory(),
+                                      "vega_scratch", "vega_stream*")))
 
 
 def _views(spark) -> set[str]:
@@ -38,11 +43,7 @@ def _views(spark) -> set[str]:
 
 
 @pytest.mark.parametrize("name", DRAINS)
-def test_drain_leaves_caller_session_untouched(spark, sf_dir, name,
-                                               tmp_path, monkeypatch):
-    # a private temp dir: another engine process staging drains on the
-    # same host must not show up in (or vanish from) this drain's view
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+def test_drain_leaves_caller_session_untouched(spark, sf_dir, name):
     prev = spark.conf.get(KEY)
     spark.conf.set(KEY, "7")
     views, dirs = _views(spark), _staging_dirs()
@@ -86,3 +87,41 @@ def test_drain_to_memory_redrains_once_when_unsettled(spark, tmp_path):
     assert counts == [5]
     assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
     assert not os.path.exists(src)
+
+
+def test_stage_arrivals_single_part_keeps_its_files(spark):
+    stage = S.stage_arrivals(spark, spark.range(10).repartition(3))
+    assert len([f for f in os.listdir(stage)
+                if f.endswith(".parquet")]) == 3
+    assert stage in _staging_dirs()
+    shutil.rmtree(stage)
+
+
+def test_stage_arrivals_parts_arrive_in_argument_order(spark):
+    # one part per micro-batch, in argument order, a pyarrow part
+    # included: rows of one batch share its current_timestamp()
+    adv = pa.table({"id": pa.array([99], pa.int64())})
+    stage = S.stage_arrivals(spark, spark.range(0, 5).repartition(2),
+                             adv, spark.range(5, 7))
+    assert len([f for f in os.listdir(stage)
+                if not f.startswith(("_", "."))]) == 3
+
+    def build(s):
+        return (s.readStream.schema("id long")
+                .option("maxFilesPerTrigger", 1).parquet(stage)
+                .withColumn("bt", F.current_timestamp()))
+    out = S.drain_to_memory(spark, build, stage)
+    by_batch: dict = {}
+    for r in out.collect():
+        by_batch.setdefault(r.bt, set()).add(r.id)
+    assert [by_batch[k] for k in sorted(by_batch)] == [
+        {0, 1, 2, 3, 4}, {99}, {5, 6}]
+    assert not os.path.exists(stage)
+
+
+def test_watermark_build_runs_no_job_on_calling_thread(spark, sf_dir,
+                                                       jobs_launched):
+    build = registry.QUERIES["streaming_watermark_drops"]
+    build(spark, sf_dir)
+    _, n = jobs_launched(lambda: build(spark, sf_dir))
+    assert n == 0

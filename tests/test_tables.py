@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
 
 from vega_spark.tables import (
+    events_max_ts_us,
     footer_col_max,
     footer_rows,
     footer_uncompressed_bytes,
@@ -137,3 +138,21 @@ def test_footer_col_max_none_without_statistics(tmp_path):
 
 def test_footer_stats_missing_path_is_none(tmp_path):
     assert _footers(str(tmp_path), "absent") == (None, None, None)
+
+
+def test_events_max_ts_us_from_footer_runs_no_job(spark, sf_dir,
+                                                  jobs_launched):
+    want = (load_table(spark, sf_dir, "events")
+            .agg(F.max("ts")).first()[0]) // 1000
+    got, n = jobs_launched(lambda: events_max_ts_us(spark, sf_dir))
+    assert (got, n) == (want, 0)
+
+
+def test_events_max_ts_us_falls_back_without_statistics(spark, tmp_path):
+    ts = pa.array([1_700_000_000_123_456, 1_700_000_100_654_321],
+                  pa.timestamp("us"))
+    pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}),
+                   os.path.join(tmp_path, "events.parquet"),
+                   write_statistics=False)
+    assert footer_col_max(str(tmp_path), "events", "ts") is None
+    assert events_max_ts_us(spark, str(tmp_path)) == 1_700_000_100_654_321

@@ -207,7 +207,7 @@ def write_size_targeted(df: DataFrame, path: str,
     small-files problem and unsplittable monster files at 100 TB).
 
     Bytes-per-row is estimated by writing a bounded ``sample_rows``
-    head to a scratch dir (real parquet encoding + compression, the
+    head to a ``scratch_dir`` (real parquet encoding + compression, the
     only honest estimator); the full write is then one
     ``repartition(n_files)`` round-robin — uniform file sizes by
     construction. Returns {n_rows, est_row_bytes, n_files}.
@@ -221,25 +221,21 @@ def write_size_targeted(df: DataFrame, path: str,
     so callers must only pass footer-exact values."""
     import math
     import os
-    import shutil
-    import tempfile
+
+    from vega_spark.session import scratch_dir
 
     if n_rows is None:
         n_rows = df.count()
     if est_row_bytes is not None:
         bpr = max(1.0, float(est_row_bytes))
     else:
-        scratch = tempfile.mkdtemp(prefix="vega_sizer_")
-        try:
-            head = df.limit(min(sample_rows, max(n_rows, 1)))
-            head.coalesce(1).write.mode("overwrite").parquet(scratch)
-            sampled = max(1, min(sample_rows, n_rows))
-            total = sum(os.path.getsize(os.path.join(scratch, f))
-                        for f in os.listdir(scratch)
-                        if f.endswith(".parquet"))
-            bpr = max(1.0, total / sampled)
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
+        scratch = scratch_dir(df.sparkSession, "vega_sizer")
+        head = df.limit(min(sample_rows, max(n_rows, 1)))
+        head.coalesce(1).write.mode("overwrite").parquet(scratch)
+        sampled = max(1, min(sample_rows, n_rows))
+        total = sum(os.path.getsize(os.path.join(scratch, f))
+                    for f in os.listdir(scratch) if f.endswith(".parquet"))
+        bpr = max(1.0, total / sampled)
     rows_per_file = max(1, int(target_file_bytes / bpr))
     n_files = max(1, math.ceil(n_rows / rows_per_file))
     df.repartition(n_files).write.mode("overwrite").parquet(path)

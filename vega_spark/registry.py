@@ -58,10 +58,10 @@ from vega_spark.operators.core import (
     map_partitions,
     select_map,
 )
-from vega_spark.session import ensure_engine_conf
+from vega_spark.session import ensure_engine_conf, scratch_dir
 from vega_spark.session import run_overlapped as X_run_overlapped
 from vega_spark.tables import (
-    footer_col_max,
+    events_max_ts_us,
     footer_rows,
     footer_uncompressed_bytes,
     load_table,
@@ -1606,16 +1606,12 @@ def streaming_windowed_counts_q(spark, sf_dir):
     memory sink with Trigger.AvailableNow, and return the drained
     result. Window starts are epoch-aligned, so the BIGINT epoch-second
     output is session-timezone independent on both engines."""
-    import tempfile
-
     from vega_spark.streaming import sources as SS
 
     ev = _t(spark, sf_dir, "events")  # ts is BIGINT nanoseconds
-    stage = tempfile.mkdtemp(prefix="vega_stream_stage_")
-    (ev.select("event_id",
-               F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
-               "event_type", "value")
-       .write.mode("overwrite").parquet(stage))
+    stage = SS.stage_arrivals(spark, ev.select(
+        "event_id", F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
+        "event_type", "value"))
 
     def build(s):
         stream = SS.stream_parquet(
@@ -2544,15 +2540,8 @@ def compact_small_files_q(spark, sf_dir):
     pinned) must compact to FEWER files with rows and revenue
     bit-preserved; the content columns are SQL-pinned against the
     source table, the layout flag is engine-computed."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from vega_spark.operators.layout import compact_parquet
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    p = os.path.join(tempfile.gettempdir(), f"vega_compact_{tag}")
-    shutil.rmtree(p, ignore_errors=True)
+    p = scratch_dir(spark, "vega_compact")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     o.repartition(32).write.mode("overwrite").parquet(p)
     stats = compact_parquet(spark, p, target_file_mb=128)
@@ -2608,8 +2597,6 @@ def streaming_kmv_rollup_q(spark, sf_dir):
     rollup answers with (k-1)/h_k error ~1/sqrt(k)."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from vega_spark.operators.sketches import (kmv_estimate_by,
                                                kmv_merge_by,
@@ -2617,28 +2604,23 @@ def streaming_kmv_rollup_q(spark, sf_dir):
     from vega_spark.streaming import sources as SS
 
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id")
-    stage = tempfile.mkdtemp(prefix="vega_stream_kmv_")
-    rollup = os.path.join(stage, "rollup")
-    ev.coalesce(4).write.mode("overwrite") \
-        .parquet(os.path.join(stage, "arrivals"))
-
+    stage = SS.stage_arrivals(spark, ev.coalesce(4))
+    rollup = scratch_dir(spark, "vega_kmv_rollup")
     stream = SS.stream_parquet(
-        spark, os.path.join(stage, "arrivals"),
-        "event_type string, user_id long", max_files_per_trigger=1)
+        spark, stage, "event_type string, user_id long",
+        max_files_per_trigger=1)
 
     def write_partial(batch_df, batch_id):
         (kmv_sketch_by(batch_df, ["event_type"], "user_id", k=2048)
-         .write.mode("append").parquet(rollup))
+         .write.mode("append").parquet(os.path.join(rollup, "data")))
 
-    SS.to_foreach_batch(
-        stream, write_partial,
-        os.path.join(stage, "ckpt_" + uuid.uuid4().hex[:8]),
-        output_mode="append").awaitTermination()
-    partials = spark.read.parquet(rollup)
-    merged = kmv_merge_by(partials, ["event_type"], k=2048)
-    out = kmv_estimate_by(merged, ["event_type"], k=2048)
-    shutil.rmtree(os.path.join(stage, "arrivals"), ignore_errors=True)
-    return out
+    SS.drain(SS.to_foreach_batch(
+        stream, write_partial, os.path.join(rollup, "ckpt"),
+        output_mode="append"), timeout_s=300)
+    shutil.rmtree(stage)
+    merged = kmv_merge_by(spark.read.parquet(os.path.join(rollup, "data")),
+                          ["event_type"], k=2048)
+    return kmv_estimate_by(merged, ["event_type"], k=2048)
 
 
 @_q("window_function_sweep", """
@@ -4375,7 +4357,6 @@ def bucketed_join_priority_revenue_q(spark, sf_dir):
     the .hint("merge") pins SMJ so the bucket layout (not a broadcast)
     is what the plan exercises."""
     import hashlib
-    import tempfile
 
     from vega_spark.operators.layout import write_bucketed_at
 
@@ -4385,13 +4366,13 @@ def bucketed_join_priority_revenue_q(spark, sf_dir):
     if not spark.catalog.tableExists(t_o):
         write_bucketed_at(
             _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-            t_o, tempfile.mkdtemp(prefix="vega_bkt_o_"),
+            t_o, scratch_dir(spark, "vega_bkt_o"),
             "o_orderkey", 8, sort_col="o_orderkey")
     if not spark.catalog.tableExists(t_l):
         write_bucketed_at(
             _t(spark, sf_dir, "lineitem").select(
                 "l_orderkey", "l_extendedprice", "l_discount"),
-            t_l, tempfile.mkdtemp(prefix="vega_bkt_l_"),
+            t_l, scratch_dir(spark, "vega_bkt_l"),
             "l_orderkey", 8, sort_col="l_orderkey")
     o, li = spark.table(t_o), spark.table(t_l)
     j = o.hint("merge").join(
@@ -4752,20 +4733,19 @@ GROUP BY event_type
 """, bench=True)
 def partitioned_scan_prune_q(spark, sf_dir):
     """Hive-style partitioned layout + partition PRUNING: events are
-    written once per (session, sf) partitioned by event_date; the
+    written once per (application, sf) partitioned by event_date; the
     day-filter then binds to the directory structure, so the scan
     lists ONE date directory out of 30 — at 100 TB this is the
     difference between scanning ~3 TB and 100 TB, before any row
     filter runs. (The pruning is asserted in test_plans; the oracle
     replays the equivalent ts-range filter over the flat table.)
-    The copy's schema is inferred once, beside its path, so later
-    builds re-read it without a schema-inference job."""
-    import tempfile
-
+    The copy is a ``scratch_dir``, so it is deleted when the
+    application stops; its schema is inferred once, beside its path,
+    so later builds re-read it without a schema-inference job."""
     ensure_engine_conf(spark)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PARTITIONED_EVENTS:
-        path = tempfile.mkdtemp(prefix="vega_part_events_")
+        path = scratch_dir(spark, "vega_part_events")
         ev = _t(spark, sf_dir, "events")
         (ev.withColumn("event_date", ts_date("ts").cast("string"))
          .write.mode("overwrite").partitionBy("event_date").parquet(path))
@@ -5110,16 +5090,12 @@ def save_text_roundtrip_q(spark, sf_dir):
     """``save_as_text_file`` (reference rdd.rs:254-272) + read-back:
     write nation keys/names as text (one part file per partition,
     like the reference), re-read with an explicit schema, aggregate.
-    The values surviving the round trip IS the check. Temp dir is
-    per-SF so the warm-up pass can't clobber the timed one."""
-    import os
-    import tempfile
-
+    The values surviving the round trip IS the check. Each build
+    writes to a fresh scratch dir, so no two builds share files."""
     from vega_spark.operators.actions import save_as_text
     from vega_spark.sources.readers import read_csv
     n = _t(spark, sf_dir, "nation")
-    path = os.path.join(tempfile.gettempdir(), "vega_spark_io",
-                        f"text_rt_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch_dir(spark, "vega_spark_io/text_rt")
     save_as_text(n.select("n_nationkey", "n_name"), path)
     back = read_csv(spark, path, "n_nationkey int, n_name string")
     return back.agg(F.count(F.lit(1)).alias("n_rows"),
@@ -5138,14 +5114,10 @@ def save_parquet_partitioned_roundtrip_q(spark, sf_dir):
     partitioned by status (directory layout downstream readers prune
     on), read back, aggregate per partition value. Checks the writer
     round-trips values AND the partition column itself."""
-    import os
-    import tempfile
-
     from vega_spark.operators.actions import save_as_parquet
     from vega_spark.sources.readers import read_parquet
     o = _t(spark, sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), "vega_spark_io",
-                        f"pq_rt_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch_dir(spark, "vega_spark_io/pq_rt")
     out = o.select("o_orderkey", "o_totalprice", "o_orderstatus")
     save_as_parquet(out, path, partition_by=["o_orderstatus"])
     back = read_parquet(spark, path, schema=out.schema)
@@ -5278,11 +5250,9 @@ def read_whole_files_dir_q(spark, sf_dir):
     decoded and compared byte-for-byte via the constant-table
     oracle."""
     import os
-    import tempfile
 
     from vega_spark.sources.readers import read_whole_files
-    d = os.path.join(tempfile.gettempdir(), "vega_spark_io", "whole_files")
-    os.makedirs(d, exist_ok=True)
+    d = scratch_dir(spark, "vega_spark_io/whole_files")
     for name, content in (("alpha.txt", "alpha-contents"),
                           ("beta.txt", "beta-contents")):
         with open(os.path.join(d, name), "w") as f:
@@ -5310,18 +5280,15 @@ def streaming_stream_static_join_q(spark, sf_dir):
     Scale shape: the stream side never shuffles for the join
     (broadcast); only the (segment, type) agg exchanges — identical
     on a 1000-executor continuous job."""
-    import tempfile
-
     from vega_spark.streaming import sources as SS
     from vega_spark.streaming.joins import stream_static_join
 
     ev = _t(spark, sf_dir, "events")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    stage = tempfile.mkdtemp(prefix="vega_stream_ssj_")
     # few, large arrival files: the AvailableNow drain then runs a
     # handful of micro-batches instead of one per tiny part file
-    (ev.select("event_id", "user_id", "event_type", "value")
-       .coalesce(8).write.mode("overwrite").parquet(stage))
+    stage = SS.stage_arrivals(spark, ev.select(
+        "event_id", "user_id", "event_type", "value").coalesce(8))
 
     def build(s):
         stream = SS.stream_parquet(
@@ -5354,31 +5321,26 @@ def streaming_dedup_exact_q(spark, sf_dir):
     output must aggregate to exactly the single-copy batch answer —
     independent of how the files split into micro-batches."""
     import os
-    import tempfile
 
     from vega_spark.streaming import sources as SS
     from vega_spark.streaming.stateful import dedup_exact_stream
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
-    stage = tempfile.mkdtemp(prefix="vega_stream_dd_")
-    c = ev.coalesce(4)
-    c.write.mode("overwrite").parquet(os.path.join(stage, "arrival=1"))
+    stage = SS.stage_arrivals(spark, ev.coalesce(4))
     # second identical arrival: hardlink the just-written files
     # instead of re-running the write job — bit-identical duplicate
     # input (the contract is "every event arrives twice"), one Spark
     # write instead of two (r9 opt, guide §1.2: don't recompute what
     # you already have)
-    os.makedirs(os.path.join(stage, "arrival=2"), exist_ok=True)
-    for f in os.listdir(os.path.join(stage, "arrival=1")):
+    for f in os.listdir(stage):
         if f.endswith(".parquet"):
-            os.link(os.path.join(stage, "arrival=1", f),
-                    os.path.join(stage, "arrival=2", f))
+            os.link(os.path.join(stage, f),
+                    os.path.join(stage, "dup-" + f))
 
     def build(s):
         stream = SS.stream_parquet(
-            s, os.path.join(stage, "*"),
-            "event_id long, event_type string, value double")
+            s, stage, "event_id long, event_type string, value double")
         return dedup_exact_stream(stream, ["event_id"])
     return (SS.drain_to_memory(spark, build, stage)
             .groupBy("event_type")
@@ -5663,8 +5625,6 @@ def streaming_anomaly_flags_q(spark, sf_dir):
     never shuffles at all. The oracle is the batch equivalent —
     identical flags because scoring is per-row against a fixed
     baseline."""
-    import tempfile
-
     from vega_spark.functions.analytics import robust_stats
     from vega_spark.streaming import sources as SS
     from vega_spark.streaming.joins import stream_static_join
@@ -5673,9 +5633,8 @@ def streaming_anomaly_flags_q(spark, sf_dir):
     stats = (robust_stats(ev, "event_type", "value")
              .filter(F.col("mad") > 0)
              .select(F.col("event_type").alias("__t"), "med", "mad"))
-    stage = tempfile.mkdtemp(prefix="vega_stream_anom_")
-    (ev.select("event_id", "event_type", "value")
-       .coalesce(8).write.mode("overwrite").parquet(stage))
+    stage = SS.stage_arrivals(
+        spark, ev.select("event_id", "event_type", "value").coalesce(8))
 
     def build(s):
         stream = SS.stream_parquet(
@@ -6680,12 +6639,10 @@ def versioned_time_travel_orders_q(spark, sf_dir):
     each — proving v1 stays intact after v2 commits (snapshot
     isolation via the atomic _latest pointer). The oracle replays
     both versions' aggregates from the source table."""
-    import tempfile
-
     from vega_spark.operators.versioned import (
         commit_snapshot, read_snapshot)
     orders = _t(spark, sf_dir, "orders")
-    tdir = tempfile.mkdtemp(prefix="vega_versioned_")
+    tdir = scratch_dir(spark, "vega_versioned")
     commit_snapshot(orders, tdir, note="initial load")
     v2 = (orders.filter(F.col("o_orderstatus") != "F")
           .withColumn("o_totalprice",
@@ -6730,13 +6687,12 @@ def versioned_data_skipping_orders_q(spark, sf_dir):
     touches only the ~1/6 of files whose band overlaps the year. The
     oracle replays the same year filter on the raw table — pruning
     must be invisible in the result."""
-    import tempfile
     from datetime import datetime
 
     from vega_spark.operators.versioned import (
         commit_snapshot, read_snapshot_pruned)
     orders = _t(spark, sf_dir, "orders")
-    tdir = tempfile.mkdtemp(prefix="vega_skip_")
+    tdir = scratch_dir(spark, "vega_skip")
     commit_snapshot(orders.repartitionByRange(8, "o_orderdate"),
                     tdir, note="range layout",
                     stats_cols=["o_orderdate"])
@@ -6956,62 +6912,28 @@ def streaming_watermark_drops_q(spark, sf_dir):
     dropped stragglers appearing in the result, or head windows
     missing, both fail the hash. (test_multimodal_streaming asserts
     numRowsDroppedByWatermark equals the staged straggler count.)"""
-    import os
-    import shutil
-    import tempfile
-
     from vega_spark.streaming import sources as SS
 
     ev = _t(spark, sf_dir, "events")
     t = ev.select("event_id",
                   F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
                   "event_type", "value")
-    # max event time from parquet FOOTER statistics (r9 opt, guide §6
-    # metadata over jobs — footer_col_max, the loj-query probe). The
-    # cut instants are computed in the raw µs domain and rebuilt with
-    # timestamp_micros, so they are TZ-independent and equal by
-    # construction to the collected max (the staged ts column IS
-    # timestamp_micros(raw div 1000)). Spark max() job only as the
-    # stats-missing fallback.
-    mx_ns = footer_col_max(sf_dir, "events", "ts")
-    if isinstance(mx_ns, int):
-        day_us = 24 * 3600 * 1_000_000
-        mx_us = mx_ns // 1000
-        cut24 = F.timestamp_micros(F.lit(mx_us - day_us))
-        cut48 = F.timestamp_micros(F.lit(mx_us - 2 * day_us))
-    else:
-        mx = t.agg(F.max("ts")).collect()[0][0]
-        day = __import__("datetime").timedelta(hours=24)
-        cut24, cut48 = F.lit(mx - day), F.lit(mx - 2 * day)
-    stage = tempfile.mkdtemp(prefix="vega_stream_wm_")
+    # cuts in the raw µs domain, rebuilt with timestamp_micros like
+    # the staged ts column itself: TZ-independent
+    mx_us = events_max_ts_us(spark, sf_dir)
+    day_us = 24 * 3600 * 1_000_000
+    cut24 = F.timestamp_micros(F.lit(mx_us - day_us))
+    cut48 = F.timestamp_micros(F.lit(mx_us - 2 * day_us))
     # THREE ordered arrival files: the newest day first (advances the
     # watermark to max-1h), the 24-48h band second (burns the batch
     # the watermark needs to become effective for input filtering —
     # Spark applies it to late-row drops one batch after it advances),
     # stragglers third — so the straggler batch runs with the fully
     # effective watermark and every late row is dropped.
-    parts = (("b1_head_new", t.filter(F.col("ts") > cut24)),
-             ("b2_head_old", t.filter((F.col("ts") > cut48)
-                                      & (F.col("ts") <= cut24))),
-             ("b3_late", t.filter(F.col("ts") <= cut48)))
-
-    def _stage_part(tag, part):
-        tmp = tempfile.mkdtemp(prefix="vega_stream_wm_part_")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(stage, f"{tag}.parquet")
-        shutil.copy(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return dst
-    # r9 opt (guide §2.6): the three per-band staging writes are
-    # independent single-task jobs — overlap them; arrival ORDER is
-    # enforced by the explicit mtimes set below, not by write order.
-    order = list(X_run_overlapped(
-        *[lambda tag=tag, part=part: _stage_part(tag, part)
-          for tag, part in parts]))
-    base = os.path.getmtime(order[0])
-    for i, p in enumerate(order[1:], start=1):
-        os.utime(p, (base + 60 * i, base + 60 * i))
+    stage = SS.stage_arrivals(
+        spark, t.filter(F.col("ts") > cut24),
+        t.filter((F.col("ts") > cut48) & (F.col("ts") <= cut24)),
+        t.filter(F.col("ts") <= cut48))
 
     def build(s):
         stream = SS.stream_parquet(
@@ -7337,12 +7259,10 @@ def versioned_bloom_point_lookup_q(spark, sf_dir):
     min/max complement: blooms prune POINT predicates even on
     layouts never sorted by the key. Oracle replays the lookup on
     the raw table — indexing must be invisible in the result."""
-    import tempfile
-
     from vega_spark.operators.versioned import (
         add_bloom_index, commit_snapshot, read_snapshot_point)
     li = _t(spark, sf_dir, "lineitem")
-    tdir = tempfile.mkdtemp(prefix="vega_bloomidx_")
+    tdir = scratch_dir(spark, "vega_bloomidx")
     commit_snapshot(li.repartition(16, "l_orderkey"), tdir,
                     note="hash layout")
     add_bloom_index(spark, tdir, "l_orderkey")
@@ -7382,12 +7302,10 @@ def versioned_change_feed_orders_q(spark, sf_dir):
     oracle derives the same feed from the mutation rule itself:
     a wrong classification or a leaked unchanged row fails the
     hash."""
-    import tempfile
-
     from vega_spark.operators.versioned import (
         change_feed, commit_snapshot)
     orders = _t(spark, sf_dir, "orders")
-    tdir = tempfile.mkdtemp(prefix="vega_cdf_")
+    tdir = scratch_dir(spark, "vega_cdf")
     commit_snapshot(orders, tdir, note="v1")
     v2 = (orders.filter(F.col("o_orderstatus") != "F")
           .withColumn("o_totalprice",
@@ -7421,8 +7339,6 @@ def versioned_zorder_2d_skipping_q(spark, sf_dir):
     correctness stats-independent; the oracle replays the plain 2-D
     filter. test_versioned pins that the 2-D predicate actually
     skips files under this layout."""
-    import tempfile
-
     from vega_spark.operators.layout import zorder_key
     from vega_spark.operators.versioned import (
         commit_snapshot, read_snapshot_pruned)
@@ -7436,7 +7352,7 @@ def versioned_zorder_2d_skipping_q(spark, sf_dir):
     arranged = (orders.withColumn("__z", z)
                 .repartitionByRange(16, "__z")
                 .sortWithinPartitions("__z").drop("__z"))
-    tdir = tempfile.mkdtemp(prefix="vega_zskip_")
+    tdir = scratch_dir(spark, "vega_zskip")
     commit_snapshot(arranged, tdir, note="zorder layout",
                     stats_cols=["o_custkey", "o_orderdate"])
     pruned = read_snapshot_pruned(
@@ -7496,12 +7412,10 @@ def versioned_delete_keys_orders_q(spark, sf_dir):
     keep conservative superset Blooms). The old version remains
     time-travelable. The oracle replays the post-delete aggregate;
     the unit test pins the partial-rewrite file accounting."""
-    import tempfile
-
     from vega_spark.operators.versioned import (
         add_bloom_index, commit_snapshot, delete_keys, read_snapshot)
     orders = _t(spark, sf_dir, "orders")
-    tdir = tempfile.mkdtemp(prefix="vega_del_")
+    tdir = scratch_dir(spark, "vega_del")
     commit_snapshot(orders.repartition(16, "o_orderkey"), tdir)
     add_bloom_index(spark, tdir, "o_orderkey")
     delete_keys(spark, tdir, "o_orderkey", [1, 2, 3, 7])
@@ -7919,15 +7833,11 @@ def streaming_session_windows_q(spark, sf_dir):
     drain. Must equal the batch gaps-and-islands replay
     (sessionize_gap's oracle) exactly — the stream/batch parity
     contract of the unified model."""
-    import tempfile
-
     from vega_spark.streaming import sources as SS
 
     ev = _t(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="vega_stream_sess_")
-    (ev.select("user_id",
-               F.timestamp_micros(F.expr("ts div 1000")).alias("ts"))
-       .write.mode("overwrite").parquet(stage))
+    stage = SS.stage_arrivals(spark, ev.select(
+        "user_id", F.timestamp_micros(F.expr("ts div 1000")).alias("ts")))
 
     def build(s):
         stream = SS.stream_parquet(s, stage, "user_id long, ts timestamp")
@@ -8333,16 +8243,13 @@ def streaming_interval_join_pairs_q(spark, sf_dir):
     per user. Single-batch drain makes the inner join complete, so
     the result must equal the batch interval join the oracle runs —
     the stream/batch parity contract again."""
-    import tempfile
-
     from vega_spark.streaming import joins as SJ
     from vega_spark.streaming import sources as SS
 
     ev = _t(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="vega_stream_ssj_")
-    (ev.select("event_id", "user_id", "event_type",
-               F.timestamp_micros(F.expr("ts div 1000")).alias("ts"))
-       .write.mode("overwrite").parquet(stage))
+    stage = SS.stage_arrivals(spark, ev.select(
+        "event_id", "user_id", "event_type",
+        F.timestamp_micros(F.expr("ts div 1000")).alias("ts")))
     schema = "event_id long, user_id long, event_type string, ts timestamp"
 
     def build(s):
@@ -8401,12 +8308,7 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
     1-row createDataFrame().write() costs a ~6s Spark job EACH at
     this scale; column-statistics max from parquet metadata costs
     milliseconds). Same-host idle A/B: 13.7s -> 5.9-6.9s."""
-    import os
-    import shutil
-    import tempfile
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from vega_spark.streaming import joins as SJ
     from vega_spark.streaming import sources as SS
@@ -8415,50 +8317,20 @@ def streaming_left_outer_interval_join_q(spark, sf_dir):
     base = ev.select("event_id", "user_id", "event_type",
                      F.timestamp_micros(F.expr("ts div 1000"))
                      .alias("ts"))
-    # max event time from parquet column statistics — no Spark job.
-    # r8 (ADVICE): a stats-disabled writer or a directory dataset
-    # must fall back to the Spark max() aggregate (the r9 refactor
-    # moved the probe into footer_col_max; None = stats missing).
-    mx = footer_col_max(sf_dir, "events", "ts")
-    if mx is None:
-        mx = ev.agg(F.max("ts")).collect()[0][0]  # raw ns since epoch
-    if hasattr(mx, "value"):           # pandas.Timestamp -> ns int
-        mx = mx.value
-    if isinstance(mx, int):            # raw ns since epoch
-        adv_us = mx // 1000 + 4 * 3600 * 1_000_000
-    else:                              # datetime.datetime
-        import calendar
-        adv_us = (calendar.timegm(mx.timetuple()) * 1_000_000
-                  + mx.microsecond + 4 * 3600 * 1_000_000)
+    adv_us = events_max_ts_us(spark, sf_dir) + 4 * 3600 * 1_000_000
     schema = ("event_id long, user_id long, event_type string, "
               "ts timestamp")
 
     def stage_side(typ: str):
-        stage = tempfile.mkdtemp(prefix=f"vega_stream_loj_{typ}_")
-        tmp = tempfile.mkdtemp(prefix="vega_stream_loj_part_")
-        base.filter(F.col("event_type") == typ).coalesce(1) \
-            .write.mode("overwrite").parquet(tmp)
-        src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(stage, "f1_base.parquet")
-        shutil.copy(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
         adv = pa.table(
             {"event_id": [-1], "user_id": [-1], "event_type": [typ],
-             "ts": pa.array([adv_us], pa.timestamp("us"))},
-            schema=pa.schema([("event_id", pa.int64()),
-                              ("user_id", pa.int64()),
-                              ("event_type", pa.string()),
-                              ("ts", pa.timestamp("us"))]))
-        adv_dst = os.path.join(stage, "f2_adv.parquet")
-        pq.write_table(adv, adv_dst)
-        mt = os.path.getmtime(dst)
-        os.utime(adv_dst, (mt + 60, mt + 60))
-        return stage
+             "ts": pa.array([adv_us], pa.timestamp("us"))})
+        return SS.stage_arrivals(
+            spark, base.filter(F.col("event_type") == typ), adv)
 
     # r9 opt (guide §2.6): the two per-side staging writes are
     # independent single-task jobs — overlap them from a driver
-    # thread pool (each writes its own temp dir; the shared `base`
-    # frame is read-only to both)
+    # thread pool (the shared `base` frame is read-only to both)
     stage_c, stage_v = X_run_overlapped(
         lambda: stage_side("click"), lambda: stage_side("view"))
 
@@ -8539,10 +8411,8 @@ def read_merge_schema_evolution_q(spark, sf_dir):
     adds a column) read as ONE table via mergeSchema — legacy rows
     surface NULL for the new column. The capability every long-lived
     100 TB dataset needs; the oracle replays the union semantics."""
-    import tempfile
-
     orders = _t(spark, sf_dir, "orders")
-    stage = tempfile.mkdtemp(prefix="vega_evolve_")
+    stage = scratch_dir(spark, "vega_evolve")
     (orders.filter(F.col("o_orderkey") % 2 == 0)
      .select("o_orderkey", "o_totalprice")
      .write.mode("overwrite").parquet(stage + "/gen=1"))
@@ -8950,8 +8820,6 @@ def custom_sink_jsonl_roundtrip_q(spark, sf_dir):
     custom_source_events. The oracle recomputes from the source
     table, so a dropped/partial/duplicated task file would fail the
     hash."""
-    import tempfile
-
     from vega_spark.sources.custom_source import register
     register(spark)
     ev = _t(spark, sf_dir, "events")
@@ -8959,7 +8827,7 @@ def custom_sink_jsonl_roundtrip_q(spark, sf_dir):
            .select("event_id",
                    F.round(F.col("value") * 100, 0).cast("long")
                    .alias("cents")))
-    tdir = tempfile.mkdtemp(prefix="vega_jsonl_sink_")
+    tdir = scratch_dir(spark, "vega_jsonl_sink")
     (sub.write.format("vega_jsonl").option("path", tdir)
      .mode("append").save())
     back = spark.read.schema("event_id long, cents long").json(tdir)
@@ -9626,8 +9494,6 @@ def streaming_versioned_rollup_q(spark, sf_dir):
     metric-table-sized — raw history is never rescanned."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from vega_spark.operators.versioned import history, read_snapshot
     from vega_spark.streaming import sources as SS
@@ -9636,29 +9502,25 @@ def streaming_versioned_rollup_q(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
-    stage = tempfile.mkdtemp(prefix="vega_stream_ver_")
-    table = os.path.join(stage, "rollup_table")
-    ev.repartition(4).write.mode("overwrite") \
-        .parquet(os.path.join(stage, "arrivals"))
-
+    stage = SS.stage_arrivals(spark, ev.repartition(4))
+    rollup = scratch_dir(spark, "vega_versioned_rollup")
+    table = os.path.join(rollup, "table")
     stream = SS.stream_parquet(
-        spark, os.path.join(stage, "arrivals"),
-        "event_type string, cents long", max_files_per_trigger=1)
+        spark, stage, "event_type string, cents long",
+        max_files_per_trigger=1)
     # NOTE: the interval joins' state-partition pin was A/B'd here
     # too and had NO effect (3.94s pinned vs 3.68s unpinned, r6) —
     # this sink aggregates per epoch through foreachBatch (a *batch*
     # plan per micro-batch), so there is no streaming state store to
     # right-size; left at session defaults.
-    q = stream_to_versioned(
+    SS.drain(stream_to_versioned(
         stream, table, ["event_type"],
         {"n": F.count(F.lit(1)), "sum_cents": F.sum("cents")},
-        checkpoint=os.path.join(stage, "ckpt_" + uuid.uuid4().hex[:8]))
-    q.awaitTermination(300)
+        checkpoint=os.path.join(rollup, "ckpt")), timeout_s=300)
+    shutil.rmtree(stage)
     n_versions = history(spark, table).count()
-    out = (read_snapshot(spark, table)
-           .withColumn("n_versions", F.lit(n_versions).cast("int")))
-    shutil.rmtree(os.path.join(stage, "arrivals"), ignore_errors=True)
-    return out
+    return (read_snapshot(spark, table)
+            .withColumn("n_versions", F.lit(n_versions).cast("int")))
 
 
 @_q("ppr_part_affinity", f"""
@@ -9943,7 +9805,6 @@ def write_size_targeted_roundtrip_q(spark, sf_dir):
     Tighter layout bands live in tests/test_layout_embeddings.py."""
     import os
     import shutil
-    import tempfile
 
     from vega_spark.operators.layout import write_size_targeted
     target = 256 * 1024
@@ -9963,7 +9824,7 @@ def write_size_targeted_roundtrip_q(spark, sf_dir):
             bpr = sz / meta_n if sz else None
         except OSError:
             bpr = None
-    out = tempfile.mkdtemp(prefix="vega_sized_q_") + "/data"
+    out = scratch_dir(spark, "vega_sized_q")
     info = write_size_targeted(li, out, target_file_bytes=target,
                                n_rows=meta_n if bpr else None,
                                est_row_bytes=bpr)
@@ -10029,14 +9890,12 @@ def optimize_table_orders_q(spark, sf_dir):
     aggregates agree, and a flag that metadata-only pruning for a
     custkey range now skips MOST files (both pinned to 1). Layout
     changes; content provably doesn't."""
-    import tempfile
-
     from vega_spark.operators.versioned import (commit_snapshot,
                                                 optimize_table,
                                                 plan_pruned_files,
                                                 read_snapshot)
     orders = _t(spark, sf_dir, "orders")
-    table = tempfile.mkdtemp(prefix="vega_opt_") + "/orders_t"
+    table = scratch_dir(spark, "vega_opt") + "/orders_t"
     commit_snapshot(orders.repartition(16), table,
                     stats_cols=["o_custkey"])
     kept_before, total_before = plan_pruned_files(

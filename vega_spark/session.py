@@ -21,6 +21,11 @@ count) sets it on a ``cloned_session`` and runs there, moving frames
 across with ``rebind``. It never sets it on the caller's session,
 whose confs are shared with every query running on it concurrently
 (``run_overlapped`` legs included).
+
+Scratch files: a query that writes files of its own takes a fresh
+``scratch_dir`` under the driver's per-application SparkFiles root,
+which Spark deletes at ``stop()`` and at JVM shutdown. Scratch lives
+no longer than the application and is never shared between two.
 """
 
 from __future__ import annotations
@@ -55,6 +60,17 @@ def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
     jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         session._jsparkSession, df._jdf.queryExecution().logical())
     return DataFrame(jdf, session)
+
+
+def scratch_dir(spark: SparkSession, tag: str) -> str:
+    """A fresh directory ``vega_scratch/<tag>_*`` in the driver's
+    SparkFiles root; ``tag`` may name a subdirectory (``a/b``)."""
+    import tempfile
+    root = os.path.join(
+        spark._jvm.org.apache.spark.SparkFiles.getRootDirectory(),
+        "vega_scratch")
+    os.makedirs(os.path.dirname(os.path.join(root, tag)), exist_ok=True)
+    return tempfile.mkdtemp(prefix=tag + "_", dir=root)
 
 
 def get_session(
@@ -107,10 +123,12 @@ def get_session(
     return spark
 
 
-def drain_shuffle_partitions(*staged_paths: str,
-                             floor: int = 4,
-                             bytes_per_partition: int = 64 << 20,
-                             cap: int = 2048) -> str:
+DRAIN_FLOOR = 4
+DRAIN_BYTES_PER_PARTITION = 64 << 20
+DRAIN_CAP = 2048
+
+
+def drain_shuffle_partitions(*staged_paths: str) -> str:
     """State-store partition count for a bounded AvailableNow drain,
     derived from the STAGED arrival size (r9 opt, guide §2:
     scale-dependent settings derive from input, never a constant
@@ -119,11 +137,11 @@ def drain_shuffle_partitions(*staged_paths: str,
     ``spark.sql.shuffle.partitions`` is the drain's final stateful
     parallelism — the one setting AQE cannot rescue.
 
-    Sizing: one partition per ``bytes_per_partition`` of staged
+    Sizing: one partition per ``DRAIN_BYTES_PER_PARTITION`` of staged
     arrival bytes (state for these drains is a bounded fraction of
-    arrival volume), floored at ``floor`` — near-empty HDFS-backed
+    arrival volume), floored at ``DRAIN_FLOOR`` — near-empty HDFS-backed
     state stores are pure per-batch overhead, the r6-r9 A/Bs'
-    finding — and capped defensively. Floor 4 since r10: the
+    finding — and capped at ``DRAIN_CAP``. Floor 4 since r10: the
     micro-batch profile showed even a ZERO-row batch costs
     0.6-0.8 s, mostly per-partition store open/commit; an
     interleaved floor A/B over 5 drains read 8 → 4 as −0.8 s total
@@ -134,7 +152,7 @@ def drain_shuffle_partitions(*staged_paths: str,
     and bench readings are unchanged by construction; the value only
     grows when the arrival data does. Returns a string, ready for
     ``conf.set`` (``drain_to_memory`` sets it on its drain session).
-    Paths may be files or directories (walked).
+    Each path is a staged directory, walked; a missing one counts 0.
     The walk deliberately counts EVERY directory entry: Spark
     sidecars (_SUCCESS, .crc) are noise well under the 64 MB
     granularity, and hardlinked duplicate arrivals (streaming_dedup's
@@ -143,19 +161,14 @@ def drain_shuffle_partitions(*staged_paths: str,
     import math
     total = 0
     for p in staged_paths:
-        if os.path.isdir(p):
-            for dp, _dn, fns in os.walk(p):
-                for f in fns:
-                    try:
-                        total += os.path.getsize(os.path.join(dp, f))
-                    except OSError:
-                        pass
-        else:
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                pass
-    return str(max(floor, min(cap, math.ceil(total / bytes_per_partition))))
+        for dp, _dn, fns in os.walk(p):
+            for f in fns:
+                try:
+                    total += os.path.getsize(os.path.join(dp, f))
+                except OSError:
+                    pass
+    return str(max(DRAIN_FLOOR, min(
+        DRAIN_CAP, math.ceil(total / DRAIN_BYTES_PER_PARTITION))))
 
 
 def _conf_get(spark: SparkSession, key: str) -> str | None:

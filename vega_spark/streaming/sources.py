@@ -15,11 +15,17 @@ Scale notes (100 TB design intent):
   incremental micro-batching as a live stream (unlike the deprecated
   ``once`` trigger, it respects maxFilesPerTrigger), then stops —
   the batch/stream duality our tests rely on.
+
+Staged arrivals live in a ``session.scratch_dir`` (``stage_arrivals``):
+Spark deletes them at ``stop()``; ``drain_to_memory`` deletes the ones
+it drained as soon as the stream stops.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 import uuid
 from collections.abc import Callable
 
@@ -27,7 +33,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from vega_spark.session import cloned_session, drain_shuffle_partitions
+from vega_spark.session import (cloned_session, drain_shuffle_partitions,
+                                run_overlapped, scratch_dir)
+
+
+def stage_arrivals(spark: SparkSession, *parts) -> str:
+    """A fresh scratch directory holding ``parts`` as a file stream's
+    arrivals. A single DataFrame part is written as is (its
+    partitioning sets the file count). Several parts become one file
+    each, with mtimes 60 s apart in argument order, so
+    ``maxFilesPerTrigger=1`` reads one part per micro-batch in order.
+    DataFrame parts are written concurrently; a ``pyarrow.Table``
+    part runs no Spark job."""
+    stage = scratch_dir(spark, "vega_stream")
+    if len(parts) == 1 and isinstance(parts[0], DataFrame):
+        parts[0].write.mode("overwrite").parquet(stage)
+        return stage
+    base = time.time()
+
+    def write(i, part):
+        dst = os.path.join(stage, f"{i}.parquet")
+        if isinstance(part, DataFrame):
+            tmp = os.path.join(stage, f"_{i}")  # hidden from the stream
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            os.replace(os.path.join(tmp, src), dst)
+            shutil.rmtree(tmp)
+        else:
+            import pyarrow.parquet as pq
+            pq.write_table(part, dst)
+        os.utime(dst, (base + 60 * i,) * 2)
+    run_overlapped(*[lambda i=i, p=p: write(i, p)
+                     for i, p in enumerate(parts)])
+    return stage
 
 
 def stream_parquet(spark: SparkSession, path: str,
@@ -161,7 +199,8 @@ def rocksdb_state_store_conf() -> dict[str, str]:
 
 
 def drain(q: StreamingQuery, timeout_s: float = 120.0) -> None:
-    """Run a bounded (availableNow) query to completion."""
+    """Run a bounded (availableNow) query to completion; on timeout
+    stop it and raise, so no caller reads a partial result."""
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(f"streaming query {q.name!r} did not drain "

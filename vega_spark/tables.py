@@ -207,6 +207,20 @@ def footer_col_max(sf_dir: str, name: str, col: str):
     return _footer_stat(sf_dir, name, top)
 
 
+def events_max_ts_us(spark: SparkSession, sf_dir: str) -> int:
+    """Max of ``events.ts`` as epoch microseconds (naive wall clock,
+    UTC). Read from footer statistics, whatever their Python type
+    (datetime, pandas.Timestamp or raw int64 nanoseconds); when any
+    row group lacks them, a Spark ``max()`` of the loaded BIGINT-ns
+    column."""
+    mx = footer_col_max(sf_dir, "events", "ts")
+    if mx is None:
+        ev = load_table(spark, sf_dir, "events")
+        return ev.agg(F.max("ts")).first()[0] // 1000
+    import pyarrow as pa
+    return pa.scalar(mx, pa.timestamp("ns")).value // 1000
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
